@@ -6,11 +6,18 @@ generate_overview_tiles, :1202-1207 resume skips existing tiles) and of
 gdaltindex's per-file manifest (apps/gdaltindex.c:96-561): every stage writes
 
 * its output as parquet partitioned by ``zoom`` (partition pruning on zoom =
-  the overview-level selection of gcore/rasterio.cpp:2117), and
+  the overview-level selection of gcore/rasterio.cpp:2117),
+* a per-partition **lineage** sidecar (tile/row count, page count,
+  xor-of-checksums per scan partition), and
 * a **manifest** row per completed zoom level with lineage + row-count
   metrics: stage name, input/output row counts, tile extents (the
   GetExtent fast path, ogrlayer.cpp:212), total page count, xor-of-checksums,
   wall seconds, and the spark conf that produced it.
+
+A level commits in two Spark actions, the data write and the lineage write,
+each under a job description naming runner, stage and action.  The manifest
+metrics come from the lineage write's own pass (``DataFrame.observe``) and
+``in_rows`` from the data write's, so no count or collect re-scans a level.
 
 ``run_tiling(..., resume=True)`` consults the manifest and skips every level
 already marked complete — re-running a killed job recomputes only missing
@@ -19,12 +26,16 @@ levels (FIXTURES.md §8 resume invariant).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import raster
 
@@ -72,22 +83,108 @@ def _append_manifest(spark: SparkSession, base: str, record: dict) -> None:
         f.write(json.dumps(record) + "\n")
 
 
-def _level_stats(tile_df: DataFrame) -> dict:
-    row = (
-        raster.tile_checksums(tile_df)
+@contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Describe the body's Spark jobs as ``text``, then restore the caller's
+    description (job tags are left alone)."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _write(spark: SparkSession, df: DataFrame, path: str, desc: str) -> DataFrame:
+    """Persist ``df`` as parquet at ``path``; return it read back with the
+    schema just written, which is what inference (a Spark job) would give:
+    Spark stores its schema in the footer and makes a file source nullable."""
+    with _job_description(spark, f"{desc} write"):
+        df.write.mode("overwrite").parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
+
+
+# tile extent (the GetExtent fast path): per partition, then per level
+_EXTENT = {"min_tx": F.min, "max_tx": F.max, "min_ty": F.min, "max_ty": F.max}
+
+
+def _tile_lineage(persisted: DataFrame) -> tuple:
+    """Per-PARTITION lineage rows of a tile table (partition id, tile count,
+    page count, checksum xor, plus the ``_``-prefixed extent) and the level
+    totals folded from them; ``tile_checksums`` runs once."""
+    parts = (
+        raster.tile_checksums(persisted)
+        .withColumn("part_id", F.spark_partition_id())
+        .groupBy("part_id")
         .agg(
             F.count(F.lit(1)).alias("n_tiles"),
-            F.min("tx").alias("min_tx"),
-            F.max("tx").alias("max_tx"),
-            F.min("ty").alias("min_ty"),
-            F.max("ty").alias("max_ty"),
-            F.sum("page_count").alias("total_count"),
+            F.sum("page_count").alias("page_count"),
             # order-insensitive combined checksum: xor fold
-            F.expr("aggregate(collect_list(checksum), 0, (a, x) -> int(a ^ x))").alias("ck_xor"),
+            F.bit_xor("checksum").alias("ck_xor"),
+            *(fn(name[4:]).alias(f"_{name}") for name, fn in _EXTENT.items()),
         )
-        .collect()[0]
     )
-    return {k: (int(v) if v is not None else None) for k, v in row.asDict().items()}
+    return parts, [
+        F.coalesce(F.sum("n_tiles"), F.lit(0)).alias("n_tiles"),
+        *(fn(f"_{name}").alias(name) for name, fn in _EXTENT.items()),
+        F.sum("page_count").alias("total_count"),
+        F.coalesce(F.bit_xor("ck_xor"), F.lit(0)).alias("ck_xor"),
+        F.count(F.lit(1)).alias("n_partitions"),
+    ]
+
+
+def _doc_lineage(persisted: DataFrame) -> tuple:
+    """Per-PARTITION lineage rows of a document table (partition id, row
+    count, content checksum) and the stage totals folded from them."""
+    # per-row hash over ALL columns folded with the constant-state bit_xor
+    # aggregate: invariant to row order and partitioning, so re-runs at any
+    # parallelism reproduce it bit-for-bit
+    parts = (
+        persisted.withColumn("_h", F.xxhash64(*[F.col(c) for c in persisted.columns]))
+        .withColumn("part_id", F.spark_partition_id())
+        .groupBy("part_id")
+        .agg(F.count(F.lit(1)).alias("n_rows"), F.bit_xor("_h").alias("ck_xor"))
+    )
+    return parts, [
+        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n_rows"),
+        F.coalesce(F.bit_xor("ck_xor"), F.lit(0)).alias("content_ck"),
+        F.count(F.lit(1)).alias("n_partitions"),
+    ]
+
+
+def _write_lineage(spark: SparkSession, parts: DataFrame, totals: list, path: str, desc: str) -> dict:
+    """Write the lineage rows ``parts`` (less their ``_`` columns) to ``path``
+    and return ``totals``, observed over those rows in the same pass.  The
+    observe sits ABOVE the per-partition aggregate: below it, an empty table
+    lets AQE drop the observed subtree and the metrics never arrive."""
+    obs = Observation()
+    with _job_description(spark, f"{desc} lineage"):
+        parts.observe(obs, *totals).select(
+            [c for c in parts.columns if not c.startswith("_")]
+        ).write.mode("overwrite").parquet(path)
+    return {k: (int(v) if v is not None else None) for k, v in obs.get.items()}
+
+
+def _commit(spark: SparkSession, base: str, t0: float, **record) -> None:
+    """Append a level/stage record stamped with wall time and spark conf."""
+    record.update(
+        ts=time.time(),
+        wall_s=round(time.time() - t0, 3),
+        master=spark.sparkContext.master,
+        shuffle_partitions=spark.conf.get("spark.sql.shuffle.partitions"),
+    )
+    _append_manifest(spark, base, record)
+
+
+_LEVEL_SCHEMA = StructType([f for f in raster.TILE_SCHEMA.fields if f.name != "zoom"])
+
+
+def _level_frame(spark: SparkSession, base: str, z: int) -> DataFrame:
+    """Zoom ``z``'s persisted tiles, read with the tile schema (no inference
+    job), with a literal ``zoom`` column."""
+    level = spark.read.schema(_LEVEL_SCHEMA).parquet(os.path.join(base, f"zoom={z}"))
+    return level.withColumn("zoom", F.lit(z))
 
 
 def run_tiling(
@@ -108,68 +205,33 @@ def run_tiling(
     first missing level with no recomputation of completed ones.
     """
     done = completed_levels(spark, base) if resume else set()
-    n_input = None
-
     for z in range(base_zoom, min_zoom - 1, -1):
-        lvl_path = os.path.join(base, f"zoom={z}")
         if z in done:
             continue
         t0 = time.time()
+        desc = f"pipeline.run_tiling[zoom={z}]"
+        # in_rows is counted inside the level's write job
+        obs, n_src = Observation(), F.count(F.lit(1)).alias("in_rows")
         if z == base_zoom:
-            if n_input is None:
-                n_input = points.count()
-            level = raster.burn_base_tiles(points, z, lon_col, lat_col)
-            in_rows = n_input
-            stage = "burn_base"
+            src, stage = points, "burn_base"
+            level = raster.burn_base_tiles(src.observe(obs, n_src), z, lon_col, lat_col)
         else:
-            parent_src = spark.read.parquet(os.path.join(base, f"zoom={z + 1}"))
-            parent_src = parent_src.withColumn("zoom", F.lit(z + 1))
-            in_rows = parent_src.count()
-            level = raster.pyramid_reduce(parent_src)
-            stage = "pyramid_reduce"
-        level.drop("zoom").write.mode("overwrite").parquet(lvl_path)
-        persisted = spark.read.parquet(lvl_path).withColumn("zoom", F.lit(z))
-        stats = _level_stats(persisted)
-        # per-PARTITION lineage sidecar: (partition id, tile count, page
-        # count, checksum xor) — lets a resumed/audited run pin which scan
-        # partitions contributed what, at file-partition granularity
-        lineage = (
-            raster.tile_checksums(persisted)
-            .withColumn("part_id", F.spark_partition_id())
-            .groupBy("part_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_tiles"),
-                F.sum("page_count").alias("page_count"),
-                F.expr("aggregate(collect_list(checksum), 0, (a, x) -> int(a ^ x))").alias("ck_xor"),
-            )
-        )
-        lineage.write.mode("overwrite").parquet(os.path.join(base, "_lineage", f"zoom={z}"))
-        stats["n_partitions"] = lineage.count()
-        _append_manifest(
-            spark,
-            base,
-            {
-                "zoom": z,
-                "stage": stage,
-                "in_rows": int(in_rows),
-                "out_rows": stats["n_tiles"],
-                "ts": time.time(),
-                "wall_s": round(time.time() - t0, 3),
-                "master": spark.sparkContext.master,
-                "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-                **stats,
-            },
-        )
+            src, stage = _level_frame(spark, base, z + 1), "pyramid_reduce"
+            level = raster.pyramid_reduce(src.observe(obs, n_src))
+        _write(spark, level.drop("zoom"), os.path.join(base, f"zoom={z}"), desc)
+        try:
+            in_rows = obs.get["in_rows"]
+        except Py4JJavaError:
+            # the observe sits below the level's shuffle: when that shuffle
+            # is empty, AQE replaces the plan above it and drops the metrics
+            with _job_description(spark, f"{desc} count"):
+                in_rows = src.count()
+        lineage = _tile_lineage(_level_frame(spark, base, z))
+        stats = _write_lineage(spark, *lineage, os.path.join(base, "_lineage", f"zoom={z}"), desc)
+        _commit(spark, base, t0, zoom=z, stage=stage, in_rows=int(in_rows), out_rows=stats["n_tiles"], **stats)
 
-    parts = []
-    for z in range(min_zoom, base_zoom + 1):
-        parts.append(
-            spark.read.parquet(os.path.join(base, f"zoom={z}")).withColumn("zoom", F.lit(z))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("zoom", "tx", "ty", "data")
+    levels = [_level_frame(spark, base, z) for z in range(min_zoom, base_zoom + 1)]
+    return functools.reduce(DataFrame.unionByName, levels).select("zoom", "tx", "ty", "data")
 
 
 def edit_metadata(spark: SparkSession, base: str, **updates) -> dict:
@@ -230,6 +292,20 @@ def completed_stages(spark: SparkSession, base: str) -> set:
     return {r.stage for r in m.select("stage").distinct().collect()}
 
 
+def _run_named_stage(spark, runner, stage, fn, base, resume, lineage) -> DataFrame:
+    """The shared body of :func:`run_stage` and :func:`run_doc_stage`;
+    ``lineage`` builds the stage's lineage rows and manifest totals."""
+    path = os.path.join(base, f"stage={stage}")
+    if resume and stage in completed_stages(spark, base):
+        return spark.read.parquet(path)
+    t0 = time.time()
+    desc = f"pipeline.{runner}[{stage}]"
+    persisted = _write(spark, fn(), path, desc)
+    lpath = os.path.join(base, "_lineage", f"stage={stage}")
+    _commit(spark, base, t0, stage=stage, **_write_lineage(spark, *lineage(persisted), lpath, desc))
+    return persisted
+
+
 def run_stage(
     spark: SparkSession,
     stage: str,
@@ -245,39 +321,7 @@ def run_stage(
     producing a (zoom, tx, ty, data) table — rasterize_polygons/lines,
     warp outputs, sieve/proximity products.
     """
-    path = os.path.join(base, f"stage={stage}")
-    if resume and stage in completed_stages(spark, base):
-        return spark.read.parquet(path)
-    t0 = time.time()
-    out = tile_df_fn()
-    out.write.mode("overwrite").parquet(path)
-    persisted = spark.read.parquet(path)
-    stats = _level_stats(persisted)
-    lineage = (
-        raster.tile_checksums(persisted)
-        .withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tiles"),
-            F.sum("page_count").alias("page_count"),
-            F.expr("aggregate(collect_list(checksum), 0, (a, x) -> int(a ^ x))").alias("ck_xor"),
-        )
-    )
-    lineage.write.mode("overwrite").parquet(os.path.join(base, "_lineage", f"stage={stage}"))
-    stats["n_partitions"] = lineage.count()
-    _append_manifest(
-        spark,
-        base,
-        {
-            "stage": stage,
-            "ts": time.time(),
-            "wall_s": round(time.time() - t0, 3),
-            "master": spark.sparkContext.master,
-            "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-            **stats,
-        },
-    )
-    return persisted
+    return _run_named_stage(spark, "run_stage", stage, tile_df_fn, base, resume, _tile_lineage)
 
 
 def run_doc_stage(
@@ -294,50 +338,4 @@ def run_doc_stage(
     is never re-invoked).  This extends the checkpoint/lineage contract
     from the tile pipeline to the corpus pipeline — every curation stage
     (scrub -> filter -> dedup -> sample) restarts mid-pipeline."""
-    path = os.path.join(base, f"stage={stage}")
-    if resume and stage in completed_stages(spark, base):
-        return spark.read.parquet(path)
-    t0 = time.time()
-    out = df_fn()
-    out.write.mode("overwrite").parquet(path)
-    persisted = spark.read.parquet(path)
-    # content checksum: per-row hash over ALL columns folded with the
-    # bit_xor AGGREGATE (constant state — never materializes a partition's
-    # hashes) — invariant to row order and partitioning, so re-runs at any
-    # parallelism must reproduce it bit-for-bit
-    hashed = persisted.withColumn(
-        "_h", F.xxhash64(*[F.col(c) for c in persisted.columns])
-    ).withColumn("part_id", F.spark_partition_id())
-    lineage = hashed.groupBy("part_id").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.expr("bit_xor(_h)").alias("ck_xor"),
-    )
-    lpath = os.path.join(base, "_lineage", f"stage={stage}")
-    lineage.write.mode("overwrite").parquet(lpath)
-    # manifest scalars come from the tiny persisted lineage (no rescan of
-    # the stage table)
-    lsum = (
-        spark.read.parquet(lpath)
-        .agg(
-            F.sum("n_rows").alias("n"),
-            F.expr("bit_xor(ck_xor)").alias("ck"),
-            F.count(F.lit(1)).alias("np"),
-        )
-        .collect()[0]
-    )
-    total, ck, n_parts = int(lsum["n"] or 0), lsum["ck"], int(lsum["np"])
-    _append_manifest(
-        spark,
-        base,
-        {
-            "stage": stage,
-            "ts": time.time(),
-            "wall_s": round(time.time() - t0, 3),
-            "master": spark.sparkContext.master,
-            "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-            "n_rows": total,
-            "content_ck": int(ck if ck is not None else 0),
-            "n_partitions": n_parts,
-        },
-    )
-    return persisted
+    return _run_named_stage(spark, "run_doc_stage", stage, df_fn, base, resume, _doc_lineage)

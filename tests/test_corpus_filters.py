@@ -461,6 +461,88 @@ def test_run_doc_stage_checkpoint_resume(spark, tmp_path):
     assert int(man2.loc["pii", "content_ck"]) == int(man.loc["pii", "content_ck"])
 
 
+@pytest.mark.parametrize("empty", [False, True], ids=["rows", "no_rows"])
+def test_run_doc_stage_commit_matches_separate_passes(spark, tmp_path, empty):
+    """A tile_assign-shaped stage (string, timestamp, double and long
+    columns): the manifest scalars observed over the lineage write and the
+    lineage rows must equal separate passes over the persisted table (a
+    per-row xxhash64 folded by bit_xor), and the returned table must carry
+    the schema Spark infers from the files."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from engine import pipeline
+
+    n = 500
+    assign = pd.DataFrame(
+        {
+            "url": [f"http://h{i % 37}.example/{i}" for i in range(n)],
+            "warc_ts": pd.to_datetime(1_600_000_000_000_000 + 7_919 * pd.Series(range(n), dtype="int64"), unit="us"),
+            "lang": [None if i % 11 == 0 else "en" for i in range(n)],
+            "lon": [(i * 7.3) % 360 - 180 for i in range(n)],
+            "lat": [(i * 3.1) % 170 - 85 for i in range(n)],
+            "tx": pd.Series([i % 256 for i in range(n)], dtype="int64"),
+            "ty": pd.Series([i % 199 for i in range(n)], dtype="int64"),
+        }
+    )
+    df = spark.createDataFrame(assign).repartition(3)
+    if empty:
+        df, n = df.limit(0), 0
+    base = str(tmp_path / "run")
+    persisted = pipeline.run_doc_stage(spark, "tile_assign", lambda: df, base)
+    path = f"{base}/stage=tile_assign"
+    inferred = spark.read.parquet(path)
+    assert persisted.schema == inferred.schema
+    assert [f.dataType.typeName() for f in inferred.schema] == [
+        "string", "timestamp", "string", "double", "double", "long", "long"
+    ]
+
+    lineage = (
+        inferred.withColumn("_h", F.xxhash64(*[F.col(c) for c in inferred.columns]))
+        .withColumn("part_id", F.spark_partition_id())
+        .groupBy("part_id")
+        .agg(F.count(F.lit(1)).alias("n_rows"), F.expr("bit_xor(_h)").alias("ck_xor"))
+    )
+    want = sorted(tuple(r) for r in lineage.collect())
+    got = spark.read.parquet(f"{base}/_lineage/stage=tile_assign")
+    assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in lineage.schema]
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+    ck = 0
+    for r in want:
+        ck ^= r[2]
+    (mfile,) = os.listdir(f"{base}/_manifest")
+    rec = json.loads(open(f"{base}/_manifest/{mfile}").read())
+    assert {k: rec[k] for k in ("n_rows", "content_ck", "n_partitions")} == {
+        "n_rows": n, "content_ck": ck, "n_partitions": len(want)
+    }
+    if empty:
+        assert (rec["n_rows"], rec["content_ck"], rec["n_partitions"]) == (0, 0, 0)
+
+
+def test_run_doc_stage_reads_back_every_type_as_inferred(spark, tmp_path):
+    """The stage runners read a written table back with its own schema made
+    nullable instead of inferring it from the files; that must give the
+    inferred schema for nested, interval, char/varchar, collated and
+    user-defined types too (maps and variants are left out: the content
+    checksum cannot hash them)."""
+    from pyspark.ml.linalg import Vectors
+
+    from engine import pipeline
+
+    df = spark.sql(
+        """select cast(1 as tinyint) b, cast(2 as smallint) s, 3 i, 4L l, cast(1.5 as float) f,
+                  cast(1.25 as decimal(10, 2)) dec, cast('x' as binary) bin, true bo,
+                  date'2020-01-01' dt, timestamp_ntz'2020-01-01 00:00:00' tsn,
+                  array(1, 2) arr, named_struct('a', 1, 'b', array(2.5d)) st,
+                  interval '1' day dti, interval '1' year ymi,
+                  cast('ab' as varchar(5)) vc, cast('ab' as char(4)) ch, collate('a', 'UTF8_LCASE') col"""
+    ).crossJoin(spark.createDataFrame([(Vectors.dense([1.0, 2.0]),)], ["vec"]))
+    persisted = pipeline.run_doc_stage(spark, "wide", lambda: df, str(tmp_path))
+    assert persisted.schema == spark.read.parquet(str(tmp_path / "stage=wide")).schema
+
+
 def test_domain_cap_prefilter_exact(spark):
     """The hot-domain hash pre-filter must return EXACTLY the rows of the
     plain window path on a heavily skewed fixture."""

@@ -219,3 +219,104 @@ def test_fused_density_single_python_boundary(spark):
     # the partial count must aggregate BELOW a hash aggregate (JVM sum of
     # the already-unique per-batch rows), not a per-row count
     assert "HashAggregate" in plan_plain and "sum" in plan_plain.lower()
+
+
+def _tagged_jobs(spark, tag: str, action) -> list:
+    """Run ``action`` with every Spark job it starts tagged ``tag``; return
+    those jobs as (description, id and plan node names of the SQL execution
+    that ran the job — None and [] for a job outside any execution), read
+    from Spark's own status stores."""
+    sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try:
+        action()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(60_000)
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    jobs = [j for j in seq(jsc.statusStore().jobsList(None)) if tag in seq(j.jobTags())]
+    job_ids = {int(j.jobId()) for j in jobs}
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    nodes_of_job = {}
+    for ex in seq(sql_store.executionsList()):
+        it, ex_jobs = ex.jobs().keysIterator(), set()
+        while it.hasNext():
+            ex_jobs.add(int(it.next()))
+        if ex_jobs & job_ids:
+            names = [n.name() for n in seq(sql_store.planGraph(ex.executionId()).allNodes())]
+            nodes_of_job.update(dict.fromkeys(ex_jobs, (int(ex.executionId()), names)))
+    return [
+        (j.description().get() if j.description().isDefined() else None, *nodes_of_job.get(int(j.jobId()), (None, [])))
+        for j in jobs
+    ]
+
+
+def _lonlat(spark, n: int):
+    """``n`` points spread over the globe."""
+    return spark.range(n).select(
+        ((F.col("id") * 37 % 3600) / 10.0 - 180.0).alias("lon"),
+        ((F.col("id") * 53 % 1700) / 10.0 - 85.0).alias("lat"),
+    )
+
+
+def test_run_stage_commits_in_one_checksum_pass(spark, tmp_path):
+    """run_stage over an already-persisted tile table: the data write plus
+    one lineage write (a shuffle job and the write job) — at most 3 Spark
+    jobs, with ``tile_checksums``' Python stage run exactly once — each job
+    described by runner, stage and action, and the caller's description
+    restored afterwards."""
+    from engine import pipeline
+
+    from engine import raster
+
+    raster.burn_base_tiles(_lonlat(spark, 4000), 5).write.parquet(str(tmp_path / "tiles"))
+    tiles = spark.read.parquet(str(tmp_path / "tiles"))
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        jobs = _tagged_jobs(
+            spark, "plan-run-stage", lambda: pipeline.run_stage(spark, "z5", lambda: tiles, str(tmp_path / "out"))
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 3, jobs
+    plans = {ex: nodes for _, ex, nodes in jobs}
+    assert sum(nodes.count("MapInPandas") for nodes in plans.values()) == 1, plans
+    assert {d for d, _, _ in jobs} == {"pipeline.run_stage[z5] write", "pipeline.run_stage[z5] lineage"}
+
+
+def test_run_doc_stage_commits_in_one_pass(spark, tmp_path):
+    """run_doc_stage: the data write plus one lineage write whose observed
+    metrics give the manifest — at most 3 Spark jobs, no read-back."""
+    from engine import pipeline
+
+    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    jobs = _tagged_jobs(
+        spark, "plan-run-doc-stage", lambda: pipeline.run_doc_stage(spark, "docs", lambda: docs, str(tmp_path))
+    )
+    assert len(jobs) <= 3, jobs
+    assert {d for d, _, _ in jobs} == {"pipeline.run_doc_stage[docs] write", "pipeline.run_doc_stage[docs] lineage"}
+
+
+def test_run_tiling_counts_its_input_inside_the_write(spark, tmp_path):
+    """run_tiling launches no job that only scans its input (the former
+    ``points.count()``) and no schema-inference job: every job it starts
+    belongs to a level's data or lineage write."""
+    from engine import pipeline
+
+    _lonlat(spark, 3000).write.parquet(str(tmp_path / "points"))
+    points = spark.read.parquet(str(tmp_path / "points"))
+    jobs = _tagged_jobs(
+        spark,
+        "plan-run-tiling",
+        lambda: pipeline.run_tiling(spark, points, str(tmp_path / "pyramid"), base_zoom=5, min_zoom=4),
+    )
+    assert jobs
+    for desc, _, nodes in jobs:
+        assert desc.split()[-1] in ("write", "lineage"), jobs
+        assert any("InsertIntoHadoopFsRelationCommand" in n for n in nodes), (desc, nodes)

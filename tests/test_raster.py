@@ -221,6 +221,84 @@ def test_run_stage_checkpoint_and_resume(spark, tmp_path):
     assert got1 == got2
 
 
+def _manifest_records(base: str) -> dict:
+    """Manifest records keyed by zoom (levels) or stage name, as written."""
+    import json
+
+    from engine import pipeline
+
+    mdir = os.path.join(base, pipeline.MANIFEST_DIR)
+    recs = [json.loads(open(os.path.join(mdir, f)).read()) for f in os.listdir(mdir)]
+    return {r.get("zoom", r["stage"]): r for r in recs}
+
+
+def _tile_commit_oracle(persisted):
+    """A persisted tile table's manifest metrics and lineage rows by separate
+    passes: a whole-table ``tile_checksums`` aggregate, then a per-partition
+    one with the xor folded over a collected list."""
+    from pyspark.sql import functions as F
+
+    xor_fold = F.expr("aggregate(collect_list(checksum), 0, (a, x) -> int(a ^ x))")
+    cks = raster.tile_checksums(persisted)
+    stats = cks.agg(
+        F.count(F.lit(1)).alias("n_tiles"),
+        F.min("tx").alias("min_tx"),
+        F.max("tx").alias("max_tx"),
+        F.min("ty").alias("min_ty"),
+        F.max("ty").alias("max_ty"),
+        F.sum("page_count").alias("total_count"),
+        xor_fold.alias("ck_xor"),
+    ).collect()[0].asDict()
+    lineage = (
+        cks.withColumn("part_id", F.spark_partition_id())
+        .groupBy("part_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_tiles"),
+            F.sum("page_count").alias("page_count"),
+            xor_fold.alias("ck_xor"),
+        )
+    )
+    rows = sorted(tuple(r) for r in lineage.collect())
+    stats["n_partitions"] = len(rows)
+    return stats, [(f.name, f.dataType) for f in lineage.schema], rows
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["points", "no_points"])
+def test_tile_commit_matches_separate_passes(spark, geo_points, tmp_path, empty):
+    """run_tiling and run_stage take every manifest field and lineage row
+    from the lineage write's own pass; each must equal what separate passes
+    over the persisted table give, for an empty producer too."""
+    from pyspark.sql import functions as F
+
+    from engine import pipeline
+
+    tagged = geo_points[0].limit(0) if empty else geo_points[0]
+    tiling, stages = str(tmp_path / "tiling"), str(tmp_path / "stages")
+    pipeline.run_tiling(spark, tagged, tiling, base_zoom=5, min_zoom=4)
+    persisted = pipeline.run_stage(spark, "z5", lambda: raster.burn_base_tiles(tagged, 5), stages)
+    assert persisted.schema == spark.read.parquet(f"{stages}/stage=z5").schema
+
+    levels, named = _manifest_records(tiling), _manifest_records(stages)
+    assert levels[5]["in_rows"] == tagged.count()
+    assert levels[4]["in_rows"] == levels[5]["out_rows"]
+    cases = [
+        (levels[z], spark.read.parquet(f"{tiling}/zoom={z}").withColumn("zoom", F.lit(z)), f"{tiling}/_lineage/zoom={z}")
+        for z in (5, 4)
+    ]
+    cases.append((named["z5"], spark.read.parquet(f"{stages}/stage=z5"), f"{stages}/_lineage/stage=z5"))
+    for rec, table, lineage_path in cases:
+        stats, schema, rows = _tile_commit_oracle(table)
+        assert {k: rec[k] for k in stats} == stats
+        got = spark.read.parquet(lineage_path)
+        assert [(f.name, f.dataType) for f in got.schema] == schema
+        assert sorted(tuple(r) for r in got.collect()) == rows
+        if empty:
+            assert stats == {
+                "n_tiles": 0, "min_tx": None, "max_tx": None, "min_ty": None, "max_ty": None,
+                "total_count": None, "ck_xor": 0, "n_partitions": 0,
+            }
+
+
 def test_pyramid_delta_update_matches_full_recompute(spark):
     """Incremental pyramid maintenance: burning only the NEW points and
     updating ancestor tiles must equal a full recompute bit-for-bit, while
@@ -419,19 +497,26 @@ def test_burn_base_tiles_fused_partial_identity(spark):
     )
     pts = spark.createDataFrame(pdf)
     for zoom in (2, 7):
-        fused = {
-            (r.tx, r.ty): raster.bytes_to_tile(r.data)
-            for r in raster.burn_base_tiles(pts, zoom).collect()
-        }
+        fused = raster.burn_base_tiles(pts, zoom).select("tx", "ty", F.col("data").alias("fused"))
         composed_counts = (
             raster.with_pixel(pts.select("lon", "lat"), zoom)
             .groupBy("tx", "ty", "ix", "iy")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        composed = {
-            (r.tx, r.ty): raster.bytes_to_tile(r.data)
-            for r in raster._assemble_density(composed_counts, zoom).collect()
-        }
-        assert set(fused) == set(composed)
-        for key in composed:
-            assert np.array_equal(fused[key], composed[key]), f"z{zoom} tile {key}"
+        composed = raster._assemble_density(composed_counts, zoom).select(
+            "tx", "ty", F.col("data").alias("composed")
+        )
+        # compared inside Spark, byte for byte: at zoom 7 each side is ~12k
+        # 256 KB tiles, too much to collect twice into the driver
+        same = F.col("fused").eqNullSafe(F.col("composed"))
+        missing = [F.col(c).isNull().alias(f"no_{c}") for c in ("fused", "composed")]
+        row = (
+            fused.join(composed, ["tx", "ty"], "full_outer")
+            .agg(
+                F.count(F.lit(1)).alias("n_tiles"),
+                F.collect_list(F.when(~same, F.struct("tx", "ty", *missing))).alias("mismatched"),
+            )
+            .collect()[0]
+        )
+        assert row.n_tiles > 0
+        assert not row.mismatched, f"z{zoom} tiles differ: {row.mismatched[:20]}"
