@@ -12,9 +12,9 @@ needs (shapely is unavailable in the target runtime, SURVEY.md §7 risk (e)):
   bbox reject → even-odd ray cast with exact on-boundary detection
   (boundary counts as a match = GEOS Intersects, :1394-1401).
 
-All kernels operate on numpy float64 arrays and are called from pandas UDFs;
-per-polygon Python iteration only over the (small) polygon list, never over
-points.
+All kernels operate on numpy float64 arrays and are called from Arrow- or
+pandas-batched UDFs; Python iterates only to parse each polygon's WKB, never
+over points or (point, polygon) pairs.
 """
 
 from __future__ import annotations
@@ -329,6 +329,45 @@ def _all_points(kind, body):
 # ---------------------------------------------------------------------------
 
 
+def _rect_flags(x1, y1, x2, y2, minx, miny, maxx, maxy) -> np.ndarray:
+    """Exact-rectangle flag per 4-edge polygon, one row of ``(k, 4)`` edge
+    coordinates each (the GEOS prepared-geometry shortcut): a single 4-edge
+    axis-parallel ring with |shoelace area| == bbox area IS its bbox, so
+    intersects == the bbox test and the ray cast can be skipped.  The area
+    is rounded, so a different summation order flags a different set:
+    PreparedPolygon and EdgeTable both flag through this one function."""
+    axis_par = np.all((x1 == x2) | (y1 == y2), axis=1)
+    area2 = np.abs(np.sum(x1 * y2 - x2 * y1, axis=1))
+    return axis_par & (area2 == 2.0 * (maxx - minx) * (maxy - miny))
+
+
+def _ray_cast(x1, y1, x2, y2, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """Even-odd ray cast + exact boundary of points against one polygon's
+    edges, as a (points, edges) broadcast: True for interior or boundary."""
+    if px.shape[0] == 0:
+        return np.zeros(0, dtype=bool)
+    pxc = px[:, None]
+    pyc = py[:, None]
+    # crossing test: edge straddles the horizontal ray at py
+    straddle = (y1[None, :] > pyc) != (y2[None, :] > pyc)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xin = x1[None, :] + (pyc - y1[None, :]) / (y2[None, :] - y1[None, :]) * (
+            x2[None, :] - x1[None, :]
+        )
+    crossings = (straddle & (pxc < xin)).sum(axis=1)
+    inside = (crossings % 2) == 1
+    # exact boundary: cross product zero AND within segment envelope
+    cross = (x2 - x1)[None, :] * (pyc - y1[None, :]) - (y2 - y1)[None, :] * (pxc - x1[None, :])
+    on_seg = (
+        (cross == 0.0)
+        & (pxc >= np.minimum(x1, x2)[None, :])
+        & (pxc <= np.maximum(x1, x2)[None, :])
+        & (pyc >= np.minimum(y1, y2)[None, :])
+        & (pyc <= np.maximum(y1, y2)[None, :])
+    ).any(axis=1)
+    return inside | on_seg
+
+
 class PreparedPolygon:
     """Pre-parsed polygon for repeated many-point tests — the engine's analog
     of GEOS prepared geometries (OGRPreparedGeometry, ogrlayer.cpp:1397-1399).
@@ -353,18 +392,13 @@ class PreparedPolygon:
         self.maxx = float(max(self.x1.max(), self.x2.max()))
         self.miny = float(min(self.y1.min(), self.y2.min()))
         self.maxy = float(max(self.y1.max(), self.y2.max()))
-        # exact-rectangle flag (the GEOS prepared-geometry shortcut): a
-        # single 4-edge axis-parallel ring with |shoelace area| == bbox area
-        # IS its bbox, so intersects == the bbox test — contains() then
-        # skips the ray cast entirely.  Grid/tile dimension layers are the
-        # common case.
-        self.is_rect = False
-        if self.x1.shape[0] == 4 and bool(
-            np.all((self.x1 == self.x2) | (self.y1 == self.y2))
-        ):
-            area2 = abs(float(np.sum(self.x1 * self.y2 - self.x2 * self.y1)))
-            if area2 == 2.0 * (self.maxx - self.minx) * (self.maxy - self.miny):
-                self.is_rect = True
+        # grid/tile dimension layers are the common rectangle case
+        self.is_rect = self.x1.shape[0] == 4 and bool(
+            _rect_flags(
+                self.x1[None], self.y1[None], self.x2[None], self.y2[None],
+                self.minx, self.miny, self.maxx, self.maxy,
+            )[0]
+        )
 
     def contains(self, px: np.ndarray, py: np.ndarray, chunk: int = 65536) -> np.ndarray:
         """Vectorized intersects test: True for interior OR boundary points
@@ -391,60 +425,174 @@ class PreparedPolygon:
         return out
 
     def _test(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
-        x1, y1, x2, y2 = self.x1, self.y1, self.x2, self.y2
-        P, E = px.shape[0], x1.shape[0]
-        if P == 0:
-            return np.zeros(0, dtype=bool)
-        pxc = px[:, None]
-        pyc = py[:, None]
-        # crossing test: edge straddles the horizontal ray at py
-        straddle = (y1[None, :] > pyc) != (y2[None, :] > pyc)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xin = x1[None, :] + (pyc - y1[None, :]) / (y2[None, :] - y1[None, :]) * (
-                x2[None, :] - x1[None, :]
-            )
-        crossings = (straddle & (pxc < xin)).sum(axis=1)
-        inside = (crossings % 2) == 1
-        # exact boundary: cross product zero AND within segment envelope
-        cross = (x2 - x1)[None, :] * (pyc - y1[None, :]) - (y2 - y1)[None, :] * (pxc - x1[None, :])
-        on_seg = (
-            (cross == 0.0)
-            & (pxc >= np.minimum(x1, x2)[None, :])
-            & (pxc <= np.maximum(x1, x2)[None, :])
-            & (pyc >= np.minimum(y1, y2)[None, :])
-            & (pyc <= np.maximum(y1, y2)[None, :])
-        ).any(axis=1)
-        return inside | on_seg
+        return _ray_cast(self.x1, self.y1, self.x2, self.y2, px, py)
 
 
-def prepare_polygons(pid_wkb_pairs):
-    """[(pid, wkb)] → [(pid, PreparedPolygon)] — built once per executor via
-    broadcast; mirrors the reference's 'copy method layer to memory' advice
-    (ogrlayer.cpp:1915-1916)."""
-    return [(pid, PreparedPolygon(w)) for pid, w in pid_wkb_pairs]
+def _ranks(n: np.ndarray) -> np.ndarray:
+    """0..n[i]-1 for every group i, concatenated (the rank of each row of a
+    ``np.repeat(..., n)`` expansion within its group)."""
+    return np.arange(int(n.sum()), dtype=np.int64) - np.repeat(np.cumsum(n) - n, n)
 
 
-class VectorPIPIndex:
-    """Fully-vectorized many-points × many-polygons intersects index.
+def expand_boxes(x0: np.ndarray, x1: np.ndarray, y0: np.ndarray, y1: np.ndarray):
+    """Integer boxes ``[x0, x1] × [y0, y1]`` (inclusive) → ``(box, x, y)``,
+    one row per covered cell, grouped by box; a box with ``x1 < x0`` or
+    ``y1 < y0`` covers nothing."""
+    ny = np.maximum(y1 - y0 + 1, 0)
+    n = np.maximum(x1 - x0 + 1, 0) * ny
+    box = np.repeat(np.arange(n.shape[0], dtype=np.int64), n)
+    k = _ranks(n)
+    return box, x0[box] + k // ny[box], y0[box] + k % ny[box]
 
-    The scalable replacement for looping PreparedPolygon.contains per
-    (cell, polygon) group: polygons with ≤ ``emax`` edges go into one
-    NaN-padded dense edge tensor ``(n_polys, emax, 4)``; a uniform grid maps
-    each point cell to a fixed-width candidate matrix.  A query expands
-    (point, candidate) pairs and evaluates ray-cast parity + exact boundary
-    for ALL pairs in a handful of broadcasted numpy ops — no python loop
-    over cells or polygons.  (NaN pad edges: every comparison with NaN is
-    False, so padding contributes neither crossings nor boundary hits.)
 
-    Oversized polygons (> emax edges) fall back to PreparedPolygon scans —
-    they are few by construction (a layer of huge polygons broadcasts fine
-    as per-polygon vector tests).
+class EdgeTable:
+    """The point-in-polygon kernel for explicit ``(polygon slot, px, py)``
+    pairs over a list of polygon WKBs (slot = list position).
+
+    Built in one pass: the rings of every polygon are concatenated once,
+    and per-polygon edge counts, bboxes and rectangle flags come from
+    whole-array ops.  Each pair goes through the bbox gate; exact
+    rectangles (``is_rect``) are decided by it.  The rest are ray-cast:
+    polygons with ≤ ``EMAX`` edges from per-edge-slot arrays ``(width,
+    n)`` padded with NaN (every comparison with NaN is False, so padding
+    adds neither crossings nor boundary hits), larger ones one polygon at
+    a time over their own edge run.
 
     Semantics identical to PreparedPolygon.contains: interior or boundary
     (GEOS Intersects, ogrlayer.cpp:1394-1401).
     """
 
-    def __init__(self, pid_wkb: list, cells: int | None = None, emax: int = 64, kmax: int = 8):
+    CHUNK = 131072  # pairs per pass of the per-edge-slot loop
+    EMAX = 64  # larger polygons take the per-polygon fallback
+
+    def __init__(self, wkbs: list):
+        n = len(wkbs)
+        rings, ring_poly = [], []
+        for i, wkb in enumerate(wkbs):
+            for ring in polygon_rings(wkb):
+                if len(ring):
+                    rings.append(ring)
+                    ring_poly.append(i)
+        lens = np.array([r.shape[0] for r in rings], dtype=np.int64)
+        v = np.concatenate(rings) if rings else np.zeros((0, 2))
+        last = np.cumsum(lens) - 1
+        first = last + 1 - lens
+        # an open ring gets its closing edge (last → first vertex) at its
+        # end; a closed ring's last vertex starts no edge
+        closed = np.all(v[first] == v[last], axis=1)
+        nxt = np.arange(1, v.shape[0] + 1)
+        nxt[last[~closed]] = first[~closed]
+        starts = np.ones(v.shape[0], dtype=bool)
+        starts[last[closed]] = False
+        src = np.nonzero(starts)[0]
+        self.x1, self.y1 = v[src, 0], v[src, 1]
+        self.x2, self.y2 = v[nxt[src], 0], v[nxt[src], 1]
+        edge_poly = np.repeat(np.asarray(ring_poly, dtype=np.int64), lens)[src]
+        self.n_edges = np.bincount(edge_poly, minlength=n)
+        if (self.n_edges == 0).any():
+            raise ValueError("polygon without edges")
+        self.off = np.concatenate([[0], np.cumsum(self.n_edges)])
+        head = self.off[:-1]
+        self.minx = np.minimum.reduceat(np.minimum(self.x1, self.x2), head)
+        self.miny = np.minimum.reduceat(np.minimum(self.y1, self.y2), head)
+        self.maxx = np.maximum.reduceat(np.maximum(self.x1, self.x2), head)
+        self.maxy = np.maximum.reduceat(np.maximum(self.y1, self.y2), head)
+        self.is_rect = np.zeros(n, dtype=bool)
+        four = np.nonzero(self.n_edges == 4)[0]
+        e = head[four, None] + np.arange(4)
+        self.is_rect[four] = _rect_flags(
+            self.x1[e], self.y1[e], self.x2[e], self.y2[e],
+            self.minx[four], self.miny[four], self.maxx[four], self.maxy[four],
+        )
+        # pad only to the ACTUAL max edge count — excess pad width multiplies
+        # memory traffic directly (measured 20x slowdown padding 4-edge cells
+        # to 64).  Per-edge-slot rows, so the hot loop gathers (chunk,)
+        # vectors from small cache-resident sources instead of materializing
+        # a (chunk, width, 4) tensor.
+        small = self.n_edges <= self.EMAX
+        dense = small[edge_poly]
+        width = int(self.n_edges[small].max(initial=0))
+        rank = np.arange(src.shape[0]) - head[edge_poly]
+        self.slots = []
+        for coord in (self.x1, self.y1, self.x2, self.y2):
+            arr = np.full((width, n), np.nan)
+            arr[rank[dense], edge_poly[dense]] = coord[dense]
+            self.slots.append(arr)
+
+    def contains(self, slot, px, py) -> np.ndarray:
+        """Intersects test of each pair: point ``(px[i], py[i])`` against
+        polygon ``slot[i]`` → bool per pair."""
+        slot = np.asarray(slot, dtype=np.int64)
+        px = np.asarray(px, dtype=np.float64)
+        py = np.asarray(py, dtype=np.float64)
+        # bbox gate first: most candidate pairs die on 4 compares; exact
+        # rectangles are fully decided by it
+        hit = (
+            (px >= self.minx[slot])
+            & (px <= self.maxx[slot])
+            & (py >= self.miny[slot])
+            & (py <= self.maxy[slot])
+        )
+        need = np.nonzero(hit & ~self.is_rect[slot])[0]
+        big = self.n_edges[slot[need]] > self.EMAX
+        dense = need[~big]
+        for s in range(0, dense.shape[0], self.CHUNK):
+            sub = dense[s : s + self.CHUNK]
+            hit[sub] = self._slot_test(slot[sub], px[sub], py[sub])
+        fallback = need[big]
+        if fallback.size:
+            fallback = fallback[np.argsort(slot[fallback], kind="stable")]
+            for grp in np.split(fallback, np.flatnonzero(np.diff(slot[fallback])) + 1):
+                a, b = self.off[slot[grp[0]]], self.off[slot[grp[0]] + 1]
+                # bound each (points, edges) temporary at ~1M elements
+                step = max(1, (1 << 20) // int(b - a))
+                for s in range(0, grp.shape[0], step):
+                    g = grp[s : s + step]
+                    hit[g] = _ray_cast(self.x1[a:b], self.y1[a:b], self.x2[a:b], self.y2[a:b], px[g], py[g])
+        return hit
+
+    def _slot_test(self, sl: np.ndarray, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+        # per-edge-slot loop over (chunk,) vectors: every operand stays
+        # L2-resident; parity accumulates by XOR and boundary by OR in place
+        # (the (chunk, width) tensor formulation was DRAM-bandwidth-bound
+        # and collapsed under multi-worker load)
+        ex1, ey1, ex2, ey2 = self.slots
+        parity = np.zeros(sl.shape[0], dtype=bool)
+        on_seg = np.zeros(sl.shape[0], dtype=bool)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            for e in range(int(self.n_edges[sl].max(initial=0))):
+                x1 = ex1[e][sl]
+                y1 = ey1[e][sl]
+                x2 = ex2[e][sl]
+                y2 = ey2[e][sl]
+                straddle = (y1 > py) != (y2 > py)
+                xin = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
+                np.logical_xor(parity, straddle & (px < xin), out=parity)
+                cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
+                on_e = (
+                    (cross == 0.0)
+                    & (px >= np.minimum(x1, x2))
+                    & (px <= np.maximum(x1, x2))
+                    & (py >= np.minimum(y1, y2))
+                    & (py <= np.maximum(y1, y2))
+                )
+                np.logical_or(on_seg, on_e, out=on_seg)
+        return parity | on_seg
+
+
+class VectorPIPIndex:
+    """Fully-vectorized many-points × many-polygons intersects index.
+
+    A uniform grid over the polygons' bboxes, stored as one candidate run
+    per grid cell, turns each point into explicit (point, polygon) pairs;
+    every pair is decided by the shared :class:`EdgeTable` kernel — no
+    python loop over cells or points.
+
+    Semantics identical to PreparedPolygon.contains: interior or boundary
+    (GEOS Intersects, ogrlayer.cpp:1394-1401).
+    """
+
+    def __init__(self, pid_wkb: list, cells: int | None = None):
         if cells is None:
             # index cell ~1/4 the linear size of an average polygon: candidate
             # count per point ≈ (s/p + 1)² shrinks quadratically with finer
@@ -453,185 +601,43 @@ class VectorPIPIndex:
         self.cells = cells
         self.step_x = 360.0 / cells
         self.step_y = 180.0 / cells
-        dense_raw = []
-        dense_pid = []
-        dense_bbox = []
-        self.fallback = []  # [(pid, PreparedPolygon)]
-        for pid, wkb in pid_wkb:
-            prep = PreparedPolygon(wkb)
-            n_edges = prep.x1.shape[0]
-            if n_edges <= emax:
-                dense_raw.append(prep)
-                dense_pid.append(pid)
-                dense_bbox.append((prep.minx, prep.miny, prep.maxx, prep.maxy))
-            else:
-                self.fallback.append((pid, prep))
-        self.n_dense = len(dense_pid)
-        # pad only to the ACTUAL max edge count — excess pad width multiplies
-        # memory traffic directly (measured 20x slowdown padding 4-edge cells
-        # to 64).  Layout: per-edge-slot arrays (width, n_dense) so the hot
-        # loop gathers (chunk,) vectors from small cache-resident sources
-        # instead of materializing a (chunk, width, 4) tensor.
-        width = max((p.x1.shape[0] for p in dense_raw), default=1)
-        self.edge_width = width
-        self.ex1 = np.full((width, self.n_dense), np.nan)
-        self.ey1 = np.full((width, self.n_dense), np.nan)
-        self.ex2 = np.full((width, self.n_dense), np.nan)
-        self.ey2 = np.full((width, self.n_dense), np.nan)
-        # per-polygon bbox columns + exact-rectangle flag.  A polygon whose
-        # single 4-edge ring is axis-parallel with |shoelace area| == bbox
-        # area IS its bbox, so intersects == bbox containment — the same
-        # rectangle shortcut GEOS prepared geometries take.  Grid/tile
-        # layers (the common dimension shape) then skip the ray-cast
-        # entirely, and every other pair gets a bbox pre-filter before the
-        # edge loop — both cut the per-pair temporary allocations that
-        # dominate this kernel's cost at scale.
-        self.bminx = np.array([b[0] for b in dense_bbox], dtype=np.float64)
-        self.bminy = np.array([b[1] for b in dense_bbox], dtype=np.float64)
-        self.bmaxx = np.array([b[2] for b in dense_bbox], dtype=np.float64)
-        self.bmaxy = np.array([b[3] for b in dense_bbox], dtype=np.float64)
-        self.is_rect = np.zeros(max(self.n_dense, 1), dtype=bool)[: self.n_dense]
-        for i, prep in enumerate(dense_raw):
-            n = prep.x1.shape[0]
-            self.ex1[:n, i] = prep.x1
-            self.ey1[:n, i] = prep.y1
-            self.ex2[:n, i] = prep.x2
-            self.ey2[:n, i] = prep.y2
-            if prep.is_rect:
-                self.is_rect[i] = True
-        # dense edges also as (n_dense, width, 4) for the per-cell overflow path
-        self.edges = np.stack(
-            [self.ex1.T, self.ey1.T, self.ex2.T, self.ey2.T], axis=2
-        ) if self.n_dense else np.zeros((0, width, 4))
-        self.pid = np.asarray(dense_pid, dtype=np.int64)
-        # grid → fixed-width candidate matrix (-1 pad); overflow goes to a
-        # per-cell python list (rare: means >kmax polygons overlap one cell)
-        grid_lists: dict = {}
-        for di, (minx, miny, maxx, maxy) in enumerate(dense_bbox):
-            cx0 = max(int((minx + 180.0) // self.step_x), 0)
-            cx1 = min(int((maxx + 180.0) // self.step_x), cells - 1)
-            cy0 = max(int((miny + 90.0) // self.step_y), 0)
-            cy1 = min(int((maxy + 90.0) // self.step_y), cells - 1)
-            for cx in range(cx0, cx1 + 1):
-                for cy in range(cy0, cy1 + 1):
-                    grid_lists.setdefault(cx * cells + cy, []).append(di)
-        width = max((len(v) for v in grid_lists.values()), default=1)
-        self.kmax = min(width, kmax)
-        self.cand = np.full((cells * cells, self.kmax), -1, dtype=np.int64)
-        self.overflow: dict = {}
-        for c, lst in grid_lists.items():
-            if len(lst) <= self.kmax:
-                self.cand[c, : len(lst)] = lst
-            else:
-                self.cand[c, :] = lst[: self.kmax]
-                self.overflow[c] = tuple(lst[self.kmax :])
+        self.pid = np.array([pid for pid, _ in pid_wkb], dtype=np.int64)
+        self.table = EdgeTable([wkb for _, wkb in pid_wkb])
+        t = self.table
+        slot, cx, cy = expand_boxes(
+            self._col(t.minx), self._col(t.maxx), self._row(t.miny), self._row(t.maxy)
+        )
+        cell = cx * cells + cy
+        # candidate runs in polygon order within each cell
+        self.cell_slots = slot[np.argsort(cell, kind="stable")]
+        self.cell_start = np.concatenate([[0], np.cumsum(np.bincount(cell, minlength=cells * cells))])
 
-    def query(self, lon: np.ndarray, lat: np.ndarray, pair_chunk: int = 131072):
-        """→ (point_index_array, polygon_id_array) of all intersecting pairs."""
+    def _col(self, lon: np.ndarray) -> np.ndarray:
+        return np.clip(((lon + 180.0) // self.step_x).astype(np.int64), 0, self.cells - 1)
+
+    def _row(self, lat: np.ndarray) -> np.ndarray:
+        return np.clip(((lat + 90.0) // self.step_y).astype(np.int64), 0, self.cells - 1)
+
+    def query(self, lon: np.ndarray, lat: np.ndarray):
+        """→ (point_index_array, polygon_id_array) of all intersecting pairs.
+
+        Points go through in slices of ``EdgeTable.CHUNK``, so the pair
+        arrays of one pass grow with the candidates per point, not with the
+        number of points in the call."""
         lon = np.asarray(lon, dtype=np.float64)
         lat = np.asarray(lat, dtype=np.float64)
-        P = lon.shape[0]
-        out_pt: list = []
-        out_pid: list = []
-        if self.n_dense and P:
-            cx = np.clip(((lon + 180.0) // self.step_x).astype(np.int64), 0, self.cells - 1)
-            cy = np.clip(((lat + 90.0) // self.step_y).astype(np.int64), 0, self.cells - 1)
-            cell = cx * self.cells + cy
-            cmat = self.cand[cell]  # (P, kmax)
-            valid = cmat >= 0
-            pair_pt = np.repeat(np.arange(P, dtype=np.int64), self.kmax)[valid.ravel()]
-            pair_poly = cmat.ravel()[valid.ravel()]
-            for s in range(0, pair_pt.shape[0], pair_chunk):
-                pt = pair_pt[s : s + pair_chunk]
-                pl = pair_poly[s : s + pair_chunk]
-                px = lon[pt]
-                py = lat[pt]
-                # bbox gate first: candidates come from coarse index cells,
-                # so most pairs die on 4 compares instead of the edge loop;
-                # exact rectangles (is_rect) are fully DECIDED by it
-                inbox = (
-                    (px >= self.bminx[pl])
-                    & (px <= self.bmaxx[pl])
-                    & (py >= self.bminy[pl])
-                    & (py <= self.bmaxy[pl])
-                )
-                rect = self.is_rect[pl]
-                hit = inbox & rect
-                need = np.nonzero(inbox & ~rect)[0]
-                if need.size:
-                    px2 = px[need]
-                    py2 = py[need]
-                    pl2 = pl[need]
-                    # per-edge-slot loop over (chunk,) vectors: every operand
-                    # stays L2-resident; parity accumulates by XOR and
-                    # boundary by OR in place (the (chunk, width) tensor
-                    # formulation was DRAM-bandwidth-bound and collapsed
-                    # under multi-worker load)
-                    parity = np.zeros(need.size, dtype=bool)
-                    on_seg = np.zeros(need.size, dtype=bool)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        for e in range(self.edge_width):
-                            x1 = self.ex1[e][pl2]
-                            y1 = self.ey1[e][pl2]
-                            x2 = self.ex2[e][pl2]
-                            y2 = self.ey2[e][pl2]
-                            straddle = (y1 > py2) != (y2 > py2)
-                            xin = x1 + (py2 - y1) / (y2 - y1) * (x2 - x1)
-                            np.logical_xor(parity, straddle & (px2 < xin), out=parity)
-                            cross = (x2 - x1) * (py2 - y1) - (y2 - y1) * (px2 - x1)
-                            on_e = (
-                                (cross == 0.0)
-                                & (px2 >= np.minimum(x1, x2))
-                                & (px2 <= np.maximum(x1, x2))
-                                & (py2 >= np.minimum(y1, y2))
-                                & (py2 <= np.maximum(y1, y2))
-                            )
-                            np.logical_or(on_seg, on_e, out=on_seg)
-                    hit[need] = parity | on_seg
-                if hit.any():
-                    out_pt.append(pt[hit])
-                    out_pid.append(self.pid[pl[hit]])
-            # overflow cells (rare): per-cell candidate tail
-            if self.overflow:
-                for c, tail in self.overflow.items():
-                    rows = np.nonzero(cell == c)[0]
-                    if not rows.size:
-                        continue
-                    for di in tail:
-                        e = self.edges[di]
-                        prep_hits = _edges_contains(e, lon[rows], lat[rows])
-                        if prep_hits.any():
-                            out_pt.append(rows[prep_hits])
-                            out_pid.append(np.full(int(prep_hits.sum()), self.pid[di]))
-        for pid, prep in self.fallback:
-            hits = prep.contains(lon, lat)
-            if hits.any():
-                rows = np.nonzero(hits)[0]
-                out_pt.append(rows)
-                out_pid.append(np.full(rows.size, pid, dtype=np.int64))
-        if not out_pt:
-            return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-        return np.concatenate(out_pt), np.concatenate(out_pid)
-
-
-def _edges_contains(e: np.ndarray, px: np.ndarray, py: np.ndarray) -> np.ndarray:
-    """Ray-cast + boundary over one NaN-padded edge array (emax, 4)."""
-    x1, y1, x2, y2 = e[:, 0][None, :], e[:, 1][None, :], e[:, 2][None, :], e[:, 3][None, :]
-    pxc = px[:, None]
-    pyc = py[:, None]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        straddle = (y1 > pyc) != (y2 > pyc)
-        xin = x1 + (pyc - y1) / (y2 - y1) * (x2 - x1)
-        crossings = (straddle & (pxc < xin)).sum(axis=1)
-        cross = (x2 - x1) * (pyc - y1) - (y2 - y1) * (pxc - x1)
-        on_seg = (
-            (cross == 0.0)
-            & (pxc >= np.minimum(x1, x2))
-            & (pxc <= np.maximum(x1, x2))
-            & (pyc >= np.minimum(y1, y2))
-            & (pyc <= np.maximum(y1, y2))
-        ).any(axis=1)
-    return ((crossings % 2) == 1) | on_seg
+        pts, pids = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
+        for s in range(0, lon.shape[0], EdgeTable.CHUNK):
+            x, y = lon[s : s + EdgeTable.CHUNK], lat[s : s + EdgeTable.CHUNK]
+            cell = self._col(x) * self.cells + self._row(y)
+            first = self.cell_start[cell]
+            n = self.cell_start[cell + 1] - first
+            pair_pt = np.repeat(np.arange(x.shape[0], dtype=np.int64), n)
+            pair_slot = self.cell_slots[np.repeat(first, n) + _ranks(n)]
+            hit = self.table.contains(pair_slot, x[pair_pt], y[pair_pt])
+            pts.append(pair_pt[hit] + s)
+            pids.append(self.pid[pair_slot[hit]])
+        return np.concatenate(pts), np.concatenate(pids)
 
 
 def polygon_parts(buf: bytes):

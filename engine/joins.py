@@ -7,19 +7,23 @@ The engine's re-expression of GDAL's spatial-join surface
   ogrlayer.cpp:1954``) → point-in-polygon join, in two physical plans that
   must emit identical rows:
     - **broadcast** (method layer small — mirrors the reference's own advice
-      to copy the method layer to memory, ogrlayer.cpp:1915-1916): prepared
-      polygons + grid index broadcast, ``mapInPandas`` over points;
+      to copy the method layer to memory, ogrlayer.cpp:1915-1916): the
+      polygon list broadcast, one grid index per Python worker,
+      ``mapInArrow`` over points;
     - **shuffle** (method layer large): both sides exploded to covering
       mercator tiles at an index zoom, equi-join on the cell id — the
-      cell-prefix pruning the north star requires — then exact vectorized
-      refine; optional hot-cell salting.
+      cell-prefix pruning the north star requires — then exact refine of
+      whole candidate batches; optional hot-cell salting.
+  Both plans decide every (point, polygon) pair with the same kernel,
+  :class:`geom.EdgeTable`.
 * ``GDALGridNearestNeighbor``'s quadtree-accelerated kNN
   (``alg/gdalgrid.cpp:675,691``) → cell-ring expansion join with
   sorted-merge (window top-k) refinement; rings grow per-round for
   unsatisfied queries only.
 
-All heavy math is numpy inside Arrow-batched pandas UDFs; all matching is
-JVM-side equi-joins.
+All heavy math is whole-batch numpy inside Arrow-batched UDFs
+(``mapInArrow`` for the tile encode and the PIP joins, pandas UDFs for the
+kNN paths); all matching is JVM-side equi-joins.
 """
 
 from __future__ import annotations
@@ -54,7 +58,7 @@ def with_tile(
     lat_col: str = "lat",
     prefix: str = "",
 ) -> DataFrame:
-    """Append TMS tile coords + quadkey at ``zoom`` (vectorized pandas UDF).
+    """Append TMS tile coords + quadkey at ``zoom`` (vectorized Arrow UDF).
 
     Columns: ``{prefix}tx {prefix}ty {prefix}quadkey``.  The quadkey is the
     multi-resolution cell id: its z-length prefixes are the coarser cells.
@@ -115,37 +119,6 @@ def with_cell(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "la
 _INDEX_CACHE: dict = {}
 
 
-class _PolyGridIndex:
-    """Driver-built uniform grid index over polygon bboxes (the analog of the
-    reference's CPLQuadTree, port/cpl_quad_tree.h).  Broadcast once; lookup
-    is integer arithmetic, candidate sets are per-cell python lists."""
-
-    def __init__(self, pid_wkb: list, cells: int | None = None):
-        self.prepared = geom.prepare_polygons(pid_wkb)
-        if cells is None:
-            # index cell ≈ polygon footprint: ~1-4 candidates per cell while
-            # keeping the per-batch group count (and thus python-loop
-            # iterations in the hot path) low
-            cells = max(8, min(128, int(len(pid_wkb) ** 0.5)))
-        self.cells = cells
-        self.step_x = 360.0 / cells
-        self.step_y = 180.0 / cells
-        self.index: dict = {}
-        for i, (_pid, prep) in enumerate(self.prepared):
-            cx0 = int((prep.minx + 180.0) // self.step_x)
-            cx1 = int((prep.maxx + 180.0) // self.step_x)
-            cy0 = int((prep.miny + 90.0) // self.step_y)
-            cy1 = int((prep.maxy + 90.0) // self.step_y)
-            for cx in range(max(cx0, 0), min(cx1, self.cells - 1) + 1):
-                for cy in range(max(cy0, 0), min(cy1, self.cells - 1) + 1):
-                    self.index.setdefault(cx * cells + cy, []).append(i)
-        # tuple-ify for cheap repeated lookup in the hot loop
-        self.index = {k: tuple(v) for k, v in self.index.items()}
-
-    def candidates(self, packed_cell: int) -> tuple:
-        return self.index.get(packed_cell, ())
-
-
 def pip_join_broadcast(
     points: DataFrame,
     polygons_pdf: pd.DataFrame,
@@ -198,6 +171,26 @@ def pip_join_broadcast(
 # ---------------------------------------------------------------------------
 
 
+def _cover_batch(batch: "pa.RecordBatch", zoom: int) -> "pa.RecordBatch":
+    """(polygon_id, geom_wkb, minx, miny, maxx, maxy) → one (polygon_id,
+    geom_wkb, cell) row per mercator tile covering each bbox at ``zoom``:
+    one ``np.repeat`` over the per-polygon tile counts and one ``take`` of
+    the polygon columns per batch."""
+    import pyarrow as pa
+
+    minx, miny, maxx, maxy = (batch.column(i).to_numpy(zero_copy_only=False) for i in range(2, 6))
+    # clamp to the mercator world; tile of each bbox corner
+    lat_lim = tiles.MERCATOR_LAT_MAX
+    tx0, ty0 = tiles.lonlat_to_tile(np.clip(minx, -180.0, 180.0), np.clip(miny, -lat_lim, lat_lim), zoom)
+    tx1, ty1 = tiles.lonlat_to_tile(np.clip(maxx, -180.0, 180.0), np.clip(maxy, -lat_lim, lat_lim), zoom)
+    box, tx, ty = geom.expand_boxes(tx0, tx1, ty0, ty1)
+    rows = pa.array(box, type=pa.int64())
+    cell = pa.array(tx * np.int64(2 ** (zoom + 1)) + ty, type=pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [batch.column(0).take(rows), batch.column(1).take(rows), cell], names=["polygon_id", "geom_wkb", "cell"]
+    )
+
+
 def polygon_cover_cells(polygons: DataFrame, zoom: int) -> DataFrame:
     """Explode each polygon to the mercator tiles covering its bbox at
     ``zoom`` → (polygon_id, geom_wkb, cell).  The cell-side of the shuffle
@@ -210,45 +203,14 @@ def polygon_cover_cells(polygons: DataFrame, zoom: int) -> DataFrame:
             StructField("cell", LongType()),
         ]
     )
-    shift = np.int64(2 ** (zoom + 1))
 
-    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            minx = pdf["minx"].to_numpy(np.float64)
-            miny = pdf["miny"].to_numpy(np.float64)
-            maxx = pdf["maxx"].to_numpy(np.float64)
-            maxy = pdf["maxy"].to_numpy(np.float64)
-            # clamp to the mercator world; tile of each bbox corner
-            lat_lim = tiles.MERCATOR_LAT_MAX
-            tx0, ty0 = tiles.lonlat_to_tile(
-                np.clip(minx, -180.0, 180.0), np.clip(miny, -lat_lim, lat_lim), zoom
-            )
-            tx1, ty1 = tiles.lonlat_to_tile(
-                np.clip(maxx, -180.0, 180.0), np.clip(maxy, -lat_lim, lat_lim), zoom
-            )
-            pids, wkbs, cells = [], [], []
-            for i in range(len(pdf)):
-                txs = np.arange(tx0[i], tx1[i] + 1, dtype=np.int64)
-                tys = np.arange(ty0[i], ty1[i] + 1, dtype=np.int64)
-                gx, gy = np.meshgrid(txs, tys)
-                c = (gx.ravel() * shift + gy.ravel())
-                pids.append(np.full(c.size, pdf["polygon_id"].iat[i], dtype=np.int32))
-                wkbs.extend([pdf["geom_wkb"].iat[i]] * c.size)
-                cells.append(c)
-            if not pids:
-                yield pd.DataFrame({"polygon_id": [], "geom_wkb": [], "cell": []})
-                continue
-            yield pd.DataFrame(
-                {
-                    "polygon_id": np.concatenate(pids),
-                    "geom_wkb": wkbs,
-                    "cell": np.concatenate(cells),
-                }
-            )
+    def _explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            yield _cover_batch(batch, zoom)
 
-    return polygons.select("polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy").mapInPandas(
-        _explode, out_schema
-    )
+    return polygons.select(
+        F.col("polygon_id").cast("int").alias("polygon_id"), "geom_wkb", "minx", "miny", "maxx", "maxy"
+    ).mapInArrow(_explode, out_schema)
 
 
 def pip_join_shuffle_adaptive(
@@ -322,10 +284,11 @@ def pip_join_shuffle(
 
     Plan: points → cell at ``zoom``; polygons → covering cells (replicated);
     equi-join on cell (both sides shuffle-partitioned by cell — the
-    cell-prefix co-location); exact vectorized refine inside ``mapInPandas``
-    (per-batch group by polygon, parse WKB once, ray-cast all its candidate
-    points).  ``n_salt`` replicates every polygon-cell n ways and salts
-    points by hash — the explicit hot-cell skew remedy (SURVEY.md §4 skew).
+    cell-prefix co-location); exact refine inside ``mapInArrow`` (per
+    batch, each distinct polygon's WKB parsed once and all candidate pairs
+    tested in one :class:`geom.EdgeTable` call).  ``n_salt`` replicates
+    every polygon-cell n ways and salts points by hash — the explicit
+    hot-cell skew remedy (SURVEY.md §4 skew).
 
     Emits the same rows as :func:`pip_join_broadcast` (A/B parity test).
     """
@@ -345,42 +308,43 @@ def pip_join_shuffle(
     return out.dropDuplicates(list(keep_cols) + ["polygon_id"]) if n_salt else out
 
 
+def _refine_batch(batch: "pa.RecordBatch") -> "pa.RecordBatch":
+    """(*point columns, lon, lat, polygon_id, geom_wkb) candidate rows → the
+    (*point columns, lon, lat, polygon_id) rows whose point intersects its
+    polygon.  The batch's distinct polygons are parsed once into a
+    :class:`geom.EdgeTable`, every candidate pair is tested in one call and
+    the hits are gathered with Arrow ``take``."""
+    import pyarrow as pa
+
+    n = batch.num_columns - 2
+    pid = batch.column(n).to_numpy(zero_copy_only=False)
+    _, first, slot = np.unique(pid, return_index=True, return_inverse=True)
+    table = geom.EdgeTable(batch.column(n + 1).take(pa.array(first, type=pa.int64())).to_pylist())
+    hit = table.contains(
+        slot,
+        batch.column(n - 2).to_numpy(zero_copy_only=False),
+        batch.column(n - 1).to_numpy(zero_copy_only=False),
+    )
+    rows = pa.array(np.nonzero(hit)[0], type=pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [batch.column(i).take(rows) for i in range(n + 1)], names=batch.schema.names[: n + 1]
+    )
+
+
 def _pip_refine(
     cand: DataFrame, points: DataFrame, lon_col: str, lat_col: str, keep_cols: tuple
 ) -> DataFrame:
-    """Exact vectorized refine of (point, candidate polygon wkb) rows: batch
-    group-by polygon, parse each WKB once, ray-cast its candidate points."""
+    """Exact refine of (point, candidate polygon wkb) rows, one Arrow batch
+    at a time (:func:`_refine_batch`)."""
     in_cols = list(keep_cols) + [lon_col, lat_col]
     out_fields = [f for f in points.select(*in_cols).schema.fields]
     out_schema = StructType(out_fields + [StructField("polygon_id", IntegerType())])
 
-    def _refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
-            if pdf.empty:
-                empty = pdf[in_cols].copy()
-                empty["polygon_id"] = pd.Series(dtype="int32")
-                yield empty
-                continue
-            lon = pdf[lon_col].to_numpy(np.float64)
-            lat = pdf[lat_col].to_numpy(np.float64)
-            keep_parts = []
-            for pid, grp in pdf.groupby("polygon_id", sort=False):
-                prep = geom.PreparedPolygon(grp["geom_wkb"].iat[0])
-                pos = grp.index.to_numpy()
-                hit = prep.contains(lon[pos], lat[pos])
-                if hit.any():
-                    sub = grp.loc[pos[hit], in_cols].copy()
-                    sub["polygon_id"] = np.int32(pid)
-                    keep_parts.append(sub)
-            if keep_parts:
-                yield pd.concat(keep_parts, ignore_index=True)
-            else:
-                empty = pdf[in_cols].iloc[0:0].copy()
-                empty["polygon_id"] = pd.Series(dtype="int32")
-                yield empty
+    def _refine(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            yield _refine_batch(batch)
 
-    return cand.mapInPandas(_refine, out_schema)
+    return cand.select(*in_cols, "polygon_id", "geom_wkb").mapInArrow(_refine, out_schema)
 
 
 # ---------------------------------------------------------------------------

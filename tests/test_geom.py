@@ -129,3 +129,95 @@ def test_rectangle_fast_path_flag_and_parity():
         assert np.array_equal(
             seg.contains(px, py), seg._test(px, py)
         )
+
+
+def _kernel_layer():
+    """Polygons covering every EdgeTable path: rectangles (is_rect), a
+    concave ring, a hole, a MultiPolygon, overlapping polygons, a diamond
+    and a 100-edge star (> EdgeTable.EMAX edges: the per-polygon fallback)."""
+    k = np.arange(100)
+    ang = k * (2 * np.pi / 100)
+    rad = np.where(k % 2 == 0, 8.0, 4.0)
+    star = list(zip(15 + rad * np.cos(ang), 15 + rad * np.sin(ang)))
+    return [
+        geom.wkb_polygon(SQUARE),
+        geom.wkb_polygon(CONCAVE),
+        geom.wkb_polygon(HOLED),
+        geom.wkb_multipolygon([SQUARE, [[(20.0, 20.0), (30.0, 20.0), (30.0, 30.0), (20.0, 30.0)]]]),
+        geom.wkb_polygon([[(5.0, 5.0), (15.0, 5.0), (15.0, 15.0), (5.0, 15.0)]]),
+        geom.wkb_polygon([[(5.0, 0.0), (10.0, 5.0), (5.0, 10.0), (0.0, 5.0)]]),
+        geom.wkb_polygon([star]),
+    ]
+
+
+def _kernel_points(wkbs):
+    """Every vertex, every edge midpoint, random points and NaN points."""
+    rng = np.random.default_rng(17)
+    xs, ys = [rng.uniform(-2, 32, 600)], [rng.uniform(-2, 32, 600)]
+    for w in wkbs:
+        for ring in geom.polygon_rings(w):
+            xs += [ring[:, 0], (ring[:-1, 0] + ring[1:, 0]) / 2]
+            ys += [ring[:, 1], (ring[:-1, 1] + ring[1:, 1]) / 2]
+    xs.append(np.array([np.nan, 5.0, np.nan]))
+    ys.append(np.array([5.0, np.nan, np.nan]))
+    return np.concatenate(xs), np.concatenate(ys)
+
+
+def test_edge_table_matches_prepared_polygon():
+    """The shared pair kernel gives PreparedPolygon.contains's answer on
+    every (polygon, point) pair, through the rectangle, dense and fallback
+    paths, and an empty pair list gives an empty answer."""
+    wkbs = _kernel_layer()
+    table = geom.EdgeTable(wkbs)
+    assert table.n_edges[-1] > geom.EdgeTable.EMAX
+    assert table.is_rect.tolist() == [True, False, False, False, True, False, False]
+    px, py = _kernel_points(wkbs)
+    slot = np.repeat(np.arange(len(wkbs)), px.size)
+    got = table.contains(slot, np.tile(px, len(wkbs)), np.tile(py, len(wkbs))).reshape(len(wkbs), -1)
+    for i, w in enumerate(wkbs):
+        want = geom.PreparedPolygon(w).contains(px, py)
+        assert np.array_equal(got[i], want), i
+    # every polygon contains its own vertices (the boundary counts)
+    assert got.sum() > len(wkbs) * 4
+    # pairs in any order, including repeats, give the same answers
+    perm = np.random.default_rng(3).permutation(slot.size)
+    again = table.contains(slot[perm], np.tile(px, len(wkbs))[perm], np.tile(py, len(wkbs))[perm])
+    assert np.array_equal(again, got.ravel()[perm])
+    empty = table.contains(np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0))
+    assert empty.dtype == bool and empty.shape == (0,)
+
+
+def test_edge_table_rect_flags_match_prepared_polygon():
+    """EdgeTable flags exactly the rectangles PreparedPolygon flags: the
+    shoelace area is rounded, so another summation order flags others."""
+    from engine.fixtures import make_polygons, subdivide_polygons
+
+    wkbs = subdivide_polygons(make_polygons(500), 10)["geom_wkb"].tolist()
+    table = geom.EdgeTable(wkbs)
+    want = np.array([geom.PreparedPolygon(w).is_rect for w in wkbs])
+    assert want.any() and np.array_equal(table.is_rect, want)
+
+
+def test_vector_index_matches_prepared_polygon():
+    """VectorPIPIndex (grid candidates → shared kernel) returns exactly the
+    brute-force PreparedPolygon pairs, with more than eight polygons
+    stacked in one grid cell, points outside the world, and a call with
+    more points than one slice of EdgeTable.CHUNK."""
+    wkbs = _kernel_layer() + [
+        geom.wkb_polygon([[(x, x), (x + 3.0, x), (x + 3.0, x + 3.0), (x, x + 3.0)]]) for x in np.arange(0.5, 5.0, 0.5)
+    ]
+    pid_wkb = list(zip(range(100, 100 + len(wkbs)), wkbs))
+    index = geom.VectorPIPIndex(pid_wkb)
+    px, py = _kernel_points(wkbs)
+    px = np.concatenate([px, [200.0, -190.0, 10.0]])
+    py = np.concatenate([py, [5.0, 5.0, 95.0]])
+    pt, pid = index.query(px, py)
+    got = sorted(zip(pt.tolist(), pid.tolist()))
+    want = sorted(
+        (int(i), p) for p, w in pid_wkb for i in np.nonzero(geom.PreparedPolygon(w).contains(px, py))[0]
+    )
+    assert got == want and len(got) > 0
+    reps = geom.EdgeTable.CHUNK // px.size + 2
+    pt, pid = index.query(np.tile(px, reps), np.tile(py, reps))
+    got = sorted(zip(pt.tolist(), pid.tolist()))
+    assert got == sorted((i + r * px.size, p) for r in range(reps) for i, p in want)

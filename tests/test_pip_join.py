@@ -229,3 +229,128 @@ def test_geocode_reverse_matches_oracle(spark, data):
         assert got[qid][2] == gcountry[i]
     again = {r.qid: r.name for r in geocode_reverse(queries, data["gaz"]).collect()}
     assert again == {q: v[0] for q, v in got.items()}
+
+
+def _cover_multiset(rows):
+    from collections import Counter
+
+    return Counter((r.polygon_id, r.cell, bytes(r.geom_wkb)) for r in rows)
+
+
+def _meshgrid_cover(polys_pdf, zoom):
+    """The per-polygon meshgrid expansion polygon_cover_cells used to run:
+    the reference for its vectorized form."""
+    from collections import Counter
+
+    from engine import tiles
+
+    lim = tiles.MERCATOR_LAT_MAX
+    shift = np.int64(2 ** (zoom + 1))
+    out = Counter()
+    for r in polys_pdf.itertuples():
+        tx0, ty0 = tiles.lonlat_to_tile(np.clip([r.minx], -180.0, 180.0), np.clip([r.miny], -lim, lim), zoom)
+        tx1, ty1 = tiles.lonlat_to_tile(np.clip([r.maxx], -180.0, 180.0), np.clip([r.maxy], -lim, lim), zoom)
+        gx, gy = np.meshgrid(np.arange(tx0[0], tx1[0] + 1), np.arange(ty0[0], ty1[0] + 1))
+        for c in (gx.ravel() * shift + gy.ravel()).tolist():
+            out[(int(r.polygon_id), c, bytes(r.geom_wkb))] += 1
+    return out
+
+
+def _bbox_polys(boxes, first_id=0):
+    rows = []
+    for i, (x0, y0, x1, y1) in enumerate(boxes):
+        ring = [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+        rows.append((first_id + i, geom.wkb_polygon([ring]), float(x0), float(y0), float(x1), float(y1)))
+    pdf = pd.DataFrame(rows, columns=["polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy"])
+    pdf["polygon_id"] = pdf["polygon_id"].astype(np.int32)
+    return pdf
+
+
+def test_polygon_cover_cells_matches_meshgrid(spark, data):
+    """The vectorized cover emits the same multiset of (polygon_id, cell,
+    wkb) rows as the per-polygon meshgrid, for bboxes clamped at ±180° and
+    at the mercator latitude limit, zero-width bboxes and empty input
+    partitions."""
+    edge = _bbox_polys(
+        [
+            (-200.0, -10.0, -170.0, 10.0),  # clamped at -180°
+            (170.0, -95.0, 190.0, -80.0),  # clamped at +180° and the south limit
+            (-180.0, -90.0, 180.0, 90.0),  # the whole world
+            (10.0, 84.0, 40.0, 89.9),  # clamped at the north limit
+            (45.0, 20.0, 45.0, 21.0),  # zero width on a tile boundary at z4
+            (12.3, 45.2, 12.3, 45.2),  # a point bbox
+        ],
+        first_id=1000,
+    )
+    pdf = pd.concat([data["polys_pdf"][edge.columns], edge], ignore_index=True)
+    polys = spark.createDataFrame(pdf).repartition(3 * len(pdf))
+    for zoom in (0, 4):
+        got = _cover_multiset(joins.polygon_cover_cells(polys, zoom).collect())
+        assert got == _meshgrid_cover(pdf, zoom), zoom
+
+
+def test_shuffle_udfs_over_empty_partitions(spark):
+    """Both Arrow UDFs of the shuffle join handle a DataFrame with empty
+    partitions (3 rows over 8 partitions), and an empty input batch gives a
+    zero-row batch of the output types."""
+    import pyarrow as pa
+
+    polys_pdf = _bbox_polys([(0.0, 0.0, 10.0, 10.0), (5.0, 5.0, 15.0, 15.0), (-20.0, -5.0, -10.0, 5.0)])
+    polys = spark.createDataFrame(polys_pdf).repartition(8)
+    cover = joins.polygon_cover_cells(polys, 3)
+    assert cover.rdd.glom().map(len).collect().count(0) > 0
+    assert _cover_multiset(cover.collect()) == _meshgrid_cover(polys_pdf, 3)
+
+    cand_pdf = pd.DataFrame(
+        {
+            "url": ["in-a", "in-both", "outside"],
+            "lon": [2.0, 7.0, 50.0],
+            "lat": [2.0, 7.0, 50.0],
+            "polygon_id": np.array([0, 1, 0], dtype=np.int32),
+            "geom_wkb": [polys_pdf["geom_wkb"][0], polys_pdf["geom_wkb"][1], polys_pdf["geom_wkb"][0]],
+        }
+    )
+    cand = spark.createDataFrame(cand_pdf).repartition(8)
+    points = cand.select("url", "lon", "lat")
+    got = sorted((r.url, r.polygon_id) for r in joins._pip_refine(cand, points, "lon", "lat", ("url",)).collect())
+    assert got == [("in-a", 0), ("in-both", 1)]
+
+    empty_poly = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int32()), pa.array([], pa.binary())] + [pa.array([], pa.float64())] * 4,
+        names=["polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy"],
+    )
+    out = joins._cover_batch(empty_poly, 8)
+    assert out.num_rows == 0
+    assert out.schema.types == [pa.int32(), pa.binary(), pa.int64()]
+    empty_cand = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.string()), pa.array([], pa.float64()), pa.array([], pa.float64()),
+         pa.array([], pa.int32()), pa.array([], pa.binary())],
+        names=["url", "lon", "lat", "polygon_id", "geom_wkb"],
+    )
+    out = joins._refine_batch(empty_cand)
+    assert out.num_rows == 0
+    assert out.schema.names == ["url", "lon", "lat", "polygon_id"]
+    assert out.schema.types == [pa.string(), pa.float64(), pa.float64(), pa.int32()]
+
+
+def test_salted_shuffle_with_empty_refine_partitions(spark, data):
+    """Salted shuffle join of points on one hot spot plus points scattered
+    over cells no polygon covers, so that some refine partitions get no
+    candidates: its rows equal the broadcast join's."""
+    rng = np.random.default_rng(31)
+    n = 400
+    lon = np.concatenate([rng.normal(12.3, 0.05, n // 2), rng.uniform(-179.0, 179.0, n // 2)])
+    lat = np.concatenate([rng.normal(45.2, 0.05, n // 2), rng.uniform(-80.0, 80.0, n // 2)])
+    pts = spark.createDataFrame(pd.DataFrame({"url": [f"p{i}" for i in range(n)], "lon": lon, "lat": lat}))
+    polys_pdf = pd.concat(
+        [
+            _bbox_polys([(12.0, 45.0, 12.5, 45.5), (12.2, 45.1, 12.4, 45.3)]),
+            data["polys_pdf"][data["polys_pdf"]["name"].str.startswith(("concave", "holed"))][
+                ["polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy"]
+            ],
+        ],
+        ignore_index=True,
+    )
+    bc = sorted((r.url, r.polygon_id) for r in joins.pip_join_broadcast(pts, polys_pdf).collect())
+    sh = joins.pip_join_shuffle(pts, spark.createDataFrame(polys_pdf), zoom=8, n_salt=4)
+    assert sorted((r.url, r.polygon_id) for r in sh.collect()) == bc and len(bc) > n // 4

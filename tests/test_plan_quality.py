@@ -320,3 +320,32 @@ def test_run_tiling_counts_its_input_inside_the_write(spark, tmp_path):
     for desc, _, nodes in jobs:
         assert desc.split()[-1] in ("write", "lineage"), jobs
         assert any("InsertIntoHadoopFsRelationCommand" in n for n in nodes), (desc, nodes)
+
+
+def test_shuffle_pip_join_crosses_into_python_through_arrow_only(spark):
+    """The cell-shuffle PIP join runs every Python stage as a whole-batch
+    MapInArrow: the points' cell encode, the polygon cover and the refine,
+    unsalted and salted, with no MapInPandas; the adaptive plan with hot
+    cells split has no MapInPandas either."""
+    import re
+
+    import pandas as pd
+
+    from engine import joins
+    from engine.fixtures import make_polygons
+
+    pts = spark.createDataFrame(
+        pd.DataFrame({"url": [f"u{i}" for i in range(300)], "lon": [i % 90 - 45.0 for i in range(300)],
+                      "lat": [i % 60 - 30.0 for i in range(300)]})
+    )
+    polys = spark.createDataFrame(make_polygons(80))
+
+    def _python_nodes(df) -> list:
+        names = re.findall(r"\(\d+\) (\w+)", _plan(df))
+        return [n for n in names if "Python" in n or "InPandas" in n or "InArrow" in n]
+
+    for n_salt in (None, 4):
+        assert _python_nodes(joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=n_salt)) == ["MapInArrow"] * 3
+    adaptive = _python_nodes(joins.pip_join_shuffle_adaptive(pts, polys, zoom=5, hot_threshold=3))
+    # hot path taken: base and fine cell encode and cover, then the refine
+    assert len(adaptive) > 3 and set(adaptive) == {"MapInArrow"}, adaptive
