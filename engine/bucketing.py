@@ -42,19 +42,6 @@ def write_bucketed_tiles(
     )
 
 
-def write_bucketed_cells(
-    df: DataFrame,
-    table: str,
-    cell_col: str = "cell",
-    n_buckets: int = 256,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a cell-keyed point/feature table bucketed by the cell id —
-    the co-location layout for repeated cell equi-joins (PIP shuffle join,
-    kNN candidate join, grid metrics)."""
-    df.write.format("parquet").mode(mode).bucketBy(n_buckets, cell_col).saveAsTable(table)
-
-
 def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 

@@ -67,7 +67,14 @@ def submit_command(
     """The spark-submit argv for the cluster protocol (documentation-grade
     helper: the argv is returned, never executed — this sandbox has no
     cluster).  Mirrors the session defaults in :func:`engine.session.get_spark`
-    so local tests and cluster runs execute the same plan shapes."""
+    so local tests and cluster runs execute the same plan shapes.
+
+    One session default stays local-mode only: the Python worker daemon
+    ``engine.worker_daemon`` (``spark.python.daemon.module``).  On a cluster
+    the ``--py-files`` zip reaches the worker path per task, through
+    pyspark's ``setup_spark_files``, so the daemon module may not be
+    importable when the daemon starts, and a daemon that fails to import
+    fails every Python UDF.  The argv therefore keeps pyspark's own daemon."""
     cmd = [
         "spark-submit",
         "--master", master,

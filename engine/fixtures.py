@@ -198,17 +198,3 @@ def subdivide_polygons(df: pd.DataFrame, factor: int = 10) -> pd.DataFrame:
     out["minx"], out["miny"], out["maxx"], out["maxy"] = env[:, 0], env[:, 1], env[:, 2], env[:, 3]
     out["polygon_id"] = out["polygon_id"].astype(np.int32)
     return out
-
-
-def make_point_queries(n: int = 1000, seed: int = 42) -> pd.DataFrame:
-    """gdallocationinfo / kNN query fixtures (FIXTURES.md §4)."""
-    rng = np.random.default_rng(seed)
-    qid = np.arange(n, dtype=np.int64)
-    lon = rng.uniform(-180, 180, n)
-    lat = rng.uniform(-85, 85, n)
-    # deterministic stripe of edge cases
-    for k, (elon, elat) in enumerate(EDGE_POINTS):
-        lon[k] = elon
-        lat[k] = elat
-    k_arr = np.array([1, 5, 17])[qid % 3]
-    return pd.DataFrame({"qid": qid, "lon": lon, "lat": lat, "k": k_arr.astype(np.int32)})

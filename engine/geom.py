@@ -167,10 +167,6 @@ def collect_parts_z(buf: bytes):
     return kind, parts
 
 
-def wkb_point_z(x: float, y: float, z: float) -> bytes:
-    return struct.pack("<BIddd", 1, WKB_POINT | _WKB_25D, x, y, z)
-
-
 def wkb_linestring_z(pts) -> bytes:
     """pts: (N,3) x/y/z."""
     pts = np.asarray(pts, dtype=np.float64)

@@ -28,6 +28,7 @@ kNN paths); all matching is JVM-side equi-joins.
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from typing import Iterator
 
 import numpy as np
@@ -115,8 +116,24 @@ def with_cell(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "la
 # this, per-task index construction dominates and the join anti-scales as
 # task count grows (measured: 3x slowdown at 64 tasks).  This is the engine's
 # analog of the reference's one-time prepared-geometry setup per thread
-# (GDALCloneTransformer pattern, alg/gdalwarpkernel.cpp:255-260).
-_INDEX_CACHE: dict = {}
+# (GDALCloneTransformer pattern, alg/gdalwarpkernel.cpp:255-260).  Every call
+# of pip_join_broadcast / burn_base_tiles_pip adds a key and the workers live
+# for the whole session, so the cache keeps only the most recently used
+# _INDEX_CACHE_SIZE indexes.
+_INDEX_CACHE: OrderedDict = OrderedDict()
+_INDEX_CACHE_SIZE = 4
+
+
+def _cached_index(cache_key: str, bc) -> geom.VectorPIPIndex:
+    """This worker's index for ``cache_key``, built from the broadcast
+    (polygon_id, wkb) list on first use; least recently used evicted."""
+    index = _INDEX_CACHE.pop(cache_key, None)
+    if index is None:
+        index = geom.VectorPIPIndex(bc.value)
+    _INDEX_CACHE[cache_key] = index
+    while len(_INDEX_CACHE) > _INDEX_CACHE_SIZE:
+        _INDEX_CACHE.popitem(last=False)
+    return index
 
 
 def pip_join_broadcast(
@@ -151,10 +168,7 @@ def pip_join_broadcast(
     # views and the match-row gather is C++ `take` — the pandas DataFrame
     # construction per batch was the dominant cost of the join at scale.
     def _match(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        index = _INDEX_CACHE.get(cache_key)
-        if index is None:
-            index = geom.VectorPIPIndex(bc.value)
-            _INDEX_CACHE[cache_key] = index
+        index = _cached_index(cache_key, bc)
         for batch in batches:
             lon = batch.column(len(keep_cols)).to_numpy(zero_copy_only=False)
             lat = batch.column(len(keep_cols) + 1).to_numpy(zero_copy_only=False)

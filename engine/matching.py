@@ -112,16 +112,6 @@ def _haar_y_p(P: np.ndarray, row, col, size: int) -> np.ndarray:
             - _rect_sum_p(P, row, col, size, size // 2))
 
 
-def haar_x(S: np.ndarray, row, col, size: int) -> np.ndarray:
-    """Signed horizontal Haar response (alg/gdal_octave.cpp:124-128)."""
-    return _haar_x_p(_padded(S), row, col, size)
-
-
-def haar_y(S: np.ndarray, row, col, size: int) -> np.ndarray:
-    """Signed vertical Haar response (alg/gdal_octave.cpp:130-134)."""
-    return _haar_y_p(_padded(S), row, col, size)
-
-
 def rgb_to_luminosity(r: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
     """0.21 R + 0.72 G + 0.07 B over 255 (alg/gdal_simplesurf.cpp:141-200)."""
     return (0.21 * np.asarray(r, dtype=np.float64)

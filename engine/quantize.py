@@ -35,14 +35,6 @@ from pyspark.sql import functions as F
 from .raster import TILE_SIZE, bytes_to_tile
 
 
-def join_rgb(r: DataFrame, g: DataFrame, b: DataFrame) -> DataFrame:
-    """Align three band tile tables on the tile key."""
-    rr = r.select("tx", "ty", F.col("data").alias("data_r"))
-    gg = g.select("tx", "ty", F.col("data").alias("data_g"))
-    bb = b.select("tx", "ty", F.col("data").alias("data_b"))
-    return rr.join(gg, on=["tx", "ty"]).join(bb, on=["tx", "ty"])
-
-
 def color_histogram(rgb: DataFrame) -> DataFrame:
     """15-bit (5 per channel) color histogram: (color int, pixel_count) —
     the gdalmediancut histogram, built as tile bincounts + one JVM agg."""

@@ -266,10 +266,7 @@ def burn_base_tiles_pip(
     )
 
     def _kern(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        index = _joins._INDEX_CACHE.get(cache_key)
-        if index is None:
-            index = _joins.geom.VectorPIPIndex(bc.value)
-            _joins._INDEX_CACHE[cache_key] = index
+        index = _joins._cached_index(cache_key, bc)
         for batch in batches:
             lon = batch.column(0).to_numpy(zero_copy_only=False)
             lat = batch.column(1).to_numpy(zero_copy_only=False)
@@ -1301,20 +1298,6 @@ def point_raster_lookup(
             yield out
 
     return joined.mapInPandas(_read, out_schema)
-
-
-def build_pyramid(points: DataFrame, base_zoom: int, min_zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> dict:
-    """Burn base tiles then reduce level by level down to min_zoom.
-
-    Returns {zoom: DataFrame}.  Callers that need checkpointed levels (the
-    resume path) should use engine.pipeline.run_tiling instead, which
-    persists each level before reducing the next — exactly gdal2tiles'
-    base-then-overviews order (gdal2tiles.py:1154,1314).
-    """
-    levels = {base_zoom: burn_base_tiles(points, base_zoom, lon_col, lat_col)}
-    for z in range(base_zoom - 1, min_zoom - 1, -1):
-        levels[z] = pyramid_reduce(levels[z + 1])
-    return levels
 
 
 def equalize(tile_df: DataFrame, hist_bins: int = 256, lut_bins: int = 256) -> DataFrame:
