@@ -74,7 +74,13 @@ def submit_command(
     the ``--py-files`` zip reaches the worker path per task, through
     pyspark's ``setup_spark_files``, so the daemon module may not be
     importable when the daemon starts, and a daemon that fails to import
-    fails every Python UDF.  The argv therefore keeps pyspark's own daemon."""
+    fails every Python UDF.  The argv therefore keeps pyspark's own daemon.
+
+    The session's JIT profile (``engine.session.LOCAL_JIT_PROFILE``) stays
+    local-mode only too.  It was measured only on short local[4] runs, where
+    compiling Spark itself is a large share of the run; cluster executors
+    are long-lived JVMs that earn back their full C2 compilation, so the
+    argv keeps HotSpot's defaults."""
     cmd = [
         "spark-submit",
         "--master", master,

@@ -13,8 +13,11 @@ interior dark runs are untouched.  Distributed form:
    (full-black tiles pass through, the first partial tile caps the run);
    output is one (gy, west_pen, east_pen) row per scanline — H rows total,
    ≪ pixel data;
-3. **rewrite** — collars broadcast; each tile blanks its slice of the
-   collar.  No pixel shuffle.
+3. **rewrite** — the scanline collars are gathered per tile row
+   (``ty = -floor(gy / T)``, T rows each) and joined to the tiles on that
+   key; each tile blanks its slice of the collar.  The collar side is H/T
+   small rows, which Spark broadcasts below its join threshold and shuffles
+   above it, so driver memory no longer grows with raster height.
 
 Assumes the tile table covers a dense rectangle (the raster extent), like
 the reference's single image.
@@ -82,31 +85,35 @@ def nearblack(tile_df: DataFrame, threshold: int = 10, nodata: int = 0) -> DataF
         src.mapInPandas(_runs, "gy long, tx long, lead long, trail long")
         .groupBy("gy")
         .applyInPandas(lambda k, p: _fold(p), "gy long, west long, east long")
-        .collect()
     )
-    col_map = {int(r.gy): (int(r.west), int(r.east)) for r in collars}
-    bc = tile_df.sparkSession.sparkContext.broadcast(col_map)
+    # scanline gy = -(ty * T) + i, i in [0, T): its tile row is -floor(gy / T)
+    by_row = collars.groupBy((-F.floor(F.col("gy") / T)).alias("ty")).agg(
+        F.collect_list("gy").alias("gys"),
+        F.collect_list("west").alias("wests"),
+        F.collect_list("east").alias("easts"),
+    )
     west_edge = tx_min * T
     east_edge = (tx_max + 1) * T
+    cols = np.arange(T)
 
     def _rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = bc.value
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
                 g = bytes_to_tile(r.data).copy()
-                gx0 = int(r.tx) * T
-                for i in range(T):
-                    gy = -(int(r.ty) * T) + i
-                    w, e = cols.get(gy, (0, 0))
-                    # west collar covers [west_edge, west_edge + w)
-                    wcut = min(max(west_edge + w - gx0, 0), T)
-                    if wcut:
-                        g[i, :wcut] = nodata
-                    ecut = min(max(gx0 + T - (east_edge - e), 0), T)
-                    if ecut:
-                        g[i, T - ecut :] = nodata
-                rows.append((int(r.tx), int(r.ty), g.astype("<i4").tobytes()))
+                ty, gx0 = int(r.ty), int(r.tx) * T
+                w = np.zeros(T, dtype=np.int64)
+                e = np.zeros(T, dtype=np.int64)
+                if r.gys is not None:  # a tile row without collar rows keeps (0, 0)
+                    i = np.asarray(r.gys, dtype=np.int64) + ty * T
+                    w[i] = r.wests
+                    e[i] = r.easts
+                # west collar covers [west_edge, west_edge + w), east collar
+                # [east_edge - e, east_edge), clipped to this tile's columns
+                wcut = np.clip(west_edge + w - gx0, 0, T)
+                ecut = np.clip(gx0 + T - (east_edge - e), 0, T)
+                g[(cols < wcut[:, None]) | (cols >= T - ecut[:, None])] = nodata
+                rows.append((int(r.tx), ty, g.astype("<i4").tobytes()))
             yield pd.DataFrame(rows, columns=["tx", "ty", "data"])
 
-    return src.mapInPandas(_rewrite, "tx long, ty long, data binary")
+    return src.join(by_row, "ty", "left").mapInPandas(_rewrite, "tx long, ty long, data binary")

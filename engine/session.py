@@ -3,7 +3,11 @@
 Local-mode defaults mirror the intended cluster profile: AQE on (runtime
 re-plan + skew-join handling), Arrow on (all engine UDFs are pandas UDFs),
 shuffle partitions sized to cores (overridden per-job at scale).  Local
-sessions fork their Python workers from :mod:`engine.worker_daemon`.
+sessions fork their Python workers from :mod:`engine.worker_daemon` and
+start the JVM with :data:`LOCAL_JIT_PROFILE`.  Both apply only when
+:func:`get_spark` launches the JVM itself: a JVM that is already running
+(an active session, or a gateway started by ``spark-submit``) keeps the
+flags it was started with.
 """
 
 from __future__ import annotations
@@ -11,6 +15,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# HotSpot flags for the driver JVM of a local session, which runs every
+# task.  A short local run spends most of its JVM CPU compiling Spark's own
+# code: in the first pages_e2e job (local[4], 4-vCPU/15.7 GB host) the C2
+# and C1 compiler threads took 17-20 of 29-34 CPU-s.  Two compiler threads
+# instead of the ergonomic count (3 on 4 vCPUs), and compile thresholds
+# scaled 3x, leave code that runs only a few thousand times to C1: 7-10
+# CPU-s of compiling, and the first job's CPU down 25%.  With those two
+# flags alone, G1 spent more GC-thread CPU in warm jobs; the parallel
+# collector did not.  CHANGES.md has the candidates and the runs.
+# Passed as spark.driver.defaultJavaOptions, which Spark puts before
+# spark.driver.extraJavaOptions: a caller's extra options still apply and
+# win on a repeated flag, except that naming another collector there stops
+# the JVM from starting (HotSpot refuses two).  Such a caller passes its own
+# spark.driver.defaultJavaOptions, which replaces this profile.
+LOCAL_JIT_PROFILE = "-XX:CICompilerCount=2 -XX:CompileThresholdScaling=3 -XX:+UseParallelGC"
 
 
 def get_spark(
@@ -99,6 +119,7 @@ def get_spark(
         # importable when the daemon starts, which cluster executors cannot
         # promise (see engine/deploy.py).
         b = b.config("spark.python.daemon.module", "engine.worker_daemon")
+        b = b.config("spark.driver.defaultJavaOptions", LOCAL_JIT_PROFILE)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

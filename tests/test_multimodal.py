@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 
 from engine import multimodal
+from jpeg_progressive import encode_jpeg_progressive
 
 
 @pytest.fixture(scope="module")
@@ -420,17 +421,17 @@ def test_jpeg_progressive_matches_baseline_pixels():
     for q in (90, 40):
         for sub in ("444", "420"):
             base = jpeg.decode_jpeg(jpeg.encode_jpeg(img, quality=q, subsample=sub))
-            prog = jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(img, quality=q, subsample=sub))
+            prog = jpeg.decode_jpeg(encode_jpeg_progressive(img, quality=q, subsample=sub))
             assert np.array_equal(base, prog), (q, sub)
     g = ((xx + 2 * yy) % 256).astype(np.uint8)
     assert np.array_equal(
         jpeg.decode_jpeg(jpeg.encode_jpeg(g, quality=85)),
-        jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(g, quality=85)),
+        jpeg.decode_jpeg(encode_jpeg_progressive(g, quality=85)),
     )
     noise = rng.integers(0, 256, (24, 24, 3)).astype(np.uint8)
     assert np.array_equal(
         jpeg.decode_jpeg(jpeg.encode_jpeg(noise, quality=25)),
-        jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(noise, quality=25)),
+        jpeg.decode_jpeg(encode_jpeg_progressive(noise, quality=25)),
     )
 
 
@@ -438,7 +439,7 @@ def test_jpeg_progressive_is_sof2():
     from engine import jpeg
 
     img = _smooth_rgb(20, 20, seed=4)
-    buf = jpeg.encode_jpeg_progressive(img)
+    buf = encode_jpeg_progressive(img)
     assert b"\xFF\xC2" in buf and b"\xFF\xC0" not in buf
     # multiple SOS scans: 2 DC + 3 AC first + 3 AC refine
     assert buf.count(b"\xFF\xDA") == 8
@@ -454,7 +455,7 @@ def test_pipeline_on_encoded_progressive_jpeg(spark):
         h, w = 16 + i % 5, 16 + (3 * i) % 7
         img = _smooth_rgb(h, w, seed=100 + i)
         rows.append(
-            (i, jpeg.encode_jpeg_progressive(img, quality=90), "image/jpeg",
+            (i, encode_jpeg_progressive(img, quality=90), "image/jpeg",
              {"width": w, "height": h, "channels": 3, "sample_rate": None})
         )
     pdf = pd.DataFrame(rows, columns=["media_id", "media", "media_type", "meta"])
@@ -475,7 +476,7 @@ def test_decode_jpeg_tolerates_fill_bytes():
     img = rng.integers(0, 256, (24, 17, 3), dtype=np.uint8)
     for enc in (
         jpeg.encode_jpeg(img, quality=90),
-        jpeg.encode_jpeg_progressive(img, quality=90),
+        encode_jpeg_progressive(img, quality=90),
     ):
         want = jpeg.decode_jpeg(enc)
         assert enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9"

@@ -94,6 +94,50 @@ def test_nearblack_collar(spark):
     assert (na[20, :] == 200).all()
 
 
+def _nearblack_reference(img: np.ndarray, threshold: int, nodata: int) -> np.ndarray:
+    """Scanline-by-scanline collar removal on the whole raster."""
+    out = img.copy()
+    for y in range(img.shape[0]):
+        dark = img[y] <= threshold
+        lead = int(dark.cumprod().sum())
+        trail = int(dark[::-1].cumprod().sum())
+        out[y, :lead] = nodata
+        out[y, img.shape[1] - trail :] = nodata
+    return out
+
+
+def test_nearblack_collar_many_tile_rows(spark):
+    # 3 tiles wide × 4 tile rows (ty = -1..2, so scanline gy spans both
+    # signs); collars of random depth, some crossing whole tiles, a few
+    # all-dark scanlines, and dark interior pixels that must survive
+    rng = np.random.default_rng(17)
+    nx, tys = 3, [-1, 0, 1, 2]
+    img = rng.integers(11, 256, (len(tys) * T, nx * T)).astype(np.int64)
+    img[rng.random(img.shape) < 0.02] = 0
+    for y in range(img.shape[0]):
+        img[y, : rng.integers(0, 2 * T + 20)] = rng.integers(0, 11)
+        img[y, img.shape[1] - rng.integers(0, T + 20) :] = rng.integers(0, 11)
+    img[[5, T + 3, 3 * T - 1]] = 4
+    tiles = {}
+    for r, ty in enumerate(tys):
+        for tx in range(nx):
+            tiles[(tx, ty)] = img[r * T : (r + 1) * T, tx * T : (tx + 1) * T]
+    tiles_df = spark.createDataFrame(
+        pd.DataFrame(
+            {"tx": [k[0] for k in tiles], "ty": [k[1] for k in tiles],
+             "data": [raster.tile_to_bytes(v) for v in tiles.values()]}
+        )
+    )
+    want = _nearblack_reference(img, threshold=10, nodata=-1)
+    got = {(r.tx, r.ty): r.data
+           for r in nearblack.nearblack(tiles_df, threshold=10, nodata=-1).collect()}
+    assert sorted(got) == sorted(tiles)
+    for r, ty in enumerate(tys):
+        for tx in range(nx):
+            w = want[r * T : (r + 1) * T, tx * T : (tx + 1) * T]
+            assert got[(tx, ty)] == raster.tile_to_bytes(w), (tx, ty)
+
+
 def test_warp_cutline_mask(spark):
     from engine import warp
 
