@@ -88,6 +88,7 @@ def submit_command(
         "--executor-cores", str(executor_cores),
         "--executor-memory", executor_memory,
         "--conf", "spark.sql.adaptive.enabled=true",
+        "--conf", "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=64MB",
         "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=262144",
         "--conf", f"spark.python.factory.idleWorkerMaxPoolSize={executor_cores}",

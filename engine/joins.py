@@ -13,7 +13,11 @@ The engine's re-expression of GDAL's spatial-join surface
     - **shuffle** (method layer large): both sides exploded to covering
       mercator tiles at an index zoom, equi-join on the cell id — the
       cell-prefix pruning the north star requires — then exact refine of
-      whole candidate batches; optional hot-cell salting.
+      whole candidate batches.  AQE runs the equi-join as a shuffled hash
+      join when the measured partitions of its smaller side fit the
+      session's local-map threshold, else as a sort-merge join.  Optional
+      hot-cell salting gives each point row one salt, so every (point row,
+      polygon) pair is still a candidate exactly once.
   Both plans decide every (point, polygon) pair with the same kernel,
   :class:`geom.EdgeTable`.
 * ``GDALGridNearestNeighbor``'s quadtree-accelerated kNN
@@ -52,57 +56,53 @@ from . import geom, tiles
 # ---------------------------------------------------------------------------
 
 
-def with_tile(
-    df: DataFrame,
-    zoom: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    prefix: str = "",
-) -> DataFrame:
-    """Append TMS tile coords + quadkey at ``zoom`` (vectorized Arrow UDF).
-
-    Columns: ``{prefix}tx {prefix}ty {prefix}quadkey``.  The quadkey is the
-    multi-resolution cell id: its z-length prefixes are the coarser cells.
-    """
+def _append_lonlat_columns(df: DataFrame, lon_col: str, lat_col: str, fields: list, encode) -> DataFrame:
+    """Append ``fields`` to every row, computed per Arrow batch by
+    ``encode(lon, lat)`` → one ``pa.Array`` per field (vectorized UDF)."""
     import pyarrow as pa
 
-    in_fields = list(df.schema.fields)
-    names = [f.name for f in in_fields]
+    names = df.columns
     i_lon, i_lat = names.index(lon_col), names.index(lat_col)
-    out_schema = StructType(
-        in_fields
-        + [
-            StructField(prefix + "tx", LongType()),
-            StructField(prefix + "ty", LongType()),
-            StructField(prefix + "quadkey", StringType()),
-        ]
-    )
+    out_names = names + [f.name for f in fields]
 
     def _encode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
             lon = batch.column(i_lon).to_numpy(zero_copy_only=False)
             lat = batch.column(i_lat).to_numpy(zero_copy_only=False)
-            tx, ty = tiles.lonlat_to_tile(lon, lat, zoom)
-            qk = tiles.quadkey(tx, ty, zoom)
-            arrays = list(batch.columns) + [
-                pa.array(tx, type=pa.int64()),
-                pa.array(ty, type=pa.int64()),
-                pa.array(qk),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=names + [prefix + "tx", prefix + "ty", prefix + "quadkey"]
-            )
+            yield pa.RecordBatch.from_arrays(list(batch.columns) + encode(lon, lat), names=out_names)
 
-    return df.mapInArrow(_encode, out_schema)
+    return df.mapInArrow(_encode, StructType(list(df.schema.fields) + fields))
+
+
+def with_tile(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+    """Append TMS tile coords + quadkey at ``zoom`` (vectorized Arrow UDF).
+
+    Columns: ``tx ty quadkey``.  The quadkey is the multi-resolution cell
+    id: its z-length prefixes are the coarser cells.
+    """
+    import pyarrow as pa
+
+    def encode(lon, lat):
+        tx, ty = tiles.lonlat_to_tile(lon, lat, zoom)
+        return [pa.array(tx, type=pa.int64()), pa.array(ty, type=pa.int64()), pa.array(tiles.quadkey(tx, ty, zoom))]
+
+    fields = [StructField("tx", LongType()), StructField("ty", LongType()), StructField("quadkey", StringType())]
+    return _append_lonlat_columns(df, lon_col, lat_col, fields, encode)
 
 
 def with_cell(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Append a single packed int64 cell id ``(tx << zoom+1) | ty`` at zoom —
-    a cheaper join key than the quadkey string for fixed-zoom equi-joins."""
-    out = with_tile(df, zoom, lon_col, lat_col, prefix="_c_")
-    return out.withColumn(
-        "cell", (F.col("_c_tx") * F.lit(np.int64(2 ** (zoom + 1))) + F.col("_c_ty")).cast("long")
-    ).drop("_c_tx", "_c_ty", "_c_quadkey")
+    a cheaper join key than the quadkey string for fixed-zoom equi-joins;
+    no quadkey is built."""
+    import pyarrow as pa
+
+    scale = np.int64(2 ** (zoom + 1))
+
+    def encode(lon, lat):
+        tx, ty = tiles.lonlat_to_tile(lon, lat, zoom)
+        return [pa.array(tx * scale + ty, type=pa.int64())]
+
+    return _append_lonlat_columns(df, lon_col, lat_col, [StructField("cell", LongType())], encode)
 
 
 # ---------------------------------------------------------------------------
@@ -300,9 +300,21 @@ def pip_join_shuffle(
     equi-join on cell (both sides shuffle-partitioned by cell — the
     cell-prefix co-location); exact refine inside ``mapInArrow`` (per
     batch, each distinct polygon's WKB parsed once and all candidate pairs
-    tested in one :class:`geom.EdgeTable` call).  ``n_salt`` replicates
-    every polygon-cell n ways and salts points by hash — the explicit
-    hot-cell skew remedy (SURVEY.md §4 skew).
+    tested in one :class:`geom.EdgeTable` call).
+
+    The equi-join is planned as a sort-merge join.  Once the shuffles have
+    run, AQE re-plans it as a shuffled hash join, built on the smaller
+    measured side, when every shuffle partition of that side is within
+    ``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold`` (set by
+    :func:`engine.session.get_spark`); larger partitions keep the sort-merge
+    join.
+
+    ``n_salt`` replicates every polygon-cell n ways and gives each point
+    row one salt, a hash of its ``keep_cols`` — the explicit hot-cell skew
+    remedy (SURVEY.md §4 skew).  A (polygon, cell, salt) row is unique and a
+    point row has one cell and one salt, so each (point row, polygon) pair
+    is a candidate exactly once: no dedup pass, and duplicate input rows
+    come back as many times as they went in.
 
     Emits the same rows as :func:`pip_join_broadcast` (A/B parity test).
     """
@@ -315,11 +327,7 @@ def pip_join_shuffle(
     else:
         join_keys = ["cell"]
     cand = pts.join(polys, on=join_keys, how="inner").drop("cell", *(["salt"] if n_salt else []))
-    out = _pip_refine(cand, points, lon_col, lat_col, keep_cols)
-    # distinct because a polygon may cover a point's cell via several salted
-    # replicas — never happens without salt (one (pid, cell) row per pair),
-    # but dedupe is cheap insurance and pins exactly-once pair semantics.
-    return out.dropDuplicates(list(keep_cols) + ["polygon_id"]) if n_salt else out
+    return _pip_refine(cand, points, lon_col, lat_col, keep_cols)
 
 
 def _refine_batch(batch: "pa.RecordBatch") -> "pa.RecordBatch":

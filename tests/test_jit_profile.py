@@ -101,6 +101,7 @@ def test_cluster_argv_has_no_jit_profile():
         "--executor-cores", "4",
         "--executor-memory", "8g",
         "--conf", "spark.sql.adaptive.enabled=true",
+        "--conf", "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=64MB",
         "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=262144",
         "--conf", "spark.python.factory.idleWorkerMaxPoolSize=4",
@@ -111,3 +112,26 @@ def test_cluster_argv_has_no_jit_profile():
         "job.py",
     ]
     assert not any("XX:" in a or "JavaOptions" in a for a in cmd)
+
+
+def test_extra_java_options_collector_clash_is_rejected(monkeypatch):
+    """A second collector in extraJavaOptions would stop HotSpot from
+    starting ("Multiple garbage collectors selected"): get_spark refuses it
+    before building a session, and points to defaultJavaOptions.  The
+    profile's own collector, or a caller's defaultJavaOptions, pass."""
+    import pytest
+
+    from engine import session
+
+    built = []
+    monkeypatch.setattr(os, "environ", os.environ.copy())  # get_spark exports worker variables
+    monkeypatch.setattr(session.SparkSession.Builder, "getOrCreate", lambda self: built.append(self) or "session")
+    with pytest.raises(ValueError, match="spark.driver.defaultJavaOptions"):
+        session.get_spark(master="local[1]", extra_conf={"spark.driver.extraJavaOptions": "-Xss4m -XX:+UseG1GC"})
+    assert not built
+    assert session.get_spark(master="local[1]", extra_conf={"spark.driver.extraJavaOptions": "-XX:+UseParallelGC"})
+    assert session.get_spark(
+        master="local[1]",
+        extra_conf={"spark.driver.extraJavaOptions": "-XX:+UseG1GC", "spark.driver.defaultJavaOptions": "-Xss4m"},
+    )
+    assert len(built) == 2

@@ -354,3 +354,49 @@ def test_salted_shuffle_with_empty_refine_partitions(spark, data):
     bc = sorted((r.url, r.polygon_id) for r in joins.pip_join_broadcast(pts, polys_pdf).collect())
     sh = joins.pip_join_shuffle(pts, spark.createDataFrame(polys_pdf), zoom=8, n_salt=4)
     assert sorted((r.url, r.polygon_id) for r in sh.collect()) == bc and len(bc) > n // 4
+
+
+def test_shuffle_joins_keep_duplicate_point_rows(spark):
+    """Two identical point rows inside a polygon come back twice from every
+    plan: the salted shuffle gives both the same salt and emits each (point
+    row, polygon) pair once per row, with no dedup, as the broadcast and
+    adaptive plans do."""
+    polys_pdf = _bbox_polys([(0.0, 0.0, 10.0, 10.0), (20.0, 20.0, 30.0, 30.0)], first_id=1)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"url": ["a", "a", "b", "c"], "lon": [2.0, 2.0, 3.0, 50.0], "lat": [2.0, 2.0, 4.0, 50.0]})
+    )
+    polys = spark.createDataFrame(polys_pdf)
+
+    def rows(df):
+        return sorted((r.url, r.polygon_id) for r in df.collect())
+
+    bc = rows(joins.pip_join_broadcast(pts, polys_pdf))
+    assert bc == [("a", 1), ("a", 1), ("b", 1)]
+    assert rows(joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=4)) == bc
+    assert rows(joins.pip_join_shuffle(pts, polys, zoom=6)) == bc
+    for hot_threshold in (1, 10**9):  # hot cell split, and the plain fallback
+        assert rows(joins.pip_join_shuffle_adaptive(pts, polys, zoom=6, hot_threshold=hot_threshold)) == bc
+
+
+def test_with_cell_packs_with_tile_coordinates(spark):
+    """with_cell's packed id is ``tx * 2**(zoom+1) + ty`` of with_tile's
+    tile, at zooms 0, 8 and 20, for points on tile edges (pixel coordinates
+    multiples of 256), at ±180° and at the mercator latitude limit."""
+    from engine import tiles
+
+    lons, lats = [-180.0, 180.0, 0.0, 12.3, -179.999], [-85.0511, 85.0511, 0.0, 45.2, -85.05112878]
+    for zoom in (0, 8, 20):
+        # tile-edge lon/lat: the inverse of whole-tile pixel coordinates
+        k = np.array([1, 2 ** zoom // 2, max(2 ** zoom - 1, 1)], dtype=np.float64) * tiles.TILE_SIZE
+        edge_lon, edge_lat = tiles.meters_to_lonlat(*tiles.pixels_to_meters(k, k, zoom))
+        lon = np.concatenate([np.repeat(lons, len(lats)), np.repeat(edge_lon, len(k))])
+        lat = np.concatenate([np.tile(lats, len(lons)), np.tile(edge_lat, len(k))])
+        pts = spark.createDataFrame(pd.DataFrame({"id": np.arange(len(lon)), "lon": lon, "lat": lat}))
+        cell = {r.id: r.cell for r in joins.with_cell(pts, zoom).collect()}
+        tile = joins.with_tile(pts, zoom).collect()
+        assert len(cell) == len(tile) == len(lon)
+        for r in tile:
+            assert cell[r.id] == r.tx * 2 ** (zoom + 1) + r.ty, (zoom, r)
+        # the edge points sit on a tile edge, up to the round trip's rounding
+        px, _ = tiles.lonlat_to_pixels(edge_lon, edge_lat, zoom)
+        assert np.allclose(px / tiles.TILE_SIZE, np.round(px / tiles.TILE_SIZE), rtol=0, atol=1e-6)

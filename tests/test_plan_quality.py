@@ -349,3 +349,50 @@ def test_shuffle_pip_join_crosses_into_python_through_arrow_only(spark):
     adaptive = _python_nodes(joins.pip_join_shuffle_adaptive(pts, polys, zoom=5, hot_threshold=3))
     # hot path taken: base and fine cell encode and cover, then the refine
     assert len(adaptive) > 3 and set(adaptive) == {"MapInArrow"}, adaptive
+
+
+def test_salted_pip_join_runs_as_hash_join(spark):
+    """With automatic broadcast joins off, AQE re-plans the salted cell
+    equi-join from its measured sizes as a ShuffledHashJoin: nothing under
+    the caller's own aggregate sorts or aggregates (the salted path has no
+    dedup), and the call runs 4 Spark jobs (two shuffle map stages, the
+    refine with the partial aggregate, the final aggregate).  With the
+    local-map threshold at 0 the same call falls back to a SortMergeJoin
+    with identical rows."""
+    import pandas as pd
+
+    from engine import joins
+    from engine.fixtures import make_polygons
+
+    pts = spark.createDataFrame(
+        pd.DataFrame({"url": [f"u{i % 250}" for i in range(300)], "lon": [i % 90 - 45.0 for i in range(300)],
+                      "lat": [i % 60 - 30.0 for i in range(300)]})
+    )
+    polys = spark.createDataFrame(make_polygons(80))
+    threshold = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    assert spark.conf.get(threshold) == "64MB"
+
+    def run(tag):
+        out = joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=4).groupBy("polygon_id").count()
+        got = []
+        jobs = _tagged_jobs(spark, tag, lambda: got.extend(sorted(tuple(r) for r in out.collect())))
+        (nodes,) = {tuple(n) for _, _, n in jobs}
+        return got, len(jobs), nodes
+
+    broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        hashed, n_jobs, nodes = run("plan-pip-hash")
+        spark.conf.set(threshold, "0")
+        try:
+            merged, _, merge_nodes = run("plan-pip-merge")
+        finally:
+            spark.conf.set(threshold, "64MB")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcast)
+
+    assert "ShuffledHashJoin" in nodes and "SortMergeJoin" not in nodes, nodes
+    assert "Sort" not in nodes and nodes.count("HashAggregate") == 2, nodes  # the caller's partial + final
+    assert n_jobs == 4
+    assert "SortMergeJoin" in merge_nodes and "ShuffledHashJoin" not in merge_nodes, merge_nodes
+    assert merged == hashed and sum(c for _, c in hashed) > 0
