@@ -326,8 +326,7 @@ def pip_join_shuffle(
         join_keys = ["cell", "salt"]
     else:
         join_keys = ["cell"]
-    cand = pts.join(polys, on=join_keys, how="inner").drop("cell", *(["salt"] if n_salt else []))
-    return _pip_refine(cand, points, lon_col, lat_col, keep_cols)
+    return _pip_refine(pts.join(polys, on=join_keys, how="inner"), points, lon_col, lat_col, keep_cols)
 
 
 def _refine_batch(batch: "pa.RecordBatch") -> "pa.RecordBatch":
