@@ -7,17 +7,21 @@ gdaltindex's per-file manifest (apps/gdaltindex.c:96-561): every stage writes
 
 * its output as parquet partitioned by ``zoom`` (partition pruning on zoom =
   the overview-level selection of gcore/rasterio.cpp:2117),
-* a per-partition **lineage** sidecar (tile/row count, page count,
-  xor-of-checksums per scan partition), and
+* a per-file **lineage** sidecar: one row per non-empty file
+  ``part-<part_id>`` the write produced (tile/row count, page count,
+  xor-of-checksums), gdaltindex's per-file record, and
 * a **manifest** row per completed zoom level with lineage + row-count
   metrics: stage name, input/output row counts, tile extents (the
   GetExtent fast path, ogrlayer.cpp:212), total page count, xor-of-checksums,
   wall seconds, and the spark conf that produced it.
 
-A level commits in two Spark actions, the data write and the lineage write,
-each under a job description naming runner, stage and action.  The manifest
-metrics come from the lineage write's own pass (``DataFrame.observe``) and
-``in_rows`` from the data write's, so no count or collect re-scans a level.
+A level commits in ONE Spark action, the data write, under a job description
+naming runner, stage and action.  A lineage tap in the written frame's
+projection folds each write task's partition into a partial and hands it to
+the driver through an accumulator (see :func:`_tapped`); the driver writes
+the lineage rows with pyarrow and folds the manifest totals from the same
+partials.  ``run_tiling``'s ``in_rows`` is observed in that pass too, so no
+count, collect or lineage job re-scans a level.
 
 ``run_tiling(..., resume=True)`` consults the manifest and skips every level
 already marked complete — re-running a killed job recomputes only missing
@@ -28,11 +32,18 @@ from __future__ import annotations
 
 import functools
 import json
+import operator
 import os
+import shutil
 import time
 from contextlib import contextmanager
+from typing import Callable, Iterator, NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
+from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -96,74 +107,123 @@ def _job_description(spark: SparkSession, text: str):
         sc.setLocalProperty("spark.job.description", prev)
 
 
-def _write(spark: SparkSession, df: DataFrame, path: str, desc: str) -> DataFrame:
-    """Persist ``df`` as parquet at ``path``; return it read back with the
-    schema just written, which is what inference (a Spark job) would give:
-    Spark stores its schema in the footer and makes a file source nullable."""
+class _ByPartition(AccumulatorParam):
+    """Accumulates ``{partition id: lineage partial}`` dicts."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        a.update(b)
+        return a
+
+
+class _Lineage(NamedTuple):
+    """How a runner's tap folds the table it writes into lineage."""
+
+    args: Callable  # the table -> the tap's input columns
+    partial: Callable  # one batch of those columns -> a partial
+    fold: tuple  # how two partials combine, field by field
+    schema: pa.Schema  # a lineage row: part_id, then the partial's leading fields
+    totals: Callable  # (partials folded over the table, or None; row count) -> manifest fields
+
+
+def _tile_partial(tx, ty, data) -> tuple:
+    """Tile count, page count, checksum xor and extent of a batch of tiles."""
+    stats = np.array([raster.tile_stats(t.as_buffer()) for t in data], dtype=np.int64).reshape(-1, 2)
+    x, y = tx.to_numpy(), ty.to_numpy()
+    return (
+        len(x), int(stats[:, 1].sum()), int(np.bitwise_xor.reduce(stats[:, 0])),
+        int(x.min()), int(x.max()), int(y.min()), int(y.max()),
+    )
+
+
+def _tile_totals(t, n: int) -> dict:
+    """A tile level's manifest fields from its folded partial ``t`` (None
+    for no tiles) and its ``n`` lineage rows."""
+    n_tiles, pages, ck, *extent = t or (0, None, 0, None, None, None, None)
+    return {
+        "n_tiles": n_tiles,
+        **dict(zip(("min_tx", "max_tx", "min_ty", "max_ty"), extent)),
+        "total_count": pages,
+        "ck_xor": ck,
+        "n_partitions": n,
+    }
+
+
+_TILES = _Lineage(
+    args=lambda df: [F.col("tx"), F.col("ty"), F.col("data")],
+    partial=_tile_partial,
+    fold=(operator.add, operator.add, operator.xor, min, max, min, max),
+    schema=pa.schema([("part_id", pa.int32()), ("n_tiles", pa.int64()), ("page_count", pa.int64()), ("ck_xor", pa.int32())]),
+    totals=_tile_totals,
+)
+
+# per-row hash over ALL columns, xor-folded: invariant to row order and
+# partitioning, so re-runs at any parallelism reproduce it bit-for-bit; only
+# the 8-byte hash crosses into Python, so every column type works
+_DOCS = _Lineage(
+    args=lambda df: [F.xxhash64(*[F.col(c) for c in df.columns])],
+    partial=lambda h: (len(h), int(np.bitwise_xor.reduce(h.to_numpy()))),
+    fold=(operator.add, operator.xor),
+    schema=pa.schema([("part_id", pa.int32()), ("n_rows", pa.int64()), ("ck_xor", pa.int64())]),
+    totals=lambda t, n: {"n_rows": t[0] if t else 0, "content_ck": t[1] if t else 0, "n_partitions": n},
+)
+
+_TAP = "_lineage_tap"
+
+
+def _combine(fold: tuple, a, b) -> tuple:
+    """Partials ``a`` (None for none yet) and ``b`` combined."""
+    return b if a is None else tuple(f(x, y) for f, x, y in zip(fold, a, b))
+
+
+def _tapped(df: DataFrame, lineage: _Lineage):
+    """``df`` with a lineage tap, and the accumulator the tap fills.
+
+    The tap is a nondeterministic Arrow UDF in a projection of ``df``, kept
+    alive by a filter on its (always true) result: the filter cannot move
+    below a nondeterministic projection, so the producer's own projections
+    are neither duplicated into the UDF's input nor re-run.  Each task folds
+    its partition and adds ``{partition id: partial}`` at the end; Spark
+    applies a result task's update once per partition and drops those of
+    failed attempts, so in the write's result stage each partial describes
+    the file ``part-<partition id>`` that the task committed."""
+    acc = df.sparkSession.sparkContext.accumulator({}, _ByPartition())
+    partial, fold = lineage.partial, lineage.fold
+
+    # one column arrives as an array, several as a tuple of arrays
+    def tap(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        total = None
+        for batch in batches:
+            cols = batch if isinstance(batch, tuple) else (batch,)
+            if len(cols[0]):
+                total = _combine(fold, total, partial(*cols))
+            yield pa.repeat(True, len(cols[0]))
+        if total is not None:
+            acc.add({TaskContext.get().partitionId(): total})
+
+    udf = F.arrow_udf(tap, "boolean").asNondeterministic()
+    return df.select("*", udf(*lineage.args(df)).alias(_TAP)).where(_TAP).drop(_TAP), acc
+
+
+def _write(spark: SparkSession, df: DataFrame, path: str, desc: str, lineage: _Lineage, lpath: str):
+    """Persist ``df`` as parquet at ``path`` in one Spark action and its
+    lineage, one row per file written, at ``lpath``.  Return the table read
+    back with the schema just written, which is what inference (a Spark job)
+    would give: Spark stores its schema in the footer and makes a file source
+    nullable; and the manifest fields, folded from the same pass."""
+    tapped, acc = _tapped(df, lineage)
     with _job_description(spark, f"{desc} write"):
-        df.write.mode("overwrite").parquet(path)
-    return spark.read.schema(df.schema).parquet(path)
-
-
-# tile extent (the GetExtent fast path): per partition, then per level
-_EXTENT = {"min_tx": F.min, "max_tx": F.max, "min_ty": F.min, "max_ty": F.max}
-
-
-def _tile_lineage(persisted: DataFrame) -> tuple:
-    """Per-PARTITION lineage rows of a tile table (partition id, tile count,
-    page count, checksum xor, plus the ``_``-prefixed extent) and the level
-    totals folded from them; ``tile_checksums`` runs once."""
-    parts = (
-        raster.tile_checksums(persisted)
-        .withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tiles"),
-            F.sum("page_count").alias("page_count"),
-            # order-insensitive combined checksum: xor fold
-            F.bit_xor("checksum").alias("ck_xor"),
-            *(fn(name[4:]).alias(f"_{name}") for name, fn in _EXTENT.items()),
-        )
-    )
-    return parts, [
-        F.coalesce(F.sum("n_tiles"), F.lit(0)).alias("n_tiles"),
-        *(fn(f"_{name}").alias(name) for name, fn in _EXTENT.items()),
-        F.sum("page_count").alias("total_count"),
-        F.coalesce(F.bit_xor("ck_xor"), F.lit(0)).alias("ck_xor"),
-        F.count(F.lit(1)).alias("n_partitions"),
-    ]
-
-
-def _doc_lineage(persisted: DataFrame) -> tuple:
-    """Per-PARTITION lineage rows of a document table (partition id, row
-    count, content checksum) and the stage totals folded from them."""
-    # per-row hash over ALL columns folded with the constant-state bit_xor
-    # aggregate: invariant to row order and partitioning, so re-runs at any
-    # parallelism reproduce it bit-for-bit
-    parts = (
-        persisted.withColumn("_h", F.xxhash64(*[F.col(c) for c in persisted.columns]))
-        .withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.bit_xor("_h").alias("ck_xor"))
-    )
-    return parts, [
-        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n_rows"),
-        F.coalesce(F.bit_xor("ck_xor"), F.lit(0)).alias("content_ck"),
-        F.count(F.lit(1)).alias("n_partitions"),
-    ]
-
-
-def _write_lineage(spark: SparkSession, parts: DataFrame, totals: list, path: str, desc: str) -> dict:
-    """Write the lineage rows ``parts`` (less their ``_`` columns) to ``path``
-    and return ``totals``, observed over those rows in the same pass.  The
-    observe sits ABOVE the per-partition aggregate: below it, an empty table
-    lets AQE drop the observed subtree and the metrics never arrive."""
-    obs = Observation()
-    with _job_description(spark, f"{desc} lineage"):
-        parts.observe(obs, *totals).select(
-            [c for c in parts.columns if not c.startswith("_")]
-        ).write.mode("overwrite").parquet(path)
-    return {k: (int(v) if v is not None else None) for k, v in obs.get.items()}
+        tapped.write.mode("overwrite").parquet(path)
+    parts = sorted(acc.value.items())
+    rows = [dict(zip(lineage.schema.names, (pid, *p))) for pid, p in parts]
+    # replace, as an overwrite would: no stale row of an earlier run survives
+    shutil.rmtree(lpath, ignore_errors=True)
+    os.makedirs(lpath)
+    pq.write_table(pa.Table.from_pylist(rows, schema=lineage.schema), os.path.join(lpath, "part-00000.parquet"))
+    folded = functools.reduce(functools.partial(_combine, lineage.fold), (p for _, p in parts), None)
+    return spark.read.schema(df.schema).parquet(path), lineage.totals(folded, len(parts))
 
 
 def _commit(spark: SparkSession, base: str, t0: float, **record) -> None:
@@ -218,7 +278,10 @@ def run_tiling(
         else:
             src, stage = _level_frame(spark, base, z + 1), "pyramid_reduce"
             level = raster.pyramid_reduce(src.observe(obs, n_src))
-        _write(spark, level.drop("zoom"), os.path.join(base, f"zoom={z}"), desc)
+        _, stats = _write(
+            spark, level.drop("zoom"), os.path.join(base, f"zoom={z}"), desc,
+            _TILES, os.path.join(base, "_lineage", f"zoom={z}"),
+        )
         try:
             in_rows = obs.get["in_rows"]
         except Py4JJavaError:
@@ -226,8 +289,6 @@ def run_tiling(
             # is empty, AQE replaces the plan above it and drops the metrics
             with _job_description(spark, f"{desc} count"):
                 in_rows = src.count()
-        lineage = _tile_lineage(_level_frame(spark, base, z))
-        stats = _write_lineage(spark, *lineage, os.path.join(base, "_lineage", f"zoom={z}"), desc)
         _commit(spark, base, t0, zoom=z, stage=stage, in_rows=int(in_rows), out_rows=stats["n_tiles"], **stats)
 
     levels = [_level_frame(spark, base, z) for z in range(min_zoom, base_zoom + 1)]
@@ -294,15 +355,15 @@ def completed_stages(spark: SparkSession, base: str) -> set:
 
 def _run_named_stage(spark, runner, stage, fn, base, resume, lineage) -> DataFrame:
     """The shared body of :func:`run_stage` and :func:`run_doc_stage`;
-    ``lineage`` builds the stage's lineage rows and manifest totals."""
+    ``lineage`` says how the stage's write folds its lineage."""
     path = os.path.join(base, f"stage={stage}")
     if resume and stage in completed_stages(spark, base):
         return spark.read.parquet(path)
     t0 = time.time()
     desc = f"pipeline.{runner}[{stage}]"
-    persisted = _write(spark, fn(), path, desc)
     lpath = os.path.join(base, "_lineage", f"stage={stage}")
-    _commit(spark, base, t0, stage=stage, **_write_lineage(spark, *lineage(persisted), lpath, desc))
+    persisted, stats = _write(spark, fn(), path, desc, lineage, lpath)
+    _commit(spark, base, t0, stage=stage, **stats)
     return persisted
 
 
@@ -315,13 +376,13 @@ def run_stage(
 ) -> DataFrame:
     """Materialize ONE named tile-table stage under ``base/stage=<name>``
     with the same contract as :func:`run_tiling`: parquet persist, a
-    manifest record (rows, checksum-xor, wall), a per-partition lineage
+    manifest record (rows, checksum-xor, wall), a per-file lineage
     sidecar, and resume (a completed stage is read back, its producer
     never re-invoked).  Generalizes checkpoint/resume to any operator
     producing a (zoom, tx, ty, data) table — rasterize_polygons/lines,
     warp outputs, sieve/proximity products.
     """
-    return _run_named_stage(spark, "run_stage", stage, tile_df_fn, base, resume, _tile_lineage)
+    return _run_named_stage(spark, "run_stage", stage, tile_df_fn, base, resume, _TILES)
 
 
 def run_doc_stage(
@@ -332,10 +393,10 @@ def run_doc_stage(
     resume: bool = False,
 ) -> DataFrame:
     """:func:`run_stage` for DOCUMENT tables (any schema): parquet persist
-    under ``base/stage=<name>``, per-partition lineage (row count + an
+    under ``base/stage=<name>``, per-file lineage (row count + an
     order-independent xxhash64-XOR content checksum over every column), a
     manifest record, and resume (a completed stage reads back; its producer
     is never re-invoked).  This extends the checkpoint/lineage contract
     from the tile pipeline to the corpus pipeline — every curation stage
     (scrub -> filter -> dedup -> sample) restarts mid-pipeline."""
-    return _run_named_stage(spark, "run_doc_stage", stage, df_fn, base, resume, _doc_lineage)
+    return _run_named_stage(spark, "run_doc_stage", stage, df_fn, base, resume, _DOCS)

@@ -42,6 +42,8 @@ from . import tiles
 
 TILE_SIZE = tiles.TILE_SIZE
 _PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43], dtype=np.int64)
+# GDALChecksumImage's prime for each pixel of a tile, in raster order
+_TILE_PRIMES = np.resize(_PRIMES, TILE_SIZE * TILE_SIZE).astype(np.int32)
 
 TILE_SCHEMA = StructType(
     [
@@ -68,8 +70,7 @@ def gdal_checksum(grid: np.ndarray) -> int:
     commutes with addition mod 2^16, so one masked sum is exact.
     """
     flat = np.asarray(grid, dtype=np.int64).ravel()
-    primes = np.resize(_PRIMES, flat.shape[0])
-    return int(np.fmod(flat, primes).sum()) & 0xFFFF
+    return int(np.fmod(flat, _primes(flat.shape[0])).sum()) & 0xFFFF
 
 
 def gdal_checksum_float(grid: np.ndarray) -> int:
@@ -81,8 +82,18 @@ def gdal_checksum_float(grid: np.ndarray) -> int:
     nval = np.empty(flat.shape, dtype=np.int64)
     nval[~bad] = np.floor(np.clip(v[~bad], -2147483647.0, 2147483647.0)).astype(np.int64)
     nval[bad] = -2147483648
-    primes = np.resize(_PRIMES, flat.shape[0])
-    return int(np.fmod(nval, primes).sum()) & 0xFFFF
+    return int(np.fmod(nval, _primes(flat.shape[0])).sum()) & 0xFFFF
+
+
+def _primes(n: int) -> np.ndarray:
+    """The checksum's prime for each of ``n`` pixels in raster order."""
+    return _TILE_PRIMES[:n] if n <= _TILE_PRIMES.size else np.resize(_PRIMES, n)
+
+
+def tile_stats(buf) -> tuple:
+    """(GDAL checksum, pixel sum) of one encoded tile, decoded once."""
+    px = np.frombuffer(buf, dtype="<i4")
+    return int(np.fmod(px, _primes(px.size)).sum()) & 0xFFFF, int(px.sum())
 
 
 def with_pixel(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
@@ -1168,17 +1179,16 @@ def tile_checksums(tile_df: DataFrame) -> DataFrame:
 
     def _ck(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cks = [np.int32(gdal_checksum(bytes_to_tile(b))) for b in pdf["data"]]
             # page_count only meaningful at base zoom (pre-average); at upper
             # levels it is the sum of averaged pixels, still a useful invariant
-            tot = [int(bytes_to_tile(b).sum()) for b in pdf["data"]]
+            stats = np.array([tile_stats(b) for b in pdf["data"]], dtype=np.int64).reshape(-1, 2)
             yield pd.DataFrame(
                 {
                     "zoom": pdf["zoom"],
                     "tx": pdf["tx"],
                     "ty": pdf["ty"],
-                    "checksum": cks,
-                    "page_count": tot,
+                    "checksum": stats[:, 0].astype(np.int32),
+                    "page_count": stats[:, 1],
                 }
             )
 

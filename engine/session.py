@@ -36,6 +36,19 @@ LOCAL_JIT_PROFILE = "-XX:CICompilerCount=2 -XX:CompileThresholdScaling=3 -XX:+Us
 
 _COLLECTOR = re.compile(r"-XX:\+Use(\w+)GC\b")
 
+# Spark's local masters: local, local[N], local[*], local[N,F], local[*,F]
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:\s*,\s*\d+)?\])?")
+
+
+def local_cores(master: str) -> int | None:
+    """Task slots of a local ``master`` (``*`` is this host's CPU count), or
+    None for any other master."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m is None:
+        return None
+    n = m.group(1) or "1"
+    return (os.cpu_count() or 1) if n == "*" else int(n)
+
 
 def _check_collectors(extra_conf: dict) -> None:
     """Refuse a local session whose driver JVM would name two collectors:
@@ -81,10 +94,11 @@ def get_spark(
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "268435456")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cores}]"
+    slots = local_cores(master)
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core keeps every stage's tasks
         # in a single wave; at cluster scale this is set per-job instead.
-        shuffle_partitions = int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else 200
+        shuffle_partitions = slots or 200
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -116,14 +130,7 @@ def get_spark(
         # fault contention across the bloated pool.  With the cap the same
         # sequence stays at 67 workers / 7 GB and per-query CPU is flat.
         # On a cluster this bounds per-executor python memory the same way.
-        .config(
-            "spark.python.factory.idleWorkerMaxPoolSize",
-            str(
-                int(master[6:-1])
-                if master.startswith("local[") and master[6:-1].isdigit()
-                else (os.cpu_count() or 8)
-            ),
-        )
+        .config("spark.python.factory.idleWorkerMaxPoolSize", str(slots or os.cpu_count() or 8))
         .config("spark.ui.enabled", "false")
         # cluster mode: executors don't inherit the driver env — ship the
         # malloc tuning explicitly (no-op in local mode, where the workers
@@ -137,7 +144,7 @@ def get_spark(
             os.environ["MALLOC_TRIM_THRESHOLD_"],
         )
     )
-    if master == "local" or master.startswith("local["):
+    if slots is not None:
         # Fork the Python workers from engine.worker_daemon (see its
         # docstring).  On CPython 3.11 each task's setup_spark_files re-read
         # the directories of pyspark.zip, the py4j zip and the spark-core jar

@@ -464,10 +464,10 @@ def test_run_doc_stage_checkpoint_resume(spark, tmp_path):
 @pytest.mark.parametrize("empty", [False, True], ids=["rows", "no_rows"])
 def test_run_doc_stage_commit_matches_separate_passes(spark, tmp_path, empty):
     """A tile_assign-shaped stage (string, timestamp, double and long
-    columns): the manifest scalars observed over the lineage write and the
-    lineage rows must equal separate passes over the persisted table (a
-    per-row xxhash64 folded by bit_xor), and the returned table must carry
-    the schema Spark infers from the files."""
+    columns): the manifest scalars and the lineage rows folded in the data
+    write must equal separate passes over the persisted table (a per-row
+    xxhash64 folded by bit_xor per written file), and the returned table
+    must carry the schema Spark infers from the files."""
     import json
 
     from pyspark.sql import functions as F
@@ -500,7 +500,7 @@ def test_run_doc_stage_commit_matches_separate_passes(spark, tmp_path, empty):
 
     lineage = (
         inferred.withColumn("_h", F.xxhash64(*[F.col(c) for c in inferred.columns]))
-        .withColumn("part_id", F.spark_partition_id())
+        .withColumn("part_id", F.regexp_extract("_metadata.file_name", r"^part-(\d+)", 1).cast("int"))
         .groupBy("part_id")
         .agg(F.count(F.lit(1)).alias("n_rows"), F.expr("bit_xor(_h)").alias("ck_xor"))
     )

@@ -264,11 +264,10 @@ def _lonlat(spark, n: int):
 
 
 def test_run_stage_commits_in_one_checksum_pass(spark, tmp_path):
-    """run_stage over an already-persisted tile table: the data write plus
-    one lineage write (a shuffle job and the write job) — at most 3 Spark
-    jobs, with ``tile_checksums``' Python stage run exactly once — each job
-    described by runner, stage and action, and the caller's description
-    restored afterwards."""
+    """run_stage over an already-persisted tile table commits in ONE Spark
+    job, the data write, which checksums the tiles in its only Python
+    operator (the lineage tap) — described by runner, stage and action, and
+    the caller's description restored afterwards."""
     from engine import pipeline
 
     from engine import raster
@@ -284,29 +283,55 @@ def test_run_stage_commits_in_one_checksum_pass(spark, tmp_path):
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.job.description", None)
-    assert len(jobs) <= 3, jobs
-    plans = {ex: nodes for _, ex, nodes in jobs}
-    assert sum(nodes.count("MapInPandas") for nodes in plans.values()) == 1, plans
-    assert {d for d, _, _ in jobs} == {"pipeline.run_stage[z5] write", "pipeline.run_stage[z5] lineage"}
+    assert [d for d, _, _ in jobs] == ["pipeline.run_stage[z5] write"], jobs
+    nodes = jobs[0][2]
+    assert nodes.count("ArrowEvalPython") == 1 and "MapInPandas" not in nodes, nodes
 
 
 def test_run_doc_stage_commits_in_one_pass(spark, tmp_path):
-    """run_doc_stage: the data write plus one lineage write whose observed
-    metrics give the manifest — at most 3 Spark jobs, no read-back."""
+    """run_doc_stage: the data write is the only Spark job, its lineage
+    folded in the same pass — no lineage job, no read-back."""
     from engine import pipeline
 
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     jobs = _tagged_jobs(
         spark, "plan-run-doc-stage", lambda: pipeline.run_doc_stage(spark, "docs", lambda: docs, str(tmp_path))
     )
-    assert len(jobs) <= 3, jobs
-    assert {d for d, _, _ in jobs} == {"pipeline.run_doc_stage[docs] write", "pipeline.run_doc_stage[docs] lineage"}
+    assert [d for d, _, _ in jobs] == ["pipeline.run_doc_stage[docs] write"], jobs
+
+
+def test_run_doc_stage_tap_hashes_the_producer_output_once(spark, tmp_path):
+    """The lineage tap takes the producer's output columns, not its
+    expressions: with ``pii_scrub_df`` as producer the executed write plan
+    has exactly the producer's own ``regexp_replace`` calls, and the tap's
+    input is one ``xxhash64`` over attribute references."""
+    import re
+
+    from engine import corpus, pipeline
+
+    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    jobs = _tagged_jobs(
+        spark,
+        "plan-run-doc-stage-pii",
+        lambda: pipeline.run_doc_stage(spark, "pii", lambda: corpus.pii_scrub_df(docs), str(tmp_path)),
+    )
+    ((_, ex, _),) = jobs
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    executed = sql_store.execution(ex).get().physicalPlanDescription()
+    scrubbed = corpus.pii_scrub_df(docs)
+    producer = _plan(scrubbed)
+    assert producer.count("regexp_replace(") > 0
+    assert executed.count("regexp_replace(") == producer.count("regexp_replace("), executed
+    (args,) = re.findall(r"Arguments: \[tap\(xxhash64\((.*?)\)\)", executed)
+    *cols, seed = args.split(", ")
+    assert len(cols) == len(scrubbed.columns) and seed == "42", args
+    assert all(re.fullmatch(r"\w+#\d+L?", c) for c in cols), args
 
 
 def test_run_tiling_counts_its_input_inside_the_write(spark, tmp_path):
     """run_tiling launches no job that only scans its input (the former
-    ``points.count()``) and no schema-inference job: every job it starts
-    belongs to a level's data or lineage write."""
+    ``points.count()``), no schema-inference job and no lineage job: every
+    job it starts belongs to a level's data write."""
     from engine import pipeline
 
     _lonlat(spark, 3000).write.parquet(str(tmp_path / "points"))
@@ -318,7 +343,7 @@ def test_run_tiling_counts_its_input_inside_the_write(spark, tmp_path):
     )
     assert jobs
     for desc, _, nodes in jobs:
-        assert desc.split()[-1] in ("write", "lineage"), jobs
+        assert desc.split()[-1] == "write", jobs
         assert any("InsertIntoHadoopFsRelationCommand" in n for n in nodes), (desc, nodes)
 
 

@@ -234,12 +234,14 @@ def _manifest_records(base: str) -> dict:
 
 def _tile_commit_oracle(persisted):
     """A persisted tile table's manifest metrics and lineage rows by separate
-    passes: a whole-table ``tile_checksums`` aggregate, then a per-partition
-    one with the xor folded over a collected list."""
+    passes: a whole-table ``tile_checksums`` aggregate, then a per-file one
+    (keyed by the ``part-NNNNN`` number of the file each tile was read from)
+    with the xor folded over a collected list."""
     from pyspark.sql import functions as F
 
     xor_fold = F.expr("aggregate(collect_list(checksum), 0, (a, x) -> int(a ^ x))")
-    cks = raster.tile_checksums(persisted)
+    part = F.regexp_extract("_metadata.file_name", r"^part-(\d+)", 1).cast("int")
+    cks = raster.tile_checksums(persisted).join(persisted.select("tx", "ty", part.alias("part_id")), ["tx", "ty"])
     stats = cks.agg(
         F.count(F.lit(1)).alias("n_tiles"),
         F.min("tx").alias("min_tx"),
@@ -250,8 +252,7 @@ def _tile_commit_oracle(persisted):
         xor_fold.alias("ck_xor"),
     ).collect()[0].asDict()
     lineage = (
-        cks.withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
+        cks.groupBy("part_id")
         .agg(
             F.count(F.lit(1)).alias("n_tiles"),
             F.sum("page_count").alias("page_count"),
@@ -266,7 +267,7 @@ def _tile_commit_oracle(persisted):
 @pytest.mark.parametrize("empty", [False, True], ids=["points", "no_points"])
 def test_tile_commit_matches_separate_passes(spark, geo_points, tmp_path, empty):
     """run_tiling and run_stage take every manifest field and lineage row
-    from the lineage write's own pass; each must equal what separate passes
+    from the data write's own pass; each must equal what separate passes
     over the persisted table give, for an empty producer too."""
     from pyspark.sql import functions as F
 
