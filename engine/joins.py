@@ -13,11 +13,15 @@ The engine's re-expression of GDAL's spatial-join surface
     - **shuffle** (method layer large): both sides exploded to covering
       mercator tiles at an index zoom, equi-join on the cell id — the
       cell-prefix pruning the north star requires — then exact refine of
-      whole candidate batches.  AQE runs the equi-join as a shuffled hash
-      join when the measured partitions of its smaller side fit the
-      session's local-map threshold, else as a sort-merge join.  Optional
-      hot-cell salting gives each point row one salt, so every (point row,
-      polygon) pair is still a candidate exactly once.
+      whole candidate batches.  An eager pass first folds the points' cells
+      into an occupancy bitmap (≤ 1 MB: a bit per cell to zoom 11, hashed),
+      and the polygon cover drops every cell no point occupies before the
+      salt replication and the shuffle; the pass is skipped for a point
+      plan that is not deterministic.  AQE runs the equi-join as a
+      shuffled hash join when the measured partitions of its smaller side
+      fit the session's local-map threshold, else as a sort-merge join.
+      Optional hot-cell salting gives each point row one salt, so every
+      (point row, polygon) pair is still a candidate exactly once.
   Both plans decide every (point, polygon) pair with the same kernel,
   :class:`geom.EdgeTable`.
 * ``GDALGridNearestNeighbor``'s quadtree-accelerated kNN
@@ -40,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -48,6 +53,7 @@ from pyspark.sql.types import (
 )
 
 from . import geom, tiles
+from .session import job_description
 
 
 # ---------------------------------------------------------------------------
@@ -96,13 +102,20 @@ def with_cell(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "la
     no quadkey is built."""
     import pyarrow as pa
 
-    scale = np.int64(2 ** (zoom + 1))
-
     def encode(lon, lat):
-        tx, ty = tiles.lonlat_to_tile(lon, lat, zoom)
-        return [pa.array(tx * scale + ty, type=pa.int64())]
+        return [pa.array(_lonlat_cells(lon, lat, zoom), type=pa.int64())]
 
     return _append_lonlat_columns(df, lon_col, lat_col, [StructField("cell", LongType())], encode)
+
+
+def _pack_cell(tx: np.ndarray, ty: np.ndarray, zoom: int) -> np.ndarray:
+    """Tile coords → the packed int64 cell id ``(tx << zoom+1) | ty``."""
+    return tx * np.int64(2 ** (zoom + 1)) + ty
+
+
+def _lonlat_cells(lon: np.ndarray, lat: np.ndarray, zoom: int) -> np.ndarray:
+    """The packed cell of each point at ``zoom``: :func:`with_cell`'s key."""
+    return _pack_cell(*tiles.lonlat_to_tile(lon, lat, zoom), zoom)
 
 
 # ---------------------------------------------------------------------------
@@ -185,11 +198,57 @@ def pip_join_broadcast(
 # ---------------------------------------------------------------------------
 
 
-def _cover_batch(batch: "pa.RecordBatch", zoom: int) -> "pa.RecordBatch":
+# The points' cell-occupancy bitmap: bit ``cell mod 2^k`` for each packed
+# cell id, with 2^k = 2^(2*zoom+1) (one bit per id of the zoom's tiles) up
+# to zoom 11 and 2^23 (1 MB) above.  Both sides of the join set and read
+# the bit of the same packed id, so a collision (above zoom 11, or a tile
+# -1 at -180° or at the southern limit) only keeps a polygon row that finds
+# no point.
+_OCCUPANCY_BITS = 23
+
+
+def _occupancy_mask(zoom: int) -> np.int64:
+    """Bit index mask of the occupancy bitmap at ``zoom``."""
+    return np.int64(2 ** min(2 * zoom + 1, _OCCUPANCY_BITS) - 1)
+
+
+def _point_occupancy(points: DataFrame, zoom: int, lon_col: str, lat_col: str) -> np.ndarray | None:
+    """Packed bits (little bit order) of the cells at ``zoom`` that hold a
+    point of ``points``: one Spark job, one Arrow pass over (lon, lat) that
+    folds each partition into one bitmap, OR-ed on the driver.
+
+    None when the points' analyzed plan is not deterministic: evaluated
+    again by the join, it could yield cells this pass never saw."""
+    import pyarrow as pa
+
+    if not points._jdf.queryExecution().analyzed().deterministic():
+        return None
+    mask = _occupancy_mask(zoom)
+
+    def _fold(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        seen = np.zeros(int(mask) + 1, dtype=bool)
+        for batch in batches:
+            lon = batch.column(0).to_numpy(zero_copy_only=False)
+            lat = batch.column(1).to_numpy(zero_copy_only=False)
+            seen[_lonlat_cells(lon, lat, zoom) & mask] = True
+        bits = np.packbits(seen, bitorder="little").tobytes()
+        yield pa.RecordBatch.from_arrays([pa.array([bits], type=pa.binary())], names=["bits"])
+
+    schema = StructType([StructField("bits", BinaryType())])
+    with job_description(points.sparkSession, "joins.pip_join_shuffle occupancy"):
+        rows = points.select(lon_col, lat_col).mapInArrow(_fold, schema).collect()
+    occupied = np.zeros((int(mask) + 8) // 8, dtype=np.uint8)
+    for row in rows:
+        occupied |= np.frombuffer(row.bits, dtype=np.uint8)
+    return occupied
+
+
+def _cover_batch(batch: "pa.RecordBatch", zoom: int, occupied: np.ndarray | None = None) -> "pa.RecordBatch":
     """(polygon_id, geom_wkb, minx, miny, maxx, maxy) → one (polygon_id,
     geom_wkb, cell) row per mercator tile covering each bbox at ``zoom``:
     one ``np.repeat`` over the per-polygon tile counts and one ``take`` of
-    the polygon columns per batch."""
+    the polygon columns per batch.  With an ``occupied`` bitmap
+    (:func:`_point_occupancy`), only the cells whose bit is set."""
     import pyarrow as pa
 
     minx, miny, maxx, maxy = (batch.column(i).to_numpy(zero_copy_only=False) for i in range(2, 6))
@@ -198,18 +257,24 @@ def _cover_batch(batch: "pa.RecordBatch", zoom: int) -> "pa.RecordBatch":
     tx0, ty0 = tiles.lonlat_to_tile(np.clip(minx, -180.0, 180.0), np.clip(miny, -lat_lim, lat_lim), zoom)
     tx1, ty1 = tiles.lonlat_to_tile(np.clip(maxx, -180.0, 180.0), np.clip(maxy, -lat_lim, lat_lim), zoom)
     box, tx, ty = geom.expand_boxes(tx0, tx1, ty0, ty1)
+    cell = _pack_cell(tx, ty, zoom)
+    if occupied is not None:
+        bit = cell & _occupancy_mask(zoom)
+        keep = ((occupied[bit >> 3] >> (bit & 7).astype(np.uint8)) & 1).astype(bool)
+        box, cell = box[keep], cell[keep]
     rows = pa.array(box, type=pa.int64())
-    cell = pa.array(tx * np.int64(2 ** (zoom + 1)) + ty, type=pa.int64())
     return pa.RecordBatch.from_arrays(
-        [batch.column(0).take(rows), batch.column(1).take(rows), cell], names=["polygon_id", "geom_wkb", "cell"]
+        [batch.column(0).take(rows), batch.column(1).take(rows), pa.array(cell, type=pa.int64())],
+        names=["polygon_id", "geom_wkb", "cell"],
     )
 
 
-def polygon_cover_cells(polygons: DataFrame, zoom: int) -> DataFrame:
+def polygon_cover_cells(polygons: DataFrame, zoom: int, occupied: np.ndarray | None = None) -> DataFrame:
     """Explode each polygon to the mercator tiles covering its bbox at
     ``zoom`` → (polygon_id, geom_wkb, cell).  The cell-side of the shuffle
     PIP join; bbox cover (not exact cover) keeps the UDF trivial — exactness
-    is restored by the refine step."""
+    is restored by the refine step.  ``occupied`` (the points' bitmap from
+    :func:`_point_occupancy`) drops the cells whose bit is clear."""
     out_schema = StructType(
         [
             StructField("polygon_id", IntegerType()),
@@ -220,7 +285,7 @@ def polygon_cover_cells(polygons: DataFrame, zoom: int) -> DataFrame:
 
     def _explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            yield _cover_batch(batch, zoom)
+            yield _cover_batch(batch, zoom, occupied)
 
     return polygons.select(
         F.col("polygon_id").cast("int").alias("polygon_id"), "geom_wkb", "minx", "miny", "maxx", "maxy"
@@ -302,6 +367,19 @@ def pip_join_shuffle(
     batch, each distinct polygon's WKB parsed once and all candidate pairs
     tested in one :class:`geom.EdgeTable` call).
 
+    Before it builds the plan, the call runs one eager Spark job, described
+    ``joins.pip_join_shuffle occupancy``: an Arrow pass over the points'
+    (lon, lat) that folds their cells into a bitmap of at most 1 MB, one
+    bit per cell up to zoom 11 and hashed (``cell mod 2^23``) above.  The polygon cover
+    keeps only the cells whose bit is set, so the salt replication, the
+    shuffle and the hash join see only polygon cells that can meet a point;
+    rows and candidate pairs are unchanged.  The points' plan is thus
+    evaluated twice: cached points are only scanned again, but an expensive
+    uncached lineage runs twice, as it does in
+    :func:`pip_join_shuffle_adaptive`.  When the points' analyzed plan is
+    not deterministic the pass is skipped and every cover cell is kept,
+    since a second evaluation could yield cells the bitmap never saw.
+
     The equi-join is planned as a sort-merge join.  Once the shuffles have
     run, AQE re-plans it as a shuffled hash join, built on the smaller
     measured side, when every shuffle partition of that side is within
@@ -318,8 +396,9 @@ def pip_join_shuffle(
 
     Emits the same rows as :func:`pip_join_broadcast` (A/B parity test).
     """
+    occupied = _point_occupancy(points, zoom, lon_col, lat_col)
     pts = with_cell(points.select(*keep_cols, lon_col, lat_col), zoom, lon_col, lat_col)
-    polys = polygon_cover_cells(polygons, zoom)
+    polys = polygon_cover_cells(polygons, zoom, occupied)
     if n_salt:
         polys = polys.withColumn("salt", F.explode(F.array([F.lit(i) for i in range(n_salt)])))
         pts = pts.withColumn("salt", F.pmod(F.xxhash64(*[F.col(c) for c in keep_cols]), F.lit(n_salt)).cast("int"))

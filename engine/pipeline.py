@@ -36,7 +36,6 @@ import operator
 import os
 import shutil
 import time
-from contextlib import contextmanager
 from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
@@ -49,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from . import raster
+from .session import job_description
 
 MANIFEST_DIR = "_manifest"
 
@@ -92,19 +92,6 @@ def _append_manifest(spark: SparkSession, base: str, record: dict) -> None:
     fname = os.path.join(path, f"{key}_{int(record['ts'] * 1e6)}.json")
     with open(fname, "w") as f:
         f.write(json.dumps(record) + "\n")
-
-
-@contextmanager
-def _job_description(spark: SparkSession, text: str):
-    """Describe the body's Spark jobs as ``text``, then restore the caller's
-    description (job tags are left alone)."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(text)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
 
 
 class _ByPartition(AccumulatorParam):
@@ -214,7 +201,7 @@ def _write(spark: SparkSession, df: DataFrame, path: str, desc: str, lineage: _L
     would give: Spark stores its schema in the footer and makes a file source
     nullable; and the manifest fields, folded from the same pass."""
     tapped, acc = _tapped(df, lineage)
-    with _job_description(spark, f"{desc} write"):
+    with job_description(spark, f"{desc} write"):
         tapped.write.mode("overwrite").parquet(path)
     parts = sorted(acc.value.items())
     rows = [dict(zip(lineage.schema.names, (pid, *p))) for pid, p in parts]
@@ -287,7 +274,7 @@ def run_tiling(
         except Py4JJavaError:
             # the observe sits below the level's shuffle: when that shuffle
             # is empty, AQE replaces the plan above it and drops the metrics
-            with _job_description(spark, f"{desc} count"):
+            with job_description(spark, f"{desc} count"):
                 in_rows = src.count()
         _commit(spark, base, t0, zoom=z, stage=stage, in_rows=int(in_rows), out_rows=stats["n_tiles"], **stats)
 

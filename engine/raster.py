@@ -146,9 +146,10 @@ def burn_base_tiles(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col:
     batch below the Arrow boundary (per-batch ``np.unique`` over a packed
     (tx,ty,ix,iy) int64 key — the map-side combine the JVM hash aggregate
     would do anyway, moved to where it shrinks the IPC stream itself) →
-    ``groupBy(tx,ty,ix,iy).sum`` over the already-tiny partials →
-    ``groupBy(tx,ty)`` grouped-map UDF that scatters ≤65536 (pixel,count)
-    rows into the 256×256 grid.  Result-identical to the former
+    one hash exchange of the already-tiny partials on (tx,ty) →
+    ``groupBy(tx,ty,ix,iy).sum`` → ``groupBy(tx,ty)`` grouped-map UDF that
+    scatters ≤65536 (pixel,count) rows into the 256×256 grid, both on that
+    exchange.  Result-identical to the former
     with_pixel → count() plan (pinned by the tile_density_z5 oracle row
     and the composed-vs-fused identity test); with_pixel remains the
     general per-row encoder for callers that keep attributes.
@@ -157,12 +158,10 @@ def burn_base_tiles(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col:
 
     if not 0 <= zoom <= 20:
         # packed-key width: tx,ty < 2^20, ix,iy < 2^9
-        counts = (
-            with_pixel(points.select(lon_col, lat_col), zoom, lon_col, lat_col)
-            .groupBy("tx", "ty", "ix", "iy")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+        partial = with_pixel(points.select(lon_col, lat_col), zoom, lon_col, lat_col).select(
+            "tx", "ty", "ix", "iy", F.lit(1).cast("long").alias("cnt")
         )
-        return _assemble_density(counts, zoom)
+        return _assemble_density(partial, zoom)
 
     out_schema = StructType(
         [
@@ -199,14 +198,15 @@ def burn_base_tiles(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col:
                 names=["tx", "ty", "ix", "iy", "cnt"],
             )
 
-    partial = points.select(lon_col, lat_col).mapInArrow(_kern, out_schema)
-    counts = partial.groupBy("tx", "ty", "ix", "iy").agg(F.sum("cnt").alias("cnt"))
-    return _assemble_density(counts, zoom)
+    return _assemble_density(points.select(lon_col, lat_col).mapInArrow(_kern, out_schema), zoom)
 
 
-def _assemble_density(counts: DataFrame, zoom: int) -> DataFrame:
-    """(tx, ty, ix, iy, cnt) → tile table: scatter each tile's ≤65536 pixel
-    counts into the 256×256 grid (one grouped-map task per tile)."""
+def _assemble_density(partial: DataFrame, zoom: int) -> DataFrame:
+    """(tx, ty, ix, iy, cnt) partial counts → tile table: sum each pixel's
+    counts, then scatter each tile's ≤65536 pixel counts into the 256×256
+    grid (one grouped-map task per tile).  The partials are hash-partitioned
+    on (tx, ty) before the per-pixel sum, so the sum and the grouped
+    assembly both run on that one exchange."""
 
     def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         grid = np.zeros((TILE_SIZE, TILE_SIZE), dtype=np.int64)
@@ -220,8 +220,9 @@ def _assemble_density(counts: DataFrame, zoom: int) -> DataFrame:
             }
         )
 
-    nparts = counts.sparkSession.sparkContext.defaultParallelism
-    return counts.repartition(nparts, "tx", "ty").groupBy("tx", "ty").applyInPandas(_assemble, TILE_SCHEMA)
+    nparts = partial.sparkSession.sparkContext.defaultParallelism
+    counts = partial.repartition(nparts, "tx", "ty").groupBy("tx", "ty", "ix", "iy").agg(F.sum("cnt").alias("cnt"))
+    return counts.groupBy("tx", "ty").applyInPandas(_assemble, TILE_SCHEMA)
 
 
 def burn_base_tiles_pip(
@@ -304,9 +305,7 @@ def burn_base_tiles_pip(
                 names=["tx", "ty", "ix", "iy", "cnt"],
             )
 
-    partial = points.select(lon_col, lat_col).mapInArrow(_kern, out_schema)
-    counts = partial.groupBy("tx", "ty", "ix", "iy").agg(F.sum("cnt").alias("cnt"))
-    return _assemble_density(counts, zoom)
+    return _assemble_density(points.select(lon_col, lat_col).mapInArrow(_kern, out_schema), zoom)
 
 
 def burn_points(

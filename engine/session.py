@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +34,17 @@ from pyspark.sql import SparkSession
 # Such a caller passes its own spark.driver.defaultJavaOptions, which
 # replaces this profile.
 LOCAL_JIT_PROFILE = "-XX:CICompilerCount=2 -XX:CompileThresholdScaling=3 -XX:+UseParallelGC"
+
+# Rows per column batch of Spark's vectorized parquet reader (4,096 by
+# default), sized from the 256 KB density tile (raster.TILE_SIZE² int32
+# counts).  The reader decodes a batch of a column into one contiguous
+# buffer and doubles it as it fills, so a batch of tiles asks for up to
+# twice its bytes at once, per task.  With the default, a 2 GB driver at
+# local[4] died reading a persisted tile level back in run_tiling (4,000
+# spread points, zoom 6 to 4): "Cannot reserve additional contiguous bytes
+# in the vectorized reader (requested 133955584 bytes)", then
+# OutOfMemoryError.  256 tiles are 64 MB.
+PARQUET_READER_BATCH_ROWS = (64 << 20) // (256 * 256 * 4)
 
 _COLLECTOR = re.compile(r"-XX:\+Use(\w+)GC\b")
 
@@ -117,6 +129,7 @@ def get_spark(
         # median of 10 runs went, in CPU-s, 19.6 -> 13.6 for the first job
         # and 4.6 -> 3.5 for a warm one (local[4], 4-vCPU/15.7 GB host).
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB")
+        .config("spark.sql.parquet.columnarReaderBatchSize", str(PARQUET_READER_BATCH_ROWS))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
         .config("spark.sql.session.timeZone", "UTC")
@@ -162,3 +175,16 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Describe the body's Spark jobs as ``text``, then restore the caller's
+    description (job tags are left alone)."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

@@ -400,3 +400,153 @@ def test_with_cell_packs_with_tile_coordinates(spark):
         # the edge points sit on a tile edge, up to the round trip's rounding
         px, _ = tiles.lonlat_to_pixels(edge_lon, edge_lat, zoom)
         assert np.allclose(px / tiles.TILE_SIZE, np.round(px / tiles.TILE_SIZE), rtol=0, atol=1e-6)
+
+
+def _hostile_points(spark, zoom):
+    """(name, point frame) inputs of the occupancy-filtered shuffle join:
+    every frame has (url string, lon double, lat double) and is built from
+    Python rows, so NaN stays NaN and None stays null."""
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    from engine import tiles
+
+    schema = StructType(
+        [StructField("url", StringType()), StructField("lon", DoubleType()), StructField("lat", DoubleType())]
+    )
+
+    def frame(lon, lat):
+        rows = [(f"p{i}", None if x is None else float(x), None if y is None else float(y))
+                for i, (x, y) in enumerate(zip(lon, lat))]
+        return spark.createDataFrame(rows, schema)
+
+    rng = np.random.default_rng(47)
+    k = np.array([1, 2 ** zoom // 2 - 1, 2 ** zoom // 2, 2 ** zoom - 1], dtype=np.float64) * tiles.TILE_SIZE
+    edge_lon, edge_lat = tiles.meters_to_lonlat(*tiles.pixels_to_meters(k, k, zoom))
+    limits = [-180.0, 180.0, 0.0]
+    lat_limits = [-85.0511, 85.0511, 0.0]
+    return [
+        # most points in cells no polygon covers (the open ocean of make_polygons)
+        ("uncovered", frame(rng.uniform(-179.0, 179.0, 300), rng.uniform(-80.0, 80.0, 300))),
+        # a few points: most polygon cells hold none
+        ("sparse", frame([12.3, 2.5, -60.0], [45.2, 7.5, -30.0])),
+        ("empty", frame([], [])),
+        (
+            "edges_and_limits",
+            frame(
+                np.concatenate([np.repeat(edge_lon, len(k)), np.repeat(limits, len(lat_limits))]),
+                np.concatenate([np.tile(edge_lat, len(k)), np.tile(lat_limits, len(limits))]),
+            ),
+        ),
+        (
+            "non_finite_and_null",
+            frame(
+                [np.nan, np.inf, -np.inf, None, 2.5, 0.0, np.nan, 12.3],
+                [0.0, 0.0, 0.0, 0.0, np.nan, None, np.inf, 45.2],
+            ),
+        ),
+    ]
+
+
+def _hostile_polygons(data):
+    """make_polygons plus boxes that touch ±180°, the mercator latitude
+    limits and the equator / prime meridian."""
+    return pd.concat(
+        [
+            data["polys_pdf"][["polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy"]],
+            _bbox_polys(
+                [
+                    (-180.0, -85.0511, -170.0, -80.0),
+                    (170.0, 80.0, 180.0, 85.0511),
+                    (-180.0, 80.0, -175.0, 85.06),
+                    (-5.0, -5.0, 0.0, 0.0),
+                    (0.0, 0.0, 5.0, 5.0),
+                ],
+                first_id=1000,
+            ),
+        ],
+        ignore_index=True,
+    )
+
+
+@pytest.mark.parametrize("zoom", [6, 13])
+def test_occupancy_filtered_shuffle_matches_broadcast(spark, data, zoom):
+    """The shuffle join, whose polygon cover keeps only the cells that hold
+    a point (an exact bitmap at zoom 6, a hashed one at zoom 13), emits the
+    broadcast join's rows unsalted and salted, for points in uncovered
+    cells, polygons whose cells hold no point, an empty point frame, points
+    on tile edges and at ±180° / ±85.0511°, and NaN, ±inf and null
+    coordinates."""
+    polys_pdf = _hostile_polygons(data)
+    polys = spark.createDataFrame(polys_pdf)
+    for name, pts in _hostile_points(spark, zoom):
+        bc = sorted((r.url, r.polygon_id) for r in joins.pip_join_broadcast(pts, polys_pdf).collect())
+        for n_salt in (None, 4):
+            sh = joins.pip_join_shuffle(pts, polys, zoom=zoom, n_salt=n_salt)
+            assert sorted((r.url, r.polygon_id) for r in sh.collect()) == bc, (name, n_salt)
+        if name in ("uncovered", "edges_and_limits"):
+            assert bc, name
+
+
+def test_occupancy_keeps_exactly_the_point_cells(spark, data):
+    """Up to zoom 11 the filtered cover, within the world's tiles, is the
+    full cover restricted to the cells that hold a point; the cells of
+    tile -1 that a bbox at -180° or at the southern limit covers share bits
+    with cells of the opposite edge.  Above zoom 11 the bitmap is indexed by
+    ``cell mod 2^23``: a polygon cell that shares its bit with a point's
+    cell is kept although no point is in it, and every cell that holds a
+    point is kept."""
+    from collections import Counter
+
+    from engine import tiles
+
+    polys = spark.createDataFrame(_hostile_polygons(data))
+    rng = np.random.default_rng(5)
+    lon, lat = rng.uniform(-60.0, 60.0, 500), rng.uniform(-50, 50, 500)
+    pts = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+
+    def covers(zoom, points, polys):
+        occupied = joins._point_occupancy(points, zoom, "lon", "lat")
+        cells = {r.cell for r in joins.with_cell(points, zoom).collect()}
+        full = _cover_multiset(joins.polygon_cover_cells(polys, zoom).collect())
+        kept = _cover_multiset(joins.polygon_cover_cells(polys, zoom, occupied).collect())
+        return cells, full, kept
+
+    def in_world(cell, zoom):
+        tx, ty = divmod(cell, 2 ** (zoom + 1))
+        return 0 <= tx < 2**zoom and 0 <= ty < 2**zoom
+
+    for zoom in (0, 4, 8):
+        cells, full, kept = covers(zoom, pts, polys)
+        assert kept.items() <= full.items(), zoom
+        world = Counter({k: v for k, v in kept.items() if in_world(k[1], zoom)})
+        assert world == Counter({k: v for k, v in full.items() if k[1] in cells}), zoom
+        assert sum(kept.values()) < sum(full.values()) or zoom == 0
+    # zoom 12, boxes of 0.2° around six of the points
+    boxes = spark.createDataFrame(_bbox_polys([(x - 0.1, y - 0.1, x + 0.1, y + 0.1) for x, y in zip(lon[:6], lat[:6])]))
+    cells, full, kept = covers(12, pts, boxes)
+    occupied = Counter({k: v for k, v in full.items() if k[1] in cells})
+    assert len(occupied) >= 6 and occupied.items() <= kept.items() < full.items()
+    # a point 1024 tiles east of a polygon's only zoom-12 cell has that
+    # cell's bit: (tx + 2^10) * 2^13 + ty = cell + 2^23
+    (tx,), (ty,) = tiles.lonlat_to_tile(np.array([10.0]), np.array([10.0]), 12)
+    (far_lon,), _, _, _ = tiles.tile_lonlat_bounds([tx + 1024], [ty], 12)
+    far = spark.createDataFrame(pd.DataFrame({"lon": [far_lon + 1e-6], "lat": [10.0]}))
+    box = spark.createDataFrame(_bbox_polys([(10.0, 10.0, 10.0, 10.0)], first_id=1))
+    cells, full, kept = covers(12, far, box)
+    assert kept == full and len(full) == 1 and not {k[1] for k in full} & cells
+
+
+def test_nondeterministic_point_plan_joins_unfiltered(spark, data):
+    """A point frame whose analyzed plan is not deterministic gets no
+    occupancy bitmap (a second evaluation could yield other cells), and its
+    shuffle join still emits the broadcast join's rows."""
+    from pyspark.sql import functions as F
+
+    tagged = geotag_first(data["pages"], data["gaz"])
+    nondet = tagged.where(F.rand(7) >= 0.0)
+    assert joins._point_occupancy(tagged, 6, "lon", "lat") is not None
+    assert joins._point_occupancy(nondet, 6, "lon", "lat") is None
+    bc = sorted((r.url, r.polygon_id) for r in joins.pip_join_broadcast(tagged, data["polys_pdf"]).collect())
+    for n_salt in (None, 4):
+        sh = joins.pip_join_shuffle(nondet, data["polys"], zoom=6, n_salt=n_salt)
+        assert sorted((r.url, r.polygon_id) for r in sh.collect()) == bc, n_salt

@@ -220,6 +220,15 @@ def test_fused_density_single_python_boundary(spark):
     # the already-unique per-batch rows), not a per-row count
     assert "HashAggregate" in plan_plain and "sum" in plan_plain.lower()
 
+    # one Exchange above the input's own, hash-partitioning on (tx, ty),
+    # serves both the per-pixel sum and the grouped tile assembly
+    def _exchanges(plan: str) -> int:
+        return len(re.findall(r"\(\d+\) Exchange\b", plan))
+
+    for plan in (plan_plain, plan_pip):
+        assert _exchanges(plan) == _exchanges(_plan(pts)) + 1, plan
+        assert len(re.findall(r"Arguments: hashpartitioning\(tx#\d+L, ty#\d+L, \d+\)", plan)) == 1, plan
+
 
 def _tagged_jobs(spark, tag: str, action) -> list:
     """Run ``action`` with every Spark job it starts tagged ``tag``; return
@@ -421,3 +430,31 @@ def test_salted_pip_join_runs_as_hash_join(spark):
     assert n_jobs == 4
     assert "SortMergeJoin" in merge_nodes and "ShuffledHashJoin" not in merge_nodes, merge_nodes
     assert merged == hashed and sum(c for _, c in hashed) > 0
+
+
+def test_shuffle_pip_join_occupancy_pass_is_one_scan_job(spark):
+    """Building the cell-shuffle PIP join runs one Spark job, described as
+    its occupancy pass: one MapInArrow over the points' lon and lat only,
+    and no Exchange."""
+    import re
+
+    import pandas as pd
+
+    from engine import joins
+    from engine.fixtures import make_polygons
+
+    pts = spark.createDataFrame(
+        pd.DataFrame({"url": [f"u{i}" for i in range(300)], "lon": [i % 90 - 45.0 for i in range(300)],
+                      "lat": [i % 60 - 30.0 for i in range(300)], "pad": [float(i) for i in range(300)]})
+    )
+    polys = spark.createDataFrame(make_polygons(80))
+    for n_salt in (None, 4):
+        jobs = _tagged_jobs(
+            spark, f"plan-pip-occupancy-{n_salt}", lambda: joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=n_salt)
+        )
+        ((desc, ex, nodes),) = jobs
+        assert desc == "joins.pip_join_shuffle occupancy", jobs
+        assert nodes.count("MapInArrow") == 1 and not any("Exchange" in n for n in nodes), nodes
+        executed = spark._jsparkSession.sharedState().statusStore().execution(ex).get().physicalPlanDescription()
+        (inputs,) = re.findall(r"\(\d+\) MapInArrow\s*\nInput \[\d+\]: \[(.*?)\]", executed)
+        assert [c.split("#")[0] for c in inputs.split(", ")] == ["lon", "lat"], executed
