@@ -151,22 +151,24 @@ def _q_tile_density_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tile_density_z5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Density per z5 tile, routed through the GeoTIFF codec: burn the
-    points into 256×256 ADD tiles, round-trip every tile through a
-    standalone georeferenced GeoTIFF (engine/tiff.py — deflate +
-    horizontal predictor, (zoom, tx, ty) re-derived from the embedded geo
-    tags only), then sum pixels per tile.  The per-tile pixel sum equals
-    the relational COUNT(*) (the DuckDB oracle) iff the codec round-trip
-    is bit-exact — so the TIFF layer is value-checked at the correctness
-    gate, not just in pytest.  Bench times the relational form and the
-    codec separately (`geotiff_codec`)."""
+    """Density per z5 tile, through the fused PIP burn and the GeoTIFF
+    codec: burn the points that fall in the 10° grid into 256×256 ADD tiles
+    (``raster.burn_base_tiles_pip``, the burn the flagship pipeline runs;
+    every point lies inside exactly one grid cell, so each counts once),
+    round-trip every tile through a standalone georeferenced GeoTIFF
+    (engine/tiff.py — deflate + horizontal predictor, (zoom, tx, ty)
+    re-derived from the embedded geo tags only), then sum pixels per tile.
+    The per-tile pixel sum equals the relational COUNT(*) (the DuckDB
+    oracle) iff the fused burn and the codec round-trip are exact — so both
+    are value-checked at the correctness gate, not just in pytest.  Bench
+    times the relational form and the codec separately (`geotiff_codec`)."""
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
     from engine import raster, tiff as _tiff
 
     pts = _points(spark, sf_dir)
-    base = raster.burn_base_tiles(pts, zoom=5)
+    base = raster.burn_base_tiles_pip(pts, _grid_polygons_pdf(), 5)
     rt = _tiff.geotiff_to_tiles(_tiff.tiles_to_geotiff(base).select("tiff"))
 
     out_schema = StructType([

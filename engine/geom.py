@@ -325,18 +325,6 @@ def _all_points(kind, body):
 # ---------------------------------------------------------------------------
 
 
-def _rect_flags(x1, y1, x2, y2, minx, miny, maxx, maxy) -> np.ndarray:
-    """Exact-rectangle flag per 4-edge polygon, one row of ``(k, 4)`` edge
-    coordinates each (the GEOS prepared-geometry shortcut): a single 4-edge
-    axis-parallel ring with |shoelace area| == bbox area IS its bbox, so
-    intersects == the bbox test and the ray cast can be skipped.  The area
-    is rounded, so a different summation order flags a different set:
-    PreparedPolygon and EdgeTable both flag through this one function."""
-    axis_par = np.all((x1 == x2) | (y1 == y2), axis=1)
-    area2 = np.abs(np.sum(x1 * y2 - x2 * y1, axis=1))
-    return axis_par & (area2 == 2.0 * (maxx - minx) * (maxy - miny))
-
-
 def _ray_cast(x1, y1, x2, y2, px: np.ndarray, py: np.ndarray) -> np.ndarray:
     """Even-odd ray cast + exact boundary of points against one polygon's
     edges, as a (points, edges) broadcast: True for interior or boundary."""
@@ -365,63 +353,29 @@ def _ray_cast(x1, y1, x2, y2, px: np.ndarray, py: np.ndarray) -> np.ndarray:
 
 
 class PreparedPolygon:
-    """Pre-parsed polygon for repeated many-point tests — the engine's analog
-    of GEOS prepared geometries (OGRPreparedGeometry, ogrlayer.cpp:1397-1399).
+    """One polygon prepared for repeated many-point tests — the engine's
+    analog of GEOS prepared geometries (OGRPreparedGeometry,
+    ogrlayer.cpp:1397-1399): a one-slot :class:`EdgeTable`, so the bbox
+    gate, the rectangle shortcut and the ray cast are the table's."""
 
-    Edges of all rings are flattened into contiguous arrays once; each
-    contains() call is pure vectorized numpy over the point arrays.
-    """
-
-    __slots__ = ("x1", "y1", "x2", "y2", "minx", "miny", "maxx", "maxy", "is_rect")
+    __slots__ = ("table", "minx", "miny", "maxx", "maxy", "is_rect")
 
     def __init__(self, wkb_buf: bytes):
-        rings = polygon_rings(wkb_buf)
-        segs = []
-        for ring in rings:
-            ring = np.asarray(ring, dtype=np.float64)
-            if not np.array_equal(ring[0], ring[-1]):
-                ring = np.vstack([ring, ring[:1]])
-            segs.append(np.hstack([ring[:-1], ring[1:]]))
-        edges = np.vstack(segs)
-        self.x1, self.y1, self.x2, self.y2 = (np.ascontiguousarray(edges[:, i]) for i in range(4))
-        self.minx = float(min(self.x1.min(), self.x2.min()))
-        self.maxx = float(max(self.x1.max(), self.x2.max()))
-        self.miny = float(min(self.y1.min(), self.y2.min()))
-        self.maxy = float(max(self.y1.max(), self.y2.max()))
-        # grid/tile dimension layers are the common rectangle case
-        self.is_rect = self.x1.shape[0] == 4 and bool(
-            _rect_flags(
-                self.x1[None], self.y1[None], self.x2[None], self.y2[None],
-                self.minx, self.miny, self.maxx, self.maxy,
-            )[0]
-        )
+        self.table = t = EdgeTable([wkb_buf])
+        self.minx, self.miny, self.maxx, self.maxy = (float(a[0]) for a in (t.minx, t.miny, t.maxx, t.maxy))
+        self.is_rect = bool(t.is_rect[0])
 
-    def contains(self, px: np.ndarray, py: np.ndarray, chunk: int = 65536) -> np.ndarray:
-        """Vectorized intersects test: True for interior OR boundary points
-        (GEOS Intersects rule, ogrlayer.cpp:1394-1401).  Two-phase: bbox
-        reject first (FilterGeometry envelope prefilter :1315-1323), exact
-        even-odd ray cast + on-segment check on survivors only."""
+    def contains(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+        """Intersects test of each point: True for interior OR boundary
+        (GEOS Intersects rule, ogrlayer.cpp:1394-1401)."""
         px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
-        if self.is_rect:
-            # interior-or-boundary of an axis-aligned rectangle IS the bbox
-            # test — identical truth table to parity|on_seg
-            return (px >= self.minx) & (px <= self.maxx) & (py >= self.miny) & (py <= self.maxy)
-        # small batches: the exact test is correct for any point (ray parity
-        # is 0 outside), so skip the bbox-mask machinery — its fixed numpy
-        # overhead dominates when called once per (cell, polygon) group
-        if px.shape[0] <= 4096:
-            return self._test(px, py)
-        out = np.zeros(px.shape[0], dtype=bool)
-        cand = (px >= self.minx) & (px <= self.maxx) & (py >= self.miny) & (py <= self.maxy)
-        idx = np.nonzero(cand)[0]
-        for s in range(0, idx.shape[0], chunk):
-            sub = idx[s : s + chunk]
-            out[sub] = self._test(px[sub], py[sub])
-        return out
+        return self.table.contains(np.zeros(px.shape[0], dtype=np.int64), px, py)
 
     def _test(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
-        return _ray_cast(self.x1, self.y1, self.x2, self.y2, px, py)
+        """The ray cast of each point, without the bbox gate or the
+        rectangle shortcut."""
+        t = self.table
+        return _ray_cast(t.x1, t.y1, t.x2, t.y2, np.asarray(px, dtype=np.float64), np.asarray(py, dtype=np.float64))
 
 
 def _ranks(n: np.ndarray) -> np.ndarray:
@@ -454,8 +408,8 @@ class EdgeTable:
     adds neither crossings nor boundary hits), larger ones one polygon at
     a time over their own edge run.
 
-    Semantics identical to PreparedPolygon.contains: interior or boundary
-    (GEOS Intersects, ogrlayer.cpp:1394-1401).
+    Interior or boundary counts (GEOS Intersects, ogrlayer.cpp:1394-1401).
+    :class:`PreparedPolygon` is a one-slot table.
     """
 
     CHUNK = 131072  # pairs per pass of the per-edge-slot loop
@@ -493,13 +447,16 @@ class EdgeTable:
         self.miny = np.minimum.reduceat(np.minimum(self.y1, self.y2), head)
         self.maxx = np.maximum.reduceat(np.maximum(self.x1, self.x2), head)
         self.maxy = np.maximum.reduceat(np.maximum(self.y1, self.y2), head)
+        # exact rectangles (the GEOS prepared-geometry shortcut): a single
+        # 4-edge axis-parallel ring with |shoelace area| == bbox area IS its
+        # bbox, so intersects == the bbox test and the ray cast is skipped
         self.is_rect = np.zeros(n, dtype=bool)
         four = np.nonzero(self.n_edges == 4)[0]
         e = head[four, None] + np.arange(4)
-        self.is_rect[four] = _rect_flags(
-            self.x1[e], self.y1[e], self.x2[e], self.y2[e],
-            self.minx[four], self.miny[four], self.maxx[four], self.maxy[four],
-        )
+        x1, y1, x2, y2 = self.x1[e], self.y1[e], self.x2[e], self.y2[e]
+        area2 = np.abs(np.sum(x1 * y2 - x2 * y1, axis=1))
+        w, h = self.maxx[four] - self.minx[four], self.maxy[four] - self.miny[four]
+        self.is_rect[four] = np.all((x1 == x2) | (y1 == y2), axis=1) & (area2 == 2.0 * w * h)
         # pad only to the ACTUAL max edge count — excess pad width multiplies
         # memory traffic directly (measured 20x slowdown padding 4-edge cells
         # to 64).  Per-edge-slot rows, so the hot loop gathers (chunk,)
@@ -584,8 +541,7 @@ class VectorPIPIndex:
     every pair is decided by the shared :class:`EdgeTable` kernel — no
     python loop over cells or points.
 
-    Semantics identical to PreparedPolygon.contains: interior or boundary
-    (GEOS Intersects, ogrlayer.cpp:1394-1401).
+    Interior or boundary counts (GEOS Intersects, ogrlayer.cpp:1394-1401).
     """
 
     def __init__(self, pid_wkb: list, cells: int | None = None):

@@ -97,13 +97,24 @@ def with_tile(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "la
 
 
 def with_cell(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """Append a single packed int64 cell id ``(tx << zoom+1) | ty`` at zoom —
-    a cheaper join key than the quadkey string for fixed-zoom equi-joins;
-    no quadkey is built."""
+    """Append a single packed int64 cell id ``(tx << zoom+1) | ty`` of
+    :func:`with_tile`'s tile at zoom — a cheaper join key than the quadkey
+    string for fixed-zoom equi-joins; no quadkey is built."""
+    return _append_cell(df, lon_col, lat_col, lambda lon, lat: _pack_cell(*tiles.lonlat_to_tile(lon, lat, zoom), zoom))
+
+
+def _with_world_cell(df: DataFrame, zoom: int, lon_col: str, lat_col: str) -> DataFrame:
+    """:func:`with_cell` of each point clamped to the mercator world: the
+    cell-shuffle joins' point key (:func:`_lonlat_cells`)."""
+    return _append_cell(df, lon_col, lat_col, lambda lon, lat: _lonlat_cells(lon, lat, zoom))
+
+
+def _append_cell(df: DataFrame, lon_col: str, lat_col: str, cells) -> DataFrame:
+    """Append ``cell`` = ``cells(lon, lat)``, computed per Arrow batch."""
     import pyarrow as pa
 
     def encode(lon, lat):
-        return [pa.array(_lonlat_cells(lon, lat, zoom), type=pa.int64())]
+        return [pa.array(cells(lon, lat), type=pa.int64())]
 
     return _append_lonlat_columns(df, lon_col, lat_col, [StructField("cell", LongType())], encode)
 
@@ -113,9 +124,19 @@ def _pack_cell(tx: np.ndarray, ty: np.ndarray, zoom: int) -> np.ndarray:
     return tx * np.int64(2 ** (zoom + 1)) + ty
 
 
+def _world_tiles(lon: np.ndarray, lat: np.ndarray, zoom: int):
+    """(tx, ty) at ``zoom`` of each lon/lat clamped to the mercator world
+    (±180°, ±``MERCATOR_LAT_MAX``): the cell-shuffle joins' one tile rule,
+    for their points and their polygon bbox corners alike, so a point
+    beyond the latitude limit meets the polygons that reach past it."""
+    lat_lim = tiles.MERCATOR_LAT_MAX
+    return tiles.lonlat_to_tile(np.clip(lon, -180.0, 180.0), np.clip(lat, -lat_lim, lat_lim), zoom)
+
+
 def _lonlat_cells(lon: np.ndarray, lat: np.ndarray, zoom: int) -> np.ndarray:
-    """The packed cell of each point at ``zoom``: :func:`with_cell`'s key."""
-    return _pack_cell(*tiles.lonlat_to_tile(lon, lat, zoom), zoom)
+    """The packed cell of each point's :func:`_world_tiles` tile at
+    ``zoom``: the cell-shuffle joins' point key."""
+    return _pack_cell(*_world_tiles(lon, lat, zoom), zoom)
 
 
 # ---------------------------------------------------------------------------
@@ -149,6 +170,17 @@ def _cached_index(cache_key: str, bc) -> geom.VectorPIPIndex:
     return index
 
 
+def _broadcast_index(spark, polygons_pdf: pd.DataFrame):
+    """Broadcast ``polygons_pdf``'s (polygon_id, geom_wkb) list → a callable
+    that, in a Python worker, returns that worker's index of it
+    (:func:`_cached_index`, keyed by a fresh id per call)."""
+    import functools
+    import uuid
+
+    pid_wkb = list(zip(polygons_pdf["polygon_id"].tolist(), polygons_pdf["geom_wkb"].tolist()))
+    return functools.partial(_cached_index, uuid.uuid4().hex, spark.sparkContext.broadcast(pid_wkb))
+
+
 def pip_join_broadcast(
     points: DataFrame,
     polygons_pdf: pd.DataFrame,
@@ -164,15 +196,9 @@ def pip_join_broadcast(
     no match → row dropped = inner Intersection semantics,
     ogrlayer.cpp:2038-2054).
     """
-    import uuid
-
     import pyarrow as pa
 
-    spark = points.sparkSession
-    pid_wkb = list(zip(polygons_pdf["polygon_id"].tolist(), polygons_pdf["geom_wkb"].tolist()))
-    bc = spark.sparkContext.broadcast(pid_wkb)
-    cache_key = uuid.uuid4().hex  # one prepared index per broadcast per worker
-
+    index = _broadcast_index(points.sparkSession, polygons_pdf)
     in_cols = list(keep_cols) + [lon_col, lat_col]
     out_fields = [f for f in points.select(*in_cols).schema.fields]
     out_schema = StructType(out_fields + [StructField("polygon_id", IntegerType())])
@@ -181,11 +207,11 @@ def pip_join_broadcast(
     # views and the match-row gather is C++ `take` — the pandas DataFrame
     # construction per batch was the dominant cost of the join at scale.
     def _match(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        index = _cached_index(cache_key, bc)
+        pip = index()
         for batch in batches:
             lon = batch.column(len(keep_cols)).to_numpy(zero_copy_only=False)
             lat = batch.column(len(keep_cols) + 1).to_numpy(zero_copy_only=False)
-            idx, pids = index.query(lon, lat)
+            idx, pids = pip.query(lon, lat)
             taken = batch.take(pa.array(idx, type=pa.int64()))
             arrays = list(taken.columns) + [pa.array(pids.astype(np.int32), type=pa.int32())]
             yield pa.RecordBatch.from_arrays(arrays, names=in_cols + ["polygon_id"])
@@ -252,10 +278,8 @@ def _cover_batch(batch: "pa.RecordBatch", zoom: int, occupied: np.ndarray | None
     import pyarrow as pa
 
     minx, miny, maxx, maxy = (batch.column(i).to_numpy(zero_copy_only=False) for i in range(2, 6))
-    # clamp to the mercator world; tile of each bbox corner
-    lat_lim = tiles.MERCATOR_LAT_MAX
-    tx0, ty0 = tiles.lonlat_to_tile(np.clip(minx, -180.0, 180.0), np.clip(miny, -lat_lim, lat_lim), zoom)
-    tx1, ty1 = tiles.lonlat_to_tile(np.clip(maxx, -180.0, 180.0), np.clip(maxy, -lat_lim, lat_lim), zoom)
+    tx0, ty0 = _world_tiles(minx, miny, zoom)
+    tx1, ty1 = _world_tiles(maxx, maxy, zoom)
     box, tx, ty = geom.expand_boxes(tx0, tx1, ty0, ty1)
     cell = _pack_cell(tx, ty, zoom)
     if occupied is not None:
@@ -312,7 +336,7 @@ def pip_join_shuffle_adaptive(
     untouched.  Emits exactly the rows of :func:`pip_join_shuffle`.
     """
     fine = zoom + split_levels
-    pts = with_cell(points.select(*keep_cols, lon_col, lat_col), zoom, lon_col, lat_col)
+    pts = _with_world_cell(points.select(*keep_cols, lon_col, lat_col), zoom, lon_col, lat_col)
     hot_rows = (
         pts.groupBy("cell").agg(F.count(F.lit(1)).alias("c"))
         .where(F.col("c") > hot_threshold)
@@ -326,9 +350,7 @@ def pip_join_shuffle_adaptive(
     is_hot = F.array_contains(hot_arr, F.col("cell"))
 
     cold_pts = pts.where(~is_hot)
-    hot_pts = with_cell(
-        pts.where(is_hot).drop("cell"), fine, lon_col, lat_col
-    )
+    hot_pts = _with_world_cell(pts.where(is_hot).drop("cell"), fine, lon_col, lat_col)
     polys_base = polygon_cover_cells(polygons, zoom)
     cold_polys = polys_base.where(~F.array_contains(hot_arr, F.col("cell")))
     # fine cover restricted to subcells whose base-zoom parent is hot;
@@ -361,7 +383,9 @@ def pip_join_shuffle(
 ) -> DataFrame:
     """Shuffle point-in-polygon join for large method layers.
 
-    Plan: points → cell at ``zoom``; polygons → covering cells (replicated);
+    Plan: points → cell at ``zoom``; polygons → covering cells (replicated;
+    both sides clamp to the mercator world by :func:`_world_tiles`, so a
+    point beyond ±85.0511° meets the polygons that reach past it);
     equi-join on cell (both sides shuffle-partitioned by cell — the
     cell-prefix co-location); exact refine inside ``mapInArrow`` (per
     batch, each distinct polygon's WKB parsed once and all candidate pairs
@@ -397,7 +421,7 @@ def pip_join_shuffle(
     Emits the same rows as :func:`pip_join_broadcast` (A/B parity test).
     """
     occupied = _point_occupancy(points, zoom, lon_col, lat_col)
-    pts = with_cell(points.select(*keep_cols, lon_col, lat_col), zoom, lon_col, lat_col)
+    pts = _with_world_cell(points.select(*keep_cols, lon_col, lat_col), zoom, lon_col, lat_col)
     polys = polygon_cover_cells(polygons, zoom, occupied)
     if n_salt:
         polys = polys.withColumn("salt", F.explode(F.array([F.lit(i) for i in range(n_salt)])))

@@ -1,4 +1,4 @@
-"""Raster/tiling operators: density burn, pyramid reduce, GDAL checksum.
+"""Raster/tiling operators: burns, pyramid reduce, GDAL checksum.
 
 Re-expresses the gdal_rasterize / gdal2tiles / gdaladdo family
 (SURVEY.md §2.9) as DataFrame dataflow over a tile table
@@ -7,13 +7,34 @@ itself uses as a driver (frmts/mbtiles/mbtilesdataset.cpp:180-181).
 ``data`` is a little-endian int32 256×256 grid, row 0 = top of the tile
 (raster convention; TMS ty axis points up, gdal2tiles.py:254-258).
 
-* :func:`burn_base_tiles` — MERGE_ALG=ADD point burn
-  (alg/gdalrasterize.cpp:485-498): each page adds 1 to its pixel.  Scale
-  design: pixel counts are pre-aggregated JVM-side
-  (``groupBy(tile, pixel).count()`` → map-side partial aggregation), so the
-  shuffle carries at most 65536 rows per tile no matter how many input rows —
-  the engine's answer to the reference's Y-chunked burn loop
+Every producer runs one burn skeleton, as gdal_rasterize feeds every
+geometry kind through the same burn callbacks (gvBurnPoint /
+gvBurnScanline, alg/gdalrasterize.cpp):
+
+* points: :func:`_pixels` encodes (tile, in-tile pixel);
+  :func:`_density_batch` turns one Arrow batch into ``(tx, ty, ix, iy,
+  cnt)`` partial counts; :func:`_assemble_density` sums them per pixel
+  and scatters each tile, on one hash exchange on (tx, ty).  The
+  shuffle carries at most 65536 rows per tile no matter how many input
+  rows: the engine's answer to the reference's Y-chunked burn loop
   (alg/gdalrasterize.cpp:626-660).
+* geometries: :func:`_tile_cover` explodes each bbox to the tiles it
+  covers; :func:`_burn_tiles` burns each covered tile in one grouped-map
+  task and drops a tile that burned nothing; :func:`_pixel_centres` and
+  :func:`_centre_fill` are the centre rule, :func:`_walk_burn` the line
+  and ALL_TOUCHED ring walks.
+
+Producers:
+
+* :func:`burn_base_tiles` — MERGE_ALG=ADD point burn
+  (alg/gdalrasterize.cpp:485-498): each point adds 1 to its pixel.
+* :func:`burn_base_tiles_pip` — the same, each point counted once per
+  polygon that contains it.
+* :func:`burn_points` — point burn with values, Z and replace/add.
+* :func:`rasterize_polygons`, :func:`rasterize_invert`,
+  :func:`rasterize_lines` — polygon, inverted-polygon and line burns.
+* :func:`with_pixel` — the per-row pixel encoder for callers that keep
+  attributes.
 * :func:`pyramid_reduce` — one 4:1 AVERAGE level
   (gcore/overview.cpp:1582-1590 AVERAGE; child mosaic gdal2tiles.py:1369-1387).
   Integer average = floor(sum/4 + 0.5) (round half up).
@@ -51,6 +72,17 @@ TILE_SCHEMA = StructType(
         StructField("tx", LongType()),
         StructField("ty", LongType()),
         StructField("data", BinaryType()),
+    ]
+)
+
+# (tile, in-tile pixel, count) rows: the point burns' partial counts
+_PARTIAL_SCHEMA = StructType(
+    [
+        StructField("tx", LongType()),
+        StructField("ty", LongType()),
+        StructField("ix", IntegerType()),
+        StructField("iy", IntegerType()),
+        StructField("cnt", LongType()),
     ]
 )
 
@@ -96,47 +128,83 @@ def tile_stats(buf) -> tuple:
     return int(np.fmod(px, _primes(px.size)).sum()) & 0xFFFF, int(px.sum())
 
 
-def with_pixel(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """Append (tx, ty, ix, iy): tile + in-tile pixel (raster row from top).
+def _tile_frame(zoom: int, tx, ty, grid: np.ndarray) -> pd.DataFrame:
+    """One tile table row holding ``grid``."""
+    return pd.DataFrame({"zoom": [np.int32(zoom)], "tx": [tx], "ty": [ty], "data": [tile_to_bytes(grid)]})
+
+
+def _pixels(lon: np.ndarray, lat: np.ndarray, zoom: int):
+    """(tx, ty, ix, iy) int64 of each point: tile + in-tile pixel.
 
     Pixel index = floor(global px) − tx·256, clamped to [0,255] (points on a
     tile's max edge burn into its last pixel, matching the oracle and the
     inverse-geotransform floor of apps/gdallocationinfo.cpp:379-384);
     iy is flipped to raster (top-origin) rows.
     """
+    px, py = tiles.lonlat_to_pixels(lon, lat, zoom)
+    tx, ty = tiles.pixels_to_tile(px, py)
+    ix = np.clip(np.floor(px).astype(np.int64) - tx * TILE_SIZE, 0, TILE_SIZE - 1)
+    iy = TILE_SIZE - 1 - np.clip(np.floor(py).astype(np.int64) - ty * TILE_SIZE, 0, TILE_SIZE - 1)
+    return tx, ty, ix, iy
+
+
+def _pixel_arrays(tx, ty, ix, iy) -> list:
+    """(tx, ty, ix, iy) as Arrow arrays of :data:`_PARTIAL_SCHEMA`'s types."""
     import pyarrow as pa
 
-    in_fields = list(points.schema.fields)
-    names = [f.name for f in in_fields]
-    i_lon, i_lat = names.index(lon_col), names.index(lat_col)
-    out_schema = StructType(
-        in_fields
-        + [
-            StructField("tx", LongType()),
-            StructField("ty", LongType()),
-            StructField("ix", IntegerType()),
-            StructField("iy", IntegerType()),
-        ]
+    return [
+        pa.array(tx, type=pa.int64()),
+        pa.array(ty, type=pa.int64()),
+        pa.array(ix.astype(np.int32), type=pa.int32()),
+        pa.array(iy.astype(np.int32), type=pa.int32()),
+    ]
+
+
+def with_pixel(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+    """Append (tx, ty, ix, iy): tile + in-tile pixel (raster row from top),
+    encoded by :func:`_pixels`."""
+    from .joins import _append_lonlat_columns
+
+    def encode(lon, lat):
+        return _pixel_arrays(*_pixels(lon, lat, zoom))
+
+    return _append_lonlat_columns(points, lon_col, lat_col, _PARTIAL_SCHEMA.fields[:4], encode)
+
+
+def _density_batch(lon: np.ndarray, lat: np.ndarray, zoom: int) -> "pa.RecordBatch":
+    """Points → their (tx, ty, ix, iy, cnt) partial counts: one ``np.unique``
+    over the pixel key packed into an int64 (tx, ty < 2^20 and ix, iy < 2^9,
+    so zoom ≤ 20)."""
+    import pyarrow as pa
+
+    tx, ty, ix, iy = _pixels(lon, lat, zoom)
+    uk, cnt = np.unique((tx << 38) | (ty << 18) | (ix << 9) | iy, return_counts=True)
+    return pa.RecordBatch.from_arrays(
+        _pixel_arrays(uk >> 38, (uk >> 18) & 0xFFFFF, (uk >> 9) & 0x1FF, uk & 0x1FF)
+        + [pa.array(cnt.astype(np.int64), type=pa.int64())],
+        names=_PARTIAL_SCHEMA.names,
     )
 
-    def _pix(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            lo = batch.column(i_lon).to_numpy(zero_copy_only=False)
-            la = batch.column(i_lat).to_numpy(zero_copy_only=False)
-            px, py = tiles.lonlat_to_pixels(lo, la, zoom)
-            tx, ty = tiles.pixels_to_tile(px, py)
-            ix = np.clip(np.floor(px).astype(np.int64) - tx * TILE_SIZE, 0, TILE_SIZE - 1)
-            iy = np.clip(np.floor(py).astype(np.int64) - ty * TILE_SIZE, 0, TILE_SIZE - 1)
-            row = TILE_SIZE - 1 - iy
-            arrays = list(batch.columns) + [
-                pa.array(tx, type=pa.int64()),
-                pa.array(ty, type=pa.int64()),
-                pa.array(ix.astype(np.int32), type=pa.int32()),
-                pa.array(row.astype(np.int32), type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=names + ["tx", "ty", "ix", "iy"])
 
-    return points.mapInArrow(_pix, out_schema)
+def _burn_density(points: DataFrame, zoom: int, lon_col: str, lat_col: str, index=None) -> DataFrame:
+    """Points → density tile table: one Arrow pass over (lon, lat) that
+    partially counts each batch (:func:`_density_batch`), then
+    :func:`_assemble_density`.  With ``index`` (a callable that gives a
+    worker its :class:`geom.VectorPIPIndex`), each point counts once per
+    polygon that contains it."""
+
+    def _kern(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        pip = index() if index is not None else None
+        for batch in batches:
+            lon = batch.column(0).to_numpy(zero_copy_only=False)
+            lat = batch.column(1).to_numpy(zero_copy_only=False)
+            if pip is not None:
+                idx, _ = pip.query(lon, lat)
+                lon, lat = lon[idx], lat[idx]
+            if lon.shape[0]:
+                yield _density_batch(lon, lat, zoom)
+
+    return _assemble_density(points.select(lon_col, lat_col).mapInArrow(_kern, _PARTIAL_SCHEMA), zoom)
 
 
 def burn_base_tiles(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
@@ -146,59 +214,18 @@ def burn_base_tiles(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col:
     batch below the Arrow boundary (per-batch ``np.unique`` over a packed
     (tx,ty,ix,iy) int64 key — the map-side combine the JVM hash aggregate
     would do anyway, moved to where it shrinks the IPC stream itself) →
-    one hash exchange of the already-tiny partials on (tx,ty) →
-    ``groupBy(tx,ty,ix,iy).sum`` → ``groupBy(tx,ty)`` grouped-map UDF that
-    scatters ≤65536 (pixel,count) rows into the 256×256 grid, both on that
-    exchange.  Result-identical to the former
-    with_pixel → count() plan (pinned by the tile_density_z5 oracle row
-    and the composed-vs-fused identity test); with_pixel remains the
-    general per-row encoder for callers that keep attributes.
+    :func:`_assemble_density`.  Tiles equal those of :func:`with_pixel` →
+    per-pixel count → :func:`_assemble_density` (pinned by the
+    composed-vs-fused identity test); above zoom 20, where the packed key
+    does not fit, that composed plan is what runs.
     """
-    import pyarrow as pa
-
     if not 0 <= zoom <= 20:
         # packed-key width: tx,ty < 2^20, ix,iy < 2^9
         partial = with_pixel(points.select(lon_col, lat_col), zoom, lon_col, lat_col).select(
             "tx", "ty", "ix", "iy", F.lit(1).cast("long").alias("cnt")
         )
         return _assemble_density(partial, zoom)
-
-    out_schema = StructType(
-        [
-            StructField("tx", LongType()),
-            StructField("ty", LongType()),
-            StructField("ix", IntegerType()),
-            StructField("iy", IntegerType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-
-    def _kern(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            lon = batch.column(0).to_numpy(zero_copy_only=False)
-            lat = batch.column(1).to_numpy(zero_copy_only=False)
-            if lon.shape[0] == 0:
-                continue
-            px, py = tiles.lonlat_to_pixels(lon, lat, zoom)
-            gx = np.floor(px).astype(np.int64)
-            gy = np.floor(py).astype(np.int64)
-            tx, ty = tiles.pixels_to_tile(px, py)
-            ix = np.clip(gx - tx * TILE_SIZE, 0, TILE_SIZE - 1)
-            iy = TILE_SIZE - 1 - np.clip(gy - ty * TILE_SIZE, 0, TILE_SIZE - 1)
-            key = (tx << 38) | (ty << 18) | (ix << 9) | iy
-            uk, cnt = np.unique(key, return_counts=True)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(uk >> 38, type=pa.int64()),
-                    pa.array((uk >> 18) & 0xFFFFF, type=pa.int64()),
-                    pa.array(((uk >> 9) & 0x1FF).astype(np.int32), type=pa.int32()),
-                    pa.array((uk & 0x1FF).astype(np.int32), type=pa.int32()),
-                    pa.array(cnt.astype(np.int64), type=pa.int64()),
-                ],
-                names=["tx", "ty", "ix", "iy", "cnt"],
-            )
-
-    return _assemble_density(points.select(lon_col, lat_col).mapInArrow(_kern, out_schema), zoom)
+    return _burn_density(points, zoom, lon_col, lat_col)
 
 
 def _assemble_density(partial: DataFrame, zoom: int) -> DataFrame:
@@ -206,19 +233,13 @@ def _assemble_density(partial: DataFrame, zoom: int) -> DataFrame:
     counts, then scatter each tile's ≤65536 pixel counts into the 256×256
     grid (one grouped-map task per tile).  The partials are hash-partitioned
     on (tx, ty) before the per-pixel sum, so the sum and the grouped
-    assembly both run on that one exchange."""
+    assembly both run on that one exchange.  Every assembled tile is kept,
+    also one whose counts sum to 0."""
 
     def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         grid = np.zeros((TILE_SIZE, TILE_SIZE), dtype=np.int64)
         np.add.at(grid, (pdf["iy"].to_numpy(), pdf["ix"].to_numpy()), pdf["cnt"].to_numpy())
-        return pd.DataFrame(
-            {
-                "zoom": [np.int32(zoom)],
-                "tx": [pdf["tx"].iat[0]],
-                "ty": [pdf["ty"].iat[0]],
-                "data": [tile_to_bytes(grid)],
-            }
-        )
+        return _tile_frame(zoom, pdf["tx"].iat[0], pdf["ty"].iat[0], grid)
 
     nparts = partial.sparkSession.sparkContext.defaultParallelism
     counts = partial.repartition(nparts, "tx", "ty").groupBy("tx", "ty", "ix", "iy").agg(F.sum("cnt").alias("cnt"))
@@ -249,63 +270,18 @@ def burn_base_tiles_pip(
       shrinks the IPC stream itself (clustered web-corpus input: ~10-50×
       fewer rows across the boundary, measured).
 
-    The composed operators remain the general API (arbitrary keep_cols /
-    merge algs); this is the count-density fast path the flagship pipeline
-    uses.  Pixel semantics are with_pixel's exactly (floor, edge clamp,
-    top-origin row flip).
+    The polygons are broadcast and indexed as by
+    :func:`joins.pip_join_broadcast` (one index per worker).  The composed
+    operators remain the general API (arbitrary keep_cols / merge algs);
+    this is the count-density fast path the flagship pipeline uses.  Pixel
+    semantics are :func:`_pixels`'s (floor, edge clamp, top-origin row
+    flip).
     """
-    import uuid
-
-    import pyarrow as pa
-
     if not 0 <= zoom <= 20:
         raise ValueError("burn_base_tiles_pip supports zoom 0..20 (packed-key width)")
-    from . import joins as _joins
+    from .joins import _broadcast_index
 
-    spark = points.sparkSession
-    pid_wkb = list(zip(polygons_pdf["polygon_id"].tolist(), polygons_pdf["geom_wkb"].tolist()))
-    bc = spark.sparkContext.broadcast(pid_wkb)
-    cache_key = uuid.uuid4().hex
-
-    out_schema = StructType(
-        [
-            StructField("tx", LongType()),
-            StructField("ty", LongType()),
-            StructField("ix", IntegerType()),
-            StructField("iy", IntegerType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-
-    def _kern(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        index = _joins._cached_index(cache_key, bc)
-        for batch in batches:
-            lon = batch.column(0).to_numpy(zero_copy_only=False)
-            lat = batch.column(1).to_numpy(zero_copy_only=False)
-            idx, _pids = index.query(lon, lat)
-            if len(idx) == 0:
-                continue
-            px, py = tiles.lonlat_to_pixels(lon[idx], lat[idx], zoom)
-            gx = np.floor(px).astype(np.int64)
-            gy = np.floor(py).astype(np.int64)
-            tx, ty = tiles.pixels_to_tile(px, py)
-            ix = np.clip(gx - tx * TILE_SIZE, 0, TILE_SIZE - 1)
-            iy = TILE_SIZE - 1 - np.clip(gy - ty * TILE_SIZE, 0, TILE_SIZE - 1)
-            # pack (tx, ty, ix, iy) into one int64: tx,ty < 2^20, ix,iy < 2^9
-            key = (tx << 38) | (ty << 18) | (ix << 9) | iy
-            uk, cnt = np.unique(key, return_counts=True)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(uk >> 38, type=pa.int64()),
-                    pa.array((uk >> 18) & 0xFFFFF, type=pa.int64()),
-                    pa.array(((uk >> 9) & 0x1FF).astype(np.int32), type=pa.int32()),
-                    pa.array((uk & 0x1FF).astype(np.int32), type=pa.int32()),
-                    pa.array(cnt.astype(np.int64), type=pa.int64()),
-                ],
-                names=["tx", "ty", "ix", "iy", "cnt"],
-            )
-
-    return _assemble_density(points.select(lon_col, lat_col).mapInArrow(_kern, out_schema), zoom)
+    return _burn_density(points, zoom, lon_col, lat_col, _broadcast_index(points.sparkSession, polygons_pdf))
 
 
 def burn_points(
@@ -329,7 +305,8 @@ def burn_points(
     distributed scan has no implicit order).
 
     Entirely declarative: pixel-encode → ONE JVM hash aggregate
-    (sum / max_by) with map-side combine → the grouped tile assembly —
+    (sum / max_by) with map-side combine → :func:`_assemble_density`
+    (after ``max_by`` a pixel has one row, so its sum is that value) —
     no per-point Python beyond the shared vectorized pixel encoder.
     :func:`burn_base_tiles` remains the count fast path.
     """
@@ -341,29 +318,78 @@ def burn_points(
     if z_col is not None:
         val = val + F.col(z_col).cast("double")
     burn = val.cast("long")  # int-buffer truncation, like the Byte path
-    keep = [c for c in ((id_col,) if id_col else ()) ]
-    px = with_pixel(points.select(*( [lon_col, lat_col] + keep + ([value_col] if value_col else []) + ([z_col] if z_col else []))), zoom, lon_col, lat_col)
-    if merge_alg == "add":
-        cells = px.groupBy("tx", "ty", "ix", "iy").agg(F.sum(burn).alias("cnt"))
-    else:
-        cells = px.groupBy("tx", "ty", "ix", "iy").agg(
-            F.max_by(burn, F.col(id_col)).alias("cnt")
-        )
+    cols = [lon_col, lat_col] + [c for c in (id_col, value_col, z_col) if c]
+    px = with_pixel(points.select(*cols), zoom, lon_col, lat_col)
+    merged = F.sum(burn) if merge_alg == "add" else F.max_by(burn, F.col(id_col))
+    return _assemble_density(px.groupBy("tx", "ty", "ix", "iy").agg(merged.alias("cnt")), zoom)
 
-    def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        grid = np.zeros((TILE_SIZE, TILE_SIZE), dtype=np.int64)
-        np.add.at(grid, (pdf["iy"].to_numpy(), pdf["ix"].to_numpy()), pdf["cnt"].to_numpy())
-        return pd.DataFrame(
-            {
-                "zoom": [np.int32(zoom)],
-                "tx": [pdf["tx"].iat[0]],
-                "ty": [pdf["ty"].iat[0]],
-                "data": [tile_to_bytes(grid)],
-            }
-        )
 
-    nparts = points.sparkSession.sparkContext.defaultParallelism
-    return cells.repartition(nparts, "tx", "ty").groupBy("tx", "ty").applyInPandas(_assemble, TILE_SCHEMA)
+def _tile_cover(df: DataFrame, wkb_col: str, zoom: int, pad: int) -> DataFrame:
+    """``df`` plus (tx, ty): one row per mercator tile at ``zoom`` that the
+    bbox of ``wkb_col`` covers, grown by ``pad`` tiles on each side and
+    clipped to the world; the bbox's latitudes are first clamped inside
+    the mercator limit.  Pure arithmetic on the envelope, exploded
+    JVM-side, so a geometry ships to exactly the tiles it can touch."""
+    lat_lim = tiles.MERCATOR_LAT_MAX - 1e-9
+    top = 2**zoom - 1
+
+    @F.pandas_udf("tx0 long, ty0 long, tx1 long, ty1 long")
+    def _trange(wkb: pd.Series) -> pd.DataFrame:
+        from . import geom as geommod
+
+        env = np.array([geommod.envelope(bytes(b)) for b in wkb], dtype=np.float64).reshape(-1, 4)
+        tx0, ty0 = tiles.lonlat_to_tile(env[:, 0], np.clip(env[:, 1], -lat_lim, lat_lim), zoom)
+        tx1, ty1 = tiles.lonlat_to_tile(env[:, 2], np.clip(env[:, 3], -lat_lim, lat_lim), zoom)
+        return pd.DataFrame({
+            "tx0": np.clip(tx0 - pad, 0, top), "ty0": np.clip(ty0 - pad, 0, top),
+            "tx1": np.clip(tx1 + pad, 0, top), "ty1": np.clip(ty1 + pad, 0, top),
+        })
+
+    return (
+        df.withColumn("_t", _trange(wkb_col))
+        .withColumn("tx", F.explode(F.sequence("_t.tx0", "_t.tx1")))
+        .withColumn("ty", F.explode(F.sequence("_t.ty0", "_t.ty1")))
+        .drop("_t")
+    )
+
+
+def _burn_tiles(cover: DataFrame, zoom: int, burn) -> DataFrame:
+    """One grouped-map task per (tx, ty) of ``cover`` (:func:`_tile_cover`):
+    ``burn(tx, ty, pdf)`` returns the tile's int64 grid.  A tile whose grid
+    burned nothing gives no row: the cover reached it, the geometry did
+    not."""
+
+    def _tile(pdf: pd.DataFrame) -> pd.DataFrame:
+        tx, ty = int(pdf["tx"].iat[0]), int(pdf["ty"].iat[0])
+        grid = burn(tx, ty, pdf)
+        if not grid.any():
+            return pd.DataFrame(columns=TILE_SCHEMA.names)
+        return _tile_frame(zoom, tx, ty, grid)
+
+    nparts = cover.sparkSession.sparkContext.defaultParallelism
+    return cover.repartition(nparts, "tx", "ty").groupBy("tx", "ty").applyInPandas(_tile, TILE_SCHEMA)
+
+
+def _pixel_centres(tx: int, ty: int, zoom: int):
+    """(lon of each pixel column, lat of each pixel row) of the pixel
+    centres of tile (tx, ty); row 0 = top."""
+    k = np.arange(TILE_SIZE) + 0.5
+    mx, my = tiles.pixels_to_meters(tx * TILE_SIZE + k, (ty + 1) * TILE_SIZE - k, zoom)
+    return tiles.meters_to_lonlat(mx, my)
+
+
+def _centre_fill(grid: np.ndarray, lon, lat, table, slot: int, v: int, add: bool) -> None:
+    """Centre rule (gdal_rasterize's default): every pixel of ``grid``
+    whose centre (``lon`` per column, ``lat`` per row) polygon ``slot`` of
+    the :class:`geom.EdgeTable` contains takes ``v`` (``add``: gains ``v``).
+    Only the centres inside the polygon's bbox are tested."""
+    ci = np.nonzero((lon >= table.minx[slot]) & (lon <= table.maxx[slot]))[0]
+    ri = np.nonzero((lat >= table.miny[slot]) & (lat <= table.maxy[slot]))[0]
+    if ci.size and ri.size:
+        lg, tg = np.meshgrid(lon[ci], lat[ri])
+        inside = table.contains(np.full(lg.size, slot), lg.ravel(), tg.ravel()).reshape(ri.size, ci.size)
+        sub = grid[np.ix_(ri, ci)]
+        grid[np.ix_(ri, ci)] = np.where(inside, sub + v if add else v, sub)
 
 
 def rasterize_polygons(
@@ -399,12 +425,11 @@ def rasterize_polygons(
     Input: (id, geom_wkb[, value]); burn value = ``value_col`` or 1.
     Output: (zoom, tx, ty, data) tile table at ``zoom``.
 
-    Plan (scales like warp): per-polygon envelope → covering mercator
-    tile rectangle (pure arithmetic, exploded JVM-side — a polygon ships
-    to exactly the tiles it can touch; padded by one tile when ALL_TOUCHED
-    since a boundary coordinate exactly on a tile edge floors into the
-    neighbor) → grouped burn per tile: prepared polygon PIP over the
-    pixel-center subgrid of the polygon's bbox, all vectorized numpy.  No
+    Plan (scales like warp): :func:`_tile_cover` (padded by one tile when
+    ALL_TOUCHED, since a boundary coordinate exactly on a tile edge floors
+    into the neighbor) → :func:`_burn_tiles`: per tile, one
+    :class:`geom.EdgeTable` of its polygons and a PIP test of the
+    pixel-center subgrid of each polygon's bbox, all vectorized numpy.  No
     driver geometry, no per-pixel Python in the fill.
     """
     if merge_alg not in ("replace", "add"):
@@ -414,118 +439,34 @@ def rasterize_polygons(
     src = polys.select(
         F.col(pid).cast("long").alias("_pid"), val.alias("_val"), F.col(wkb_col).alias("_wkb")
     )
-
-    lat_lim = tiles.MERCATOR_LAT_MAX - 1e-9
-
-    @F.pandas_udf("minx double, miny double, maxx double, maxy double")
-    def _env(wkb: pd.Series) -> pd.DataFrame:
-        from . import geom as geommod
-
-        rows = [geommod.envelope(bytes(b)) for b in wkb]
-        return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
-
-    env = src.withColumn("_e", _env("_wkb")).select(
-        "_pid", "_val", "_wkb",
-        F.col("_e.minx").alias("minx"),
-        F.greatest(F.col("_e.miny"), F.lit(-lat_lim)).alias("miny"),
-        F.col("_e.maxx").alias("maxx"),
-        F.least(F.col("_e.maxy"), F.lit(lat_lim)).alias("maxy"),
-    )
-
-    pad = 1 if all_touched else 0
-
-    @F.pandas_udf("tx0 long, ty0 long, tx1 long, ty1 long")
-    def _trange(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.DataFrame:
-        tx0, ty0 = tiles.lonlat_to_tile(minx.to_numpy(np.float64), miny.to_numpy(np.float64), zoom)
-        tx1, ty1 = tiles.lonlat_to_tile(maxx.to_numpy(np.float64), maxy.to_numpy(np.float64), zoom)
-        n = 2 ** zoom
-        return pd.DataFrame({
-            "tx0": np.clip(tx0 - pad, 0, n - 1), "ty0": np.clip(ty0 - pad, 0, n - 1),
-            "tx1": np.clip(tx1 + pad, 0, n - 1), "ty1": np.clip(ty1 + pad, 0, n - 1),
-        })
-
-    cover = (
-        env.withColumn("_t", _trange("minx", "miny", "maxx", "maxy"))
-        .withColumn("tx", F.explode(F.sequence("_t.tx0", "_t.tx1")))
-        .withColumn("ty", F.explode(F.sequence("_t.ty0", "_t.ty1")))
-        .select("tx", "ty", "_pid", "_val", "_wkb")
-    )
-
     add_mode = merge_alg == "add"
-    world = TILE_SIZE * (2 ** zoom)
 
-    def _burn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _burn(tx: int, ty: int, pdf: pd.DataFrame) -> np.ndarray:
         from . import geom as geommod
 
-        tx = int(pdf["tx"].iat[0])
-        ty = int(pdf["ty"].iat[0])
-        gx0, gy0 = tx * TILE_SIZE, ty * TILE_SIZE
-        cols = np.arange(TILE_SIZE)
-        px = tx * TILE_SIZE + cols + 0.5
-        py = (ty + 1) * TILE_SIZE - np.arange(TILE_SIZE) - 0.5  # row 0 = top
-        mx, _ = tiles.pixels_to_meters(px, np.zeros_like(px), zoom)
-        _, my = tiles.pixels_to_meters(np.zeros_like(py), py, zoom)
-        lon, _ = tiles.meters_to_lonlat(mx, np.zeros_like(mx))
-        _, lat = tiles.meters_to_lonlat(np.zeros_like(my), my)
+        lon, lat = _pixel_centres(tx, ty, zoom)
+        wkbs = [bytes(b) for b in pdf["_wkb"]]
+        table = geommod.EdgeTable(wkbs)
         grid = np.zeros((TILE_SIZE, TILE_SIZE), dtype=np.int64)
-        order = np.argsort(pdf["_pid"].to_numpy(), kind="stable")
-        for i in order:
-            wkb = bytes(pdf["_wkb"].iat[i])
+        for i in np.argsort(pdf["_pid"].to_numpy(), kind="stable"):
             v = int(pdf["_val"].iat[i])
             rings = None
             if all_touched or burn_value_from_z:
-                _, rings = geommod.collect_parts_z(wkb)
+                _, rings = geommod.collect_parts_z(wkbs[i])
             if burn_value_from_z and rings:
                 # the whole polygon burns value + FIRST vertex Z: the
                 # scanline fill uses dfVariant[0] (llrasterize.cpp:209,240)
                 # and the ALL_TOUCHED pass reverts every variant to
                 # aPointVariant[0] (gdalrasterize.cpp:421-447)
                 v = int(v + rings[0][0, 2])
-            prep = geommod.PreparedPolygon(wkb)
-            # pixel-center subwindow of the polygon bbox
-            ci = np.nonzero((lon >= prep.minx) & (lon <= prep.maxx))[0]
-            ri = np.nonzero((lat >= prep.miny) & (lat <= prep.maxy))[0]
-            if ci.size > 0 and ri.size > 0:
-                lg, tg = np.meshgrid(lon[ci], lat[ri])
-                inside = prep.contains(lg.ravel(), tg.ravel()).reshape(ri.size, ci.size)
-                sub = grid[np.ix_(ri, ci)]
-                grid[np.ix_(ri, ci)] = np.where(inside, sub + v if add_mode else v, sub)
+            _centre_fill(grid, lon, lat, table, i, v, add_mode)
             if all_touched and rings:
                 # every ring (exterior and holes) walks all-touched, burning
                 # per visit on top of the fill — the reference's order
-                gx1w, gy1w = gx0 + TILE_SIZE, gy0 + TILE_SIZE
-                for ring in rings:
-                    rpx, rpy = tiles.lonlat_to_pixels(ring[:, 0], ring[:, 1], zoom)
-                    for s in range(rpx.shape[0] - 1):
-                        # skip segments that cannot touch this tile (same
-                        # guard as the lines path — without it a T-tile
-                        # polygon walks its whole boundary in EVERY tile)
-                        if max(rpx[s], rpx[s + 1]) < gx0 - 1 or min(rpx[s], rpx[s + 1]) > gx1w + 1:
-                            continue
-                        if max(rpy[s], rpy[s + 1]) < gy0 - 1 or min(rpy[s], rpy[s + 1]) > gy1w + 1:
-                            continue
-                        for cx, cy, _var in _all_touched_segment(
-                            float(rpx[s]), float(rpy[s]),
-                            float(rpx[s + 1]), float(rpy[s + 1]),
-                            0.0, 0.0, world, world, False,
-                        ):
-                            if gx0 <= cx < gx0 + TILE_SIZE and gy0 <= cy < gy0 + TILE_SIZE:
-                                r = TILE_SIZE - 1 - (cy - gy0)
-                                c = cx - gx0
-                                grid[r, c] = grid[r, c] + v if add_mode else v
-        if not grid.any():  # sparse tile table: bbox-covered but unburned
-            return pd.DataFrame({"zoom": [], "tx": [], "ty": [], "data": []})
-        return pd.DataFrame(
-            {
-                "zoom": [np.int32(zoom)],
-                "tx": [tx],
-                "ty": [ty],
-                "data": [tile_to_bytes(grid)],
-            }
-        )
+                _walk_burn(grid, rings, v, tx, ty, zoom, True, False, add_mode)
+        return grid
 
-    nparts = polys.sparkSession.sparkContext.defaultParallelism
-    return cover.repartition(nparts, "tx", "ty").groupBy("tx", "ty").applyInPandas(_burn, TILE_SCHEMA)
+    return _burn_tiles(_tile_cover(src, "_wkb", zoom, 1 if all_touched else 0), zoom, _burn)
 
 
 def _all_touched_segment(x0, y0, x1, y1, v0, v1, nx, ny, use_z):
@@ -642,6 +583,7 @@ def _all_touched_segment(x0, y0, x1, y1, v0, v1, nx, ny, use_z):
             v += dvar * step_x
 
 
+
 def rasterize_invert(
     polys: DataFrame,
     zoom: int,
@@ -670,23 +612,20 @@ def rasterize_invert(
     even-odd parity is additive per ring and a closed ring contributes even
     parity (i.e. nothing) to any point outside its own bbox — so per tile,
     parity over {universe ring} ∪ {bbox-intersecting rings} equals parity
-    over the full collection, pixel for pixel (same PreparedPolygon
-    crossing/boundary primitive as the forward burn).
+    over the full collection, pixel for pixel (the same
+    :class:`geom.EdgeTable` centre fill as the forward burn).
     """
     from . import geom as geommod
-    from . import tiles as _t
 
     if merge_alg not in ("replace", "add"):
         raise ValueError("merge_alg must be 'replace' or 'add'")
     spark = polys.sparkSession
     minlon, minlat, maxlon, maxlat = (float(v) for v in extent)
     # two pixels beyond the extent, like the -2/+2 geotransform offsets
-    px0, py0 = _t.lonlat_to_pixels(np.array([minlon]), np.array([minlat]), zoom)
-    px1, py1 = _t.lonlat_to_pixels(np.array([maxlon]), np.array([maxlat]), zoom)
-    mx0, my0 = _t.pixels_to_meters(px0 - 2.0, py0 - 2.0, zoom)
-    mx1, my1 = _t.pixels_to_meters(px1 + 2.0, py1 + 2.0, zoom)
-    lo0, la0 = _t.meters_to_lonlat(mx0, my0)
-    lo1, la1 = _t.meters_to_lonlat(mx1, my1)
+    px0, py0 = tiles.lonlat_to_pixels(np.array([minlon]), np.array([minlat]), zoom)
+    px1, py1 = tiles.lonlat_to_pixels(np.array([maxlon]), np.array([maxlat]), zoom)
+    lo0, la0 = tiles.meters_to_lonlat(*tiles.pixels_to_meters(px0 - 2.0, py0 - 2.0, zoom))
+    lo1, la1 = tiles.meters_to_lonlat(*tiles.pixels_to_meters(px1 + 2.0, py1 + 2.0, zoom))
     universe = [
         (float(lo0[0]), float(la0[0])), (float(lo1[0]), float(la0[0])),
         (float(lo1[0]), float(la1[0])), (float(lo0[0]), float(la1[0])),
@@ -710,80 +649,20 @@ def rasterize_invert(
         )
 
     rings = polys.select(F.explode(_rings_udf(F.col(wkb_col))).alias("_rwkb"))
-    uni = spark.createDataFrame(pd.DataFrame({"_rwkb": [universe_wkb]}))
-    allr = rings.unionByName(uni)
+    allr = rings.unionByName(spark.createDataFrame(pd.DataFrame({"_rwkb": [universe_wkb]})))
 
-    lat_lim = tiles.MERCATOR_LAT_MAX - 1e-9
-
-    @F.pandas_udf("minx double, miny double, maxx double, maxy double")
-    def _env(wkb: pd.Series) -> pd.DataFrame:
+    def _burn(tx: int, ty: int, pdf: pd.DataFrame) -> np.ndarray:
         from . import geom as geommod
 
-        rows = [geommod.envelope(bytes(b)) for b in wkb]
-        return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
-
-    @F.pandas_udf("tx0 long, ty0 long, tx1 long, ty1 long")
-    def _trange(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.DataFrame:
-        tx0, ty0 = tiles.lonlat_to_tile(minx.to_numpy(np.float64), miny.to_numpy(np.float64), zoom)
-        tx1, ty1 = tiles.lonlat_to_tile(maxx.to_numpy(np.float64), maxy.to_numpy(np.float64), zoom)
-        n = 2 ** zoom
-        return pd.DataFrame({
-            "tx0": np.clip(tx0, 0, n - 1), "ty0": np.clip(ty0, 0, n - 1),
-            "tx1": np.clip(tx1, 0, n - 1), "ty1": np.clip(ty1, 0, n - 1),
-        })
-
-    cover = (
-        allr.withColumn("_e", _env("_rwkb"))
-        .withColumn(
-            "_t",
-            _trange(
-                F.col("_e.minx"),
-                F.greatest(F.col("_e.miny"), F.lit(-lat_lim)),
-                F.col("_e.maxx"),
-                F.least(F.col("_e.maxy"), F.lit(lat_lim)),
-            ),
-        )
-        .withColumn("tx", F.explode(F.sequence("_t.tx0", "_t.tx1")))
-        .withColumn("ty", F.explode(F.sequence("_t.ty0", "_t.ty1")))
-        .select("tx", "ty", "_rwkb")
-    )
-
-    def _burn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from . import geom as geommod
-
-        tx = int(pdf["tx"].iat[0])
-        ty = int(pdf["ty"].iat[0])
-        cols = np.arange(TILE_SIZE)
-        px = tx * TILE_SIZE + cols + 0.5
-        py = (ty + 1) * TILE_SIZE - np.arange(TILE_SIZE) - 0.5  # row 0 = top
-        mx, _ = tiles.pixels_to_meters(px, np.zeros_like(px), zoom)
-        _, my = tiles.pixels_to_meters(np.zeros_like(py), py, zoom)
-        lon, _ = tiles.meters_to_lonlat(mx, np.zeros_like(mx))
-        _, lat = tiles.meters_to_lonlat(np.zeros_like(my), my)
         combined = []
         for b in pdf["_rwkb"]:
             combined.extend(rg.tolist() for rg in geommod.polygon_rings(bytes(b)))
-        prep = geommod.PreparedPolygon(geommod.wkb_polygon(combined))
         grid = np.zeros((TILE_SIZE, TILE_SIZE), dtype=np.int64)
-        ci = np.nonzero((lon >= prep.minx) & (lon <= prep.maxx))[0]
-        ri = np.nonzero((lat >= prep.miny) & (lat <= prep.maxy))[0]
-        if ci.size > 0 and ri.size > 0:
-            lg, tg = np.meshgrid(lon[ci], lat[ri])
-            inside = prep.contains(lg.ravel(), tg.ravel()).reshape(ri.size, ci.size)
-            grid[np.ix_(ri, ci)] = np.where(inside, v, 0)
-        if not grid.any():
-            return pd.DataFrame({"zoom": [], "tx": [], "ty": [], "data": []})
-        return pd.DataFrame(
-            {
-                "zoom": [np.int32(zoom)],
-                "tx": [tx],
-                "ty": [ty],
-                "data": [tile_to_bytes(grid)],
-            }
-        )
+        table = geommod.EdgeTable([geommod.wkb_polygon(combined)])
+        _centre_fill(grid, *_pixel_centres(tx, ty, zoom), table, 0, v, False)
+        return grid
 
-    nparts = spark.sparkContext.defaultParallelism
-    return cover.repartition(nparts, "tx", "ty").groupBy("tx", "ty").applyInPandas(_burn, TILE_SCHEMA)
+    return _burn_tiles(_tile_cover(allr, "_rwkb", zoom, 0), zoom, _burn)
 
 
 def _bresenham(ix0: int, iy0: int, ix1: int, iy1: int):
@@ -807,6 +686,65 @@ def _bresenham(ix0: int, iy0: int, ix1: int, iy1: int):
         if e2 < dx:
             err += dx
             y += sy
+
+
+def _walk_burn(grid: np.ndarray, parts: list, v: int, tx: int, ty: int, zoom: int,
+               all_touched: bool, use_z: bool, add: bool) -> None:
+    """Burn the segments of one feature's ``parts`` ((N, 3) lon/lat/z
+    vertex runs) into ``grid``, tile (tx, ty).  ``all_touched``: the
+    ALL_TOUCHED walk, burning per visit like gvBurnPoint; else the
+    Bresenham chain, each pixel once per feature (first visit wins).
+    ``use_z``: the burn value is ``v`` plus the Z interpolated along the
+    segment (BURN_VALUE_FROM=Z).  The walk runs in global pixels and
+    keeps only this tile's."""
+    world = TILE_SIZE * (2 ** zoom)
+    gx0, gy0 = tx * TILE_SIZE, ty * TILE_SIZE
+    gx1, gy1 = gx0 + TILE_SIZE, gy0 + TILE_SIZE
+    seen: set = set()
+    for pts in parts:
+        px, py = tiles.lonlat_to_pixels(pts[:, 0], pts[:, 1], zoom)
+        pz = pts[:, 2]
+        for s in range(px.shape[0] - 1):
+            # skip segments that cannot touch this tile (without it a
+            # T-tile geometry walks its whole boundary in EVERY tile)
+            if max(px[s], px[s + 1]) < gx0 - 1 or min(px[s], px[s + 1]) > gx1 + 1:
+                continue
+            if max(py[s], py[s + 1]) < gy0 - 1 or min(py[s], py[s + 1]) > gy1 + 1:
+                continue
+            if all_touched:
+                walk = _all_touched_segment(
+                    float(px[s]), float(py[s]), float(px[s + 1]), float(py[s + 1]),
+                    float(pz[s]), float(pz[s + 1]), world, world, use_z,
+                )
+            else:
+                # Bresenham chain + the reference's per-major-axis variant
+                # interpolation (GDALdllImageLine :299-360) at pixel
+                # granularity
+                ix0, iy0 = int(np.floor(px[s])), int(np.floor(py[s]))
+                ix1, iy1 = int(np.floor(px[s + 1])), int(np.floor(py[s + 1]))
+                z0, z1 = float(pz[s]), float(pz[s + 1])
+                major_dx, major_dy = ix1 - ix0, iy1 - iy0
+
+                def _w():
+                    for cx, cy in _bresenham(ix0, iy0, ix1, iy1):
+                        if abs(major_dx) >= abs(major_dy):
+                            t = (cx - ix0) / major_dx if major_dx else 0.0
+                        else:
+                            t = (cy - iy0) / major_dy if major_dy else 0.0
+                        yield cx, cy, z0 + (z1 - z0) * t
+
+                walk = _w()
+            for cx, cy, var in walk:
+                if not (gx0 <= cx < gx1 and gy0 <= cy < gy1):
+                    continue
+                if not all_touched:
+                    if (cx, cy) in seen:
+                        continue
+                    seen.add((cx, cy))
+                bv = int(v + var) if use_z else v
+                r = TILE_SIZE - 1 - (cy - gy0)
+                c = cx - gx0
+                grid[r, c] = grid[r, c] + bv if add else bv
 
 
 def rasterize_lines(
@@ -849,50 +787,12 @@ def rasterize_lines(
     src = lines.select(
         F.col(pid).cast("long").alias("_pid"), val.alias("_val"), F.col(wkb_col).alias("_wkb")
     )
-    lat_lim = tiles.MERCATOR_LAT_MAX - 1e-9
-
-    @F.pandas_udf("minx double, miny double, maxx double, maxy double")
-    def _env(wkb: pd.Series) -> pd.DataFrame:
-        from . import geom as geommod
-
-        rows = [geommod.envelope(bytes(b)) for b in wkb]
-        return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
-
-    @F.pandas_udf("tx0 long, ty0 long, tx1 long, ty1 long")
-    def _trange(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.DataFrame:
-        tx0, ty0 = tiles.lonlat_to_tile(minx.to_numpy(np.float64), miny.to_numpy(np.float64), zoom)
-        tx1, ty1 = tiles.lonlat_to_tile(maxx.to_numpy(np.float64), maxy.to_numpy(np.float64), zoom)
-        n = 2 ** zoom
-        # pad 1: the Bresenham walk indexes pixels by floor(), which maps
-        # an exactly-on-boundary coordinate to the NEXT tile while the
-        # ceil-1 cover rule maps it to the previous one
-        return pd.DataFrame({
-            "tx0": np.clip(tx0 - 1, 0, n - 1), "ty0": np.clip(ty0 - 1, 0, n - 1),
-            "tx1": np.clip(tx1 + 1, 0, n - 1), "ty1": np.clip(ty1 + 1, 0, n - 1),
-        })
-
-    env = src.withColumn("_e", _env("_wkb")).select(
-        "_pid", "_val", "_wkb",
-        F.col("_e.minx").alias("minx"),
-        F.greatest(F.col("_e.miny"), F.lit(-lat_lim)).alias("miny"),
-        F.col("_e.maxx").alias("maxx"),
-        F.least(F.col("_e.maxy"), F.lit(lat_lim)).alias("maxy"),
-    )
-    cover = (
-        env.withColumn("_t", _trange("minx", "miny", "maxx", "maxy"))
-        .withColumn("tx", F.explode(F.sequence("_t.tx0", "_t.tx1")))
-        .withColumn("ty", F.explode(F.sequence("_t.ty0", "_t.ty1")))
-        .select("tx", "ty", "_pid", "_val", "_wkb")
-    )
     add_mode = merge_alg == "add"
-    world = TILE_SIZE * (2 ** zoom)
 
-    def _burn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _burn(tx: int, ty: int, pdf: pd.DataFrame) -> np.ndarray:
         from . import geom as geommod
         from . import lineclip as lcmod
 
-        tx = int(pdf["tx"].iat[0])
-        ty = int(pdf["ty"].iat[0])
         gx0, gx1 = tx * TILE_SIZE, (tx + 1) * TILE_SIZE
         gy0, gy1 = ty * TILE_SIZE, (ty + 1) * TILE_SIZE
         grid = np.zeros((TILE_SIZE, TILE_SIZE), dtype=np.int64)
@@ -900,52 +800,8 @@ def rasterize_lines(
         for i in order:
             v = int(pdf["_val"].iat[i])
             if all_touched or burn_value_from_z:
-                # Bresenham+Z keeps the per-feature dedup contract (first
-                # visit wins); ALL_TOUCHED burns per visit like gvBurnPoint
-                seen_z: set = set()
                 _, parts = geommod.collect_parts_z(bytes(pdf["_wkb"].iat[i]))
-                for pts in parts:
-                    px, py = tiles.lonlat_to_pixels(pts[:, 0], pts[:, 1], zoom)
-                    pz = pts[:, 2]
-                    for s in range(px.shape[0] - 1):
-                        if max(px[s], px[s + 1]) < gx0 - 1 or min(px[s], px[s + 1]) > gx1 + 1:
-                            continue
-                        if max(py[s], py[s + 1]) < gy0 - 1 or min(py[s], py[s + 1]) > gy1 + 1:
-                            continue
-                        if all_touched:
-                            walk = _all_touched_segment(
-                                float(px[s]), float(py[s]), float(px[s + 1]), float(py[s + 1]),
-                                float(pz[s]), float(pz[s + 1]), world, world, burn_value_from_z,
-                            )
-                        else:
-                            # Bresenham chain + the reference's per-major-axis
-                            # variant interpolation (GDALdllImageLine
-                            # :299-360) at pixel granularity
-                            ix0, iy0 = int(np.floor(px[s])), int(np.floor(py[s]))
-                            ix1, iy1 = int(np.floor(px[s + 1])), int(np.floor(py[s + 1]))
-                            z0, z1 = float(pz[s]), float(pz[s + 1])
-                            major_dx, major_dy = ix1 - ix0, iy1 - iy0
-
-                            def _w():
-                                for cx, cy in _bresenham(ix0, iy0, ix1, iy1):
-                                    if abs(major_dx) >= abs(major_dy):
-                                        t = (cx - ix0) / major_dx if major_dx else 0.0
-                                    else:
-                                        t = (cy - iy0) / major_dy if major_dy else 0.0
-                                    yield cx, cy, z0 + (z1 - z0) * t
-
-                            walk = _w()
-                        for cx, cy, var in walk:
-                            if not (gx0 <= cx < gx1 and gy0 <= cy < gy1):
-                                continue
-                            if not all_touched:
-                                if (cx, cy) in seen_z:
-                                    continue
-                                seen_z.add((cx, cy))
-                            bv = int(v + var) if burn_value_from_z else v
-                            r = TILE_SIZE - 1 - (cy - gy0)
-                            c = cx - gx0
-                            grid[r, c] = grid[r, c] + bv if add_mode else bv
+                _walk_burn(grid, parts, v, tx, ty, zoom, all_touched, burn_value_from_z, add_mode)
                 continue
             # default path: per-feature pixel dedup (documented contract)
             # track burned pixels per FEATURE so 'add' counts a feature
@@ -967,19 +823,12 @@ def rasterize_lines(
                             r = TILE_SIZE - 1 - (cy - gy0)
                             c = cx - gx0
                             grid[r, c] = grid[r, c] + v if add_mode else v
-        if not grid.any():  # padded/bbox-covered tile the walk never hit
-            return pd.DataFrame({"zoom": [], "tx": [], "ty": [], "data": []})
-        return pd.DataFrame(
-            {
-                "zoom": [np.int32(zoom)],
-                "tx": [tx],
-                "ty": [ty],
-                "data": [tile_to_bytes(grid)],
-            }
-        )
+        return grid
 
-    nparts = lines.sparkSession.sparkContext.defaultParallelism
-    return cover.repartition(nparts, "tx", "ty").groupBy("tx", "ty").applyInPandas(_burn, TILE_SCHEMA)
+    # pad 1: the Bresenham walk indexes pixels by floor(), which maps an
+    # exactly-on-boundary coordinate to the NEXT tile while the ceil-1
+    # cover rule maps it to the previous one
+    return _burn_tiles(_tile_cover(src, "_wkb", zoom, 1), zoom, _burn)
 
 
 def translate(

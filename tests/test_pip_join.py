@@ -550,3 +550,20 @@ def test_nondeterministic_point_plan_joins_unfiltered(spark, data):
     for n_salt in (None, 4):
         sh = joins.pip_join_shuffle(nondet, data["polys"], zoom=6, n_salt=n_salt)
         assert sorted((r.url, r.polygon_id) for r in sh.collect()) == bc, n_salt
+
+
+def test_shuffle_joins_reach_points_beyond_the_latitude_limit(spark):
+    """A polygon that reaches past the mercator latitude limit meets the
+    points beyond it in the cell-shuffle joins, as in the broadcast join:
+    both sides of the cell equi-join clamp to the world's edge tiles,
+    unsalted, salted, and with every occupied cell split (adaptive)."""
+    polys_pdf = _bbox_polys([(0.0, 80.0, 20.0, 89.9)], first_id=1)
+    pts = spark.createDataFrame(pd.DataFrame({"url": ["in", "beyond"], "lon": [10.0, 10.0], "lat": [84.0, 88.0]}))
+    want = [("beyond", 1), ("in", 1)]
+    assert sorted((r.url, r.polygon_id) for r in joins.pip_join_broadcast(pts, polys_pdf).collect()) == want
+    polys = spark.createDataFrame(polys_pdf)
+    plans = [joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=n) for n in (None, 4)]
+    plans.append(joins.pip_join_shuffle_adaptive(pts, polys, zoom=6, hot_threshold=0))
+    for i, plan in enumerate(plans):
+        assert sorted((r.url, r.polygon_id) for r in plan.collect()) == want, i
+

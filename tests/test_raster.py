@@ -521,3 +521,46 @@ def test_burn_base_tiles_fused_partial_identity(spark):
         )
         assert row.n_tiles > 0
         assert not row.mismatched, f"z{zoom} tiles differ: {row.mismatched[:20]}"
+
+
+def test_burn_base_tiles_above_zoom_20_matches_composed_count(spark):
+    """Above zoom 20 (the packed key no longer fits) burn_base_tiles runs
+    with_pixel → per-pixel count → tile assembly; its tiles equal that
+    composed plan's and the single-process oracle's, repeated points
+    counting once each."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(29)
+    lon, lat = rng.uniform(-170, 170, 30), rng.uniform(-80, 80, 30)
+    lon, lat = np.concatenate([lon, lon[:5], [0.0]]), np.concatenate([lat, lat[:5], [0.0]])
+    pts = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+    zoom = 21
+    burned = {(r.tx, r.ty): bytes(r.data) for r in raster.burn_base_tiles(pts, zoom).collect()}
+    counts = raster.with_pixel(pts, zoom).groupBy("tx", "ty", "ix", "iy").agg(F.count(F.lit(1)).alias("cnt"))
+    composed = {(r.tx, r.ty): bytes(r.data) for r in raster._assemble_density(counts, zoom).collect()}
+    assert burned == composed
+    expect = burn_tiles_oracle(list(zip(lon, lat)), zoom)
+    assert set(burned) == set(expect) and sum(raster.bytes_to_tile(b).sum() for b in burned.values()) == lon.size
+    for key, grid in expect.items():
+        assert np.array_equal(raster.bytes_to_tile(burned[key]), np.array(grid)), key
+
+
+def test_burn_points_keeps_tiles_whose_burns_sum_to_zero(spark):
+    """burn_points keeps every tile it assembles: burns of +3 and -3 on one
+    pixel (add) and a single burn of 0 (add and replace) leave all-zero
+    tiles in the table."""
+    import pandas as pd
+
+    from engine import tiles
+
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": [1, 2, 3], "lon": [10.0, 10.0, -60.0], "lat": [20.0, 20.0, -30.0], "v": [3, -3, 0]})
+    )
+    zoom = 4
+    (tx, tx0), (ty, ty0) = tiles.lonlat_to_tile(np.array([10.0, -60.0]), np.array([20.0, -30.0]), zoom)
+    add = {(r.tx, r.ty): raster.bytes_to_tile(r.data) for r in raster.burn_points(pts, zoom, value_col="v").collect()}
+    assert set(add) == {(tx, ty), (tx0, ty0)} and not any(g.any() for g in add.values())
+    rep = raster.burn_points(pts, zoom, value_col="v", merge_alg="replace", id_col="pid").collect()
+    rep = {(r.tx, r.ty): raster.bytes_to_tile(r.data) for r in rep}
+    assert set(rep) == set(add) and not rep[(tx0, ty0)].any() and rep[(tx, ty)].sum() == -3

@@ -940,3 +940,35 @@ def test_rasterize_invert_distributed_no_driver_collect(spark):
         assert np.array_equal(i, uni & ~f), (tx, ty)
         seen_any = seen_any or i.any()
     assert seen_any
+
+
+def test_rasterize_drops_covered_tiles_it_did_not_burn(spark):
+    """The three geometry burns keep only tiles they burned: a tile their
+    bbox cover (padded under ALL_TOUCHED and for lines) reaches but the
+    geometry misses gives no row, at zoom 3 (tiles 45° wide, tile row 4 =
+    lat 0..40.98, row 5 = 40.98..66.51)."""
+    import pandas as pd
+
+    from engine import geom, raster
+
+    def burned(df):
+        got = {(r.tx, r.ty): raster.bytes_to_tile(r.data) for r in df.collect()}
+        assert all(g.any() for g in got.values())
+        return set(got)
+
+    # the hypotenuse crosses lon 45 at lat 30: tile (5, 5) of the 2×2
+    # bbox cover stays empty
+    tri = geom.wkb_polygon([[(1.0, 1.0), (89.0, 1.0), (1.0, 60.0)]])
+    polys = spark.createDataFrame(pd.DataFrame({"pid": [0], "geom_wkb": [tri]}))
+    assert burned(raster.rasterize_polygons(polys, 3)) == {(4, 4), (5, 4), (4, 5)}
+    assert burned(raster.rasterize_polygons(polys, 3, all_touched=True)) == {(4, 4), (5, 4), (4, 5)}
+    # the same diagonal as a line: through (5, 4), not (4, 5)
+    line = geom.wkb_linestring([(1.0, 60.0), (89.0, 1.0)])
+    lines = spark.createDataFrame(pd.DataFrame({"lid": [0], "geom_wkb": [line]}))
+    assert burned(raster.rasterize_lines(lines, 3)) == {(4, 5), (4, 4), (5, 4)}
+    # a box over all of tile (3, 4): the universe ring and the box both
+    # contain every pixel centre there, so even-odd burns nothing in it
+    box = geom.wkb_polygon([[(-50.0, -5.0), (5.0, -5.0), (5.0, 45.0), (-50.0, 45.0)]])
+    boxes = spark.createDataFrame(pd.DataFrame({"pid": [0], "geom_wkb": [box]}))
+    inv = burned(raster.rasterize_invert(boxes, 3, (-100.0, -50.0, 100.0, 60.0)))
+    assert (3, 4) not in inv and {(2, 4), (4, 4), (3, 5), (3, 3)} <= inv
