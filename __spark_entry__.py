@@ -1998,7 +1998,7 @@ def _q_grid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir).select(
         "lon", "lat", (F.col("event_id") % 97).cast("double").alias("z")
     )
-    out = joins.grid_metrics(centers, pts, "z", radius=1.5, zoom=6, ring=1, distance_pts=True)
+    out = joins.grid_metrics(centers, pts, "z", radius=1.5, zoom=6, distance_pts=True)
     return out.select(
         "qid", "minimum", "maximum", "range", "count",
         F.round("average_distance", 6).alias("average_distance"),
@@ -2098,7 +2098,7 @@ def _q_grid_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir).select(
         "lon", "lat", (F.col("event_id") % 97).cast("double").alias("z")
     )
-    out = joins.grid_moving_average(centers, pts, "z", radius=1.5, zoom=6, ring=1)
+    out = joins.grid_moving_average(centers, pts, "z", radius=1.5, zoom=6)
     return out.select("qid", F.round("moving_avg", 6).alias("moving_avg"), "count")
 
 

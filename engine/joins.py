@@ -16,18 +16,19 @@ The engine's re-expression of GDAL's spatial-join surface
       whole candidate batches.  An eager pass first folds the points' cells
       into an occupancy bitmap (≤ 1 MB: a bit per cell to zoom 11, hashed),
       and the polygon cover drops every cell no point occupies before the
-      salt replication and the shuffle; the pass is skipped for a point
-      plan that is not deterministic.  AQE runs the equi-join as a
-      shuffled hash join when the measured partitions of its smaller side
-      fit the session's local-map threshold, else as a sort-merge join.
-      Optional hot-cell salting gives each point row one salt, so every
-      (point row, polygon) pair is still a candidate exactly once.
+      shuffle; the same pass sums the heaviest cells' point counts, and
+      with ``n_salt`` only the cells over one shuffle partition's share
+      of the points are salted.  The pass is skipped for a point plan
+      that is not deterministic.  AQE runs the equi-join as a shuffled
+      hash join when the measured partitions of its smaller side fit the
+      session's local-map threshold, else as a sort-merge join.
   Both plans decide every (point, polygon) pair with the same kernel,
   :class:`geom.EdgeTable`.
 * ``GDALGridNearestNeighbor``'s quadtree-accelerated kNN
   (``alg/gdalgrid.cpp:675,691``) → cell-ring expansion join with
   sorted-merge (window top-k) refinement; rings grow per-round for
-  unsatisfied queries only.
+  unsatisfied queries only.  The ring and radius joins key their points
+  on the same world-clamped tile as the PIP shuffle (:func:`_world_tiles`).
 
 All heavy math is whole-batch numpy inside Arrow-batched UDFs
 (``mapInArrow`` for the tile encode and the PIP joins, pandas UDFs for the
@@ -44,7 +45,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -105,7 +105,7 @@ def with_cell(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "la
 
 def _with_world_cell(df: DataFrame, zoom: int, lon_col: str, lat_col: str) -> DataFrame:
     """:func:`with_cell` of each point clamped to the mercator world: the
-    cell-shuffle joins' point key (:func:`_lonlat_cells`)."""
+    cell joins' point key (:func:`_lonlat_cells`)."""
     return _append_cell(df, lon_col, lat_col, lambda lon, lat: _lonlat_cells(lon, lat, zoom))
 
 
@@ -126,16 +126,28 @@ def _pack_cell(tx: np.ndarray, ty: np.ndarray, zoom: int) -> np.ndarray:
 
 def _world_tiles(lon: np.ndarray, lat: np.ndarray, zoom: int):
     """(tx, ty) at ``zoom`` of each lon/lat clamped to the mercator world
-    (±180°, ±``MERCATOR_LAT_MAX``): the cell-shuffle joins' one tile rule,
-    for their points and their polygon bbox corners alike, so a point
-    beyond the latitude limit meets the polygons that reach past it."""
+    (±180°, ±``MERCATOR_LAT_MAX``) and to its tiles [0, 2^zoom − 1]: the
+    cell joins' one tile rule, for their points, polygon bbox corners and
+    query windows alike, so a point beyond the latitude limit, at −180° or
+    at the southern limit (tile −1 by the ``ceil − 1`` rule) meets what
+    reaches past it."""
     lat_lim = tiles.MERCATOR_LAT_MAX
-    return tiles.lonlat_to_tile(np.clip(lon, -180.0, 180.0), np.clip(lat, -lat_lim, lat_lim), zoom)
+    tx, ty = tiles.lonlat_to_tile(np.clip(lon, -180.0, 180.0), np.clip(lat, -lat_lim, lat_lim), zoom)
+    return np.clip(tx, 0, 2**zoom - 1), np.clip(ty, 0, 2**zoom - 1)
+
+
+def _box_cells(minx: np.ndarray, miny: np.ndarray, maxx: np.ndarray, maxy: np.ndarray, zoom: int):
+    """(box, cell): one row per :func:`_world_tiles` tile at ``zoom`` that
+    each lon/lat box touches, grouped by box."""
+    tx0, ty0 = _world_tiles(minx, miny, zoom)
+    tx1, ty1 = _world_tiles(maxx, maxy, zoom)
+    box, tx, ty = geom.expand_boxes(tx0, tx1, ty0, ty1)
+    return box, _pack_cell(tx, ty, zoom)
 
 
 def _lonlat_cells(lon: np.ndarray, lat: np.ndarray, zoom: int) -> np.ndarray:
     """The packed cell of each point's :func:`_world_tiles` tile at
-    ``zoom``: the cell-shuffle joins' point key."""
+    ``zoom``: the cell joins' point key."""
     return _pack_cell(*_world_tiles(lon, lat, zoom), zoom)
 
 
@@ -227,9 +239,8 @@ def pip_join_broadcast(
 # The points' cell-occupancy bitmap: bit ``cell mod 2^k`` for each packed
 # cell id, with 2^k = 2^(2*zoom+1) (one bit per id of the zoom's tiles) up
 # to zoom 11 and 2^23 (1 MB) above.  Both sides of the join set and read
-# the bit of the same packed id, so a collision (above zoom 11, or a tile
-# -1 at -180° or at the southern limit) only keeps a polygon row that finds
-# no point.
+# the bit of the same packed id, so a collision (above zoom 11) only keeps
+# a polygon row that finds no point.
 _OCCUPANCY_BITS = 23
 
 
@@ -238,10 +249,24 @@ def _occupancy_mask(zoom: int) -> np.int64:
     return np.int64(2 ** min(2 * zoom + 1, _OCCUPANCY_BITS) - 1)
 
 
-def _point_occupancy(points: DataFrame, zoom: int, lon_col: str, lat_col: str) -> np.ndarray | None:
-    """Packed bits (little bit order) of the cells at ``zoom`` that hold a
-    point of ``points``: one Spark job, one Arrow pass over (lon, lat) that
-    folds each partition into one bitmap, OR-ed on the driver.
+def _sum_by_cell(cell: np.ndarray, count: np.ndarray):
+    """(cell, count) pairs → (distinct cells, summed counts)."""
+    distinct, inv = np.unique(cell, return_inverse=True)
+    return distinct, np.bincount(inv, weights=count, minlength=len(distinct)).astype(np.int64)
+
+
+def _point_occupancy(points: DataFrame, zoom: int, lon_col: str, lat_col: str) -> tuple[np.ndarray, np.ndarray] | None:
+    """The points' cells at ``zoom``, measured in one Spark job: one Arrow
+    pass over (lon, lat) folds each partition into the packed bits (little
+    bit order) of the cells that hold a point, its row count and its P
+    heaviest cells with their counts (P = the session's shuffle
+    partitions, so the collect stays bounded).  The call ORs the bitmaps
+    and sums the rest.
+
+    Returns (bitmap, hot cells).  A cell is hot when its summed count is
+    over N / P (N the points' total): it alone would overfill a shuffle
+    partition.  A cell outside a partition's top P goes uncounted there,
+    so the sum can only undercount and every hot cell really is hot.
 
     None when the points' analyzed plan is not deterministic: evaluated
     again by the join, it could yield cells this pass never saw."""
@@ -249,47 +274,70 @@ def _point_occupancy(points: DataFrame, zoom: int, lon_col: str, lat_col: str) -
 
     if not points._jdf.queryExecution().analyzed().deterministic():
         return None
+    spark = points.sparkSession
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     mask = _occupancy_mask(zoom)
 
     def _fold(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         seen = np.zeros(int(mask) + 1, dtype=bool)
+        empty = np.zeros(0, dtype=np.int64)
+        n, cells, counts = 0, [empty], [empty]
         for batch in batches:
             lon = batch.column(0).to_numpy(zero_copy_only=False)
             lat = batch.column(1).to_numpy(zero_copy_only=False)
-            seen[_lonlat_cells(lon, lat, zoom) & mask] = True
-        bits = np.packbits(seen, bitorder="little").tobytes()
-        yield pa.RecordBatch.from_arrays([pa.array([bits], type=pa.binary())], names=["bits"])
+            cell = _lonlat_cells(lon, lat, zoom)
+            seen[cell & mask] = True
+            n += len(cell)
+            distinct, count = np.unique(cell, return_counts=True)
+            cells.append(distinct)
+            counts.append(count)
+        cell, count = _sum_by_cell(np.concatenate(cells), np.concatenate(counts))
+        top = np.argsort(-count, kind="stable")[:parts]
+        bits = pa.array([np.packbits(seen, bitorder="little").tobytes()])
+        tops = [pa.array([a[top]], pa.list_(pa.int64())) for a in (cell, count)]
+        n_rows = pa.array([n], pa.int64())
+        yield pa.RecordBatch.from_arrays([bits, n_rows, *tops], names=["bits", "n", "cells", "counts"])
 
-    schema = StructType([StructField("bits", BinaryType())])
-    with job_description(points.sparkSession, "joins.pip_join_shuffle occupancy"):
+    schema = "bits binary, n bigint, cells array<bigint>, counts array<bigint>"
+    with job_description(spark, "joins.pip_join_shuffle occupancy"):
         rows = points.select(lon_col, lat_col).mapInArrow(_fold, schema).collect()
     occupied = np.zeros((int(mask) + 8) // 8, dtype=np.uint8)
     for row in rows:
         occupied |= np.frombuffer(row.bits, dtype=np.uint8)
-    return occupied
+    tops = (np.array([v for r in rows for v in r[k]], dtype=np.int64) for k in ("cells", "counts"))
+    cell, count = _sum_by_cell(*tops)
+    return occupied, cell[count * parts > sum(r.n for r in rows)]
 
 
-def _cover_batch(batch: "pa.RecordBatch", zoom: int, occupied: np.ndarray | None = None) -> "pa.RecordBatch":
+def _cover_batch(
+    batch: "pa.RecordBatch", zoom: int, occupied: np.ndarray | None = None,
+    hot: np.ndarray | None = None, n_salt: int = 1,
+) -> "pa.RecordBatch":
     """(polygon_id, geom_wkb, minx, miny, maxx, maxy) → one (polygon_id,
     geom_wkb, cell) row per mercator tile covering each bbox at ``zoom``:
     one ``np.repeat`` over the per-polygon tile counts and one ``take`` of
     the polygon columns per batch.  With an ``occupied`` bitmap
-    (:func:`_point_occupancy`), only the cells whose bit is set."""
+    (:func:`_point_occupancy`), only the cells whose bit is set.  With
+    ``hot`` cells, a ``salt`` column too: the row of a hot cell repeats
+    ``n_salt`` times with salts 0..n_salt − 1, every other row has salt 0."""
     import pyarrow as pa
 
-    minx, miny, maxx, maxy = (batch.column(i).to_numpy(zero_copy_only=False) for i in range(2, 6))
-    tx0, ty0 = _world_tiles(minx, miny, zoom)
-    tx1, ty1 = _world_tiles(maxx, maxy, zoom)
-    box, tx, ty = geom.expand_boxes(tx0, tx1, ty0, ty1)
-    cell = _pack_cell(tx, ty, zoom)
+    box, cell = _box_cells(*(batch.column(i).to_numpy(zero_copy_only=False) for i in range(2, 6)), zoom)
     if occupied is not None:
         bit = cell & _occupancy_mask(zoom)
         keep = ((occupied[bit >> 3] >> (bit & 7).astype(np.uint8)) & 1).astype(bool)
         box, cell = box[keep], cell[keep]
+    names, salt = ["polygon_id", "geom_wkb", "cell"], []
+    if hot is not None:
+        # one box [0, last] × [0, 0] per row: its x coordinates are the row's salts
+        last = np.where(np.isin(cell, hot), n_salt - 1, 0)
+        zero = np.zeros_like(last)
+        row, salt_ids, _ = geom.expand_boxes(zero, last, zero, zero)
+        box, cell = box[row], cell[row]
+        names, salt = names + ["salt"], [pa.array(salt_ids, type=pa.int32())]
     rows = pa.array(box, type=pa.int64())
     return pa.RecordBatch.from_arrays(
-        [batch.column(0).take(rows), batch.column(1).take(rows), pa.array(cell, type=pa.int64())],
-        names=["polygon_id", "geom_wkb", "cell"],
+        [batch.column(0).take(rows), batch.column(1).take(rows), pa.array(cell, type=pa.int64())] + salt, names=names
     )
 
 
@@ -299,77 +347,29 @@ def polygon_cover_cells(polygons: DataFrame, zoom: int, occupied: np.ndarray | N
     PIP join; bbox cover (not exact cover) keeps the UDF trivial — exactness
     is restored by the refine step.  ``occupied`` (the points' bitmap from
     :func:`_point_occupancy`) drops the cells whose bit is clear."""
-    out_schema = StructType(
-        [
-            StructField("polygon_id", IntegerType()),
-            StructField("geom_wkb", polygons.schema["geom_wkb"].dataType),
-            StructField("cell", LongType()),
-        ]
-    )
+    return _cover(polygons, zoom, occupied)
+
+
+def _cover(
+    polygons: DataFrame, zoom: int, occupied: np.ndarray | None, hot: np.ndarray | None = None, n_salt: int = 1
+) -> DataFrame:
+    """:func:`polygon_cover_cells`, plus :func:`_cover_batch`'s ``salt``
+    column when ``hot`` cells are given."""
+    fields = [
+        StructField("polygon_id", IntegerType()),
+        StructField("geom_wkb", polygons.schema["geom_wkb"].dataType),
+        StructField("cell", LongType()),
+    ]
+    if hot is not None:
+        fields.append(StructField("salt", IntegerType()))
 
     def _explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            yield _cover_batch(batch, zoom, occupied)
+            yield _cover_batch(batch, zoom, occupied, hot, n_salt)
 
     return polygons.select(
         F.col("polygon_id").cast("int").alias("polygon_id"), "geom_wkb", "minx", "miny", "maxx", "maxy"
-    ).mapInArrow(_explode, out_schema)
-
-
-def pip_join_shuffle_adaptive(
-    points: DataFrame,
-    polygons: DataFrame,
-    zoom: int = 8,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    keep_cols: tuple = ("url",),
-    hot_threshold: int = 100_000,
-    split_levels: int = 2,
-) -> DataFrame:
-    """Shuffle PIP with adaptive cell-resolution splitting (SURVEY.md §4 skew).
-
-    One cheap pass counts points per base-zoom cell; cells above
-    ``hot_threshold`` (dense-urban tiles) are re-encoded at
-    ``zoom + split_levels`` on BOTH sides — the same 4-way subdivision the
-    quadkey pyramid defines (gdal2tiles.py:304-318) — so one hot cell's work
-    fans out over 4^levels shuffle keys.  Cold cells join at base zoom
-    untouched.  Emits exactly the rows of :func:`pip_join_shuffle`.
-    """
-    fine = zoom + split_levels
-    pts = _with_world_cell(points.select(*keep_cols, lon_col, lat_col), zoom, lon_col, lat_col)
-    hot_rows = (
-        pts.groupBy("cell").agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") > hot_threshold)
-        .select("cell")
-        .collect()
-    )
-    hot = {r.cell for r in hot_rows}
-    if not hot:
-        return pip_join_shuffle(points, polygons, zoom, lon_col, lat_col, keep_cols)
-    hot_arr = F.array(*[F.lit(c) for c in sorted(hot)])
-    is_hot = F.array_contains(hot_arr, F.col("cell"))
-
-    cold_pts = pts.where(~is_hot)
-    hot_pts = _with_world_cell(pts.where(is_hot).drop("cell"), fine, lon_col, lat_col)
-    polys_base = polygon_cover_cells(polygons, zoom)
-    cold_polys = polys_base.where(~F.array_contains(hot_arr, F.col("cell")))
-    # fine cover restricted to subcells whose base-zoom parent is hot;
-    # packed cell = (tx << (z+1)) | ty, so parent = bit shifts only
-    polys_fine = polygon_cover_cells(polygons, fine)
-    ftx = F.shiftright("cell", fine + 1)
-    fty = F.col("cell") - (ftx * F.lit(np.int64(2 ** (fine + 1))))
-    parent = (
-        F.shiftright(ftx, split_levels) * F.lit(np.int64(2 ** (zoom + 1)))
-        + F.shiftright(fty, split_levels)
-    ).cast("long")
-    hot_polys = polys_fine.where(F.array_contains(hot_arr, parent))
-
-    out_parts = []
-    for p, g in ((cold_pts, cold_polys), (hot_pts, hot_polys)):
-        cand = p.join(g, on="cell", how="inner").drop("cell")
-        out_parts.append(cand)
-    cand_all = out_parts[0].unionByName(out_parts[1])
-    return _pip_refine(cand_all, points, lon_col, lat_col, keep_cols)
+    ).mapInArrow(_explode, StructType(fields))
 
 
 def pip_join_shuffle(
@@ -392,17 +392,18 @@ def pip_join_shuffle(
     tested in one :class:`geom.EdgeTable` call).
 
     Before it builds the plan, the call runs one eager Spark job, described
-    ``joins.pip_join_shuffle occupancy``: an Arrow pass over the points'
-    (lon, lat) that folds their cells into a bitmap of at most 1 MB, one
-    bit per cell up to zoom 11 and hashed (``cell mod 2^23``) above.  The polygon cover
-    keeps only the cells whose bit is set, so the salt replication, the
-    shuffle and the hash join see only polygon cells that can meet a point;
-    rows and candidate pairs are unchanged.  The points' plan is thus
-    evaluated twice: cached points are only scanned again, but an expensive
-    uncached lineage runs twice, as it does in
-    :func:`pip_join_shuffle_adaptive`.  When the points' analyzed plan is
-    not deterministic the pass is skipped and every cover cell is kept,
-    since a second evaluation could yield cells the bitmap never saw.
+    ``joins.pip_join_shuffle occupancy`` (:func:`_point_occupancy`): an
+    Arrow pass over the points' (lon, lat) that folds their cells into a
+    bitmap of at most 1 MB, one bit per cell up to zoom 11 and hashed
+    (``cell mod 2^23``) above, and sums the counts of each partition's
+    heaviest cells.  The polygon cover keeps only the cells whose bit is
+    set, so the shuffle and the hash join see only polygon cells that can
+    meet a point; rows and candidate pairs are unchanged.  The points' plan
+    is thus evaluated twice: cached points are only scanned again, but an
+    expensive uncached lineage runs twice.  When the points' analyzed plan
+    is not deterministic the pass is skipped, every cover cell is kept and
+    nothing is salted, since a second evaluation could yield cells the
+    pass never saw.
 
     The equi-join is planned as a sort-merge join.  Once the shuffles have
     run, AQE re-plans it as a shuffled hash join, built on the smaller
@@ -411,24 +412,26 @@ def pip_join_shuffle(
     :func:`engine.session.get_spark`); larger partitions keep the sort-merge
     join.
 
-    ``n_salt`` replicates every polygon-cell n ways and gives each point
-    row one salt, a hash of its ``keep_cols`` — the explicit hot-cell skew
-    remedy (SURVEY.md §4 skew).  A (polygon, cell, salt) row is unique and a
-    point row has one cell and one salt, so each (point row, polygon) pair
-    is a candidate exactly once: no dedup pass, and duplicate input rows
-    come back as many times as they went in.
+    ``n_salt`` is the hot-cell skew remedy (SURVEY.md §4 skew), applied to
+    the cells the pass measures as hot: those holding more than one shuffle
+    partition's share of the points.  A hot cell's polygon rows repeat
+    ``n_salt`` ways (salts 0..n_salt − 1) and its point rows get one salt,
+    a hash of their ``keep_cols``; every other row has salt 0.  A (polygon,
+    cell, salt) row is unique and a point row has one cell and one salt, so
+    each (point row, polygon) pair is a candidate exactly once: no dedup
+    pass, and duplicate input rows come back as many times as they went
+    in.  With no hot cell the plan is the unsalted one.
 
     Emits the same rows as :func:`pip_join_broadcast` (A/B parity test).
     """
-    occupied = _point_occupancy(points, zoom, lon_col, lat_col)
+    occupied, hot = _point_occupancy(points, zoom, lon_col, lat_col) or (None, [])
+    salted = bool(n_salt) and len(hot) > 0
     pts = _with_world_cell(points.select(*keep_cols, lon_col, lat_col), zoom, lon_col, lat_col)
-    polys = polygon_cover_cells(polygons, zoom, occupied)
-    if n_salt:
-        polys = polys.withColumn("salt", F.explode(F.array([F.lit(i) for i in range(n_salt)])))
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64(*[F.col(c) for c in keep_cols]), F.lit(n_salt)).cast("int"))
-        join_keys = ["cell", "salt"]
-    else:
-        join_keys = ["cell"]
+    polys = _cover(polygons, zoom, occupied, hot if salted else None, n_salt)
+    if salted:
+        salt = F.pmod(F.xxhash64(*[F.col(c) for c in keep_cols]), F.lit(n_salt))
+        pts = pts.withColumn("salt", F.when(F.col("cell").isin([int(c) for c in hot]), salt).otherwise(0).cast("int"))
+    join_keys = ["cell", "salt"] if salted else ["cell"]
     return _pip_refine(pts.join(polys, on=join_keys, how="inner"), points, lon_col, lat_col, keep_cols)
 
 
@@ -492,7 +495,7 @@ def _ring_cells_udf(zoom: int, ring: int):
     def _cells(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
         lo = lon.to_numpy(np.float64)
         la = lat.to_numpy(np.float64)
-        tx, ty = tiles.lonlat_to_tile(lo, la, zoom)
+        tx, ty = _world_tiles(lo, la, zoom)
         x0 = np.clip(tx - ring, 0, nmax - 1)
         x1 = np.clip(tx + ring, 0, nmax - 1)
         y0 = np.clip(ty - ring, 0, nmax - 1)
@@ -552,21 +555,24 @@ def knn_join(
     (alg/gdalgrid.cpp:675-775) with the quadtree (port/cpl_quad_tree.h)
     replaced by the multi-resolution cell grid.  At ``max_ring`` the search
     is accepted as-is (MAXDIST-bounded semantics, alg/gdalgrid.cpp:691-730).
+    A round's eager jobs (the remainder's ``isEmpty`` and checkpoint) are
+    described ``joins.knn_join ring=<r>``, the "auto" probe's collect
+    ``joins.knn_join probe``.
 
     Output: (qid, neighbor, nbr_lon, nbr_lat, dist, rank).
     """
     if strategy == "auto":
         # bounded probe: evaluates the query lineage once, and the collected
         # rows are reused directly by the broadcast branch (no second pass)
-        probe = queries.select(query_id, "lon", "lat").limit(broadcast_threshold + 1).collect()
+        with job_description(queries.sparkSession, "joins.knn_join probe"):
+            probe = queries.select(query_id, "lon", "lat").limit(broadcast_threshold + 1).collect()
         if len(probe) <= broadcast_threshold:
             return knn_join_broadcast(queries, points, k, query_id, point_id, _rows=probe)
         strategy = "rings"
     if strategy == "broadcast":
         return knn_join_broadcast(queries, points, k, query_id, point_id)
-    pts = with_cell(points, zoom, "lon", "lat").select(
-        F.col(point_id).alias("_nbr"), F.col("lon").alias("_nlon"), F.col("lat").alias("_nlat"), "cell"
-    )
+    pts = points.select(F.col(point_id).alias("_nbr"), F.col("lon").alias("_nlon"), F.col("lat").alias("_nlat"))
+    pts = _with_world_cell(pts, zoom, "_nlon", "_nlat")
 
     remaining = queries.select(query_id, "lon", "lat")
     # typed empty seed so an empty queries input returns an empty DataFrame
@@ -591,51 +597,52 @@ def knn_join(
     while rings[-1] < max_ring:
         rings.append(min(rings[-1] * 2, max_ring))
     for ring in rings:
-        if remaining.isEmpty():
-            break
-        last = ring >= max_ring
-        cells_udf = _ring_cells_udf(zoom, ring)
-        ringed = remaining.withColumn("_r", cells_udf(F.col("lon"), F.col("lat")))
-        cand = (
-            ringed.select(
-                query_id, "lon", "lat", F.col("_r.guarantee").alias("_g"), F.explode("_r.cells").alias("cell")
+        with job_description(queries.sparkSession, f"joins.knn_join ring={ring}"):
+            if remaining.isEmpty():
+                break
+            last = ring >= max_ring
+            cells_udf = _ring_cells_udf(zoom, ring)
+            ringed = remaining.withColumn("_r", cells_udf(F.col("lon"), F.col("lat")))
+            cand = (
+                ringed.select(
+                    query_id, "lon", "lat", F.col("_r.guarantee").alias("_g"), F.explode("_r.cells").alias("cell")
+                )
+                .join(pts, on="cell", how="inner")
+                .drop("cell")
+                .dropDuplicates([query_id, "_nbr"])
             )
-            .join(pts, on="cell", how="inner")
-            .drop("cell")
-            .dropDuplicates([query_id, "_nbr"])
-        )
-        dist = F.sqrt(
-            (F.col("lon") - F.col("_nlon")) ** 2 + (F.col("lat") - F.col("_nlat")) ** 2
-        )
-        w = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col("_nbr").asc())
-        topk = (
-            cand.withColumn("dist", dist)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        )
-        if last:
-            satisfied = topk.select(query_id).distinct()
-        else:
-            satisfied = (
-                topk.groupBy(query_id, "_g")
-                .agg(F.count("*").alias("_n"), F.max("dist").alias("_dmax"))
-                .where((F.col("_n") >= k) & (F.col("_dmax") <= F.col("_g")))
-                .select(query_id)
+            dist = F.sqrt(
+                (F.col("lon") - F.col("_nlon")) ** 2 + (F.col("lat") - F.col("_nlat")) ** 2
             )
-        done = topk.join(satisfied, on=query_id, how="left_semi").select(
-            query_id,
-            F.col("_nbr").alias("neighbor"),
-            F.col("_nlon").alias("nbr_lon"),
-            F.col("_nlat").alias("nbr_lat"),
-            "dist",
-            "rank",
-        )
-        results = results.unionByName(done)
-        if last:
-            break
-        # materialize the shrinking remainder — without this each round's
-        # isEmpty() replays the whole join lineage of all prior rounds
-        remaining = remaining.join(satisfied, on=query_id, how="left_anti").localCheckpoint(eager=True)
+            w = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col("_nbr").asc())
+            topk = (
+                cand.withColumn("dist", dist)
+                .withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
+            )
+            if last:
+                satisfied = topk.select(query_id).distinct()
+            else:
+                satisfied = (
+                    topk.groupBy(query_id, "_g")
+                    .agg(F.count("*").alias("_n"), F.max("dist").alias("_dmax"))
+                    .where((F.col("_n") >= k) & (F.col("_dmax") <= F.col("_g")))
+                    .select(query_id)
+                )
+            done = topk.join(satisfied, on=query_id, how="left_semi").select(
+                query_id,
+                F.col("_nbr").alias("neighbor"),
+                F.col("_nlon").alias("nbr_lon"),
+                F.col("_nlat").alias("nbr_lat"),
+                "dist",
+                "rank",
+            )
+            results = results.unionByName(done)
+            if last:
+                break
+            # materialize the shrinking remainder — without this each round's
+            # isEmpty() replays the whole join lineage of all prior rounds
+            remaining = remaining.join(satisfied, on=query_id, how="left_anti").localCheckpoint(eager=True)
     return results
 
 
@@ -665,9 +672,8 @@ def idw_interpolate(
     except the ring-cell UDF.  Weights use squared euclidean degrees for
     p=2 (exact, no sqrt); general p uses pow(d, p).
     """
-    pts = with_cell(points, zoom, "lon", "lat").select(
-        F.col(value_col).alias("_v"), F.col("lon").alias("_plon"), F.col("lat").alias("_plat"), "cell"
-    )
+    pts = points.select(F.col(value_col).alias("_v"), F.col("lon").alias("_plon"), F.col("lat").alias("_plat"))
+    pts = _with_world_cell(pts, zoom, "_plon", "_plat")
     cells_udf = _ring_cells_udf(zoom, ring)
     cand = (
         queries.select(query_id, "lon", "lat")
@@ -698,13 +704,45 @@ def idw_interpolate(
 # ---------------------------------------------------------------------------
 
 
+def _radius_hits(
+    queries: DataFrame, points: DataFrame, value_col: str, radius: float, zoom: int, query_id: str
+) -> DataFrame:
+    """(query_id, _v, _d, _plon, _plat) for every point within ``radius``
+    (euclidean degrees) of a query, ``_d`` its distance.  Each query's
+    radius box is covered with its world tiles at ``zoom`` by the polygon
+    cover's rule (:func:`_box_cells`, one Arrow pass), equi-joined to the points' world cells and filtered on
+    the exact distance.  A point within ``radius`` lies in the box, so its
+    tile is among the box's at any latitude."""
+    import pyarrow as pa
+
+    qs = queries.select(query_id, "lon", "lat")
+    names = qs.columns + ["cell"]
+
+    def _explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            lon, lat = (batch.column(i).to_numpy(zero_copy_only=False) for i in (1, 2))
+            box, cell = _box_cells(lon - radius, lat - radius, lon + radius, lat + radius, zoom)
+            rows = pa.array(box, type=pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(i).take(rows) for i in range(3)] + [pa.array(cell, type=pa.int64())], names=names
+            )
+
+    pts = points.select(F.col(value_col).alias("_v"), F.col("lon").alias("_plon"), F.col("lat").alias("_plat"))
+    pts = _with_world_cell(pts, zoom, "_plon", "_plat")
+    windows = qs.mapInArrow(_explode, StructType(qs.schema.fields + [StructField("cell", LongType())]))
+    cand = windows.join(pts, on="cell", how="inner")
+    dlon = F.col("lon") - F.col("_plon")
+    dlat = F.col("lat") - F.col("_plat")
+    d2 = dlon * dlon + dlat * dlat
+    return cand.where(d2 <= F.lit(radius * radius)).select(query_id, "_v", F.sqrt(d2).alias("_d"), "_plon", "_plat")
+
+
 def grid_metrics(
     queries: DataFrame,
     points: DataFrame,
     value_col: str,
     radius: float,
     zoom: int = 6,
-    ring: int = 1,
     min_points: int = 1,
     query_id: str = "qid",
     distance_pts: bool = False,
@@ -725,30 +763,10 @@ def grid_metrics(
     cost is one window + one equi-join on the (radius-bounded) hit set —
     quadratic only in per-window point count, never in table size.
 
-    Plan: ring explode + cell equi-join + JVM-side distance filter +
-    groupBy agg — no Python in the hot path.  The (2r+1)² cell window must
-    cover ``radius``: cell size at ``zoom`` is 360/2^zoom degrees, so
-    ``ring * 360/2^zoom >= radius`` is asserted.
+    Plan: :func:`_radius_hits` (the radius-box cover at ``zoom``, a cell
+    equi-join and a JVM-side distance filter) + groupBy agg.
     """
-    cell_deg = 360.0 / (2 ** zoom)
-    if ring * cell_deg < radius:
-        raise ValueError(f"ring window {ring}×{cell_deg}° cells does not cover radius {radius}°")
-    pts = with_cell(points, zoom, "lon", "lat").select(
-        F.col(value_col).alias("_v"), F.col("lon").alias("_plon"), F.col("lat").alias("_plat"), "cell"
-    )
-    cells_udf = _ring_cells_udf(zoom, ring)
-    cand = (
-        queries.select(query_id, "lon", "lat")
-        .withColumn("_r", cells_udf(F.col("lon"), F.col("lat")))
-        .select(query_id, "lon", "lat", F.explode("_r.cells").alias("cell"))
-        .join(pts, on="cell", how="inner")
-    )
-    dlon = F.col("lon") - F.col("_plon")
-    dlat = F.col("lat") - F.col("_plat")
-    d2 = dlon * dlon + dlat * dlat
-    hits = cand.where(d2 <= F.lit(radius * radius)).select(
-        query_id, F.col("_v"), F.sqrt(d2).alias("_d"), "_plon", "_plat"
-    )
+    hits = _radius_hits(queries, points, value_col, radius, zoom, query_id)
     # average distance accumulates in decimal so the sum is order-independent
     # (same device as summary_select's float SUMs): double(exact Σ)/n is
     # bit-identical across partitionings and engines
@@ -767,8 +785,6 @@ def grid_metrics(
         .where(F.col("count") >= min_points)
     )
     if distance_pts:
-        from pyspark.sql import Window
-
         idx = hits.select(
             query_id, "_plon", "_plat",
             F.row_number()
@@ -850,33 +866,16 @@ def grid_moving_average(
     value_col: str,
     radius: float,
     zoom: int = 6,
-    ring: int = 1,
     min_points: int = 1,
     query_id: str = "qid",
 ) -> DataFrame:
     """Moving average of point VALUES within ``radius`` of each query cell —
     GDALGridMovingAverage (alg/gdalgrid.cpp:580): value = Σvᵢ/n over the
     circular search window, rows with fewer than ``min_points`` neighbors
-    dropped (the nodata case).  Same single-shuffle ring/cell plan as
+    dropped (the nodata case).  Same :func:`_radius_hits` plan as
     :func:`grid_metrics`; the sum accumulates in decimal so the double
     result is order-independent across partitionings and engines."""
-    cell_deg = 360.0 / (2 ** zoom)
-    if ring * cell_deg < radius:
-        raise ValueError(f"ring window {ring}×{cell_deg}° cells does not cover radius {radius}°")
-    pts = with_cell(points, zoom, "lon", "lat").select(
-        F.col(value_col).alias("_v"), F.col("lon").alias("_plon"), F.col("lat").alias("_plat"), "cell"
-    )
-    cells_udf = _ring_cells_udf(zoom, ring)
-    cand = (
-        queries.select(query_id, "lon", "lat")
-        .withColumn("_r", cells_udf(F.col("lon"), F.col("lat")))
-        .select(query_id, "lon", "lat", F.explode("_r.cells").alias("cell"))
-        .join(pts, on="cell", how="inner")
-    )
-    dlon = F.col("lon") - F.col("_plon")
-    dlat = F.col("lat") - F.col("_plat")
-    d2 = dlon * dlon + dlat * dlat
-    hits = cand.where(d2 <= F.lit(radius * radius)).select(query_id, F.col("_v"))
+    hits = _radius_hits(queries, points, value_col, radius, zoom, query_id)
     return (
         hits.groupBy(query_id)
         .agg(

@@ -112,13 +112,6 @@ def _haar_y_p(P: np.ndarray, row, col, size: int) -> np.ndarray:
             - _rect_sum_p(P, row, col, size, size // 2))
 
 
-def rgb_to_luminosity(r: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """0.21 R + 0.72 G + 0.07 B over 255 (alg/gdal_simplesurf.cpp:141-200)."""
-    return (0.21 * np.asarray(r, dtype=np.float64)
-            + 0.72 * np.asarray(g, dtype=np.float64)
-            + 0.07 * np.asarray(b, dtype=np.float64)) / 255.0
-
-
 class _Layer:
     """One Fast-Hessian octave layer (alg/gdal_octave.cpp:153-214)."""
 

@@ -60,13 +60,6 @@ def encode_png(img: np.ndarray) -> bytes:
     )
 
 
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    p = a.astype(np.int32) + b.astype(np.int32) - c.astype(np.int32)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
-
-
 def decode_png(data: bytes) -> np.ndarray:
     """Decode PNG bytes → uint8 array: HxW (grey) or HxWxC.  Palette
     images are expanded to RGB; a tRNS chunk on palette images expands to

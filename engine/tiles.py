@@ -127,8 +127,8 @@ def quadkey(tx, ty, zoom: int) -> np.ndarray:
 
     Vectorized: per-level digit arrays combined into a fixed-width string
     array.  The quadkey is the engine's cell-prefix key: quadkey at zoom z-1
-    is the z-length quadkey's prefix, which is what makes prefix pruning and
-    adaptive resolution splitting equi-join-able.
+    is the z-length quadkey's prefix, which is what makes prefix pruning
+    equi-join-able.
     """
     tx = np.asarray(tx, dtype=np.int64)
     ty = np.asarray(ty, dtype=np.int64)

@@ -93,7 +93,7 @@ def test_empty_point_operators(spark, empty_points):
     assert lineref.locate_points(empty_points, [(0.0, 0.0), (1.0, 0.0)]).count() == 0
     centers = empty_points.selectExpr("cast(event_id as int) qid", "lon", "lat")
     pts = spark.createDataFrame(pd.DataFrame({"lon": [0.0], "lat": [0.0], "z": [1.0]}))
-    assert joins.grid_metrics(centers, pts, "z", radius=1.0, zoom=6, ring=1).count() == 0
+    assert joins.grid_metrics(centers, pts, "z", radius=1.0, zoom=6).count() == 0
 
 
 def test_empty_quantize(spark, empty_tiles):

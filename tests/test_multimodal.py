@@ -232,7 +232,7 @@ def test_grid_metrics_average_distance_pts_bruteforce(spark):
     out = {
         r.qid: r
         for r in joins.grid_metrics(
-            queries, spark_pts, "z", radius=1.2, zoom=6, ring=1, distance_pts=True
+            queries, spark_pts, "z", radius=1.2, zoom=6, distance_pts=True
         ).collect()
     }
     pts = [(r.lon, r.lat) for r in spark_pts.collect()]
@@ -251,6 +251,29 @@ def test_grid_metrics_average_distance_pts_bruteforce(spark):
                 for a, b in itertools.combinations(inw, 2)
             ]
             assert abs(row.average_distance_pts - sum(ds) / len(ds)) < 1e-9
+
+
+def test_grid_radius_windows_reach_points_away_from_the_equator(spark):
+    """grid_metrics and grid_moving_average find every point within
+    ``radius`` at any latitude (numpy brute force).  A zoom-6 mercator tile
+    row is 4.1° tall at 45° and 1.0° at 80°: the query (10, 41.0), in tile
+    row 40, must reach the point (10, 36.2), in row 38 and 4.8° away."""
+    from engine import joins
+
+    rng = np.random.default_rng(8)
+    plon = np.concatenate([[10.0], rng.uniform(0.0, 20.0, 300)])
+    plat = np.concatenate([[36.2], rng.uniform(30.0, 89.0, 300)])
+    z = rng.uniform(0.0, 10.0, 301)
+    pts = spark.createDataFrame(pd.DataFrame({"lon": plon, "lat": plat, "z": z}))
+    qlon, qlat = [10.0, 5.0, 15.0], [41.0, 80.0, 60.0]
+    queries = spark.createDataFrame(pd.DataFrame({"qid": [0, 1, 2], "lon": qlon, "lat": qlat}))
+    met = {r.qid: r for r in joins.grid_metrics(queries, pts, "z", radius=5.0, zoom=6).collect()}
+    avg = {r.qid: r for r in joins.grid_moving_average(queries, pts, "z", radius=5.0, zoom=6).collect()}
+    for q, (lon, lat) in enumerate(zip(qlon, qlat)):
+        near = (plon - lon) ** 2 + (plat - lat) ** 2 <= 25.0
+        assert met[q]["count"] == avg[q]["count"] == near.sum() > 0, q
+        assert (met[q].minimum, met[q].maximum) == (z[near].min(), z[near].max()), q
+        assert abs(avg[q].moving_avg - z[near].mean()) < 1e-9, q
 
 
 # ---------------------------------------------------------------------------

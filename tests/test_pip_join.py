@@ -128,30 +128,73 @@ def test_with_tile_matches_oracle(spark, data):
         assert r.quadkey == merc.quad_tree(otx, oty, 8)
 
 
-def test_adaptive_split_parity(spark, data):
-    """Adaptive cell-resolution splitting (hot cells re-encoded at zoom+2 on
-    both sides) must emit exactly the plain shuffle join's rows."""
-    tagged = geotag_first(data["pages"], data["gaz"])
-    plain = sorted(
-        (r.url, r.polygon_id)
-        for r in joins.pip_join_shuffle(tagged, data["polys"], zoom=5).collect()
-    )
-    # threshold low enough that several cells split
-    adaptive = sorted(
-        (r.url, r.polygon_id)
-        for r in joins.pip_join_shuffle_adaptive(
-            tagged, data["polys"], zoom=5, hot_threshold=10, split_levels=2
-        ).collect()
-    )
-    assert adaptive == plain and len(plain) > 0
-    # threshold high: falls back to the plain path, still identical
-    none_hot = sorted(
-        (r.url, r.polygon_id)
-        for r in joins.pip_join_shuffle_adaptive(
-            tagged, data["polys"], zoom=5, hot_threshold=10**9
-        ).collect()
-    )
-    assert none_hot == plain
+def test_hot_cell_salting_parity(spark, data):
+    """Salting the cells the occupancy pass measures as hot (pages_hot: half
+    the geotags on one place) emits exactly the unsalted shuffle join's
+    rows; with no hot cell (the spread pages) the salted call is the
+    unsalted plan, with the same rows."""
+    hot_pages = spark.createDataFrame(make_pages(n=800, gazetteer=data["gaz_pdf"], seed=10, hot_cell_frac=0.5))
+    for pages, n_hot in ((hot_pages, 1), (data["pages"], 0)):
+        tagged = geotag_first(pages, data["gaz"])
+        assert len(joins._point_occupancy(tagged, 5, "lon", "lat")[1]) == n_hot
+        plain = sorted((r.url, r.polygon_id) for r in joins.pip_join_shuffle(tagged, data["polys"], zoom=5).collect())
+        salted = joins.pip_join_shuffle(tagged, data["polys"], zoom=5, n_salt=4)
+        assert sorted((r.url, r.polygon_id) for r in salted.collect()) == plain and len(plain) > 0, n_hot
+
+
+def _shuffled_rows(spark, action) -> list:
+    """Rows written by each shuffle Exchange of the SQL executions that
+    ``action`` runs, sorted, read from Spark's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    before = {int(e.executionId()) for e in seq(store.executionsList())}
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    out = []
+    for ex in seq(store.executionsList()):
+        if int(ex.executionId()) in before:
+            continue
+        values, it = {}, store.executionMetrics(ex.executionId()).iterator()
+        while it.hasNext():
+            kv = it.next()
+            values[int(kv._1())] = kv._2()
+        for node in seq(store.planGraph(ex.executionId()).allNodes()):
+            out += [
+                int(values[int(m.accumulatorId())].replace(",", ""))
+                for m in seq(node.metrics())
+                if node.name() == "Exchange" and m.name() == "shuffle records written"
+            ]
+    return sorted(out)
+
+
+def test_salting_replicates_only_the_hot_cells(spark, data):
+    """With one cell holding more than N / P of the points (P = the
+    session's shuffle partitions), the salted join shuffles the points once
+    and the polygon cover's cold rows once and its hot rows ``n_salt``
+    times, and emits the broadcast join's rows."""
+    rng = np.random.default_rng(11)
+    n = 600
+    lon = np.concatenate([rng.normal(12.3, 0.05, n // 2), rng.uniform(-179.0, 179.0, n // 2)])
+    lat = np.concatenate([rng.normal(45.2, 0.05, n // 2), rng.uniform(-80.0, 80.0, n // 2)])
+    pts = spark.createDataFrame(pd.DataFrame({"url": [f"p{i}" for i in range(n)], "lon": lon, "lat": lat}))
+    occupied, hot = joins._point_occupancy(pts, 8, "lon", "lat")
+    assert len(hot) == 1 and int(spark.conf.get("spark.sql.shuffle.partitions")) < n // 2
+    cover = [r.cell for r in joins.polygon_cover_cells(data["polys"], 8, occupied).collect()]
+    n_hot = sum(c in hot for c in cover)
+    assert 0 < n_hot < len(cover)
+    got = []
+    broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        sh = joins.pip_join_shuffle(pts, data["polys"], zoom=8, n_salt=4)
+        shuffled = _shuffled_rows(spark, lambda: got.extend(sorted((r.url, r.polygon_id) for r in sh.collect())))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcast)
+    assert shuffled == sorted([n, len(cover) - n_hot + 4 * n_hot]), (shuffled, len(cover), n_hot)
+    assert got == sorted((r.url, r.polygon_id) for r in joins.pip_join_broadcast(pts, data["polys_pdf"]).collect())
 
 
 def test_hot_cell_skew_fixture(spark):
@@ -201,6 +244,29 @@ def test_knn_broadcast_matches_rings(spark):
     assert ka == kb
 
 
+def test_knn_rings_reach_points_at_the_world_edges(spark):
+    """The ring join keys its points on the world-clamped tile, so points
+    beyond the mercator latitude limits and at lon -180° (tile -1 by the
+    tile rule) are reached: its rows equal knn_join_broadcast's for queries
+    next to them."""
+    rng = np.random.default_rng(3)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"name": [f"p{i}" for i in range(304)],
+                      "lon": np.concatenate([[10.0, 12.0, -40.0, -180.0], rng.uniform(-170, 170, 300)]),
+                      "lat": np.concatenate([[88.0, 89.5, -87.0, 0.0], rng.uniform(-75, 75, 300)])})
+    )
+    qs = spark.createDataFrame(
+        pd.DataFrame({"qid": [0, 1, 2], "lon": [10.0, -179.5, -40.0], "lat": [84.9, 0.5, -84.0]})
+    )
+
+    def rows(df):
+        return sorted((r.qid, r.rank, r.neighbor, round(r.dist, 9)) for r in df.collect())
+
+    rings = rows(joins.knn_join(qs, pts, k=3, zoom=4, max_ring=8, strategy="rings"))
+    assert rings == rows(joins.knn_join_broadcast(qs, pts, k=3))
+    assert [r[2] for r in rings if r[1] == 1] == ["p0", "p3", "p2"]
+
+
 def test_geocode_reverse_matches_oracle(spark, data):
     """geocode_reverse (OGRGeocodeReverse analog): every query resolves to
     the brute-force nearest gazetteer place, ties broken by name; repeated
@@ -239,7 +305,8 @@ def _cover_multiset(rows):
 
 def _meshgrid_cover(polys_pdf, zoom):
     """The per-polygon meshgrid expansion polygon_cover_cells used to run:
-    the reference for its vectorized form."""
+    the reference for its vectorized form.  Bbox corners clamp to the
+    mercator world and their tiles to [0, 2^zoom - 1]."""
     from collections import Counter
 
     from engine import tiles
@@ -247,10 +314,14 @@ def _meshgrid_cover(polys_pdf, zoom):
     lim = tiles.MERCATOR_LAT_MAX
     shift = np.int64(2 ** (zoom + 1))
     out = Counter()
+
+    def tile(lon, lat):
+        tx, ty = tiles.lonlat_to_tile(np.clip([lon], -180.0, 180.0), np.clip([lat], -lim, lim), zoom)
+        return min(max(tx[0], 0), 2**zoom - 1), min(max(ty[0], 0), 2**zoom - 1)
+
     for r in polys_pdf.itertuples():
-        tx0, ty0 = tiles.lonlat_to_tile(np.clip([r.minx], -180.0, 180.0), np.clip([r.miny], -lim, lim), zoom)
-        tx1, ty1 = tiles.lonlat_to_tile(np.clip([r.maxx], -180.0, 180.0), np.clip([r.maxy], -lim, lim), zoom)
-        gx, gy = np.meshgrid(np.arange(tx0[0], tx1[0] + 1), np.arange(ty0[0], ty1[0] + 1))
+        (tx0, ty0), (tx1, ty1) = tile(r.minx, r.miny), tile(r.maxx, r.maxy)
+        gx, gy = np.meshgrid(np.arange(tx0, tx1 + 1), np.arange(ty0, ty1 + 1))
         for c in (gx.ravel() * shift + gy.ravel()).tolist():
             out[(int(r.polygon_id), c, bytes(r.geom_wkb))] += 1
     return out
@@ -359,8 +430,9 @@ def test_salted_shuffle_with_empty_refine_partitions(spark, data):
 def test_shuffle_joins_keep_duplicate_point_rows(spark):
     """Two identical point rows inside a polygon come back twice from every
     plan: the salted shuffle gives both the same salt and emits each (point
-    row, polygon) pair once per row, with no dedup, as the broadcast and
-    adaptive plans do."""
+    row, polygon) pair once per row, with no dedup, as the broadcast plan
+    does.  Their cell holds 3 of the 4 points, over N / P, so it is hot and
+    salted."""
     polys_pdf = _bbox_polys([(0.0, 0.0, 10.0, 10.0), (20.0, 20.0, 30.0, 30.0)], first_id=1)
     pts = spark.createDataFrame(
         pd.DataFrame({"url": ["a", "a", "b", "c"], "lon": [2.0, 2.0, 3.0, 50.0], "lat": [2.0, 2.0, 4.0, 50.0]})
@@ -372,10 +444,10 @@ def test_shuffle_joins_keep_duplicate_point_rows(spark):
 
     bc = rows(joins.pip_join_broadcast(pts, polys_pdf))
     assert bc == [("a", 1), ("a", 1), ("b", 1)]
+    (hot,) = joins._point_occupancy(pts, 6, "lon", "lat")[1]
+    assert hot == joins._lonlat_cells(np.array([2.0]), np.array([2.0]), 6)[0]
     assert rows(joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=4)) == bc
     assert rows(joins.pip_join_shuffle(pts, polys, zoom=6)) == bc
-    for hot_threshold in (1, 10**9):  # hot cell split, and the plain fallback
-        assert rows(joins.pip_join_shuffle_adaptive(pts, polys, zoom=6, hot_threshold=hot_threshold)) == bc
 
 
 def test_with_cell_packs_with_tile_coordinates(spark):
@@ -488,10 +560,8 @@ def test_occupancy_filtered_shuffle_matches_broadcast(spark, data, zoom):
 
 
 def test_occupancy_keeps_exactly_the_point_cells(spark, data):
-    """Up to zoom 11 the filtered cover, within the world's tiles, is the
-    full cover restricted to the cells that hold a point; the cells of
-    tile -1 that a bbox at -180° or at the southern limit covers share bits
-    with cells of the opposite edge.  Above zoom 11 the bitmap is indexed by
+    """Up to zoom 11 the filtered cover is the full cover restricted to the
+    cells that hold a point.  Above zoom 11 the bitmap is indexed by
     ``cell mod 2^23``: a polygon cell that shares its bit with a point's
     cell is kept although no point is in it, and every cell that holds a
     point is kept."""
@@ -505,21 +575,15 @@ def test_occupancy_keeps_exactly_the_point_cells(spark, data):
     pts = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
 
     def covers(zoom, points, polys):
-        occupied = joins._point_occupancy(points, zoom, "lon", "lat")
+        occupied, _ = joins._point_occupancy(points, zoom, "lon", "lat")
         cells = {r.cell for r in joins.with_cell(points, zoom).collect()}
         full = _cover_multiset(joins.polygon_cover_cells(polys, zoom).collect())
         kept = _cover_multiset(joins.polygon_cover_cells(polys, zoom, occupied).collect())
         return cells, full, kept
 
-    def in_world(cell, zoom):
-        tx, ty = divmod(cell, 2 ** (zoom + 1))
-        return 0 <= tx < 2**zoom and 0 <= ty < 2**zoom
-
     for zoom in (0, 4, 8):
         cells, full, kept = covers(zoom, pts, polys)
-        assert kept.items() <= full.items(), zoom
-        world = Counter({k: v for k, v in kept.items() if in_world(k[1], zoom)})
-        assert world == Counter({k: v for k, v in full.items() if k[1] in cells}), zoom
+        assert kept == Counter({k: v for k, v in full.items() if k[1] in cells}), zoom
         assert sum(kept.values()) < sum(full.values()) or zoom == 0
     # zoom 12, boxes of 0.2° around six of the points
     boxes = spark.createDataFrame(_bbox_polys([(x - 0.1, y - 0.1, x + 0.1, y + 0.1) for x, y in zip(lon[:6], lat[:6])]))
@@ -556,14 +620,15 @@ def test_shuffle_joins_reach_points_beyond_the_latitude_limit(spark):
     """A polygon that reaches past the mercator latitude limit meets the
     points beyond it in the cell-shuffle joins, as in the broadcast join:
     both sides of the cell equi-join clamp to the world's edge tiles,
-    unsalted, salted, and with every occupied cell split (adaptive)."""
+    unsalted and salted; each point's cell holds 1 of the 2 points, over
+    N / P, so both cells are hot and salted."""
     polys_pdf = _bbox_polys([(0.0, 80.0, 20.0, 89.9)], first_id=1)
     pts = spark.createDataFrame(pd.DataFrame({"url": ["in", "beyond"], "lon": [10.0, 10.0], "lat": [84.0, 88.0]}))
     want = [("beyond", 1), ("in", 1)]
     assert sorted((r.url, r.polygon_id) for r in joins.pip_join_broadcast(pts, polys_pdf).collect()) == want
+    assert len(joins._point_occupancy(pts, 6, "lon", "lat")[1]) == 2
     polys = spark.createDataFrame(polys_pdf)
-    plans = [joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=n) for n in (None, 4)]
-    plans.append(joins.pip_join_shuffle_adaptive(pts, polys, zoom=6, hot_threshold=0))
-    for i, plan in enumerate(plans):
-        assert sorted((r.url, r.polygon_id) for r in plan.collect()) == want, i
+    for n_salt in (None, 4):
+        plan = joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=n_salt)
+        assert sorted((r.url, r.polygon_id) for r in plan.collect()) == want, n_salt
 

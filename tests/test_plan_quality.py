@@ -356,11 +356,21 @@ def test_run_tiling_counts_its_input_inside_the_write(spark, tmp_path):
         assert any("InsertIntoHadoopFsRelationCommand" in n for n in nodes), (desc, nodes)
 
 
+def _hot_spot(spark, n: int):
+    """``n`` (url, lon, lat) points in one zoom-6 cell, inside a
+    make_polygons grid polygon."""
+    return spark.range(n).select(
+        F.concat(F.lit("h"), F.col("id").cast("string")).alias("url"),
+        (12.3 + F.col("id") % 10 / 100.0).alias("lon"),
+        (45.2 + F.col("id") % 7 / 100.0).alias("lat"),
+    )
+
+
 def test_shuffle_pip_join_crosses_into_python_through_arrow_only(spark):
     """The cell-shuffle PIP join runs every Python stage as a whole-batch
     MapInArrow: the points' cell encode, the polygon cover and the refine,
-    unsalted and salted, with no MapInPandas; the adaptive plan with hot
-    cells split has no MapInPandas either."""
+    unsalted and salted, with no MapInPandas, also when a hot cell is
+    salted (its polygon rows repeat inside the cover)."""
     import re
 
     import pandas as pd
@@ -380,14 +390,15 @@ def test_shuffle_pip_join_crosses_into_python_through_arrow_only(spark):
 
     for n_salt in (None, 4):
         assert _python_nodes(joins.pip_join_shuffle(pts, polys, zoom=6, n_salt=n_salt)) == ["MapInArrow"] * 3
-    adaptive = _python_nodes(joins.pip_join_shuffle_adaptive(pts, polys, zoom=5, hot_threshold=3))
-    # hot path taken: base and fine cell encode and cover, then the refine
-    assert len(adaptive) > 3 and set(adaptive) == {"MapInArrow"}, adaptive
+    hot = pts.unionByName(_hot_spot(spark, 300))
+    assert len(joins._point_occupancy(hot, 6, "lon", "lat")[1]) == 1
+    assert _python_nodes(joins.pip_join_shuffle(hot, polys, zoom=6, n_salt=4)) == ["MapInArrow"] * 3
 
 
 def test_salted_pip_join_runs_as_hash_join(spark):
     """With automatic broadcast joins off, AQE re-plans the salted cell
-    equi-join from its measured sizes as a ShuffledHashJoin: nothing under
+    equi-join (a hot spot holds 200 of the 500 points, so its cell is
+    salted) from its measured sizes as a ShuffledHashJoin: nothing under
     the caller's own aggregate sorts or aggregates (the salted path has no
     dedup), and the call runs 4 Spark jobs (two shuffle map stages, the
     refine with the partial aggregate, the final aggregate).  With the
@@ -401,7 +412,8 @@ def test_salted_pip_join_runs_as_hash_join(spark):
     pts = spark.createDataFrame(
         pd.DataFrame({"url": [f"u{i % 250}" for i in range(300)], "lon": [i % 90 - 45.0 for i in range(300)],
                       "lat": [i % 60 - 30.0 for i in range(300)]})
-    )
+    ).unionByName(_hot_spot(spark, 200))
+    assert len(joins._point_occupancy(pts, 6, "lon", "lat")[1]) == 1
     polys = spark.createDataFrame(make_polygons(80))
     threshold = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
     assert spark.conf.get(threshold) == "64MB"
@@ -458,3 +470,21 @@ def test_shuffle_pip_join_occupancy_pass_is_one_scan_job(spark):
         executed = spark._jsparkSession.sharedState().statusStore().execution(ex).get().physicalPlanDescription()
         (inputs,) = re.findall(r"\(\d+\) MapInArrow\s*\nInput \[\d+\]: \[(.*?)\]", executed)
         assert [c.split("#")[0] for c in inputs.split(", ")] == ["lon", "lat"], executed
+
+
+def test_knn_join_names_its_eager_passes(spark):
+    """Every Spark job that a ``strategy="rings"`` kNN call starts carries
+    its round's description, ``joins.knn_join ring=<r>``, and the ``auto``
+    probe's bounded collect is described ``joins.knn_join probe``."""
+    from engine import joins
+
+    pts = _lonlat(spark, 2000).withColumn("name", F.concat_ws(",", "lon", "lat"))
+    qs = _lonlat(spark, 40).withColumn("qid", F.concat_ws(",", "lon", "lat"))
+    jobs = _tagged_jobs(
+        spark, "plan-knn-rings", lambda: joins.knn_join(qs, pts, k=3, zoom=4, max_ring=4, strategy="rings")
+    )
+    descs = {d for d, _, _ in jobs}
+    assert jobs and "joins.knn_join ring=1" in descs, jobs
+    assert descs <= {"joins.knn_join ring=1", "joins.knn_join ring=2", "joins.knn_join ring=4"}, jobs
+    jobs = _tagged_jobs(spark, "plan-knn-probe", lambda: joins.knn_join(qs, pts, k=3))
+    assert [d for d, _, _ in jobs] == ["joins.knn_join probe"], jobs
