@@ -1468,59 +1468,6 @@ _ALGEBRA_LAYERS_SQL = """
 """
 
 
-def _q_layer_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layer algebra Intersection (ogrlayer.cpp:1954) via the exact overlay
-    kernel (triangulation + convex clipping): 10° grid × offset 15° grid.
-    The kernel is fully general (concave OK, test_clip.py); rectangles here
-    make the result independently rectangle-math-checkable."""
-    from engine import algebra
-
-    a = spark.createDataFrame(_grid_polygons_pdf())
-    b = spark.createDataFrame(_grid15_polygons_pdf())
-    out = algebra.layer_intersection(a, b, res=10.0)
-    return out.select("a_id", "b_id", F.round("area", 6).alias("area"))
-
-
-def _sql_layer_intersection() -> str:
-    return f"""
-        WITH {_ALGEBRA_LAYERS_SQL}
-        SELECT a_id, b_id,
-               ROUND(CAST((least(ax1, bx1) - greatest(ax0, bx0))
-                        * (least(ay1, by1) - greatest(ay0, by0)) AS DOUBLE), 6) AS area
-        FROM a, b
-        WHERE least(ax1, bx1) > greatest(ax0, bx0)
-          AND least(ay1, by1) > greatest(ay0, by0)
-    """
-
-
-def _q_layer_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layer algebra Erase (ogrlayer.cpp:3660): input minus union of all
-    overlapping method polygons, grouped subtraction per input feature."""
-    from engine import algebra
-
-    a = spark.createDataFrame(_grid_polygons_pdf())
-    b = spark.createDataFrame(_grid15_polygons_pdf())
-    out = algebra.layer_erase(a, b, res=10.0)
-    return out.where(F.col("area") > 1e-9).select("a_id", F.round("area", 6).alias("area"))
-
-
-def _sql_layer_erase() -> str:
-    return f"""
-        WITH {_ALGEBRA_LAYERS_SQL}, ov AS (
-            SELECT a_id,
-                   SUM((least(ax1, bx1) - greatest(ax0, bx0))
-                     * (least(ay1, by1) - greatest(ay0, by0))) AS covered
-            FROM a, b
-            WHERE least(ax1, bx1) > greatest(ax0, bx0)
-              AND least(ay1, by1) > greatest(ay0, by0)
-            GROUP BY a_id
-        )
-        SELECT a.a_id, ROUND(CAST(100.0 - COALESCE(ov.covered, 0) AS DOUBLE), 6) AS area
-        FROM a LEFT JOIN ov USING (a_id)
-        WHERE 100.0 - COALESCE(ov.covered, 0) > 1e-9
-    """
-
-
 def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASOF join (Spark-native superset row of SURVEY §2.3): each event,
     placed on a deterministic 1995-2001 time axis, picks the latest order
@@ -1557,54 +1504,6 @@ def _sql_asof_join() -> str:
         )
         SELECT l.event_id, r.asof_orderkey
         FROM l ASOF LEFT JOIN r ON l.k = r.k AND l.t >= r.t
-    """
-
-
-def _q_layer_sym_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layer algebra SymDifference (ogrlayer.cpp:2564) — GROUPED per
-    feature: each input row = input minus ALL intersecting methods (b_id
-    NULL) plus the symmetric method-side rows (a_id NULL); features
-    touching nothing pass through whole."""
-    from engine import algebra
-
-    a = spark.createDataFrame(_grid_polygons_pdf())
-    b = spark.createDataFrame(_grid15_polygons_pdf())
-    out = algebra.layer_sym_difference(a, b, res=10.0)
-    return out.where(F.col("area") > 1e-9).select(
-        "a_id", "b_id", F.round("area", 6).alias("area")
-    )
-
-
-def _sql_layer_sym_difference() -> str:
-    # both grids are internally non-overlapping, so per-feature covered
-    # area = Σ pairwise rectangle overlaps
-    return f"""
-        WITH {_ALGEBRA_LAYERS_SQL}, ov_a AS (
-            SELECT a_id,
-                   SUM((least(ax1, bx1) - greatest(ax0, bx0))
-                     * (least(ay1, by1) - greatest(ay0, by0))) AS covered
-            FROM a, b
-            WHERE least(ax1, bx1) > greatest(ax0, bx0)
-              AND least(ay1, by1) > greatest(ay0, by0)
-            GROUP BY a_id
-        ), ov_b AS (
-            SELECT b_id,
-                   SUM((least(ax1, bx1) - greatest(ax0, bx0))
-                     * (least(ay1, by1) - greatest(ay0, by0))) AS covered
-            FROM a, b
-            WHERE least(ax1, bx1) > greatest(ax0, bx0)
-              AND least(ay1, by1) > greatest(ay0, by0)
-            GROUP BY b_id
-        )
-        SELECT a.a_id, CAST(NULL AS INTEGER) AS b_id,
-               ROUND(CAST(100.0 - COALESCE(ov_a.covered, 0) AS DOUBLE), 6) AS area
-        FROM a LEFT JOIN ov_a USING (a_id)
-        WHERE 100.0 - COALESCE(ov_a.covered, 0) > 1e-9
-        UNION ALL
-        SELECT CAST(NULL AS INTEGER) AS a_id, b.b_id,
-               ROUND(CAST(225.0 - COALESCE(ov_b.covered, 0) AS DOUBLE), 6) AS area
-        FROM b LEFT JOIN ov_b USING (b_id)
-        WHERE 225.0 - COALESCE(ov_b.covered, 0) > 1e-9
     """
 
 

@@ -3,7 +3,7 @@ Identity / Update / Clip / Erase over polygon layers.
 
 Reference: the OGRLayer algebra family (ogr/ogrsf_frmts/generic/
 ogrlayer.cpp:1954 Intersection, :2220 Union, :2564 SymDifference, :2875
-Identity, :3149 Update, :3424 Clip, :3660 Erase).  The reference runs an
+Identity, :3149 Update, :3424 Clip, :3660 Erase).  The reference runs one
 index-nested-loop per input feature with an envelope prefilter and a GEOS
 overlay per candidate pair.  Distributed re-expression:
 
@@ -13,11 +13,16 @@ overlay per candidate pair.  Distributed re-expression:
 2. **owner-cell dedup** — a pair spanning k cells appears k times; the pair
    is kept only in the cell containing the lower-left corner of the bbox
    intersection, so no ``distinct`` shuffle is needed;
-3. **refine** — the exact overlay kernel (:mod:`engine.clip`) runs per pair
-   inside ``mapInPandas`` (pairwise ops) or grouped by input feature inside
-   ``applyInPandas`` (Erase/Clip need all method matches of one input
-   together — the same grouping the reference achieves by its per-input
-   inner loop, :2028-2054).
+3. **one overlay pass** (:func:`overlay`) — the candidate pairs plus every
+   input row, repartitioned by input id and sort-grouped in one
+   ``mapInPandas`` (method rows in ``b_id`` order), the reference's
+   per-input inner loop (:2028-2054).  Per input feature the exact kernel
+   (:mod:`engine.clip`) emits what the op asks for: the per-pair pieces
+   a∩b, the leftover a − ∪b or the clip a ∩ ∪b, and an input with no
+   candidate whole.  Every op is one pass, or two with the roles swapped
+   (Union, SymDifference) joined by ``unionByName``; no op re-derives
+   another.  The line-layer ops (:mod:`engine.lineclip`) run the same pass
+   with a line kernel.
 
 Result schema follows the reference: concat of both layers' id fields;
 non-empty, dimension-preserving results only (area > 0, ogrlayer.cpp:
@@ -25,60 +30,65 @@ non-empty, dimension-preserving results only (area > 0, ogrlayer.cpp:
 (see engine/clip.py module doc) serialized as WKB MultiPolygon.
 
 Layer input contract: DataFrame (id_col int, geom_wkb binary) — bbox
-columns are derived if absent.  Polygons may carry interior rings (holes
-bridge-cut into the exterior before triangulation).
+columns are derived if absent; a null or unreadable ``geom_wkb`` raises
+``ValueError`` naming the layer side and feature id.  Polygons may carry
+interior rings (holes bridge-cut into the exterior before triangulation).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import struct
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from . import clip, geom
+from .vector import shoelace_area_py, st_area
 
 WORLD_X0, WORLD_Y0 = -180.0, -90.0
 
-
-def _parts(wkb: bytes):
-    """WKB → list of polygon parts, each [exterior, hole, ...] — holes via
-    bridge-cut triangulation, MultiPolygon members as disjoint parts."""
-    return geom.polygon_parts(wkb)
+_PREPARED: dict = {}
+_PREPARED_MAX = 4096
 
 
-_TRIS_CACHE: dict = {}
+def prepared(wkb: bytes, build: Callable):
+    """``build(wkb)``, memoized per executor worker in one bounded
+    first-in-first-out cache.  Method-layer geometries repeat across
+    thousands of candidate pairs; re-triangulating per pair dominated the
+    overlay refine profile."""
+    key = (build, bytes(wkb))
+    hit = _PREPARED.get(key)
+    if hit is None:
+        if len(_PREPARED) >= _PREPARED_MAX:
+            del _PREPARED[next(iter(_PREPARED))]
+        hit = _PREPARED[key] = build(key[1])
+    return hit
 
 
-def _parts_tris(wkb: bytes) -> list:
-    """Memoized per-executor triangulation of a polygon WKB → list of
-    PreTriangulated covers (one per MultiPolygon part).  Method-layer
-    polygons repeat across thousands of candidate pairs; re-triangulating
-    per pair dominated the overlay refine profile."""
-    key = bytes(wkb)
-    hit = _TRIS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    out = [clip.PreTriangulated(clip._tris(part)) for part in _parts(key)]
-    if len(_TRIS_CACHE) < 4096:
-        _TRIS_CACHE[key] = out
-    return out
-
-
-def with_bbox(df: DataFrame, wkb_col: str = "geom_wkb") -> DataFrame:
-    """Attach (minx,miny,maxx,maxy) sidecar columns (OGRGeometry::getEnvelope)."""
-    if "minx" in df.columns:
-        return df
+def _envelopes(layer: DataFrame, side: str) -> DataFrame:
+    """Attach (minx,miny,maxx,maxy) sidecar columns (OGRGeometry::getEnvelope)
+    unless present.  The UDF is marked nondeterministic so the optimizer
+    keeps it in one place instead of evaluating it again under the
+    ``isnotnull`` filters the candidate join infers."""
+    if "minx" in layer.columns:
+        return layer
 
     @F.pandas_udf("minx double, miny double, maxx double, maxy double")
-    def _env(wkb: pd.Series) -> pd.DataFrame:
-        rows = [geom.envelope(b) for b in wkb]
+    def _env(fid: pd.Series, wkb: pd.Series) -> pd.DataFrame:
+        rows = []
+        for i, b in zip(fid, wkb):
+            try:
+                rows.append(geom.envelope(b))
+            except (TypeError, ValueError, IndexError, KeyError, struct.error) as e:
+                what = "null geom_wkb" if b is None else f"unreadable geom_wkb ({type(e).__name__}: {e})"
+                raise ValueError(f"{side} layer feature {i}: {what}") from None
         return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
 
-    return df.withColumn("_bb", _env(F.col(wkb_col))).select("*", "_bb.*").drop("_bb")
+    env = _env.asNondeterministic()(F.col(layer.columns[0]), F.col("geom_wkb"))
+    return layer.withColumn("_bb", env).select("*", "_bb.*").drop("_bb")
 
 
 def _cover_cells(df: DataFrame, res: float, prefix: str) -> DataFrame:
@@ -96,10 +106,10 @@ def _cover_cells(df: DataFrame, res: float, prefix: str) -> DataFrame:
     )
 
 
-def _prefixed(layer: DataFrame, id_out: str, wkb_out: str, prefix: str) -> DataFrame:
-    return with_bbox(layer).select(
-        F.col(layer.columns[0]).cast("int").alias(id_out),
-        F.col("geom_wkb").alias(wkb_out),
+def _prefixed(layer: DataFrame, side: str, prefix: str) -> DataFrame:
+    return _envelopes(layer, side).select(
+        F.col(layer.columns[0]).cast("int").alias(f"{prefix}id"),
+        F.col("geom_wkb").alias(f"{prefix}wkb"),
         F.col("minx").alias(f"{prefix}minx"), F.col("miny").alias(f"{prefix}miny"),
         F.col("maxx").alias(f"{prefix}maxx"), F.col("maxy").alias(f"{prefix}maxy"),
     )
@@ -108,8 +118,8 @@ def _prefixed(layer: DataFrame, id_out: str, wkb_out: str, prefix: str) -> DataF
 def pair_candidates(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
     """Candidate (input, method) pairs whose bboxes overlap, each pair
     exactly once (owner-cell rule).  Columns: (a_id, a_wkb, b_id, b_wkb)."""
-    ae = _cover_cells(_prefixed(inp, "a_id", "a_wkb", "a_"), res, "a_")
-    be = _cover_cells(_prefixed(method, "b_id", "b_wkb", "b_"), res, "b_")
+    ae = _cover_cells(_prefixed(inp, "input", "a_"), res, "a_")
+    be = _cover_cells(_prefixed(method, "method", "b_"), res, "b_")
     j = ae.join(be, on="cell")
     overlap = (
         (F.col("a_minx") <= F.col("b_maxx")) & (F.col("b_minx") <= F.col("a_maxx"))
@@ -126,43 +136,157 @@ def pair_candidates(inp: DataFrame, method: DataFrame, res: float = 10.0) -> Dat
     return j.where(overlap & (F.col("cell") == owner)).select("a_id", "a_wkb", "b_id", "b_wkb")
 
 
-_PAIR_SCHEMA = "a_id int, b_id int, n_pieces long, area double, geom_wkb binary"
+class Kernel(NamedTuple):
+    """What the overlay pass computes for one geometry type."""
+
+    count: str  # output column: pieces or parts per row
+    measure: str  # output column: area or length
+    load: Callable  # input WKB -> geometry
+    prepare: Callable  # method WKB -> cached prepared geometry
+    pair: Callable  # (input, prepared method) -> pieces of a∩b
+    rest: Callable  # (input, [prepared method], erase) -> pieces of a − ∪b or a ∩ ∪b
+    summary: Callable  # non-empty pieces -> (count, measure, WKB)
+    whole: Callable  # WKB of an input with no candidate -> its measure
 
 
-def _overlay_pairs(pairs: DataFrame, op: str) -> DataFrame:
-    """Pairwise intersection via mapInPandas — each candidate pair is
-    independent, no further shuffle.
+def _poly_prepare(wkb: bytes) -> list:
+    """Polygon WKB → one triangle cover per MultiPolygon part."""
+    return [clip.PreTriangulated(clip._tris(part)) for part in geom.polygon_parts(wkb)]
 
-    MultiPolygon semantics: intersection sums over part pairs (parts are
-    disjoint, so pieces can't overlap)."""
-    assert op == "intersection"
 
-    def _refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _poly_pair(a: list, b: list) -> list:
+    # parts are disjoint, so pieces of different part pairs cannot overlap
+    return [p for pa in a for pb in b for p in clip.intersection_pieces(pa, pb)]
+
+
+def _poly_rest(a: list, bs: list, erase: bool) -> list:
+    fn = clip.erase_pieces if erase else clip.clip_pieces
+    b_parts = [part for b in bs for part in b]
+    return [p for pa in a for p in fn(pa, b_parts)]
+
+
+def _poly_summary(pieces: list) -> tuple:
+    return len(pieces), clip.pieces_area(pieces), geom.wkb_multipolygon([[p] for p in pieces])
+
+
+POLYGONS = Kernel(
+    "n_pieces", "area", geom.polygon_parts, _poly_prepare, _poly_pair, _poly_rest, _poly_summary, shoelace_area_py
+)
+
+
+def _emit(pdf: pd.DataFrame, kernel: Kernel, pieces: bool, rest: str | None) -> Iterator[tuple]:
+    """Output rows of one sorted batch: per run of equal ``a_id`` (one
+    input feature, its method rows in ``b_id`` order after the input's own
+    row, whose ``b_wkb`` is null)."""
+    a_ids = pdf["a_id"].to_numpy()
+    aw, b_ids, bw = pdf["a_wkb"].to_numpy(), pdf["b_id"].to_numpy(), pdf["b_wkb"].to_numpy()
+    starts = np.flatnonzero(np.r_[True, a_ids[1:] != a_ids[:-1]])
+    for s, e in zip(starts, np.r_[starts[1:], len(a_ids)]):
+        fid = a_ids[s]
+        bs = [(b_ids[i], prepared(bw[i], kernel.prepare)) for i in range(s, e) if bw[i] is not None]
+        if not bs:
+            if rest == "erase":  # no candidate: the input passes through whole
+                yield fid, None, 1, kernel.whole(aw[s]), aw[s]
+            continue
+        a = kernel.load(aw[s])
+        if pieces:
+            for bid, b in bs:
+                got = kernel.pair(a, b)
+                if got:  # dimension-preserving only (ogrlayer.cpp:2038-2054)
+                    yield (fid, bid, *kernel.summary(got))
+        if rest is not None:
+            got = kernel.rest(a, [b for _, b in bs], rest == "erase")
+            if got:
+                yield (fid, None, *kernel.summary(got))
+
+
+def overlay(
+    pairs: DataFrame, kernel: Kernel, inputs: DataFrame | None = None, pieces: bool = True, rest: str | None = None
+) -> DataFrame:
+    """The layer algebra's one overlay pass over candidate ``pairs``
+    (a_id, a_wkb, b_id, b_wkb).  Per input feature it emits:
+
+    * ``pieces``: one row per candidate pair with a non-empty a∩b;
+    * ``rest="erase"``: a − ∪b with ``b_id`` NULL, and every ``inputs``
+      row (id, geom_wkb) with no candidate whole (count 1, its own measure);
+    * ``rest="clip"``: a ∩ ∪b with ``b_id`` NULL.
+
+    A rest needs every candidate of one input together, so the rows are
+    repartitioned by ``a_id`` and sort-grouped; a pieces-only pass maps
+    the candidate rows where they are.  Columns: (a_id, b_id, <count>,
+    <measure>, geom_wkb)."""
+    table = pairs
+    if inputs is not None:
+        table = table.unionByName(
+            inputs.select(
+                F.col(inputs.columns[0]).cast("int").alias("a_id"), F.col("geom_wkb").alias("a_wkb"),
+                F.lit(None).cast("int").alias("b_id"), F.lit(None).cast("binary").alias("b_wkb"),
+            )
+        )
+    if rest is not None:
+        # explicit partition count: the refine is Python-CPU-bound per input
+        # feature; AQE's size coalesce would serialize it
+        table = table.repartition(table.sparkSession.sparkContext.defaultParallelism, "a_id")
+    cols = ["a_id", "b_id", kernel.count, kernel.measure, "geom_wkb"]
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if rest is not None:  # one partition holds whole groups: sort it as one
+            got = list(batches)
+            batches = [pd.concat(got, ignore_index=True)] if got else []
         for pdf in batches:
-            out = {k: [] for k in ("a_id", "b_id", "n_pieces", "area", "geom_wkb")}
-            for i in range(len(pdf)):
-                a_parts = _parts(pdf["a_wkb"].iat[i])
-                b_parts = _parts_tris(pdf["b_wkb"].iat[i])
-                pieces = []
-                for pa in a_parts:
-                    for pb in b_parts:
-                        pieces.extend(clip.intersection_pieces(pa, pb))
-                if not pieces:
-                    continue  # dimension-preserving only (ogrlayer.cpp:2038-2054)
-                out["a_id"].append(pdf["a_id"].iat[i])
-                out["b_id"].append(pdf["b_id"].iat[i])
-                out["n_pieces"].append(len(pieces))
-                out["area"].append(clip.pieces_area(pieces))
-                out["geom_wkb"].append(geom.wkb_multipolygon([[p] for p in pieces]))
-            yield pd.DataFrame(out)
+            if pdf.empty:
+                continue
+            pdf = pdf.sort_values(["a_id", "b_id"], kind="stable", na_position="first")
+            yield pd.DataFrame(list(_emit(pdf, kernel, pieces, rest)), columns=cols)
 
-    return pairs.mapInPandas(_refine, _PAIR_SCHEMA)
+    return table.mapInPandas(_run, f"a_id int, b_id int, {kernel.count} long, {kernel.measure} double, geom_wkb binary")
+
+
+def _swapped(pairs: DataFrame) -> DataFrame:
+    """Candidate pairs with the roles swapped: the owner-cell rule is
+    symmetric, so these are exactly ``pair_candidates(method, inp)``."""
+    return pairs.select(
+        F.col("b_id").alias("a_id"), F.col("b_wkb").alias("a_wkb"),
+        F.col("a_id").alias("b_id"), F.col("a_wkb").alias("b_wkb"),
+    )
+
+
+def _as_method(df: DataFrame) -> DataFrame:
+    """A swapped pass's rows, keyed by the method layer's id."""
+    return df.select(F.lit(None).cast("int").alias("a_id"), F.col("a_id").alias("b_id"), "n_pieces", "area", "geom_wkb")
 
 
 def layer_intersection(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
     """OGRLayer::Intersection (ogrlayer.cpp:1954): one row per intersecting
     pair with the overlay geometry + area."""
-    return _overlay_pairs(pair_candidates(inp, method, res), "intersection")
+    return overlay(pair_candidates(inp, method, res), POLYGONS)
+
+
+def layer_erase(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
+    """OGRLayer::Erase (ogrlayer.cpp:3660): input minus union of methods;
+    inputs with no candidate pass through whole (:3700-3720)."""
+    pairs = pair_candidates(inp, method, res)
+    return overlay(pairs, POLYGONS, inp, pieces=False, rest="erase").drop("b_id")
+
+
+def layer_clip(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
+    """OGRLayer::Clip (ogrlayer.cpp:3424): input ∩ union of methods; inputs
+    outside every method polygon vanish."""
+    return overlay(pair_candidates(inp, method, res), POLYGONS, pieces=False, rest="clip").drop("b_id")
+
+
+def layer_identity(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
+    """OGRLayer::Identity (ogrlayer.cpp:2875): intersection pairs + the
+    leftover parts of inputs (method id NULL)."""
+    return overlay(pair_candidates(inp, method, res), POLYGONS, inp, rest="erase")
+
+
+def layer_union(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
+    """OGRLayer::Union (ogrlayer.cpp:2220): intersection pairs + input
+    leftovers (b_id NULL) + method leftovers (a_id NULL)."""
+    pairs = pair_candidates(inp, method, res)
+    right = overlay(_swapped(pairs), POLYGONS, method, pieces=False, rest="erase")
+    return overlay(pairs, POLYGONS, inp, rest="erase").unionByName(_as_method(right))
 
 
 def layer_sym_difference(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
@@ -170,98 +294,11 @@ def layer_sym_difference(inp: DataFrame, method: DataFrame, res: float = 10.0) -
     feature = that input minus ALL intersecting method features (b_id
     NULL), plus the symmetric method-side rows (a_id NULL) — the
     reference's per-feature difference loop, not a pairwise A△B.  Features
-    intersecting nothing pass through whole (the loop is a no-op for
-    them).  Reuses the Erase grouping in both directions."""
-    left = layer_erase(inp, method, res).select(
-        "a_id", F.lit(None).cast("int").alias("b_id"), "n_pieces", "area", "geom_wkb"
-    )
-    right = layer_erase(method, inp, res).select(
-        F.lit(None).cast("int").alias("a_id"), F.col("a_id").alias("b_id"),
-        "n_pieces", "area", "geom_wkb",
-    )
-    return left.unionByName(right)
-
-
-_GROUP_SCHEMA = "a_id int, n_pieces long, area double, geom_wkb binary"
-
-
-def _grouped_overlay(inp: DataFrame, method: DataFrame, res: float, op: str, keep_unmatched: bool) -> DataFrame:
-    """Erase/Clip: every method match of one input must be subtracted from /
-    intersected with that input *jointly* → group candidate pairs by input id
-    (the reference's per-input inner loop, ogrlayer.cpp:3424,3660)."""
-    fn = {"erase": clip.erase_pieces, "clip": clip.clip_pieces}[op]
-    id_col = inp.columns[0]
+    intersecting nothing pass through whole."""
     pairs = pair_candidates(inp, method, res)
-
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        b_polys = [part for b in pdf["b_wkb"] for part in _parts_tris(b)]
-        pieces = []
-        for pa in _parts(pdf["a_wkb"].iat[0]):
-            pieces.extend(fn(pa, b_polys))
-        if not pieces:
-            return pd.DataFrame({k: [] for k in ("a_id", "n_pieces", "area", "geom_wkb")})
-        return pd.DataFrame(
-            {
-                "a_id": [pdf["a_id"].iat[0]],
-                "n_pieces": [len(pieces)],
-                "area": [clip.pieces_area(pieces)],
-                "geom_wkb": [geom.wkb_multipolygon([[p] for p in pieces])],
-            }
-        )
-
-    # explicit partition count: the overlay refine is Python-CPU-bound per
-    # input feature; AQE's size coalesce would serialize it
-    nparts = inp.sparkSession.sparkContext.defaultParallelism
-    matched = pairs.repartition(nparts, "a_id").groupBy("a_id").applyInPandas(_apply, _GROUP_SCHEMA)
-    if not keep_unmatched:
-        return matched
-    # inputs with no bbox-overlapping method feature pass through whole
-    # (Erase emits them unchanged, ogrlayer.cpp:3700-3720 result copy)
-    untouched = (
-        inp.join(pairs.select(F.col("a_id").alias(id_col)).distinct(), on=id_col, how="left_anti")
-        .select(
-            F.col(id_col).cast("int").alias("a_id"),
-            F.lit(1).cast("long").alias("n_pieces"),
-            vector_area(F.col("geom_wkb")).alias("area"),
-            F.col("geom_wkb"),
-        )
-    )
-    return matched.unionByName(untouched)
-
-
-def layer_erase(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
-    """OGRLayer::Erase (ogrlayer.cpp:3660): input minus union of methods."""
-    return _grouped_overlay(inp, method, res, "erase", keep_unmatched=True)
-
-
-def layer_clip(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
-    """OGRLayer::Clip (ogrlayer.cpp:3424): input ∩ union of methods; inputs
-    outside every method polygon vanish."""
-    return _grouped_overlay(inp, method, res, "clip", keep_unmatched=False)
-
-
-def layer_identity(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
-    """OGRLayer::Identity (ogrlayer.cpp:2875): intersection pairs + the
-    leftover parts of inputs (method id NULL)."""
-    inter = layer_intersection(inp, method, res)
-    leftover = layer_erase(inp, method, res).select(
-        "a_id", F.lit(None).cast("int").alias("b_id"), "n_pieces", "area", "geom_wkb"
-    )
-    return inter.unionByName(leftover)
-
-
-def layer_union(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
-    """OGRLayer::Union (ogrlayer.cpp:2220): intersection pairs + input
-    leftovers (b_id NULL) + method leftovers (a_id NULL)."""
-    inter = layer_intersection(inp, method, res)
-    left = layer_erase(inp, method, res).select(
-        "a_id", F.lit(None).cast("int").alias("b_id"), "n_pieces", "area", "geom_wkb"
-    )
-    right = layer_erase(method, inp, res).select(
-        F.lit(None).cast("int").alias("a_id"), F.col("a_id").alias("b_id"),
-        "n_pieces", "area", "geom_wkb",
-    )
-    return inter.unionByName(left).unionByName(right)
+    left = overlay(pairs, POLYGONS, inp, pieces=False, rest="erase")
+    right = overlay(_swapped(pairs), POLYGONS, method, pieces=False, rest="erase")
+    return left.unionByName(_as_method(right))
 
 
 def layer_update(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFrame:
@@ -271,17 +308,8 @@ def layer_update(inp: DataFrame, method: DataFrame, res: float = 10.0) -> DataFr
         F.lit(None).cast("int").alias("a_id"),
         F.col(method.columns[0]).cast("int").alias("b_id"),
         F.lit(1).cast("long").alias("n_pieces"),
-        vector_area(F.col("geom_wkb")).alias("area"),
+        st_area(F.col("geom_wkb")).alias("area"),
         F.col("geom_wkb"),
     )
-    left = layer_erase(inp, method, res).select(
-        "a_id", F.lit(None).cast("int").alias("b_id"), "n_pieces", "area", "geom_wkb"
-    )
-    return whole.unionByName(left)
-
-
-@F.pandas_udf(DoubleType())
-def vector_area(wkb: pd.Series) -> pd.Series:
-    from .vector import shoelace_area_py
-
-    return wkb.map(lambda b: shoelace_area_py(b) if b is not None else None)
+    pairs = pair_candidates(inp, method, res)
+    return whole.unionByName(overlay(pairs, POLYGONS, inp, pieces=False, rest="erase"))

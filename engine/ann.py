@@ -25,6 +25,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import job_description
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -217,12 +219,13 @@ def _kmeans_parallel_seeds(
     """
     spark = src.sparkSession
     ell = float(oversample if oversample is not None else 2 * k)
-    first = (
-        src.withColumn("_h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("_h", id_col)
-        .limit(1)
-        .collect()[0]
-    )
+    with job_description(spark, "ann.kmeans_seeds round=0"):
+        first = (
+            src.withColumn("_h", F.md5(F.col(id_col).cast("string")))
+            .orderBy("_h", id_col)
+            .limit(1)
+            .collect()[0]
+        )
     cand = {first[id_col]: [float(x) for x in first[vec_col]]}
 
     def _cdf(vals):
@@ -238,15 +241,16 @@ def _kmeans_parallel_seeds(
             .groupBy(id_col, vec_col)
             .agg(F.min("_d2").alias("_dmin"))
         )
-        tot = dmin.agg(F.sum("_dmin").alias("s")).collect()[0].s
-        if not tot or tot <= 0.0:
-            break  # every point coincides with a candidate
         # deterministic uniform in [0,1): top 60 bits of md5(id:round)
         u = (
             F.conv(F.substring(F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(r)))), 1, 15), 16, 10)
             .cast("double") / float(1 << 60)
         )
-        picked = dmin.where(u < F.col("_dmin") * (ell / float(tot))).collect()
+        with job_description(spark, f"ann.kmeans_seeds round={r + 1}"):
+            tot = dmin.agg(F.sum("_dmin").alias("s")).collect()[0].s
+            if not tot or tot <= 0.0:
+                break  # every point coincides with a candidate
+            picked = dmin.where(u < F.col("_dmin") * (ell / float(tot))).collect()
         for row in picked:
             cand.setdefault(row[id_col], [float(x) for x in row[vec_col]])
         if len(cand) >= max(k, 1) and r >= 1 and len(cand) >= 4 * k:
@@ -254,7 +258,7 @@ def _kmeans_parallel_seeds(
     # weighting pass: points per nearest candidate (ties → smaller cid)
     ids = sorted(cand.keys())
     vecs = [cand[i] for i in ids]
-    w_rows = (
+    weighted = (
         src.join(F.broadcast(_cdf(vecs)))
         .select(id_col, F.col("cid"), d2.alias("_d2"))
         .withColumn(
@@ -266,9 +270,9 @@ def _kmeans_parallel_seeds(
         .where(F.col("_rn") == 1)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("w"))
-        .collect()
     )
-    weights = {r.cid: int(r.w) for r in w_rows}
+    with job_description(spark, "ann.kmeans_seeds weights"):
+        weights = {r.cid: int(r.w) for r in weighted.collect()}
     # driver-side deterministic weighted greedy k-center over the candidates
     # (≤ rounds·2k rows — model-sized, not data-sized)
     arr = np.asarray(vecs, dtype=np.float64)
@@ -309,7 +313,8 @@ def kmeans_fit(
     data).
     """
     spark = emb.sparkSession
-    src = emb.select(F.col(id_col), F.col(vec_col)).localCheckpoint(eager=True)
+    with job_description(spark, "ann.kmeans_fit input"):
+        src = emb.select(F.col(id_col), F.col(vec_col)).localCheckpoint(eager=True)
     seeds = _kmeans_parallel_seeds(src, k, vec_col=vec_col, id_col=id_col)
     cents = {i: v for i, v in enumerate(seeds)}
 
@@ -318,7 +323,7 @@ def kmeans_fit(
             [(i, v) for i, v in sorted(cents.items())], schema="cid int, cvec array<double>"
         )
 
-    for _ in range(max_iters):
+    for it in range(max_iters):
         assigned = ivf_assign(src, _cdf(), vec_col, id_col)
         means = (
             src.join(assigned, on=id_col)
@@ -328,8 +333,9 @@ def kmeans_fit(
             .groupBy("cluster")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
             .select("cluster", F.transform("pm", lambda s: s["m"]).alias("mean"))
-            .collect()
         )
+        with job_description(spark, f"ann.kmeans_fit iter={it}"):
+            means = means.collect()
         new = dict(cents)
         moved = 0.0
         for r in means:
@@ -388,7 +394,8 @@ def pq_train(
     Returns (sub, code, cvec) — m·ksub rows of model parameters.
     """
     spark = emb.sparkSession
-    sub = _subvectors(emb, m, vec_col, id_col).localCheckpoint(eager=True)
+    with job_description(spark, "ann.pq_train input"):
+        sub = _subvectors(emb, m, vec_col, id_col).localCheckpoint(eager=True)
 
     # Seeds = the ksub subvectors with the smallest md5(id) per subspace.
     # A global window partitioned by `sub` alone would funnel ALL rows into
@@ -419,8 +426,9 @@ def pq_train(
         local.withColumn("_r", F.row_number().over(w))
         .where(F.col("_r") <= ksub)
         .select("sub", (F.col("_r") - 1).alias("code"), F.col("svec").alias("cvec"))
-        .collect()
     )
+    with job_description(spark, "ann.pq_train seeds"):
+        seeds = seeds.collect()
     cents = {(r["sub"], r["code"]): [float(x) for x in r["cvec"]] for r in seeds}
 
     def _cdf():
@@ -456,7 +464,7 @@ def pq_train(
             lambda s: F.struct(d2(s["cvec"]).alias("d"), s["code"].alias("code")),
         )
     )["code"]
-    for _ in range(max_iters):
+    for it in range(max_iters):
         assigned = (
             sub.join(F.broadcast(_cb_arr()), on="sub")
             .select("sub", "svec", best_code.alias("code"))
@@ -474,8 +482,9 @@ def pq_train(
                     "mean"
                 ),
             )
-            .collect()
         )
+        with job_description(spark, f"ann.pq_train iter={it}"):
+            means = means.collect()
         moved = 0.0
         for r in means:
             v = [float(x) for x in r["mean"]]

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .raster import TILE_SIZE, bytes_to_tile
+from .session import job_description
 
 
 class _UF:
@@ -796,12 +797,14 @@ def sieve_filter(
     pruned_edges = pruned.where(F.col("_t") == 1).select(
         F.col("component_id").alias("cid_a"), "cid_b"
     )
-    n_pruned = pruned_nodes.count()
+    with job_description(spark, "components.sieve_filter mode"):
+        n_pruned = pruned_nodes.count()
 
     if n_pruned <= driver_graph_limit:
         _LAST_SIEVE_MODE[0] = "driver"
-        graph_comps = pruned_nodes.collect()
-        graph_edges = pruned_edges.collect()
+        with job_description(spark, "components.sieve_filter driver graph"):
+            graph_comps = pruned_nodes.collect()
+            graph_edges = pruned_edges.collect()
         sizes = {c.component_id: int(c.pixel_count) for c in graph_comps}
         values = {c.component_id: int(c.value) for c in graph_comps}
         adj: dict = {}

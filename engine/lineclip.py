@@ -20,23 +20,20 @@ crossing a polygon emits one LineString per crossing, exactly like the
 GEOS result (vertex set may include piece-boundary points of measure zero
 only at interval joins, which merge away).
 
-Distributed form mirrors engine.algebra: bbox cover-cell candidate join →
-owner-cell dedup → grouped refine (Erase/Clip need all method matches of
-one input jointly; Intersection is per-pair).
+Distributed form is engine.algebra's: bbox cover-cell candidate join →
+owner-cell dedup → its one overlay pass (:func:`engine.algebra.overlay`)
+with the line kernel :data:`LINES` (Erase/Clip need all method matches of
+one input jointly; Intersection maps the candidate pairs where they are).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from . import clip as clipmod
 from . import geom
-from .algebra import pair_candidates
+from .algebra import Kernel, overlay, pair_candidates
 
 _EPS = 1e-12
 
@@ -215,149 +212,57 @@ def lines_length(lines: list) -> float:
     )
 
 
-_PIECES_CACHE: dict = {}
+def _cover(wkb: bytes) -> ConvexCover:
+    """Polygon WKB (holes, MultiPolygon) → ConvexCover of its disjoint
+    convex pieces (cached per worker by the overlay pass)."""
+    pieces = [
+        clipmod.ensure_ccw(p)
+        for part in geom.polygon_parts(wkb) for p in clipmod.triangulate_polygon(part)
+    ]
+    return ConvexCover(pieces)
 
 
-def _poly_pieces(wkb: bytes) -> list:
-    """Polygon WKB (holes, MultiPolygon) → disjoint convex cover.
-
-    Memoized per executor worker: candidate pairs repeat the same method
-    polygon for thousands of input lines, and triangulation dominates the
-    refine cost otherwise (bounded cache — method layers are dimension
-    tables)."""
-    key = bytes(wkb)
-    hit = _PIECES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pieces = []
-    for part in geom.polygon_parts(key):
-        pieces.extend(clipmod.triangulate_polygon(part))
-    out = [clipmod.ensure_ccw(p) for p in pieces]
-    if len(_PIECES_CACHE) < 4096:
-        _PIECES_CACHE[key] = out
-    return out
+def _clip_lines(lines: list, cover: ConvexCover, inside: bool) -> list:
+    return [part for ln in lines for part in clip_line_pieces(ln, cover, keep_inside=inside)]
 
 
-_COVER_CACHE: dict = {}
+def _lines_pair(lines: list, cover: ConvexCover) -> list:
+    return _clip_lines(lines, cover, True)
 
 
-def _poly_cover(wkb: bytes) -> ConvexCover:
-    """Memoized ConvexCover per method polygon: candidate pairs repeat the
-    same polygon for thousands of lines and the cover build (edge-array
-    concat) dominated the refine profile when rebuilt per pair."""
-    key = bytes(wkb)
-    hit = _COVER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cover = ConvexCover(_poly_pieces(key))
-    if len(_COVER_CACHE) < 4096:
-        _COVER_CACHE[key] = cover
-    return cover
+def _lines_rest(lines: list, covers: list, erase: bool) -> list:
+    # the method polygons' disjoint covers act jointly: the interval union
+    # over all their pieces is the union of the polygons
+    cover = covers[0] if len(covers) == 1 else ConvexCover([p for c in covers for p in c.pieces])
+    return _clip_lines(lines, cover, not erase)
 
 
-_PAIR_SCHEMA = "a_id int, b_id int, n_parts long, length double, geom_wkb binary"
-_GROUP_SCHEMA = "a_id int, n_parts long, length double, geom_wkb binary"
+def _lines_summary(parts: list) -> tuple:
+    return len(parts), lines_length(parts), geom.wkb_multilinestring(parts)
+
+
+def _line_length(wkb: bytes) -> float:
+    return lines_length(line_points(wkb))
+
+
+LINES = Kernel("n_parts", "length", line_points, _cover, _lines_pair, _lines_rest, _lines_summary, _line_length)
 
 
 def layer_intersection_lines(lines: DataFrame, polys: DataFrame, res: float = 10.0) -> DataFrame:
     """Line layer ∩ polygon layer, one row per intersecting pair
     (dimension-preserving line result — ogrlayer.cpp:2038-2054)."""
-    pairs = pair_candidates(lines, polys, res)
-
-    def _refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("a_id", "b_id", "n_parts", "length", "geom_wkb")}
-            for r in pdf.itertuples():
-                cover = _poly_cover(r.b_wkb)
-                parts = []
-                for ln in line_points(r.a_wkb):
-                    parts.extend(clip_line_pieces(ln, cover, keep_inside=True))
-                if not parts:
-                    continue
-                out["a_id"].append(r.a_id)
-                out["b_id"].append(r.b_id)
-                out["n_parts"].append(len(parts))
-                out["length"].append(lines_length(parts))
-                out["geom_wkb"].append(geom.wkb_multilinestring(parts))
-            yield pd.DataFrame(out)
-
-    return pairs.mapInPandas(_refine, _PAIR_SCHEMA)
-
-
-def _grouped_lines(lines: DataFrame, polys: DataFrame, res: float, keep_inside: bool, keep_unmatched: bool) -> DataFrame:
-    """Clip/Erase: all method polygons of one input line act JOINTLY (the
-    per-input inner loop of ogrlayer.cpp:3424,3660): their disjoint convex
-    covers concatenate into one cover (clip = union semantics because the
-    interval union over all pieces is the union of the polygons)."""
-    id_col = lines.columns[0]
-    pairs = pair_candidates(lines, polys, res)
-
-    def _apply_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # sort-based manual grouping: one partition holds MANY input lines
-        # (most with 1-2 candidate polygons); per-group applyInPandas or
-        # pandas groupby overhead would dominate at web scale
-        parts_list = list(batches)
-        if not parts_list:
-            return
-        pdf = pd.concat(parts_list, ignore_index=True)
-        if pdf.empty:
-            return
-        a_ids = pdf["a_id"].to_numpy()
-        order = np.argsort(a_ids, kind="stable")
-        a_s = a_ids[order]
-        aw = pdf["a_wkb"].to_numpy()[order]
-        bw = pdf["b_wkb"].to_numpy()[order]
-        starts = np.nonzero(np.concatenate([[True], a_s[1:] != a_s[:-1]]))[0]
-        ends = np.append(starts[1:], a_s.shape[0])
-        out = {k: [] for k in ("a_id", "n_parts", "length", "geom_wkb")}
-        for s, e in zip(starts, ends):
-            if e - s == 1:  # dominant case: one method polygon → cached cover
-                cover = _poly_cover(bw[s])
-            else:
-                pieces = []
-                for i in range(s, e):
-                    pieces.extend(_poly_pieces(bw[i]))
-                cover = ConvexCover(pieces)
-            parts = []
-            for ln in line_points(aw[s]):
-                parts.extend(clip_line_pieces(ln, cover, keep_inside=keep_inside))
-            if not parts:
-                continue
-            out["a_id"].append(int(a_s[s]))
-            out["n_parts"].append(len(parts))
-            out["length"].append(lines_length(parts))
-            out["geom_wkb"].append(geom.wkb_multilinestring(parts))
-        yield pd.DataFrame(out)
-
-    nparts = lines.sparkSession.sparkContext.defaultParallelism
-    matched = pairs.repartition(nparts, "a_id").mapInPandas(_apply_part, _GROUP_SCHEMA)
-    if not keep_unmatched:
-        return matched
-
-    @F.pandas_udf("double")
-    def _len_udf(wkb: pd.Series) -> pd.Series:
-        return wkb.map(lambda b: lines_length(line_points(b)))
-
-    untouched = (
-        lines.join(pairs.select(F.col("a_id").alias(id_col)).distinct(), on=id_col, how="left_anti")
-        .select(
-            F.col(id_col).cast("int").alias("a_id"),
-            F.lit(1).cast("long").alias("n_parts"),
-            _len_udf(F.col("geom_wkb")).alias("length"),
-            F.col("geom_wkb"),
-        )
-    )
-    return matched.unionByName(untouched)
+    return overlay(pair_candidates(lines, polys, res), LINES)
 
 
 def layer_clip_lines(lines: DataFrame, polys: DataFrame, res: float = 10.0) -> DataFrame:
     """ogr2ogr -clipsrc for a line layer (apps/ogr2ogr.cpp:3513; layer
     Clip ogrlayer.cpp:3424): parts of each line inside the union of the
     method polygons; lines entirely outside vanish."""
-    return _grouped_lines(lines, polys, res, keep_inside=True, keep_unmatched=False)
+    return overlay(pair_candidates(lines, polys, res), LINES, pieces=False, rest="clip").drop("b_id")
 
 
 def layer_erase_lines(lines: DataFrame, polys: DataFrame, res: float = 10.0) -> DataFrame:
     """Line-layer Erase (ogrlayer.cpp:3660): parts of each line outside
     every method polygon; untouched lines pass through whole."""
-    return _grouped_lines(lines, polys, res, keep_inside=False, keep_unmatched=True)
+    pairs = pair_candidates(lines, polys, res)
+    return overlay(pairs, LINES, lines, pieces=False, rest="erase").drop("b_id")

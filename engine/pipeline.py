@@ -57,26 +57,41 @@ def _manifest_path(base: str) -> str:
     return os.path.join(base, MANIFEST_DIR)
 
 
-def read_manifest(spark: SparkSession, base: str) -> DataFrame | None:
+def _manifest_records(base: str) -> list:
+    """Every record of the manifest commit log, read on the driver with
+    ``json`` (no Spark job).  A record that does not parse is an error,
+    not "nothing done": it raises ``ValueError`` naming the file."""
     path = _manifest_path(base)
-    try:
-        return spark.read.json(path)
-    except Exception:
+    if not os.path.isdir(path):
+        return []
+    out = []
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".json"):
+            continue
+        fname = os.path.join(path, name)
+        with open(fname) as f:
+            text = f.read()
+        try:
+            out.append(dict(json.loads(text)))
+        except (TypeError, ValueError) as e:
+            raise ValueError(f"corrupt manifest record {fname}: {e}") from None
+    return out
+
+
+def read_manifest(spark: SparkSession, base: str) -> DataFrame | None:
+    """The manifest commit log as a DataFrame, or None when it is empty."""
+    if not _manifest_records(base):
         return None
+    return spark.read.json(_manifest_path(base))
 
 
 def completed_levels(spark: SparkSession, base: str) -> set:
-    mf = read_manifest(spark, base)
-    if mf is None or "zoom" not in mf.columns:
-        return set()
     # only level-commit records count toward resume: metadata-edit records
     # (stage="_edit") must never mark a pyramid level as built
-    if "stage" in mf.columns:
-        mf = mf.where((F.col("stage").isNull()) | (F.col("stage") != "_edit"))
     return {
-        r.zoom
-        for r in mf.select("zoom").distinct().collect()
-        if r.zoom is not None
+        r["zoom"]
+        for r in _manifest_records(base)
+        if r.get("zoom") is not None and r.get("stage") != "_edit"
     }
 
 
@@ -295,8 +310,6 @@ def edit_metadata(spark: SparkSession, base: str, **updates) -> dict:
     data bytes — exactly the reference's contract (headers only).
 
     Returns the merged metadata after the edit."""
-    import time as _time
-
     # gdal_edit takes arbitrary -mo KEY=VALUE pairs, but the manifest's own
     # bookkeeping fields must not be forgeable: a user 'zoom' would make
     # completed_levels() treat the edit as a finished pyramid level (resume
@@ -308,7 +321,7 @@ def edit_metadata(spark: SparkSession, base: str, **updates) -> dict:
             f"metadata keys {sorted(reserved)} are reserved manifest fields; "
             "store them under different names"
         )
-    rec = {"stage": "_edit", "ts": _time.time()}
+    rec = {"stage": "_edit", "ts": time.time()}
     rec.update(updates)
     _append_manifest(spark, base, rec)
     return dataset_metadata(spark, base)
@@ -317,14 +330,9 @@ def edit_metadata(spark: SparkSession, base: str, **updates) -> dict:
 def dataset_metadata(spark: SparkSession, base: str) -> dict:
     """Merged dataset metadata from the manifest commit log: all
     ``_edit`` records folded in timestamp order (latest wins per key)."""
-    mf = read_manifest(spark, base)
     out: dict = {}
-    if mf is None:
-        return out
-    if "stage" not in mf.columns:
-        return out
-    rows = [r.asDict() for r in mf.where(F.col("stage") == "_edit").collect()]
-    for r in sorted(rows, key=lambda d: d.get("ts") or 0):
+    edits = [r for r in _manifest_records(base) if r.get("stage") == "_edit"]
+    for r in sorted(edits, key=lambda d: d.get("ts") or 0):
         for k, v in r.items():
             if k not in ("stage", "ts") and v is not None:
                 out[k] = v
@@ -334,10 +342,7 @@ def dataset_metadata(spark: SparkSession, base: str) -> dict:
 def completed_stages(spark: SparkSession, base: str) -> set:
     """Stage names with a manifest record (generic-stage analog of
     :func:`completed_levels`)."""
-    m = read_manifest(spark, base)
-    if m is None or "stage" not in m.columns:
-        return set()
-    return {r.stage for r in m.select("stage").distinct().collect()}
+    return {r["stage"] for r in _manifest_records(base) if r.get("stage") is not None}
 
 
 def _run_named_stage(spark, runner, stage, fn, base, resume, lineage) -> DataFrame:

@@ -1,6 +1,8 @@
 """Empty-input probes: every operator must return 0 rows (or an empty
 result), never raise, when fed df.limit(0) — the degenerate-partition case
-any real cluster run hits (empty file splits, filtered-out partitions)."""
+any real cluster run hits (empty file splits, filtered-out partitions).
+Hostile-input probes: a null or truncated geometry fails the layer algebra
+with an error that names the feature."""
 
 import numpy as np
 import pandas as pd
@@ -13,6 +15,7 @@ from engine import (
     geom,
     geomops,
     joins,
+    lineclip,
     lineref,
     nearblack,
     polygonize,
@@ -84,6 +87,35 @@ def test_empty_layer_algebra(spark, empty_polys):
     assert algebra.layer_clip(one, empty_polys).count() == 0
     assert predicates.layer_relate(empty_polys, one).count() == 0
     assert vector.dissolve_union(empty_polys, "pid").count() == 0
+
+
+def _layer(spark, rows):
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["fid", "geom_wkb"]).astype({"fid": "int32"}), "fid int, geom_wkb binary"
+    )
+
+
+@pytest.mark.parametrize("bad", [None, "truncated"])
+def test_layer_algebra_names_a_bad_geometry(spark, bad):
+    """A null or truncated geom_wkb in either layer fails the polygon and
+    line ops with a ValueError naming the layer side and the feature id."""
+    square = geom.wkb_polygon([[(0, 0), (5, 0), (5, 5), (0, 5)]])
+    line = geom.wkb_linestring([(-1.0, 1.0), (6.0, 1.0)])
+    if bad == "truncated":
+        bad = square[:-9]
+    what = "null geom_wkb" if bad is None else "unreadable geom_wkb"
+    polys = _layer(spark, [(1, square)])
+    for ok, op in [
+        (polys, algebra.layer_intersection),
+        (polys, algebra.layer_erase),
+        (polys, algebra.layer_union),
+        (_layer(spark, [(1, line)]), lineclip.layer_clip_lines),
+        (_layer(spark, [(1, line)]), lineclip.layer_erase_lines),
+    ]:
+        with pytest.raises(Exception, match=f"ValueError: input layer feature 7: {what}"):
+            op(_layer(spark, [(7, bad)]).unionByName(ok), polys).collect()
+        with pytest.raises(Exception, match=f"ValueError: method layer feature 7: {what}"):
+            op(ok, _layer(spark, [(7, bad)]).unionByName(polys)).collect()
 
 
 def test_empty_point_operators(spark, empty_points):

@@ -488,3 +488,37 @@ def test_knn_join_names_its_eager_passes(spark):
     assert descs <= {"joins.knn_join ring=1", "joins.knn_join ring=2", "joins.knn_join ring=4"}, jobs
     jobs = _tagged_jobs(spark, "plan-knn-probe", lambda: joins.knn_join(qs, pts, k=3))
     assert [d for d, _, _ in jobs] == ["joins.knn_join probe"], jobs
+
+
+def test_sieve_and_ann_name_their_eager_passes(spark):
+    """The sieve's mode count and driver-mode graph collects run under
+    ``components.sieve_filter mode`` / ``... driver graph``; every job of
+    ``kmeans_fit`` (its k-means‖ seeding rounds included) and ``pq_train``
+    carries its round's description."""
+    import re
+
+    import numpy as np
+    import pandas as pd
+
+    from engine import ann, components, raster
+
+    g = np.zeros((raster.TILE_SIZE, raster.TILE_SIZE), dtype=np.int64)
+    g[10:14, 10:14] = 3
+    g[40:80, 40:80] = 5
+    tiles = spark.createDataFrame(pd.DataFrame({"zoom": [3], "tx": [0], "ty": [0], "data": [raster.tile_to_bytes(g)]}))
+    jobs = _tagged_jobs(spark, "plan-sieve-driver", lambda: components.sieve_filter(tiles, 25).collect())
+    assert components._LAST_SIEVE_MODE[0] == "driver"
+    descs = {d for d, _, _ in jobs}
+    assert {"components.sieve_filter mode", "components.sieve_filter driver graph"} <= descs, jobs
+
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=8)]) for i in range(200)], "vec_id long, embedding array<double>"
+    )
+    named = re.compile(r"ann\.(kmeans_fit (input|iter=\d+)|kmeans_seeds (round=\d+|weights)|pq_train (input|seeds|iter=\d+))$")
+    for tag, train in [
+        ("plan-kmeans", lambda: ann.kmeans_fit(emb, k=4, max_iters=3)),
+        ("plan-pq", lambda: ann.pq_train(emb, m=2, ksub=4, max_iters=3)),
+    ]:
+        jobs = _tagged_jobs(spark, tag, train)
+        assert jobs and all(named.match(d or "") for d, _, _ in jobs), jobs

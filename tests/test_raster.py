@@ -2,6 +2,7 @@
 manifest/resume, determinism across parallelism (FIXTURES.md §5/§8)."""
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -149,6 +150,35 @@ def test_pipeline_resume(spark, geo_points, tmp_path):
         assert int(agg.t) == rows[z].out_rows
         assert int(agg.p) == rows[z].total_count
         assert lin.count() == rows[z].n_partitions
+
+
+def test_pipeline_resume_reads_the_manifest_on_the_driver(spark, geo_points, tmp_path):
+    """Resume reads the manifest commit log with ``json`` on the driver: a
+    finished pyramid resumes without a Spark job, and a truncated record is
+    an error naming its file instead of "nothing done"."""
+    from engine import pipeline
+
+    tagged, _ = geo_points
+    base = str(tmp_path / "tiles")
+    pipeline.run_tiling(spark, tagged, base, base_zoom=5, min_zoom=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-finished", "resume of a finished pyramid")
+    try:
+        pipeline.run_tiling(spark, tagged, base, base_zoom=5, min_zoom=4, resume=True)
+        assert pipeline.completed_levels(spark, base) == {4, 5}
+        assert pipeline.dataset_metadata(spark, base) == {}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("resume-finished") == []
+
+    mdir = os.path.join(base, pipeline.MANIFEST_DIR)
+    victim = os.path.join(mdir, sorted(os.listdir(mdir))[0])
+    with open(victim) as f:
+        text = f.read()
+    with open(victim, "w") as f:
+        f.write(text[: len(text) // 2])
+    with pytest.raises(ValueError, match=re.escape(victim)):
+        pipeline.run_tiling(spark, tagged, base, base_zoom=5, min_zoom=4, resume=True)
 
 
 def test_kml_superoverlay_sink(spark):
