@@ -39,6 +39,12 @@ from .raster import TILE_SIZE, bytes_to_tile
 from .session import job_description
 
 
+def _eager(df: DataFrame, desc: str) -> DataFrame:
+    """``df`` checkpointed now, in a Spark job described ``desc``."""
+    with job_description(df.sparkSession, desc):
+        return df.localCheckpoint(eager=True)
+
+
 class _UF:
     __slots__ = ("p",)
 
@@ -271,20 +277,20 @@ def min_label_propagate(
     # symmetrizes implicitly, so the sub-threshold path skips the
     # symmetrize-union + distinct shuffle entirely (raw count >= deduped
     # count, so the threshold decision is conservative)
-    raw = edges.localCheckpoint(eager=True)
-    n_raw = raw.count()
+    desc = "components.min_label_propagate round={}".format
+    raw = _eager(edges, desc(0))
+    with job_description(edges.sparkSession, desc(0)):
+        n_raw = raw.count()
     if n_raw <= small_graph_limit and nodes is None:
         return _one_task_components(raw, key_type)
-    edges = (
-        raw.unionByName(raw.select(F.col("kb").alias("ka"), F.col("ka").alias("kb")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    edges = _eager(
+        raw.unionByName(raw.select(F.col("kb").alias("ka"), F.col("ka").alias("kb"))).distinct(), desc(0)
     )
     seed = edges.select(F.col("ka").alias("k"))
     if nodes is not None:
         seed = seed.unionByName(nodes.select(F.col(nodes.columns[0]).alias("k")))
-    lbl = seed.distinct().withColumn("comp", F.col("k")).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+    lbl = _eager(seed.distinct().withColumn("comp", F.col("k")), desc(0))
+    for r in range(1, max_rounds + 1):
         # (a) neighbor-min: comp ← min(comp, min over neighbors' comp)
         nbr = (
             edges.join(lbl.select(F.col("k").alias("kb"), F.col("comp").alias("nc")), on="kb")
@@ -301,14 +307,10 @@ def min_label_propagate(
             on="comp",
             how="left",
         ).select("k", F.least(F.col("comp"), F.coalesce(F.col("jc"), F.col("comp"))).alias("comp"))
-        nxt = jumped.localCheckpoint(eager=True)
-        changed = (
-            nxt.alias("n")
-            .join(lbl.alias("o"), on="k")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
+        nxt = _eager(jumped, desc(r))
+        moved = nxt.alias("n").join(lbl.alias("o"), on="k").where(F.col("n.comp") != F.col("o.comp"))
+        with job_description(edges.sparkSession, desc(r)):
+            changed = moved.limit(1).count()
         lbl = nxt
         if changed == 0:
             break
@@ -397,9 +399,10 @@ def seam_component_map(
     # the strip self-join runs exactly once per operator.
     if pairs is None:
         if strips is None:
-            strips = src.mapInPandas(
-                _strips_factory(background, connectedness), _STRIP_SCHEMA
-            ).localCheckpoint(eager=True)
+            strips = _eager(
+                src.mapInPandas(_strips_factory(background, connectedness), _STRIP_SCHEMA),
+                "components.seam_component_map strips",
+            )
         pairs = _seam_pixel_pairs(strips, connectedness)
     pairs = pairs.where(F.col("aval") == F.col("bval"))
     e = pairs.select(
@@ -678,7 +681,7 @@ def sieve_filter(
                         )
             yield pd.concat(parts, ignore_index=True) if parts else _part(0, 0, 0, 0)
 
-    stats_adj = src.mapInPandas(_stats_adj, stats_adj_schema).localCheckpoint(eager=True)
+    stats_adj = _eager(src.mapInPandas(_stats_adj, stats_adj_schema), "components.sieve_filter stats")
     # boundary strips = a projection of the checkpointed stats frame — no
     # second decode+label scan, and _seam_pixel_pairs' 4-way self-join
     # re-reads the checkpoint, not the scan
@@ -695,10 +698,11 @@ def sieve_filter(
     # the component mapping) and the component-adjacency edges (differing
     # values, feeds the merge graph below) — formerly two separate
     # _seam_pixel_pairs executions
-    seam_pairs = _seam_pixel_pairs(strips, connectedness).localCheckpoint(eager=True)
-    mapping = seam_component_map(
-        src, background, connectedness=connectedness, pairs=seam_pairs
-    ).localCheckpoint(eager=True)
+    seam_pairs = _eager(_seam_pixel_pairs(strips, connectedness), "components.sieve_filter seam pairs")
+    mapping = _eager(
+        seam_component_map(src, background, connectedness=connectedness, pairs=seam_pairs),
+        "components.sieve_filter seam map",
+    )
     # the seam mapping holds only boundary-CROSSING labels — a small
     # fraction of all labels.  When it fits comfortably it broadcasts, so
     # every component-id lookup below (the labels attach + four adjacency
@@ -707,7 +711,8 @@ def sieve_filter(
     # threshold is conservative (~10 MB serialized) because each lookup
     # builds its OWN projection → its own broadcast variable, so the
     # driver pays up to five of them at once.
-    broadcast_map = mapping.count() <= 100_000
+    with job_description(spark, "components.sieve_filter seam map"):
+        broadcast_map = mapping.count() <= 100_000
     bmap = F.broadcast if broadcast_map else (lambda df: df)
 
     def _with_cid(df: DataFrame, txc: str, tyc: str, labc: str, out: str) -> DataFrame:
@@ -722,15 +727,12 @@ def sieve_filter(
             F.coalesce(F.col(out), F.concat_ws("_", F.col(tyc), F.col(txc), F.col(labc))),
         )
 
-    labels = (
+    labels = _eager(
         _with_cid(
-            stats_adj.where(F.col("kind") == 0).select(
-                "tx", "ty", "label", "value", "pixel_count"
-            ),
+            stats_adj.where(F.col("kind") == 0).select("tx", "ty", "label", "value", "pixel_count"),
             "tx", "ty", "label", "component_id",
-        )
-        .select("tx", "ty", "label", "value", "pixel_count", "component_id")
-        .localCheckpoint(eager=True)
+        ).select("tx", "ty", "label", "value", "pixel_count", "component_id"),
+        "components.sieve_filter labels",
     )
     comps = labels.groupBy("component_id", "value").agg(F.sum("pixel_count").alias("pixel_count"))
 
@@ -749,14 +751,12 @@ def sieve_filter(
         _with_cid(seam_diff, "atx", "aty", "alab", "cid_a"),
         "btx", "bty", "blab", "cid_b",
     ).select("cid_a", "cid_b")
-    adj_pairs = (
+    adj_pairs = _eager(
         adj_ab.unionByName(sd_ab)
         .where(F.col("cid_a") != F.col("cid_b"))
-        .select(
-            F.least("cid_a", "cid_b").alias("cid_a"), F.greatest("cid_a", "cid_b").alias("cid_b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .select(F.least("cid_a", "cid_b").alias("cid_a"), F.greatest("cid_a", "cid_b").alias("cid_b"))
+        .distinct(),
+        "components.sieve_filter adjacency",
     )
 
     # --- prune to the small-component neighborhood, then collect ---------
@@ -773,7 +773,7 @@ def sieve_filter(
     # tag-unioned into a single checkpointed frame (separate checkpoints
     # ran two full prune-join jobs; the mode probe and both collects below
     # are then cheap scans of the same materialized rows)
-    pruned = (
+    pruned = _eager(
         comps.join(touched, on="component_id", how="left_semi")
         .select(
             F.lit(0).alias("_t"), "component_id", "value", "pixel_count",
@@ -790,8 +790,8 @@ def sieve_filter(
                 F.lit(None).cast("long").alias("value"),
                 F.lit(None).cast("long").alias("pixel_count"), "cid_b",
             )
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "components.sieve_filter pruned graph",
     )
     pruned_nodes = pruned.where(F.col("_t") == 0).select("component_id", "value", "pixel_count")
     pruned_edges = pruned.where(F.col("_t") == 1).select(

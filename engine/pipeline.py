@@ -10,8 +10,8 @@ gdaltindex's per-file manifest (apps/gdaltindex.c:96-561): every stage writes
 * a per-file **lineage** sidecar: one row per non-empty file
   ``part-<part_id>`` the write produced (tile/row count, page count,
   xor-of-checksums), gdaltindex's per-file record, and
-* a **manifest** row per completed zoom level with lineage + row-count
-  metrics: stage name, input/output row counts, tile extents (the
+* a **manifest** record per completed zoom level or stage with lineage +
+  row-count metrics: stage name, input/output row counts, tile extents (the
   GetExtent fast path, ogrlayer.cpp:212), total page count, xor-of-checksums,
   wall seconds, and the spark conf that produced it.
 
@@ -23,9 +23,11 @@ the lineage rows with pyarrow and folds the manifest totals from the same
 partials.  ``run_tiling``'s ``in_rows`` is observed in that pass too, so no
 count, collect or lineage job re-scans a level.
 
-``run_tiling(..., resume=True)`` consults the manifest and skips every level
-already marked complete — re-running a killed job recomputes only missing
-levels (FIXTURES.md §8 resume invariant).
+Levels, stages, metadata edits and the streaming pyramid share one commit:
+retract the key's earlier records, write data and lineage, then publish one
+record by ``os.replace``.  A run killed mid-write leaves its level with no
+record, so ``resume=True`` rebuilds it and skips every level still recorded
+(FIXTURES.md §8), reading the manifest with ``json`` on the driver.
 """
 
 from __future__ import annotations
@@ -53,15 +55,11 @@ from .session import job_description
 MANIFEST_DIR = "_manifest"
 
 
-def _manifest_path(base: str) -> str:
-    return os.path.join(base, MANIFEST_DIR)
-
-
-def _manifest_records(base: str) -> list:
-    """Every record of the manifest commit log, read on the driver with
-    ``json`` (no Spark job).  A record that does not parse is an error,
-    not "nothing done": it raises ``ValueError`` naming the file."""
-    path = _manifest_path(base)
+def _record_files(base: str) -> list:
+    """``(file, record)`` for every ``*.json`` record of the manifest commit
+    log, read on the driver with ``json`` (no Spark job).  A record that does
+    not parse raises ``ValueError`` naming the file."""
+    path = os.path.join(base, MANIFEST_DIR)
     if not os.path.isdir(path):
         return []
     out = []
@@ -72,17 +70,22 @@ def _manifest_records(base: str) -> list:
         with open(fname) as f:
             text = f.read()
         try:
-            out.append(dict(json.loads(text)))
+            out.append((fname, dict(json.loads(text))))
         except (TypeError, ValueError) as e:
             raise ValueError(f"corrupt manifest record {fname}: {e}") from None
     return out
+
+
+def _manifest_records(base: str) -> list:
+    """Every record of the manifest commit log (see :func:`_record_files`)."""
+    return [r for _, r in _record_files(base)]
 
 
 def read_manifest(spark: SparkSession, base: str) -> DataFrame | None:
     """The manifest commit log as a DataFrame, or None when it is empty."""
     if not _manifest_records(base):
         return None
-    return spark.read.json(_manifest_path(base))
+    return spark.read.json(os.path.join(base, MANIFEST_DIR))
 
 
 def completed_levels(spark: SparkSession, base: str) -> set:
@@ -95,18 +98,33 @@ def completed_levels(spark: SparkSession, base: str) -> set:
     }
 
 
-def _append_manifest(spark: SparkSession, base: str, record: dict) -> None:
-    path = _manifest_path(base)
+def _key(record: dict):
+    """What a record commits: its level's zoom (an int) or its stage's name."""
+    return record["zoom"] if record.get("zoom") is not None else record.get("stage")
+
+
+def _retract(base: str, key, keep: str | None = None) -> None:
+    """Remove each record of ``key`` but the file ``keep`` (one ``os.remove``
+    each), matched on the parsed record; ``_edit`` records stay."""
+    for fname, r in _record_files(base):
+        if _key(r) == key and r.get("stage") != "_edit" and fname != keep:
+            os.remove(fname)
+
+
+def _append_manifest(base: str, record: dict) -> str:
+    """Commit ``record`` atomically: a hidden temp file that no reader lists,
+    then one ``os.replace``.  Returns the record's file."""
+    path = os.path.join(base, MANIFEST_DIR)
     os.makedirs(path, exist_ok=True)
-    # one json file per completed stage — append-only commit log; written
-    # AFTER the level's parquet commit, so a crash between the two re-runs
-    # the level (idempotent overwrite) rather than trusting a torn write
     key = f"zoom_{record['zoom']}" if "zoom" in record else f"stage_{record['stage']}"
     # microsecond resolution: two commits in the same wall second (e.g.
     # consecutive metadata edits) must not collapse into one log file
     fname = os.path.join(path, f"{key}_{int(record['ts'] * 1e6)}.json")
-    with open(fname, "w") as f:
+    tmp = os.path.join(path, f".{os.path.basename(fname)}.tmp")
+    with open(tmp, "w") as f:
         f.write(json.dumps(record) + "\n")
+    os.replace(tmp, fname)
+    return fname
 
 
 class _ByPartition(AccumulatorParam):
@@ -228,15 +246,16 @@ def _write(spark: SparkSession, df: DataFrame, path: str, desc: str, lineage: _L
     return spark.read.schema(df.schema).parquet(path), lineage.totals(folded, len(parts))
 
 
-def _commit(spark: SparkSession, base: str, t0: float, **record) -> None:
-    """Append a level/stage record stamped with wall time and spark conf."""
+def _commit(spark: SparkSession, base: str, t0: float, **record) -> str:
+    """Commit a level/stage record stamped with wall time and spark conf;
+    returns its file."""
     record.update(
         ts=time.time(),
         wall_s=round(time.time() - t0, 3),
         master=spark.sparkContext.master,
         shuffle_partitions=spark.conf.get("spark.sql.shuffle.partitions"),
     )
-    _append_manifest(spark, base, record)
+    return _append_manifest(base, record)
 
 
 _LEVEL_SCHEMA = StructType([f for f in raster.TILE_SCHEMA.fields if f.name != "zoom"])
@@ -263,14 +282,15 @@ def run_tiling(
     ``base`` with per-level manifest records; returns the full tile table.
 
     Levels are checkpointed bottom-up (base zoom first); each reduce reads
-    the PERSISTED parquet of the level above, so resume restarts from the
-    first missing level with no recomputation of completed ones.
+    the PERSISTED parquet of the level above, so resume rebuilds only the
+    levels with no record, from the persisted level above them.
     """
     done = completed_levels(spark, base) if resume else set()
     for z in range(base_zoom, min_zoom - 1, -1):
         if z in done:
             continue
         t0 = time.time()
+        _retract(base, z)
         desc = f"pipeline.run_tiling[zoom={z}]"
         # in_rows is counted inside the level's write job
         obs, n_src = Observation(), F.count(F.lit(1)).alias("in_rows")
@@ -323,7 +343,7 @@ def edit_metadata(spark: SparkSession, base: str, **updates) -> dict:
         )
     rec = {"stage": "_edit", "ts": time.time()}
     rec.update(updates)
-    _append_manifest(spark, base, rec)
+    _append_manifest(base, rec)
     return dataset_metadata(spark, base)
 
 
@@ -349,13 +369,15 @@ def _run_named_stage(spark, runner, stage, fn, base, resume, lineage) -> DataFra
     """The shared body of :func:`run_stage` and :func:`run_doc_stage`;
     ``lineage`` says how the stage's write folds its lineage."""
     path = os.path.join(base, f"stage={stage}")
-    if resume and stage in completed_stages(spark, base):
-        return spark.read.parquet(path)
+    done = [r for r in _manifest_records(base) if _key(r) == stage] if resume else []
+    if done:
+        schema = done[-1].get("schema")  # absent from records that predate it: inferred
+        return (spark.read.schema(StructType.fromJson(json.loads(schema))) if schema else spark.read).parquet(path)
     t0 = time.time()
-    desc = f"pipeline.{runner}[{stage}]"
-    lpath = os.path.join(base, "_lineage", f"stage={stage}")
-    persisted, stats = _write(spark, fn(), path, desc, lineage, lpath)
-    _commit(spark, base, t0, stage=stage, **stats)
+    _retract(base, stage)
+    df, lpath = fn(), os.path.join(base, "_lineage", f"stage={stage}")
+    persisted, stats = _write(spark, df, path, f"pipeline.{runner}[{stage}]", lineage, lpath)
+    _commit(spark, base, t0, stage=stage, schema=df.schema.json(), **stats)
     return persisted
 
 

@@ -174,10 +174,12 @@ def with_pixel(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str 
 def _density_batch(lon: np.ndarray, lat: np.ndarray, zoom: int) -> "pa.RecordBatch":
     """Points → their (tx, ty, ix, iy, cnt) partial counts: one ``np.unique``
     over the pixel key packed into an int64 (tx, ty < 2^20 and ix, iy < 2^9,
-    so zoom ≤ 20)."""
+    so zoom ≤ 20).  A point with a NaN, infinite or null coordinate burns
+    nowhere: its tile would pack into another tile's key."""
     import pyarrow as pa
 
-    tx, ty, ix, iy = _pixels(lon, lat, zoom)
+    ok = np.isfinite(lon) & np.isfinite(lat)
+    tx, ty, ix, iy = _pixels(lon[ok], lat[ok], zoom)
     uk, cnt = np.unique((tx << 38) | (ty << 18) | (ix << 9) | iy, return_counts=True)
     return pa.RecordBatch.from_arrays(
         _pixel_arrays(uk >> 38, (uk >> 18) & 0xFFFFF, (uk >> 9) & 0x1FF, uk & 0x1FF)

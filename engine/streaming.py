@@ -13,6 +13,9 @@ aggregation) applied to a stream of pages with event time = ``warc_ts``:
 * :func:`run_stream_to_tiles` — foreachBatch into the batch tile-burn path,
   so the streaming sink shares the tile-table layout and checksum
   verification with the batch pipeline.
+* :func:`run_stream_to_pyramid` — foreachBatch into the batch level write
+  and commit of :mod:`engine.pipeline`: each micro-batch writes a snapshot
+  of the pyramid with lineage and commits it with one manifest record.
 
 Geotag is a stream-static join (static broadcast gazetteer) — no state; the
 windowed count is the only stateful operator and is bounded by the
@@ -21,10 +24,14 @@ watermark.
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import joins
+from . import joins, pipeline, raster
 from .geotag import geotag_all
 
 PAGES_SCHEMA = (
@@ -73,7 +80,6 @@ def run_stream_to_tiles(
     (trigger availableNow — processes the backlog then stops).  Each
     micro-batch geotags + burns and appends parquet tiles; the downstream
     pyramid/mosaic treats micro-batch outputs as mosaic inputs."""
-    from . import raster
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         tagged = geotag_all(batch_df, gazetteer)
@@ -144,57 +150,21 @@ def stateful_first_seen(
 
 
 def pyramid_current(out_dir: str) -> dict | None:
-    """Read the committed snapshot pointer: {'batch_id': int, 'snapshot':
-    str} or None when nothing has committed yet.  The pointer file is the
-    single source of truth — orphan snapshot dirs without a pointer entry
-    are crash garbage and are never read."""
-    import json
-    import os
-
-    path = os.path.join(out_dir, "CURRENT")
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return json.load(fh)
+    """The committed snapshot: the latest ``stage="stream"`` manifest
+    record under ``out_dir``, with its ``batch_id`` and ``snapshot``, or None
+    when no micro-batch has committed.  A snapshot dir that no record names
+    is crash garbage and is never read."""
+    recs = [r for r in pipeline._manifest_records(out_dir) if r.get("stage") == "stream"]
+    return max(recs, key=lambda r: r["batch_id"], default=None)
 
 
 def read_pyramid_level(spark: SparkSession, out_dir: str, zoom: int) -> DataFrame:
-    """Committed tile table of one pyramid level (resolves the CURRENT
-    pointer to its immutable snapshot dir)."""
-    import os
-
+    """Committed tile table of one pyramid level (resolves the latest
+    stream record to its snapshot dir)."""
     cur = pyramid_current(out_dir)
     if cur is None:
         raise FileNotFoundError(f"no committed pyramid snapshot in {out_dir}")
     return spark.read.parquet(os.path.join(out_dir, cur["snapshot"], f"z={zoom}"))
-
-
-def pyramid_snapshot_commit(out_dir: str, levels: dict, batch_id: int) -> str:
-    """Write ``levels`` ({zoom: tile DataFrame}) as the immutable snapshot
-    ``snap_<batch_id>`` and commit it by ATOMICALLY renaming the CURRENT
-    pointer (write-tmp + os.replace — one filesystem operation is the
-    entire commit).  A crash anywhere before the rename leaves the
-    previous snapshot committed and this one as removable garbage; after
-    a successful commit, older snapshots and orphans are pruned.  Returns
-    the snapshot name."""
-    import json
-    import os
-    import shutil
-
-    snap = f"snap_{batch_id}"
-    snap_dir = os.path.join(out_dir, snap)
-    if os.path.isdir(snap_dir):  # leftover from a crashed earlier attempt
-        shutil.rmtree(snap_dir)
-    for z, df in levels.items():
-        df.write.mode("overwrite").parquet(os.path.join(snap_dir, f"z={z}"))
-    tmp = os.path.join(out_dir, "CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"batch_id": int(batch_id), "snapshot": snap}, fh)
-    os.replace(tmp, os.path.join(out_dir, "CURRENT"))  # THE commit point
-    for name in os.listdir(out_dir):
-        if name.startswith("snap_") and name != snap:
-            shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
-    return snap
 
 
 def run_stream_to_pyramid(
@@ -207,33 +177,23 @@ def run_stream_to_pyramid(
     out_dir: str,
 ) -> None:
     """Streaming pyramid MAINTENANCE: each micro-batch burns its pages and
-    incrementally updates the persisted pyramid via
-    :func:`engine.raster.pyramid_delta_update` — only ancestors of tiles
-    the batch touched are recomputed, so steady-state cost per batch is
-    O(batch log pyramid), independent of corpus size.
-
-    Persistence is a TRANSACTIONAL SNAPSHOT layout (the plain-parquet
-    analog of an Iceberg table): every batch writes a complete new
-    immutable snapshot ``out_dir/snap_<batch_id>/z=<zoom>`` and then
-    commits it with ONE atomic rename of the ``CURRENT`` pointer file.
-    There is no multi-directory swap window — a crash at ANY point before
-    the pointer rename leaves ``CURRENT`` naming the previous snapshot, so
-    the replayed batch (foreachBatch is at-least-once, the sink is
-    additive) rebuilds from exactly the pre-batch state; a crash after the
-    rename is detected by the pointer's recorded batch id and the replay
-    is skipped.  Orphan snapshot dirs from crashes are garbage, removed on
-    the next successful commit.  Read committed levels via
-    :func:`read_pyramid_level` (which resolves the pointer), never the
-    snapshot dirs directly.
+    updates the pyramid via :func:`engine.raster.pyramid_delta_update`
+    (only ancestors of touched tiles recompute), but writes every level of
+    a new snapshot ``out_dir/snap_<batch_id>/z=<zoom>``: O(pyramid) writes
+    per batch.  The levels go through :mod:`engine.pipeline`'s level write
+    (lineage under ``snap_<batch_id>/_lineage``) and the batch commits with
+    ONE ``stage="stream"`` manifest record (``batch_id``, ``snapshot``, each
+    level's totals under ``levels``).  A crash before that record leaves the
+    previous snapshot committed and the replayed batch (foreachBatch is
+    at-least-once) rebuilds from it; a committed batch's replay is skipped
+    by its batch id.  A commit then removes older stream records and every
+    other snapshot dir.  Read levels via :func:`read_pyramid_level`.
     """
-    import os
-
-    from . import raster
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         cur = pyramid_current(out_dir)
         if cur is not None and cur["batch_id"] >= batch_id:
             return  # replayed batch (at-least-once delivery): already committed
+        t0 = time.time()
         tagged = geotag_all(batch_df, gazetteer)
         delta = raster.burn_base_tiles(tagged, base_zoom)
         if cur is not None:
@@ -246,7 +206,20 @@ def run_stream_to_pyramid(
             updated = {base_zoom: delta}
             for z in range(base_zoom, min_zoom, -1):
                 updated[z - 1] = raster.pyramid_reduce(updated[z])
-        pyramid_snapshot_commit(out_dir, updated, batch_id)
+        snap, levels = f"snap_{batch_id}", {}
+        for z, df in updated.items():
+            _, levels[str(z)] = pipeline._write(
+                spark, df, os.path.join(out_dir, snap, f"z={z}"),
+                f"streaming.run_stream_to_pyramid[batch={batch_id} zoom={z}]",
+                pipeline._TILES, os.path.join(out_dir, snap, "_lineage", f"z={z}"),
+            )
+        record = pipeline._commit(
+            spark, out_dir, t0, stage="stream", batch_id=int(batch_id), snapshot=snap, levels=levels
+        )
+        pipeline._retract(out_dir, "stream", keep=record)
+        for name in os.listdir(out_dir):
+            if name.startswith("snap_") and name != snap:
+                shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
 
     q = (
         stream_pages(spark, src_dir, max_files_per_trigger=1)

@@ -491,10 +491,12 @@ def test_knn_join_names_its_eager_passes(spark):
 
 
 def test_sieve_and_ann_name_their_eager_passes(spark):
-    """The sieve's mode count and driver-mode graph collects run under
-    ``components.sieve_filter mode`` / ``... driver graph``; every job of
-    ``kmeans_fit`` (its k-means‖ seeding rounds included) and ``pq_train``
-    carries its round's description."""
+    """Every job a ``sieve_filter`` call starts is named for its step
+    (``components.sieve_filter <step>``, the label propagation's
+    ``components.min_label_propagate round=<r>``), its mode count and
+    driver-mode graph collects included; every job of ``kmeans_fit`` (its
+    k-means‖ seeding rounds included) and ``pq_train`` carries its round's
+    description."""
     import re
 
     import numpy as np
@@ -506,8 +508,13 @@ def test_sieve_and_ann_name_their_eager_passes(spark):
     g[10:14, 10:14] = 3
     g[40:80, 40:80] = 5
     tiles = spark.createDataFrame(pd.DataFrame({"zoom": [3], "tx": [0], "ty": [0], "data": [raster.tile_to_bytes(g)]}))
-    jobs = _tagged_jobs(spark, "plan-sieve-driver", lambda: components.sieve_filter(tiles, 25).collect())
+    jobs = _tagged_jobs(spark, "plan-sieve-driver", lambda: components.sieve_filter(tiles, 25))
     assert components._LAST_SIEVE_MODE[0] == "driver"
+    step = re.compile(
+        r"components\.(sieve_filter (stats|seam pairs|seam map|labels|adjacency|pruned graph|mode|driver graph)"
+        r"|min_label_propagate round=\d+)$"
+    )
+    assert jobs and all(step.match(d or "") for d, _, _ in jobs), jobs
     descs = {d for d, _, _ in jobs}
     assert {"components.sieve_filter mode", "components.sieve_filter driver graph"} <= descs, jobs
 

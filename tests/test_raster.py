@@ -180,6 +180,30 @@ def test_pipeline_resume_reads_the_manifest_on_the_driver(spark, geo_points, tmp
     with pytest.raises(ValueError, match=re.escape(victim)):
         pipeline.run_tiling(spark, tagged, base, base_zoom=5, min_zoom=4, resume=True)
 
+    # a resumed stage is read back with the schema its record carries: no
+    # inference job, the same schema as the committed frame
+    stages = str(tmp_path / "stages")
+    first = {
+        "run_stage": pipeline.run_stage(spark, "z5", lambda: raster.burn_base_tiles(tagged, 5), stages),
+        "run_doc_stage": pipeline.run_doc_stage(spark, "docs", lambda: tagged.select("url", "lon", "lat"), stages),
+    }
+
+    def boom():
+        raise AssertionError("resume must not re-invoke the producer")
+
+    sc.setJobGroup("resume-stages", "resume of finished stages")
+    try:
+        resumed = {
+            "run_stage": pipeline.run_stage(spark, "z5", boom, stages, resume=True),
+            "run_doc_stage": pipeline.run_doc_stage(spark, "docs", boom, stages, resume=True),
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("resume-stages") == []
+    for runner, df in resumed.items():
+        assert df.schema == first[runner].schema, runner
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, first[runner].collect())), runner
+
 
 def test_kml_superoverlay_sink(spark):
     import xml.etree.ElementTree as ET
@@ -249,6 +273,24 @@ def test_run_stage_checkpoint_and_resume(spark, tmp_path):
     got1 = {(r.tx, r.ty): bytes(r.data) for r in out1.collect()}
     got2 = {(r.tx, r.ty): bytes(r.data) for r in out2.collect()}
     assert got1 == got2
+
+
+def test_rerun_leaves_one_record_per_key(spark, geo_points, tmp_path):
+    """A re-run retracts the earlier records of its own level or stage,
+    matched on the parsed record (stage ``tile`` is a filename prefix of
+    ``tile_assign``), and never an ``_edit`` record."""
+    from engine import pipeline
+
+    tagged, _ = geo_points
+    base = str(tmp_path / "out")
+    docs = tagged.select("url", "lon", "lat")
+    for _ in range(2):
+        pipeline.run_tiling(spark, tagged, base, base_zoom=5, min_zoom=4)
+        for stage in ("tile_assign", "tile"):
+            pipeline.run_doc_stage(spark, stage, lambda: docs, base)
+        pipeline.edit_metadata(spark, base, srs="EPSG:3857")
+    keys = sorted(str(r.get("zoom", r["stage"])) for r in pipeline._manifest_records(base))
+    assert keys == ["4", "5", "_edit", "_edit", "tile", "tile_assign"]
 
 
 def _manifest_records(base: str) -> dict:
@@ -510,6 +552,32 @@ def test_burn_base_tiles_pip_empty(spark):
     assert raster.burn_base_tiles_pip(pts.limit(0), polys, 5).count() == 0
     # no matches at all → empty tile table, not an error
     assert raster.burn_base_tiles_pip(pts, polys, 5).count() == 0
+
+
+def test_density_burns_drop_non_finite_points(spark):
+    """A NaN, infinite or null coordinate burns nowhere: both density burns
+    over finite plus non-finite points equal the burns over the finite
+    points alone (a NaN's tile used to pack into tile (0, ty)'s key)."""
+    import pandas as pd
+
+    from engine.geom import wkb_polygon
+
+    nan, inf = float("nan"), float("inf")
+    assert raster._density_batch(np.array([nan, inf, -inf, 10.0]), np.array([0.0, 0.0, 0.0, nan]), 3).num_rows == 0
+    finite = [(10.0, 5.0), (10.5, 5.2), (-70.0, 40.0), (151.2, -33.9)]
+    bad = [(nan, 0.0), (inf, 0.0), (-inf, 0.0), (10.0, nan), (10.0, -inf), (None, 5.0), (10.0, None)]
+    world = wkb_polygon([[(-180, -85), (180, -85), (180, 85), (-180, 85), (-180, -85)]])
+    polys = pd.DataFrame({"polygon_id": [1], "geom_wkb": [world]})
+    clean = spark.createDataFrame(finite, "lon double, lat double")
+    dirty = spark.createDataFrame(bad[:4] + finite + bad[4:], "lon double, lat double")
+
+    def tiles(df):
+        return sorted((r.tx, r.ty, bytes(r.data)) for r in df.collect())
+
+    for zoom in (3, 6):
+        assert tiles(raster.burn_base_tiles(dirty, zoom)) == tiles(raster.burn_base_tiles(clean, zoom))
+        pip = [tiles(raster.burn_base_tiles_pip(df, polys, zoom)) for df in (dirty, clean)]
+        assert pip[0] == pip[1] == tiles(raster.burn_base_tiles(clean, zoom))
 
 
 def test_burn_base_tiles_fused_partial_identity(spark):

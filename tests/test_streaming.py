@@ -1,11 +1,13 @@
 """Streaming seam: availableNow drain == batch result; watermarked windowed
 density; foreachBatch tile sink mosaics to the batch tiles."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from engine import raster, streaming
+from engine import pipeline, raster, streaming
 from engine.fixtures import make_gazetteer, make_pages
 from engine.geotag import geotag_all
 
@@ -132,6 +134,8 @@ def test_stream_pyramid_maintenance_matches_batch(spark, stream_fixture):
     streaming.run_stream_to_pyramid(
         spark, stream_fixture["src"], stream_fixture["gaz"], bz, mz, ckpt, out
     )
+    cur = streaming.pyramid_current(out)
+    assert cur["batch_id"] >= 1  # the backlog drained in more than one micro-batch
     tagged = geotag_all(stream_fixture["pages"], stream_fixture["gaz"])
     expect = {bz: raster.burn_base_tiles(tagged, bz)}
     for z in range(bz, mz, -1):
@@ -148,13 +152,19 @@ def test_stream_pyramid_maintenance_matches_batch(spark, stream_fixture):
             for r in raster.tile_checksums(expect[z]).collect()
         }
         assert got == exp, f"zoom {z}"
+        # the commit record carries each level's totals from its write
+        assert cur["levels"][str(z)]["n_tiles"] == len(got), f"zoom {z}"
+    # one stream record and the one snapshot it names survive
+    assert [r["stage"] for r in pipeline._manifest_records(out)] == ["stream"]
+    assert sorted(os.listdir(out)) == [pipeline.MANIFEST_DIR, cur["snapshot"]]
+    assert sorted(os.listdir(os.path.join(out, cur["snapshot"], "_lineage"))) == [f"z={z}" for z in range(mz, bz + 1)]
 
 
 def test_pyramid_snapshot_crash_recovery(spark, tmp_path):
-    """A crash at ANY point before the CURRENT pointer rename must leave
-    the previous snapshot committed: orphan snapshot dirs are never read,
-    the replayed stream rebuilds from the pre-crash state, and the final
-    pyramid equals the batch recompute."""
+    """A crash at ANY point before a micro-batch's manifest record is
+    published must leave the previous snapshot committed: orphan snapshot
+    dirs are never read, the replayed stream rebuilds from the pre-crash
+    state, and the final pyramid equals the batch recompute."""
     import os
 
     import pandas as pd
@@ -183,18 +193,18 @@ def test_pyramid_snapshot_crash_recovery(spark, tmp_path):
     }
 
     # simulate a crash mid-next-batch: a partially-written orphan snapshot
-    # exists, the pointer still names the committed one
+    # exists, the committed record still names the committed one
     orphan = os.path.join(out, "snap_777")
     os.makedirs(os.path.join(orphan, f"z={bz}"), exist_ok=True)
     open(os.path.join(orphan, f"z={bz}", "part-junk.parquet"), "wb").write(b"garbage")
-    assert streaming.pyramid_current(out) == cur  # pointer untouched
+    assert streaming.pyramid_current(out) == cur  # record untouched
     got = {
         (r.tx, r.ty): r.checksum
         for r in raster.tile_checksums(
             streaming.read_pyramid_level(spark, out, bz)
         ).collect()
     }
-    assert got == committed  # reads resolve the pointer, not the orphan
+    assert got == committed  # reads resolve the record, not the orphan
 
     # the replayed/next batch self-recovers: new file arrives, stream
     # re-runs, commit succeeds and prunes the orphan
