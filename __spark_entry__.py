@@ -286,18 +286,23 @@ def _sql_pip_tile_join() -> str:
 
 def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two kNN engine paths in one row: the ring-doubling join
-    (engine/joins.knn_join, mode 'ring', k=10) and reverse geocoding over
-    the broadcast exact-kNN scan (engine/geotag.geocode_reverse →
-    joins.knn_join_broadcast, mode 'revgeo', k=1) against a disjoint
-    point-derived gazetteer — the nearest-place attribution (country_id)
-    is value-checked too."""
+    (engine/joins.knn_join with strategy="rings", mode 'ring', k=10; the
+    default "auto" would pick the broadcast scan for these few queries)
+    and reverse geocoding over the broadcast exact-kNN scan
+    (engine/geotag.geocode_reverse → joins.knn_join_broadcast, mode
+    'revgeo', k=1) against a disjoint point-derived gazetteer — the
+    nearest-place attribution (country_id) is value-checked too.  The ring
+    rows equal brute force because k=10 at zoom 4 with max_ring=6 is not
+    truncated on these points."""
     from engine.geotag import geocode_reverse
 
     pts = _points(spark, sf_dir)
     queries = pts.where(F.col("event_id") % 200 == 0).select(
         F.col("event_id").alias("qid"), "lon", "lat"
     )
-    out = joins.knn_join(queries, pts, k=10, zoom=4, max_ring=6, query_id="qid", point_id="event_id")
+    out = joins.knn_join(
+        queries, pts, k=10, zoom=4, max_ring=6, query_id="qid", point_id="event_id", strategy="rings"
+    )
     ring = out.select(
         "qid", F.lit("ring").alias("mode"),
         F.col("neighbor").cast("long").alias("neighbor"),

@@ -27,12 +27,17 @@ The engine's re-expression of GDAL's spatial-join surface
 * ``GDALGridNearestNeighbor``'s quadtree-accelerated kNN
   (``alg/gdalgrid.cpp:675,691``) → cell-ring expansion join with
   sorted-merge (window top-k) refinement; rings grow per-round for
-  unsatisfied queries only.  The ring and radius joins key their points
-  on the same world-clamped tile as the PIP shuffle (:func:`_world_tiles`).
+  unsatisfied queries only.
+
+Every mercator cell operator takes the world tiles of a lon/lat window
+from one rule, :func:`_window_tiles` (corners clamped to the world, padded
+and clipped to its tiles by :func:`_world_tiles`), exploded in one Arrow
+pass (:func:`_explode_windows`): the PIP cover, the radius windows, the
+kNN rings, IDW and ``raster``'s rasterize cover.
 
 All heavy math is whole-batch numpy inside Arrow-batched UDFs
-(``mapInArrow`` for the tile encode and the PIP joins, pandas UDFs for the
-kNN paths); all matching is JVM-side equi-joins.
+(``mapInArrow`` for the encoders, the window covers and the PIP joins);
+all matching is JVM-side equi-joins.
 """
 
 from __future__ import annotations
@@ -45,6 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -80,11 +86,29 @@ def _append_lonlat_columns(df: DataFrame, lon_col: str, lat_col: str, fields: li
     return df.mapInArrow(_encode, StructType(list(df.schema.fields) + fields))
 
 
+def _finite(encode):
+    """``encode`` with a null in every column of a row whose lon or lat is
+    NaN, ±inf or null: such a point has no tile."""
+
+    def masked(lon, lat):
+        bad = ~(np.isfinite(lon) & np.isfinite(lat))
+        arrays = encode(lon, lat)
+        if not bad.any():
+            return arrays
+        import pyarrow as pa
+        import pyarrow.compute as pc  # ~0.1 s to import: paid only by a batch with such a point
+
+        return [pc.if_else(pa.array(bad), pa.scalar(None, a.type), a) for a in arrays]
+
+    return masked
+
+
 def with_tile(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Append TMS tile coords + quadkey at ``zoom`` (vectorized Arrow UDF).
 
     Columns: ``tx ty quadkey``.  The quadkey is the multi-resolution cell
-    id: its z-length prefixes are the coarser cells.
+    id: its z-length prefixes are the coarser cells.  All three are null
+    for a NaN, infinite or null coordinate.
     """
     import pyarrow as pa
 
@@ -93,30 +117,33 @@ def with_tile(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "la
         return [pa.array(tx, type=pa.int64()), pa.array(ty, type=pa.int64()), pa.array(tiles.quadkey(tx, ty, zoom))]
 
     fields = [StructField("tx", LongType()), StructField("ty", LongType()), StructField("quadkey", StringType())]
-    return _append_lonlat_columns(df, lon_col, lat_col, fields, encode)
+    return _append_lonlat_columns(df, lon_col, lat_col, fields, _finite(encode))
 
 
 def with_cell(df: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Append a single packed int64 cell id ``(tx << zoom+1) | ty`` of
     :func:`with_tile`'s tile at zoom — a cheaper join key than the quadkey
-    string for fixed-zoom equi-joins; no quadkey is built."""
+    string for fixed-zoom equi-joins; no quadkey is built.  Null for a NaN,
+    infinite or null coordinate."""
     return _append_cell(df, lon_col, lat_col, lambda lon, lat: _pack_cell(*tiles.lonlat_to_tile(lon, lat, zoom), zoom))
 
 
 def _with_world_cell(df: DataFrame, zoom: int, lon_col: str, lat_col: str) -> DataFrame:
     """:func:`with_cell` of each point clamped to the mercator world: the
     cell joins' point key (:func:`_lonlat_cells`)."""
-    return _append_cell(df, lon_col, lat_col, lambda lon, lat: _lonlat_cells(lon, lat, zoom))
+    return _append_cell(df, lon_col, lat_col, lambda lon, lat: _lonlat_cells(lon, lat, zoom), finite=False)
 
 
-def _append_cell(df: DataFrame, lon_col: str, lat_col: str, cells) -> DataFrame:
-    """Append ``cell`` = ``cells(lon, lat)``, computed per Arrow batch."""
+def _append_cell(df: DataFrame, lon_col: str, lat_col: str, cells, finite: bool = True) -> DataFrame:
+    """Append ``cell`` = ``cells(lon, lat)``, computed per Arrow batch;
+    with ``finite``, null for a non-finite point (:func:`_finite`)."""
     import pyarrow as pa
 
     def encode(lon, lat):
         return [pa.array(cells(lon, lat), type=pa.int64())]
 
-    return _append_lonlat_columns(df, lon_col, lat_col, [StructField("cell", LongType())], encode)
+    fields = [StructField("cell", LongType())]
+    return _append_lonlat_columns(df, lon_col, lat_col, fields, _finite(encode) if finite else encode)
 
 
 def _pack_cell(tx: np.ndarray, ty: np.ndarray, zoom: int) -> np.ndarray:
@@ -124,31 +151,98 @@ def _pack_cell(tx: np.ndarray, ty: np.ndarray, zoom: int) -> np.ndarray:
     return tx * np.int64(2 ** (zoom + 1)) + ty
 
 
-def _world_tiles(lon: np.ndarray, lat: np.ndarray, zoom: int):
+# ---------------------------------------------------------------------------
+# The window rule: the world tiles a lon/lat window touches
+# ---------------------------------------------------------------------------
+
+
+def _world_tiles(lon: np.ndarray, lat: np.ndarray, zoom: int, pad: int = 0):
     """(tx, ty) at ``zoom`` of each lon/lat clamped to the mercator world
-    (±180°, ±``MERCATOR_LAT_MAX``) and to its tiles [0, 2^zoom − 1]: the
-    cell joins' one tile rule, for their points, polygon bbox corners and
-    query windows alike, so a point beyond the latitude limit, at −180° or
-    at the southern limit (tile −1 by the ``ceil − 1`` rule) meets what
-    reaches past it."""
+    (±180°, ±``MERCATOR_LAT_MAX``; NaN to −180° and the southern limit)
+    and to its tiles [0, 2^zoom − 1], then moved ``pad`` tiles along both
+    axes and clipped to them again.  The cell operators' one tile rule,
+    for their points and window corners alike, so a point beyond the
+    latitude limit, at −180° or at the southern limit (tile −1 by the
+    ``ceil − 1`` rule) meets what reaches past it."""
     lat_lim = tiles.MERCATOR_LAT_MAX
-    tx, ty = tiles.lonlat_to_tile(np.clip(lon, -180.0, 180.0), np.clip(lat, -lat_lim, lat_lim), zoom)
-    return np.clip(tx, 0, 2**zoom - 1), np.clip(ty, 0, 2**zoom - 1)
+    top = 2**zoom - 1
+    lon = np.fmin(np.fmax(lon, -180.0), 180.0)
+    lat = np.fmin(np.fmax(lat, -lat_lim), lat_lim)
+    tx, ty = tiles.lonlat_to_tile(lon, lat, zoom)
+    return np.clip(np.clip(tx, 0, top) + pad, 0, top), np.clip(np.clip(ty, 0, top) + pad, 0, top)
 
 
-def _box_cells(minx: np.ndarray, miny: np.ndarray, maxx: np.ndarray, maxy: np.ndarray, zoom: int):
-    """(box, cell): one row per :func:`_world_tiles` tile at ``zoom`` that
-    each lon/lat box touches, grouped by box."""
-    tx0, ty0 = _world_tiles(minx, miny, zoom)
-    tx1, ty1 = _world_tiles(maxx, maxy, zoom)
-    box, tx, ty = geom.expand_boxes(tx0, tx1, ty0, ty1)
-    return box, _pack_cell(tx, ty, zoom)
+def _window_tiles(minx: np.ndarray, miny: np.ndarray, maxx: np.ndarray, maxy: np.ndarray, zoom: int, pad: int = 0):
+    """The world tile box of each lon/lat window [minx, maxx] × [miny,
+    maxy] at ``zoom``, grown by ``pad`` tiles on every side
+    (:func:`_world_tiles` of its corners), and its tiles:
+    ``((x0, y0, x1, y1), (row, tx, ty))``, one (row, tx, ty) per tile,
+    grouped by window row."""
+    x0, y0 = _world_tiles(minx, miny, zoom, -pad)
+    x1, y1 = _world_tiles(maxx, maxy, zoom, pad)
+    return (x0, y0, x1, y1), geom.expand_boxes(x0, x1, y0, y1)
+
+
+def _explode_windows(df: DataFrame, keep: int, fields: list, windows) -> DataFrame:
+    """One Arrow pass: ``windows(batch)`` gives ``(row, arrays)`` per
+    batch, and each output row is input row ``row``'s first ``keep``
+    columns (one ``take`` per column) plus ``arrays`` as ``fields``: the
+    window operators' explode."""
+    import pyarrow as pa
+
+    names = df.columns[:keep] + [f.name for f in fields]
+
+    def _explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            row, arrays = windows(batch)
+            rows = pa.array(row, type=pa.int64())
+            yield pa.RecordBatch.from_arrays([batch.column(i).take(rows) for i in range(keep)] + arrays, names=names)
+
+    return df.mapInArrow(_explode, StructType(df.schema.fields[:keep] + fields))
 
 
 def _lonlat_cells(lon: np.ndarray, lat: np.ndarray, zoom: int) -> np.ndarray:
     """The packed cell of each point's :func:`_world_tiles` tile at
     ``zoom``: the cell joins' point key."""
     return _pack_cell(*_world_tiles(lon, lat, zoom), zoom)
+
+
+def _query_windows(queries: DataFrame, zoom: int, ring: int = 0, radius: float = 0.0) -> DataFrame:
+    """(query_id, lon, lat) → (query_id, lon, lat, cell, _g): one row per
+    world tile at ``zoom`` of each query's window, lon/lat ± ``radius``
+    grown by ``ring`` tiles (:func:`_window_tiles`).
+
+    ``_g`` is the exact degree distance from the query to the nearest edge
+    of its window's tile box that is not a world edge (inf when every edge
+    is one): the euclidean lon/lat metric does not wrap, so every point
+    outside the window is at least that far away, and k neighbours within
+    it prove a kNN answer final."""
+    import pyarrow as pa
+
+    nmax = 2**zoom
+
+    def lat_edge(ty):
+        my = (ty * 256.0) * tiles.resolution(zoom) - tiles.ORIGIN_SHIFT
+        return tiles.meters_to_lonlat(np.zeros_like(my), my)[1]
+
+    def windows(batch):
+        lon, lat = (batch.column(i).to_numpy(zero_copy_only=False) for i in (1, 2))
+        (x0, y0, x1, y1), (row, tx, ty) = _window_tiles(
+            lon - radius, lat - radius, lon + radius, lat + radius, zoom, ring
+        )
+        # box edges: lon edges are exact rationals; lat edges via mercator
+        g = np.minimum.reduce(
+            [
+                np.where(x0 == 0, np.inf, lon - (-180.0 + x0 * (360.0 / nmax))),
+                np.where(x1 == nmax - 1, np.inf, -180.0 + (x1 + 1) * (360.0 / nmax) - lon),
+                np.where(y0 == 0, np.inf, lat - lat_edge(y0)),
+                np.where(y1 == nmax - 1, np.inf, lat_edge(y1 + 1) - lat),
+            ]
+        )
+        return row, [pa.array(_pack_cell(tx, ty, zoom), type=pa.int64()), pa.array(g[row], type=pa.float64())]
+
+    fields = [StructField("cell", LongType()), StructField("_g", DoubleType())]
+    return _explode_windows(queries, 3, fields, windows)
 
 
 # ---------------------------------------------------------------------------
@@ -309,36 +403,34 @@ def _point_occupancy(points: DataFrame, zoom: int, lon_col: str, lat_col: str) -
     return occupied, cell[count * parts > sum(r.n for r in rows)]
 
 
-def _cover_batch(
+def _cover_windows(
     batch: "pa.RecordBatch", zoom: int, occupied: np.ndarray | None = None,
     hot: np.ndarray | None = None, n_salt: int = 1,
-) -> "pa.RecordBatch":
-    """(polygon_id, geom_wkb, minx, miny, maxx, maxy) → one (polygon_id,
-    geom_wkb, cell) row per mercator tile covering each bbox at ``zoom``:
-    one ``np.repeat`` over the per-polygon tile counts and one ``take`` of
-    the polygon columns per batch.  With an ``occupied`` bitmap
-    (:func:`_point_occupancy`), only the cells whose bit is set.  With
-    ``hot`` cells, a ``salt`` column too: the row of a hot cell repeats
-    ``n_salt`` times with salts 0..n_salt − 1, every other row has salt 0."""
+) -> tuple:
+    """A (polygon_id, geom_wkb, minx, miny, maxx, maxy) batch → (row,
+    [cell]) for :func:`_explode_windows`: one row per world tile covering
+    each bbox at ``zoom`` (:func:`_window_tiles`).  With an ``occupied``
+    bitmap (:func:`_point_occupancy`), only the cells whose bit is set.
+    With ``hot`` cells, a ``salt`` array too: the row of a hot cell
+    repeats ``n_salt`` times with salts 0..n_salt − 1, every other row has
+    salt 0."""
     import pyarrow as pa
 
-    box, cell = _box_cells(*(batch.column(i).to_numpy(zero_copy_only=False) for i in range(2, 6)), zoom)
+    _, (box, tx, ty) = _window_tiles(*(batch.column(i).to_numpy(zero_copy_only=False) for i in range(2, 6)), zoom)
+    cell = _pack_cell(tx, ty, zoom)
     if occupied is not None:
         bit = cell & _occupancy_mask(zoom)
         keep = ((occupied[bit >> 3] >> (bit & 7).astype(np.uint8)) & 1).astype(bool)
         box, cell = box[keep], cell[keep]
-    names, salt = ["polygon_id", "geom_wkb", "cell"], []
+    salt = []
     if hot is not None:
         # one box [0, last] × [0, 0] per row: its x coordinates are the row's salts
         last = np.where(np.isin(cell, hot), n_salt - 1, 0)
         zero = np.zeros_like(last)
         row, salt_ids, _ = geom.expand_boxes(zero, last, zero, zero)
         box, cell = box[row], cell[row]
-        names, salt = names + ["salt"], [pa.array(salt_ids, type=pa.int32())]
-    rows = pa.array(box, type=pa.int64())
-    return pa.RecordBatch.from_arrays(
-        [batch.column(0).take(rows), batch.column(1).take(rows), pa.array(cell, type=pa.int64())] + salt, names=names
-    )
+        salt = [pa.array(salt_ids, type=pa.int32())]
+    return box, [pa.array(cell, type=pa.int64())] + salt
 
 
 def polygon_cover_cells(polygons: DataFrame, zoom: int, occupied: np.ndarray | None = None) -> DataFrame:
@@ -353,23 +445,15 @@ def polygon_cover_cells(polygons: DataFrame, zoom: int, occupied: np.ndarray | N
 def _cover(
     polygons: DataFrame, zoom: int, occupied: np.ndarray | None, hot: np.ndarray | None = None, n_salt: int = 1
 ) -> DataFrame:
-    """:func:`polygon_cover_cells`, plus :func:`_cover_batch`'s ``salt``
+    """:func:`polygon_cover_cells`, plus :func:`_cover_windows`'s ``salt``
     column when ``hot`` cells are given."""
-    fields = [
-        StructField("polygon_id", IntegerType()),
-        StructField("geom_wkb", polygons.schema["geom_wkb"].dataType),
-        StructField("cell", LongType()),
-    ]
+    fields = [StructField("cell", LongType())]
     if hot is not None:
         fields.append(StructField("salt", IntegerType()))
-
-    def _explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            yield _cover_batch(batch, zoom, occupied, hot, n_salt)
-
-    return polygons.select(
+    polys = polygons.select(
         F.col("polygon_id").cast("int").alias("polygon_id"), "geom_wkb", "minx", "miny", "maxx", "maxy"
-    ).mapInArrow(_explode, StructType(fields))
+    )
+    return _explode_windows(polys, 2, fields, lambda batch: _cover_windows(batch, zoom, occupied, hot, n_salt))
 
 
 def pip_join_shuffle(
@@ -479,52 +563,6 @@ def _pip_refine(
 # ---------------------------------------------------------------------------
 
 
-def _ring_cells_udf(zoom: int, ring: int):
-    """pandas UDF: (lon,lat) → struct(cells array, guarantee double).
-
-    ``cells`` are the packed ids of the (2r+1)² box (clipped at world edges —
-    the euclidean lon/lat metric does not wrap).  ``guarantee`` is the exact
-    degree distance from the query point to the nearest edge of the explored
-    tile box: every unexplored point is at least that far away, so having k
-    neighbors within it proves the kNN answer final.
-    """
-    shift = np.int64(2 ** (zoom + 1))
-    nmax = 2**zoom
-
-    @F.pandas_udf("struct<cells: array<long>, guarantee: double>")
-    def _cells(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        lo = lon.to_numpy(np.float64)
-        la = lat.to_numpy(np.float64)
-        tx, ty = _world_tiles(lo, la, zoom)
-        x0 = np.clip(tx - ring, 0, nmax - 1)
-        x1 = np.clip(tx + ring, 0, nmax - 1)
-        y0 = np.clip(ty - ring, 0, nmax - 1)
-        y1 = np.clip(ty + ring, 0, nmax - 1)
-        # box edges: lon edges are exact rationals; lat edges via mercator
-        lon_lo = -180.0 + x0 * (360.0 / nmax)
-        lon_hi = -180.0 + (x1 + 1) * (360.0 / nmax)
-        _, lat_lo_e = tiles.meters_to_lonlat(np.zeros_like(lo), (y0 * 256.0) * tiles.resolution(zoom) - tiles.ORIGIN_SHIFT)
-        _, lat_hi_e = tiles.meters_to_lonlat(np.zeros_like(lo), ((y1 + 1) * 256.0) * tiles.resolution(zoom) - tiles.ORIGIN_SHIFT)
-        inf = np.inf
-        g = np.minimum.reduce(
-            [
-                np.where(x0 == 0, inf, lo - lon_lo),
-                np.where(x1 == nmax - 1, inf, lon_hi - lo),
-                np.where(y0 == 0, inf, la - lat_lo_e),
-                np.where(y1 == nmax - 1, inf, lat_hi_e - la),
-            ]
-        )
-        cells = []
-        for i in range(lo.shape[0]):
-            txs = np.arange(x0[i], x1[i] + 1, dtype=np.int64)
-            tys = np.arange(y0[i], y1[i] + 1, dtype=np.int64)
-            gx, gy = np.meshgrid(txs, tys)
-            cells.append((gx.ravel() * shift + gy.ravel()).tolist())
-        return pd.DataFrame({"cells": cells, "guarantee": g})
-
-    return _cells
-
-
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
@@ -548,9 +586,13 @@ def knn_join(
     MAXDIST-bounded semantics must pass strategy="rings" explicitly.
 
     Plan per round r (ring radius r): unsatisfied queries explode to the
-    (2r+1)² candidate cells → equi-join points on cell → window top-k.  A
+    (2r+1)² candidate cells around their tile (:func:`_query_windows`, the
+    box clipped at the world edges) → equi-join points on cell → window
+    top-k.  A query's window cells are distinct and a point row has one
+    cell, so each (query, point row) pair is a candidate once, and
+    duplicate point rows come back as from :func:`knn_join_broadcast`.  A
     query is final when it has ≥k neighbors no farther than the exact
-    distance to the explored box edge (see _ring_cells_udf) — mirrors the
+    distance to the explored box edge (the window's ``_g``) — mirrors the
     radius-bounded search loop of GDALGridNearestNeighbor
     (alg/gdalgrid.cpp:675-775) with the quadtree (port/cpl_quad_tree.h)
     replaced by the multi-resolution cell grid.  At ``max_ring`` the search
@@ -601,16 +643,7 @@ def knn_join(
             if remaining.isEmpty():
                 break
             last = ring >= max_ring
-            cells_udf = _ring_cells_udf(zoom, ring)
-            ringed = remaining.withColumn("_r", cells_udf(F.col("lon"), F.col("lat")))
-            cand = (
-                ringed.select(
-                    query_id, "lon", "lat", F.col("_r.guarantee").alias("_g"), F.explode("_r.cells").alias("cell")
-                )
-                .join(pts, on="cell", how="inner")
-                .drop("cell")
-                .dropDuplicates([query_id, "_nbr"])
-            )
+            cand = _query_windows(remaining, zoom, ring).join(pts, on="cell", how="inner").drop("cell")
             dist = F.sqrt(
                 (F.col("lon") - F.col("_nlon")) ** 2 + (F.col("lat") - F.col("_nlat")) ** 2
             )
@@ -668,19 +701,14 @@ def idw_interpolate(
     (d == 0) short-circuits to its value (the reference's dfEpsilon path).
     Queries with no point in the window → NULL.
 
-    Plan: one ring explode + cell equi-join + groupBy agg — all JVM-side
-    except the ring-cell UDF.  Weights use squared euclidean degrees for
-    p=2 (exact, no sqrt); general p uses pow(d, p).
+    Plan: the ring windows (:func:`_query_windows`, one Arrow pass) + cell
+    equi-join + groupBy agg, JVM-side past the windows.  Weights use
+    squared euclidean degrees for p=2 (exact, no sqrt); general p uses
+    pow(d, p).
     """
     pts = points.select(F.col(value_col).alias("_v"), F.col("lon").alias("_plon"), F.col("lat").alias("_plat"))
     pts = _with_world_cell(pts, zoom, "_plon", "_plat")
-    cells_udf = _ring_cells_udf(zoom, ring)
-    cand = (
-        queries.select(query_id, "lon", "lat")
-        .withColumn("_r", cells_udf(F.col("lon"), F.col("lat")))
-        .select(query_id, "lon", "lat", F.explode("_r.cells").alias("cell"))
-        .join(pts, on="cell", how="inner")
-    )
+    cand = _query_windows(queries.select(query_id, "lon", "lat"), zoom, ring).join(pts, on="cell", how="inner")
     d2 = (F.col("lon") - F.col("_plon")) ** 2 + (F.col("lat") - F.col("_plat")) ** 2
     if power == 2:
         w = F.when(d2 == 0, F.lit(None)).otherwise(F.lit(1.0) / d2)
@@ -709,27 +737,13 @@ def _radius_hits(
 ) -> DataFrame:
     """(query_id, _v, _d, _plon, _plat) for every point within ``radius``
     (euclidean degrees) of a query, ``_d`` its distance.  Each query's
-    radius box is covered with its world tiles at ``zoom`` by the polygon
-    cover's rule (:func:`_box_cells`, one Arrow pass), equi-joined to the points' world cells and filtered on
-    the exact distance.  A point within ``radius`` lies in the box, so its
-    tile is among the box's at any latitude."""
-    import pyarrow as pa
-
-    qs = queries.select(query_id, "lon", "lat")
-    names = qs.columns + ["cell"]
-
-    def _explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            lon, lat = (batch.column(i).to_numpy(zero_copy_only=False) for i in (1, 2))
-            box, cell = _box_cells(lon - radius, lat - radius, lon + radius, lat + radius, zoom)
-            rows = pa.array(box, type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i).take(rows) for i in range(3)] + [pa.array(cell, type=pa.int64())], names=names
-            )
-
+    radius box is covered with its world tiles at ``zoom``
+    (:func:`_query_windows`), equi-joined to the points' world cells and
+    filtered on the exact distance.  A point within ``radius`` lies in the
+    box, so its tile is among the box's at any latitude."""
     pts = points.select(F.col(value_col).alias("_v"), F.col("lon").alias("_plon"), F.col("lat").alias("_plat"))
     pts = _with_world_cell(pts, zoom, "_plon", "_plat")
-    windows = qs.mapInArrow(_explode, StructType(qs.schema.fields + [StructField("cell", LongType())]))
+    windows = _query_windows(queries.select(query_id, "lon", "lat"), zoom, radius=radius)
     cand = windows.join(pts, on="cell", how="inner")
     dlon = F.col("lon") - F.col("_plon")
     dlat = F.col("lat") - F.col("_plat")

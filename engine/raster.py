@@ -18,11 +18,12 @@ gvBurnScanline, alg/gdalrasterize.cpp):
   shuffle carries at most 65536 rows per tile no matter how many input
   rows: the engine's answer to the reference's Y-chunked burn loop
   (alg/gdalrasterize.cpp:626-660).
-* geometries: :func:`_tile_cover` explodes each bbox to the tiles it
-  covers; :func:`_burn_tiles` burns each covered tile in one grouped-map
-  task and drops a tile that burned nothing; :func:`_pixel_centres` and
-  :func:`_centre_fill` are the centre rule, :func:`_walk_burn` the line
-  and ALL_TOUCHED ring walks.
+* geometries: :func:`_tile_cover` explodes each bbox to the world tiles
+  it covers by the cell operators' one window rule
+  (:func:`joins._window_tiles`); :func:`_burn_tiles` burns each covered
+  tile in one grouped-map task and drops a tile that burned nothing;
+  :func:`_pixel_centres` and :func:`_centre_fill` are the centre rule,
+  :func:`_walk_burn` the line and ALL_TOUCHED ring walks.
 
 Producers:
 
@@ -59,7 +60,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import tiles
+from . import geom, tiles
+from .joins import _append_lonlat_columns, _broadcast_index, _explode_windows, _finite, _window_tiles
 
 TILE_SIZE = tiles.TILE_SIZE
 _PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43], dtype=np.int64)
@@ -162,13 +164,13 @@ def _pixel_arrays(tx, ty, ix, iy) -> list:
 
 def with_pixel(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Append (tx, ty, ix, iy): tile + in-tile pixel (raster row from top),
-    encoded by :func:`_pixels`."""
-    from .joins import _append_lonlat_columns
+    encoded by :func:`_pixels`; all four null for a NaN, infinite or null
+    coordinate."""
 
     def encode(lon, lat):
         return _pixel_arrays(*_pixels(lon, lat, zoom))
 
-    return _append_lonlat_columns(points, lon_col, lat_col, _PARTIAL_SCHEMA.fields[:4], encode)
+    return _append_lonlat_columns(points, lon_col, lat_col, _PARTIAL_SCHEMA.fields[:4], _finite(encode))
 
 
 def _density_batch(lon: np.ndarray, lat: np.ndarray, zoom: int) -> "pa.RecordBatch":
@@ -219,12 +221,15 @@ def burn_base_tiles(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col:
     :func:`_assemble_density`.  Tiles equal those of :func:`with_pixel` →
     per-pixel count → :func:`_assemble_density` (pinned by the
     composed-vs-fused identity test); above zoom 20, where the packed key
-    does not fit, that composed plan is what runs.
+    does not fit, that composed plan is what runs.  Both drop a point with
+    a NaN, infinite or null coordinate.
     """
     if not 0 <= zoom <= 20:
         # packed-key width: tx,ty < 2^20, ix,iy < 2^9
-        partial = with_pixel(points.select(lon_col, lat_col), zoom, lon_col, lat_col).select(
-            "tx", "ty", "ix", "iy", F.lit(1).cast("long").alias("cnt")
+        partial = (
+            with_pixel(points.select(lon_col, lat_col), zoom, lon_col, lat_col)
+            .where(F.col("tx").isNotNull())
+            .select("tx", "ty", "ix", "iy", F.lit(1).cast("long").alias("cnt"))
         )
         return _assemble_density(partial, zoom)
     return _burn_density(points, zoom, lon_col, lat_col)
@@ -281,8 +286,6 @@ def burn_base_tiles_pip(
     """
     if not 0 <= zoom <= 20:
         raise ValueError("burn_base_tiles_pip supports zoom 0..20 (packed-key width)")
-    from .joins import _broadcast_index
-
     return _burn_density(points, zoom, lon_col, lat_col, _broadcast_index(points.sparkSession, polygons_pdf))
 
 
@@ -310,6 +313,7 @@ def burn_points(
     (sum / max_by) with map-side combine → :func:`_assemble_density`
     (after ``max_by`` a pixel has one row, so its sum is that value) —
     no per-point Python beyond the shared vectorized pixel encoder.
+    A point with a NaN, infinite or null coordinate burns nowhere.
     :func:`burn_base_tiles` remains the count fast path.
     """
     if merge_alg not in ("replace", "add"):
@@ -321,38 +325,27 @@ def burn_points(
         val = val + F.col(z_col).cast("double")
     burn = val.cast("long")  # int-buffer truncation, like the Byte path
     cols = [lon_col, lat_col] + [c for c in (id_col, value_col, z_col) if c]
-    px = with_pixel(points.select(*cols), zoom, lon_col, lat_col)
+    px = with_pixel(points.select(*cols), zoom, lon_col, lat_col).where(F.col("tx").isNotNull())
     merged = F.sum(burn) if merge_alg == "add" else F.max_by(burn, F.col(id_col))
     return _assemble_density(px.groupBy("tx", "ty", "ix", "iy").agg(merged.alias("cnt")), zoom)
 
 
 def _tile_cover(df: DataFrame, wkb_col: str, zoom: int, pad: int) -> DataFrame:
-    """``df`` plus (tx, ty): one row per mercator tile at ``zoom`` that the
-    bbox of ``wkb_col`` covers, grown by ``pad`` tiles on each side and
-    clipped to the world; the bbox's latitudes are first clamped inside
-    the mercator limit.  Pure arithmetic on the envelope, exploded
-    JVM-side, so a geometry ships to exactly the tiles it can touch."""
-    lat_lim = tiles.MERCATOR_LAT_MAX - 1e-9
-    top = 2**zoom - 1
+    """``df`` plus (tx, ty): one row per world tile at ``zoom`` of the
+    bbox of ``wkb_col`` grown by ``pad`` tiles (:func:`joins._window_tiles`,
+    one Arrow pass), so a geometry ships to exactly the tiles it can
+    touch."""
+    import pyarrow as pa
 
-    @F.pandas_udf("tx0 long, ty0 long, tx1 long, ty1 long")
-    def _trange(wkb: pd.Series) -> pd.DataFrame:
-        from . import geom as geommod
+    i = df.columns.index(wkb_col)
 
-        env = np.array([geommod.envelope(bytes(b)) for b in wkb], dtype=np.float64).reshape(-1, 4)
-        tx0, ty0 = tiles.lonlat_to_tile(env[:, 0], np.clip(env[:, 1], -lat_lim, lat_lim), zoom)
-        tx1, ty1 = tiles.lonlat_to_tile(env[:, 2], np.clip(env[:, 3], -lat_lim, lat_lim), zoom)
-        return pd.DataFrame({
-            "tx0": np.clip(tx0 - pad, 0, top), "ty0": np.clip(ty0 - pad, 0, top),
-            "tx1": np.clip(tx1 + pad, 0, top), "ty1": np.clip(ty1 + pad, 0, top),
-        })
+    def windows(batch):
+        env = np.array([geom.envelope(b) for b in batch.column(i).to_pylist()], dtype=np.float64).reshape(-1, 4)
+        _, (row, tx, ty) = _window_tiles(*env.T, zoom, pad)
+        return row, [pa.array(tx, type=pa.int64()), pa.array(ty, type=pa.int64())]
 
-    return (
-        df.withColumn("_t", _trange(wkb_col))
-        .withColumn("tx", F.explode(F.sequence("_t.tx0", "_t.tx1")))
-        .withColumn("ty", F.explode(F.sequence("_t.ty0", "_t.ty1")))
-        .drop("_t")
-    )
+    fields = [StructField("tx", LongType()), StructField("ty", LongType())]
+    return _explode_windows(df, len(df.columns), fields, windows)
 
 
 def _burn_tiles(cover: DataFrame, zoom: int, burn) -> DataFrame:
@@ -444,17 +437,15 @@ def rasterize_polygons(
     add_mode = merge_alg == "add"
 
     def _burn(tx: int, ty: int, pdf: pd.DataFrame) -> np.ndarray:
-        from . import geom as geommod
-
         lon, lat = _pixel_centres(tx, ty, zoom)
         wkbs = [bytes(b) for b in pdf["_wkb"]]
-        table = geommod.EdgeTable(wkbs)
+        table = geom.EdgeTable(wkbs)
         grid = np.zeros((TILE_SIZE, TILE_SIZE), dtype=np.int64)
         for i in np.argsort(pdf["_pid"].to_numpy(), kind="stable"):
             v = int(pdf["_val"].iat[i])
             rings = None
             if all_touched or burn_value_from_z:
-                _, rings = geommod.collect_parts_z(wkbs[i])
+                _, rings = geom.collect_parts_z(wkbs[i])
             if burn_value_from_z and rings:
                 # the whole polygon burns value + FIRST vertex Z: the
                 # scanline fill uses dfVariant[0] (llrasterize.cpp:209,240)
@@ -617,8 +608,6 @@ def rasterize_invert(
     over the full collection, pixel for pixel (the same
     :class:`geom.EdgeTable` centre fill as the forward burn).
     """
-    from . import geom as geommod
-
     if merge_alg not in ("replace", "add"):
         raise ValueError("merge_alg must be 'replace' or 'add'")
     spark = polys.sparkSession
@@ -632,7 +621,7 @@ def rasterize_invert(
         (float(lo0[0]), float(la0[0])), (float(lo1[0]), float(la0[0])),
         (float(lo1[0]), float(la1[0])), (float(lo0[0]), float(la1[0])),
     ]
-    universe_wkb = geommod.wkb_polygon([universe])
+    universe_wkb = geom.wkb_polygon([universe])
     if value_col:
         first = polys.select(value_col).limit(1).collect()  # ONE row: burn constant
         v = int(first[0][0]) if first else 1
@@ -641,11 +630,9 @@ def rasterize_invert(
 
     @F.pandas_udf("array<binary>")
     def _rings_udf(wkb: pd.Series) -> pd.Series:
-        from . import geom as geommod
-
         return pd.Series(
             [
-                [geommod.wkb_polygon([rg.tolist()]) for rg in geommod.polygon_rings(bytes(b))]
+                [geom.wkb_polygon([rg.tolist()]) for rg in geom.polygon_rings(bytes(b))]
                 for b in wkb
             ]
         )
@@ -654,13 +641,11 @@ def rasterize_invert(
     allr = rings.unionByName(spark.createDataFrame(pd.DataFrame({"_rwkb": [universe_wkb]})))
 
     def _burn(tx: int, ty: int, pdf: pd.DataFrame) -> np.ndarray:
-        from . import geom as geommod
-
         combined = []
         for b in pdf["_rwkb"]:
-            combined.extend(rg.tolist() for rg in geommod.polygon_rings(bytes(b)))
+            combined.extend(rg.tolist() for rg in geom.polygon_rings(bytes(b)))
         grid = np.zeros((TILE_SIZE, TILE_SIZE), dtype=np.int64)
-        table = geommod.EdgeTable([geommod.wkb_polygon(combined)])
+        table = geom.EdgeTable([geom.wkb_polygon(combined)])
         _centre_fill(grid, *_pixel_centres(tx, ty, zoom), table, 0, v, False)
         return grid
 
@@ -792,7 +777,6 @@ def rasterize_lines(
     add_mode = merge_alg == "add"
 
     def _burn(tx: int, ty: int, pdf: pd.DataFrame) -> np.ndarray:
-        from . import geom as geommod
         from . import lineclip as lcmod
 
         gx0, gx1 = tx * TILE_SIZE, (tx + 1) * TILE_SIZE
@@ -802,7 +786,7 @@ def rasterize_lines(
         for i in order:
             v = int(pdf["_val"].iat[i])
             if all_touched or burn_value_from_z:
-                _, parts = geommod.collect_parts_z(bytes(pdf["_wkb"].iat[i]))
+                _, parts = geom.collect_parts_z(bytes(pdf["_wkb"].iat[i]))
                 _walk_burn(grid, parts, v, tx, ty, zoom, all_touched, burn_value_from_z, add_mode)
                 continue
             # default path: per-feature pixel dedup (documented contract)
@@ -1300,12 +1284,10 @@ def to_ogr_points(tile_df: DataFrame, skip_zero: bool = False) -> DataFrame:
     :func:`to_xyz`'s (lon, lat, value) rows plus a point geometry column,
     ready for any vector sink.  Multi-band sources are multiple tile
     tables joined on (tx, ty) upstream, one value column each."""
-    from . import geom as geommod
-
     @F.pandas_udf("binary")
     def _pt(lon: pd.Series, lat: pd.Series) -> pd.Series:
         return pd.Series(
-            [geommod.wkb_point(float(x), float(y)) for x, y in zip(lon, lat)]
+            [geom.wkb_point(float(x), float(y)) for x, y in zip(lon, lat)]
         )
 
     return to_xyz(tile_df, skip_zero).withColumn("geom_wkb", _pt("lon", "lat"))

@@ -267,6 +267,28 @@ def test_knn_rings_reach_points_at_the_world_edges(spark):
     assert [r[2] for r in rings if r[1] == 1] == ["p0", "p3", "p2"]
 
 
+def test_knn_rings_keep_duplicate_point_rows(spark):
+    """Two identical point rows and two points that share an id are all
+    candidates of the ring join, as of knn_join_broadcast: each (query,
+    point row) pair is a candidate once, so nothing is deduplicated, and
+    the rows of both plans are equal for k = 2 and 4."""
+    rng = np.random.default_rng(5)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"name": ["dup", "dup", "twin", "twin"] + [f"p{i}" for i in range(200)],
+                      "lon": np.concatenate([[1.0, 1.0, 1.5, 3.0], rng.uniform(-170, 170, 200)]),
+                      "lat": np.concatenate([[1.0, 1.0, 1.0, 1.0], rng.uniform(-75, 75, 200)])})
+    )
+    qs = spark.createDataFrame(pd.DataFrame({"qid": [0, 1], "lon": [1.1, 2.9], "lat": [1.0, 1.1]}))
+
+    def rows(df):
+        return sorted((r.qid, r.rank, r.neighbor, round(r.dist, 9)) for r in df.collect())
+
+    for k in (2, 4):
+        rings = rows(joins.knn_join(qs, pts, k=k, zoom=4, max_ring=8, strategy="rings"))
+        assert rings == rows(joins.knn_join_broadcast(qs, pts, k=k)), k
+    assert [r[2] for r in rings if r[0] == 0] == ["dup", "dup", "twin", "twin"]
+
+
 def test_geocode_reverse_matches_oracle(spark, data):
     """geocode_reverse (OGRGeocodeReverse analog): every query resolves to
     the brute-force nearest gazetteer place, ties broken by name; repeated
@@ -303,28 +325,71 @@ def _cover_multiset(rows):
     return Counter((r.polygon_id, r.cell, bytes(r.geom_wkb)) for r in rows)
 
 
-def _meshgrid_cover(polys_pdf, zoom):
-    """The per-polygon meshgrid expansion polygon_cover_cells used to run:
-    the reference for its vectorized form.  Bbox corners clamp to the
-    mercator world and their tiles to [0, 2^zoom - 1]."""
-    from collections import Counter
-
+def _meshgrid_tiles(minx, miny, maxx, maxy, zoom, pad=0):
+    """The per-window meshgrid expansion polygon_cover_cells used to run,
+    grown by ``pad``: the reference for the vectorized window rule.
+    Corners clamp to the mercator world (a NaN lon to -180°, a NaN lat to
+    the southern limit) and their tiles to [0, 2^zoom - 1]; the pad is
+    applied after that clip and clipped again."""
     from engine import tiles
 
-    lim = tiles.MERCATOR_LAT_MAX
-    shift = np.int64(2 ** (zoom + 1))
+    lim, top = tiles.MERCATOR_LAT_MAX, 2**zoom - 1
+
+    def tile(lon, lat, d):
+        lon = -180.0 if np.isnan(lon) else min(max(lon, -180.0), 180.0)
+        lat = -lim if np.isnan(lat) else min(max(lat, -lim), lim)
+        tx, ty = tiles.lonlat_to_tile(np.array([lon]), np.array([lat]), zoom)
+        return [min(max(min(max(int(t[0]), 0), top) + d, 0), top) for t in (tx, ty)]
+
+    (tx0, ty0), (tx1, ty1) = tile(minx, miny, -pad), tile(maxx, maxy, pad)
+    gx, gy = np.meshgrid(np.arange(tx0, tx1 + 1), np.arange(ty0, ty1 + 1))
+    return list(zip(gx.ravel().tolist(), gy.ravel().tolist()))
+
+
+def _meshgrid_cover(polys_pdf, zoom):
+    """:func:`_meshgrid_tiles` of each polygon's bbox as the cover's
+    (polygon_id, cell, wkb) multiset."""
+    from collections import Counter
+
+    shift = 2 ** (zoom + 1)
     out = Counter()
-
-    def tile(lon, lat):
-        tx, ty = tiles.lonlat_to_tile(np.clip([lon], -180.0, 180.0), np.clip([lat], -lim, lim), zoom)
-        return min(max(tx[0], 0), 2**zoom - 1), min(max(ty[0], 0), 2**zoom - 1)
-
     for r in polys_pdf.itertuples():
-        (tx0, ty0), (tx1, ty1) = tile(r.minx, r.miny), tile(r.maxx, r.maxy)
-        gx, gy = np.meshgrid(np.arange(tx0, tx1 + 1), np.arange(ty0, ty1 + 1))
-        for c in (gx.ravel() * shift + gy.ravel()).tolist():
-            out[(int(r.polygon_id), c, bytes(r.geom_wkb))] += 1
+        for tx, ty in _meshgrid_tiles(r.minx, r.miny, r.maxx, r.maxy, zoom):
+            out[(int(r.polygon_id), tx * shift + ty, bytes(r.geom_wkb))] += 1
     return out
+
+
+def test_window_tiles_match_meshgrid():
+    """The one window rule (joins._window_tiles) emits the per-window
+    meshgrid's tiles, grouped by window, at zooms 0, 4 and 8: boxes across
+    ±180° and beyond ±85.0511°, NaN corners, and pads that reach the world
+    edge or grow a box beyond ±180° back into the world."""
+    nan = float("nan")
+    boxes = [
+        (-200.0, -10.0, -170.0, 10.0),
+        (170.0, -95.0, 190.0, -80.0),
+        (-180.0, -90.0, 180.0, 90.0),
+        (10.0, 84.0, 40.0, 89.9),
+        (190.0, 86.0, 200.0, 88.0),  # wholly beyond +180° and the north limit
+        (-210.0, -89.0, -190.0, -87.0),  # wholly beyond -180° and the south limit
+        (45.0, 20.0, 45.0, 21.0),
+        (12.3, 45.2, 12.3, 45.2),
+        (179.9, -85.0, 179.9, 85.0),
+        (nan, 0.0, 10.0, 10.0),
+        (0.0, nan, 10.0, 10.0),
+        (0.0, 0.0, nan, nan),
+        (nan, nan, nan, nan),
+    ]
+    minx, miny, maxx, maxy = (np.array(c, dtype=np.float64) for c in zip(*boxes))
+    for zoom in (0, 4, 8):
+        for pad in (0, 1, 3, 2**zoom):
+            box, (row, tx, ty) = joins._window_tiles(minx, miny, maxx, maxy, zoom, pad)
+            got = [sorted(zip(tx[row == i].tolist(), ty[row == i].tolist())) for i in range(len(boxes))]
+            want = [sorted(_meshgrid_tiles(*b, zoom, pad)) for b in boxes]
+            assert got == want, (zoom, pad)
+            assert np.all(np.diff(row) >= 0)
+            x0, y0, x1, y1 = box
+            assert ((x0 >= 0) & (y0 >= 0) & (x1 <= 2**zoom - 1) & (y1 <= 2**zoom - 1)).all()
 
 
 def _bbox_polys(boxes, first_id=0):
@@ -362,8 +427,8 @@ def test_polygon_cover_cells_matches_meshgrid(spark, data):
 
 def test_shuffle_udfs_over_empty_partitions(spark):
     """Both Arrow UDFs of the shuffle join handle a DataFrame with empty
-    partitions (3 rows over 8 partitions), and an empty input batch gives a
-    zero-row batch of the output types."""
+    partitions (3 rows over 8 partitions), and an empty input batch gives
+    no cover rows and a zero-row refine batch of the output types."""
     import pyarrow as pa
 
     polys_pdf = _bbox_polys([(0.0, 0.0, 10.0, 10.0), (5.0, 5.0, 15.0, 15.0), (-20.0, -5.0, -10.0, 5.0)])
@@ -390,9 +455,8 @@ def test_shuffle_udfs_over_empty_partitions(spark):
         [pa.array([], pa.int32()), pa.array([], pa.binary())] + [pa.array([], pa.float64())] * 4,
         names=["polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy"],
     )
-    out = joins._cover_batch(empty_poly, 8)
-    assert out.num_rows == 0
-    assert out.schema.types == [pa.int32(), pa.binary(), pa.int64()]
+    row, (cell,) = joins._cover_windows(empty_poly, 8)
+    assert len(row) == 0 and cell.type == pa.int64()
     empty_cand = pa.RecordBatch.from_arrays(
         [pa.array([], pa.string()), pa.array([], pa.float64()), pa.array([], pa.float64()),
          pa.array([], pa.int32()), pa.array([], pa.binary())],

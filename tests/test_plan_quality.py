@@ -490,6 +490,40 @@ def test_knn_join_names_its_eager_passes(spark):
     assert [d for d, _, _ in jobs] == ["joins.knn_join probe"], jobs
 
 
+def test_window_covers_plan_as_one_map_in_arrow(spark):
+    """A kNN ring round, idw_interpolate, grid_metrics and
+    rasterize_polygons each plan their window cover as one MapInArrow over
+    the query columns (the burn: over its geometries), beside the points'
+    own cell encode: no ArrowEvalPython (pandas UDF) and no Generate (JVM
+    explode) anywhere in their plans."""
+    import re
+
+    from engine import joins, raster
+    from engine.geom import wkb_polygon
+
+    pts = _lonlat(spark, 500).withColumn("name", F.concat_ws(",", "lon", "lat")).withColumn("v", F.lit(1.0))
+    qs = _lonlat(spark, 20).withColumn("qid", F.concat_ws(",", "lon", "lat"))
+    square = wkb_polygon([[(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)]])
+    polys = spark.createDataFrame([(1, square)], "id long, geom_wkb binary")
+
+    def arrow_inputs(df) -> list:
+        plan = _plan(df)
+        names = re.findall(r"\(\d+\) (\w+)", plan)
+        assert not {"ArrowEvalPython", "BatchEvalPython", "Generate"} & set(names), names
+        inputs = re.findall(r"\(\d+\) MapInArrow\s*\nInput \[\d+\]: \[(.*?)\]", plan)
+        assert len(inputs) == names.count("MapInArrow"), plan
+        return [tuple(c.split("#")[0] for c in i.split(", ")) for i in inputs]
+
+    query, point = ("qid", "lon", "lat"), ("_nbr", "_nlon", "_nlat")
+    # the last round's top-k is read twice (its rows and its satisfied set)
+    ring = arrow_inputs(joins.knn_join(qs, pts, k=3, zoom=4, max_ring=1, strategy="rings"))
+    assert sorted(ring) == sorted([query, point] * 2), ring
+    value_point = ("_v", "_plon", "_plat")
+    assert sorted(arrow_inputs(joins.idw_interpolate(qs, pts, "v", zoom=4))) == sorted([query, value_point])
+    assert sorted(arrow_inputs(joins.grid_metrics(qs, pts, "v", 5.0, zoom=4))) == sorted([query, value_point])
+    assert arrow_inputs(raster.rasterize_polygons(polys, 6)) == [("_pid", "_val", "_wkb")]
+
+
 def test_sieve_and_ann_name_their_eager_passes(spark):
     """Every job a ``sieve_filter`` call starts is named for its step
     (``components.sieve_filter <step>``, the label propagation's

@@ -580,6 +580,42 @@ def test_density_burns_drop_non_finite_points(spark):
         assert pip[0] == pip[1] == tiles(raster.burn_base_tiles(clean, zoom))
 
 
+def test_encoders_and_composed_burns_null_non_finite_points(spark):
+    """with_tile, with_cell and with_pixel give a point with a NaN,
+    infinite or null coordinate null columns (they used to write tile
+    −2^63) and encode the finite points of the same batch as alone;
+    burn_base_tiles above zoom 20 and burn_points drop such a point."""
+    from engine import joins, tiles
+
+    nan, inf = float("nan"), float("inf")
+    finite = [(10.0, 5.0), (10.5, 5.2), (-70.0, 40.0), (151.2, -33.9)]
+    bad = [(nan, 0.0), (inf, 0.0), (-inf, 0.0), (10.0, nan), (10.0, -inf), (None, 5.0), (10.0, None)]
+    rows = [(i, i + 1, *p) for i, p in enumerate(bad[:4] + finite + bad[4:])]
+    dirty = spark.createDataFrame(rows, "id long, v long, lon double, lat double")
+    clean = dirty.where("id between 4 and 7")
+    lon, lat = (np.array([p[k] for p in finite]) for k in (0, 1))
+
+    def by_id(df, cols):
+        got = {r.id: tuple(r[c] for c in cols) for r in df.collect()}
+        assert all(v == (None,) * len(cols) for i, v in got.items() if not 4 <= i <= 7), got
+        return [got[i] for i in range(4, 8)]
+
+    tx, ty = tiles.lonlat_to_tile(lon, lat, 8)
+    want = list(zip(tx.tolist(), ty.tolist(), tiles.quadkey(tx, ty, 8).tolist()))
+    assert by_id(joins.with_tile(dirty, 8), ["tx", "ty", "quadkey"]) == want
+    assert by_id(joins.with_cell(dirty, 8), ["cell"]) == [(int(x) * 2**9 + int(y),) for x, y in zip(tx, ty)]
+    want = list(zip(*(a.tolist() for a in raster._pixels(lon, lat, 21))))
+    assert by_id(raster.with_pixel(dirty, 21), ["tx", "ty", "ix", "iy"]) == want
+
+    def tiles_of(df):
+        return sorted((r.tx, r.ty, bytes(r.data)) for r in df.collect())
+
+    assert tiles_of(raster.burn_base_tiles(dirty, 21)) == tiles_of(raster.burn_base_tiles(clean, 21))
+    for alg in ("add", "replace"):
+        burn = [tiles_of(raster.burn_points(df, 6, "v", alg, "id")) for df in (dirty, clean)]
+        assert burn[0] == burn[1] and burn[0], alg
+
+
 def test_burn_base_tiles_fused_partial_identity(spark):
     """The below-boundary partial-count plan in burn_base_tiles must be
     bit-identical to the composed with_pixel → JVM count() plan it

@@ -946,7 +946,8 @@ def test_rasterize_drops_covered_tiles_it_did_not_burn(spark):
     """The three geometry burns keep only tiles they burned: a tile their
     bbox cover (padded under ALL_TOUCHED and for lines) reaches but the
     geometry misses gives no row, at zoom 3 (tiles 45° wide, tile row 4 =
-    lat 0..40.98, row 5 = 40.98..66.51)."""
+    lat 0..40.98, row 5 = 40.98..66.51), also for geometries wholly beyond
+    ±180°."""
     import pandas as pd
 
     from engine import geom, raster
@@ -966,6 +967,18 @@ def test_rasterize_drops_covered_tiles_it_did_not_burn(spark):
     line = geom.wkb_linestring([(1.0, 60.0), (89.0, 1.0)])
     lines = spark.createDataFrame(pd.DataFrame({"lid": [0], "geom_wkb": [line]}))
     assert burned(raster.rasterize_lines(lines, 3)) == {(4, 5), (4, 4), (5, 4)}
+    # wholly beyond ±180°: the one-tile pad lands after the world clip, so
+    # each padded cover reaches 2 tile columns × 3 tile rows at its world
+    # edge, but no pixel centre or walked pixel lies in them
+    far = [[(190.0, 10.0), (200.0, 10.0), (200.0, 20.0)], [(-200.0, 10.0), (-190.0, 10.0), (-190.0, 20.0)]]
+    fars = spark.createDataFrame(pd.DataFrame({"pid": [0, 1], "geom_wkb": [geom.wkb_polygon([r]) for r in far]}))
+    cover = raster._tile_cover(fars, "geom_wkb", 3, 1).collect()
+    assert sorted((r.pid, r.tx, r.ty) for r in cover) == [
+        (p, x, y) for p, xs in ((0, (6, 7)), (1, (0, 1))) for x in xs for y in (3, 4, 5)
+    ]
+    assert burned(raster.rasterize_polygons(fars, 3, all_touched=True)) == set()
+    far_lines = spark.createDataFrame(pd.DataFrame({"lid": [0, 1], "geom_wkb": [geom.wkb_linestring(r) for r in far]}))
+    assert burned(raster.rasterize_lines(far_lines, 3)) == set()
     # a box over all of tile (3, 4): the universe ring and the box both
     # contain every pixel centre there, so even-odd burns nothing in it
     box = geom.wkb_polygon([[(-50.0, -5.0), (5.0, -5.0), (5.0, 45.0), (-50.0, 45.0)]])
