@@ -27,9 +27,10 @@ algebra   distributed layer algebra (Intersection..Erase)
 predicates polygon spatial predicates (DE-9IM via overlay areas)
 polygonize raster components → polygon rings with holes
 components connected components, sieve filter           (alg/gdalsievefilter.cpp)
-proximity exact EDT + nodata fill (ring-k strip halo)   (alg/gdalproximity.cpp)
+proximity exact EDT + nodata fill over the halo exchange (alg/gdalproximity.cpp)
 contour   marching squares + polyline stitching         (alg/contour.cpp)
-focal     3×3 DEM kernels (incl. TPI) + color-relief     (apps/gdaldem.cpp)
+focal     the one halo exchange (ring-k strips; focal, contour, polygonize,
+          proximity) + 3×3 DEM kernels (incl. TPI) + color-relief (apps/gdaldem.cpp)
 warp      reprojection (full GRA kernel set, cutline), warp_custom, raster calc
 transformer GCP polynomial / TPS / approximate transformers (alg/gdaltransformer.cpp)
 srs       closed-form SRS: tmerc/UTM, Lambert conformal conic, Albers,

@@ -5,10 +5,12 @@ The reference walks the grid once, emitting level-crossing line segments per
 
 * each marching-squares cell is OWNED by the tile containing its top-left
   pixel; the cell's other corners may live in the east/south/south-east
-  neighbor → the focal 1-px halo exchange (engine/focal.py) co-locates them;
-* cells whose east/south pixels do not exist (raster edge) are skipped —
-  exactly the cells a whole-raster run never visits, so the distributed
-  segment set equals the mosaic run's segment set;
+  neighbor → the engine's halo exchange (:func:`engine.focal.halo_apply`,
+  halo 1) co-locates them;
+* pixels beyond the layer read NaN, so cells whose east/south pixels do
+  not exist (raster edge) are skipped — exactly the cells a whole-raster
+  run never visits, so the distributed segment set equals the mosaic run's
+  segment set;
 * segments are emitted as rows (level, x1, y1, x2, y2) in global pixel
   coordinates (x = tx·T + col, y = −ty·T + row, the components.py
   convention).  Polyline assembly = endpoint connected-components (the
@@ -31,8 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .focal import _emit_halo_slivers
-from .raster import TILE_SIZE, bytes_to_tile
+from .focal import halo_apply
+from .raster import TILE_SIZE
 
 _SEG_SCHEMA = "level double, x1 double, y1 double, x2 double, y2 double"
 
@@ -114,63 +116,27 @@ _CASES = {
 }
 
 
-def _tile_level_segments(pdf: pd.DataFrame, lvls: list):
-    """Grouped halo batch (center tile + slivers) → [(level, x1, y1, x2,
-    y2)] in global coords, or [] when the center is absent."""
-    center = None
-    slivers = {}
-    for r in pdf.itertuples():
-        if r.dx == 0 and r.dy == 0:
-            center = bytes_to_tile(r.data)
-        else:
-            slivers[(r.dx, r.dy)] = np.frombuffer(r.data, dtype="<i4")
-    if center is None:
-        return []
-    T = TILE_SIZE
-    tx = int(pdf["tx"].iat[0])
-    ty = int(pdf["ty"].iat[0])
-    # extended array: +1 col east, +1 row south, NaN when absent —
-    # NaN corners make `v > level` False and interpolation NaN; cells
-    # touching NaN are excluded up front by the validity trim below
-    east = slivers.get((-1, 0))       # sender dx=-1 → sender is our EAST, sent its WEST col
-    south = slivers.get((0, 1))       # sender dy=+1 → sender is SOUTH of us, sent its TOP row
-    se = slivers.get((-1, 1))
-    ext = np.full((T + 1, T + 1), np.nan)
-    ext[:T, :T] = center
-    if east is not None:
-        ext[:T, T] = east
-    if south is not None:
-        ext[T, :T] = south
-    if se is not None:
-        ext[T, T] = se[0]
-    # trim to the largest all-finite prefix: full grid when neighbors
-    # exist, else T×T (interior cells only)
-    H = T + 1 if south is not None else T
-    W = T + 1 if east is not None else T
-    sub = ext[:H, :W]
-    return cell_segments(sub, lvls, x0=float(tx * T), y0=float(-ty * T))
+def _tile_segments(key, comp: np.ndarray, exists: np.ndarray, lvls: list) -> list:
+    """One tile's halo-1 composite → the segments of the cells it owns
+    (top-left pixel in the tile), [(level, x1, y1, x2, y2)] in global
+    coords; a pixel beyond the layer is NaN, so cells touching it yield
+    nothing."""
+    tx, ty = key[-2:]
+    v = np.where(exists, comp, np.nan)[1:, 1:]
+    return cell_segments(v, lvls, x0=float(tx * TILE_SIZE), y0=float(-ty * TILE_SIZE))
 
 
 def contour_segments(tile_df: DataFrame, levels) -> DataFrame:
-    """Distributed marching squares: one sliver shuffle (focal halo), then
-    per-tile numpy; cells missing their east/south pixel are skipped (raster
-    edge) so results equal a whole-raster run exactly."""
+    """Distributed marching squares: one halo exchange, then per-tile
+    numpy; cells missing their east/south pixel are skipped (raster edge)
+    so results equal a whole-raster run exactly."""
     lvls = [float(l) for l in levels]
-    sliver_schema = "zoom int, tx long, ty long, dx int, dy int, data binary"
 
-    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _emit_halo_slivers(pdf)
-
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        segs = _tile_level_segments(pdf, lvls)
+    def _apply(key, comp: np.ndarray, exists: np.ndarray) -> pd.DataFrame:
+        segs = _tile_segments(key, comp, exists, lvls)
         return pd.DataFrame(segs, columns=["level", "x1", "y1", "x2", "y2"])
 
-    # explicit partition count: marching squares is numpy-CPU-bound per
-    # tile; AQE's size-based coalesce would pack it into too few tasks
-    nparts = tile_df.sparkSession.sparkContext.defaultParallelism
-    slivers = tile_df.mapInPandas(_emit, sliver_schema).repartition(nparts, "tx", "ty")
-    return slivers.groupBy("zoom", "tx", "ty").applyInPandas(_apply, _SEG_SCHEMA)
+    return halo_apply(tile_df, 1, _apply, _SEG_SCHEMA)
 
 
 def contour_lengths(tile_df: DataFrame, levels) -> DataFrame:
@@ -188,7 +154,7 @@ def stitch_segments(segs: list) -> list:
 
     Endpoint matching is float-EXACT: a crossing point on a shared cell
     edge is computed from the same two corner values with the same
-    expression by both adjacent cells (cross-tile too — halo slivers carry
+    expression by both adjacent cells (cross-tile too — halo strips carry
     identical ints), so the doubles are bit-identical.  Open chains start
     at degree-1 vertices (raster boundary), the rest are closed loops —
     the polyline forms alg/contour.cpp emits.
@@ -280,14 +246,9 @@ def contour_polylines(tile_df: DataFrame, levels) -> DataFrame:
     pre-chained arcs and concatenates them — per-line work is
     O(#tile crossings), not O(total points per level)."""
     lvls = [float(l) for l in levels]
-    sliver_schema = "zoom int, tx long, ty long, dx int, dy int, data binary"
 
-    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _emit_halo_slivers(pdf)
-
-    def _tile_chains(pdf: pd.DataFrame) -> pd.DataFrame:
-        segs = _tile_level_segments(pdf, lvls)
+    def _tile_chains(key, comp: np.ndarray, exists: np.ndarray) -> pd.DataFrame:
+        segs = _tile_segments(key, comp, exists, lvls)
         cols = ["level", "closed", "pts", "e1", "e2"]
         if not segs:
             return pd.DataFrame({k: [] for k in cols})
@@ -308,15 +269,7 @@ def contour_polylines(tile_df: DataFrame, levels) -> DataFrame:
 
     from .components import min_label_propagate
 
-    # explicit partition count: the chaining stage is Python-CPU-bound per
-    # tile; AQE's size-based coalesce would serialize it
-    nparts = tile_df.sparkSession.sparkContext.defaultParallelism
-    slivers = tile_df.mapInPandas(_emit, sliver_schema).repartition(nparts, "tx", "ty")
-    chains = (
-        slivers.groupBy("zoom", "tx", "ty")
-        .applyInPandas(lambda k, p: _tile_chains(p), _CHAIN_SCHEMA)
-        .localCheckpoint(eager=True)
-    )
+    chains = halo_apply(tile_df, 1, _tile_chains, _CHAIN_SCHEMA).localCheckpoint(eager=True)
     done = chains.where(F.col("closed"))
     opens = chains.where(~F.col("closed"))
 

@@ -1,17 +1,20 @@
-"""Focal (spatial-window) raster operators: the gdaldem family.
+"""Focal (spatial-window) raster operators, and the engine's one halo exchange.
 
 The reference computes hillshade/slope/aspect/TRI/TPI/roughness with a 3×3
 window over the grid (apps/gdaldem.cpp:37-125).  Distributed form: each
-256×256 tile needs a 1-pixel halo from its 8 neighbors — implemented as a
-**halo exchange join**: every tile emits (itself + 8 neighbor-addressed
-slivers) keyed by the receiving tile, one shuffle co-locates each tile with
-its halo, and a grouped-map UDF assembles the 258×258 padded array and runs
-the numpy kernel.  Missing neighbors pad with the edge value (gdaldem's
-border handling computes windows from available cells).
+256×256 tile needs a 1-pixel halo from its 8 neighbors.
 
-The same pattern implements proximity (alg/gdalproximity.cpp) and focal
-fill (alg/rasterfill.cpp) by iterating to a fixpoint; slope/TRI/roughness
-are provided as representative kernels.
+:func:`halo_apply` is the halo exchange that every neighbourhood raster
+operator shares (focal here, contour, polygonize, proximity and fill
+nodata): one mapInPandas ships every tile to itself plus the strips of it
+that the tiles within ``ceil(halo/T)`` rings need, one shuffle co-locates
+each receiving tile with its halo, and a grouped-map UDF builds the
+(T+2·halo)² composite and its ``exists`` mask once, when the centre tile
+is present.  Each operator then applies its own rule for missing pixels:
+focal replicates the edge (gdaldem's border handling computes windows from
+available cells), contour reads NaN, polygonize background, proximity and
+fill nodata mask them out.  At halo 1 a tile ships itself plus 8 strips
+(1×T, T×1, 1×1): the traffic is ~1.5% of the tile bytes.
 """
 
 from __future__ import annotations
@@ -21,76 +24,95 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .raster import TILE_SIZE, TILE_SCHEMA, bytes_to_tile, tile_to_bytes
 
 
-def _emit_halo_slivers(pdf: pd.DataFrame) -> pd.DataFrame:
-    """For one batch of tiles: rows addressed to each neighbor that needs a
-    sliver of this tile, plus the tile itself addressed to itself.
-    Sliver kinds: 8 compass directions encoded (dx, dy) ∈ {-1,0,1}²."""
-    rows = []
-    for r in pdf.itertuples():
-        g = bytes_to_tile(r.data)
-        for dx in (-1, 0, 1):
-            for dy in (-1, 0, 1):
-                if dx == 0 and dy == 0:
-                    payload = r.data
-                else:
-                    # receiver (tx+dx, ty+dy) needs this tile's strip on the
-                    # side facing it; ty axis is TMS (up), array row 0 = top
-                    cols = {-1: slice(0, 1), 0: slice(None), 1: slice(TILE_SIZE - 1, TILE_SIZE)}[dx]
-                    # receiver above (dy=+1) needs our TOP row (row 0)
-                    rws = {1: slice(0, 1), 0: slice(None), -1: slice(TILE_SIZE - 1, TILE_SIZE)}[dy]
-                    payload = tile_to_bytes(np.ascontiguousarray(g[rws, cols]))
-                rows.append((int(r.zoom), int(r.tx) + dx, int(r.ty) + dy, dx, dy, payload))
-    return pd.DataFrame(rows, columns=["zoom", "tx", "ty", "dx", "dy", "data"])
+def _spans(halo: int) -> dict:
+    """Every sender offset (dx, dy) (dy > 0: sender north of the receiver,
+    the TMS axis) whose tile reaches a receiver's (T+2·halo)² composite →
+    ((rows, cols) of the sender tile it ships, (rows, cols) where they land
+    in the composite)."""
+    T, h = TILE_SIZE, int(halo)
+
+    def axis(q):
+        # sender spans composite [h + q·T, +T) along one array axis (q > 0:
+        # east / south); it ships what falls inside [0, T + 2h)
+        lo = h + q * T
+        a, b = max(lo, 0), min(lo + T, T + 2 * h)
+        return (slice(a - lo, b - lo), slice(a, b)) if a < b else None
+
+    k = -(-h // T)
+    spans = {}
+    for dx in range(-k, k + 1):
+        for dy in range(-k, k + 1):
+            rows, cols = axis(-dy), axis(dx)  # array rows grow southward
+            if rows and cols:
+                spans[(dx, dy)] = ((rows[0], cols[0]), (rows[1], cols[1]))
+    return spans
 
 
-def _assemble_padded(pdf: pd.DataFrame) -> np.ndarray | None:
-    """(tile + slivers) rows for ONE receiver tile → 258×258 padded array,
-    edge-replicated where neighbors are missing.  Returns None if the
-    receiver has no center tile (it's outside the layer)."""
-    center = None
-    slivers = {}
-    for r in pdf.itertuples():
-        if r.dx == 0 and r.dy == 0:
-            center = bytes_to_tile(r.data)
-        else:
-            slivers[(r.dx, r.dy)] = np.frombuffer(r.data, dtype="<i4")
-    if center is None:
-        return None
-    P = TILE_SIZE
-    pad = np.empty((P + 2, P + 2), dtype=np.int64)
-    pad[1:-1, 1:-1] = center
-    # sliver from neighbor at (dx,dy) relative to SENDER: receiver side is
-    # (-dx,-dy).  Sender's strip lands on receiver's pad edge:
-    # neighbor LEFT of us (sender dx=+1 toward us) fills pad column 0.
-    left = slivers.get((1, 0))
-    pad[1:-1, 0] = left if left is not None else center[:, 0]
-    right = slivers.get((-1, 0))
-    pad[1:-1, -1] = right if right is not None else center[:, -1]
-    # neighbor ABOVE us in TMS (ty+1) sent its BOTTOM row; it reached us as
-    # the sliver addressed with dy=-1 from sender → key (0,-1) fills pad row 0
-    top = slivers.get((0, -1))
-    pad[0, 1:-1] = top if top is not None else center[0, :]
-    bot = slivers.get((0, 1))
-    pad[-1, 1:-1] = bot if bot is not None else center[-1, :]
-    for (sdx, sdy), corner_pos in (
-        ((1, -1), (0, 0)),       # upper-left pad corner
-        ((-1, -1), (0, P + 1)),  # upper-right
-        ((1, 1), (P + 1, 0)),    # lower-left
-        ((-1, 1), (P + 1, P + 1)),
-    ):
-        c = slivers.get((sdx, sdy))
-        if c is not None:
-            pad[corner_pos] = c[0]
-        else:
-            rr = 1 if corner_pos[0] == 0 else P
-            cc = 1 if corner_pos[1] == 0 else P
-            pad[corner_pos] = pad[rr, cc]
-    return pad
+def _tile_key(tile_df: DataFrame) -> list:
+    return ["zoom", "tx", "ty"] if "zoom" in tile_df.columns else ["tx", "ty"]
+
+
+def _gather_halo(tile_df: DataFrame, halo: int) -> DataFrame:
+    """Each tile → one row addressed to itself (its bytes as they are)
+    plus one per receiving tile within ``ceil(halo/T)`` rings whose
+    composite it reaches, carrying the strip of it that lands there.
+    Columns: the receiving tile's key, (dx, dy) = the sender's tile offset
+    from the receiver, data."""
+    key = _tile_key(tile_df)
+    spans = _spans(halo)
+    schema = ("zoom int, " if "zoom" in key else "") + "tx long, ty long, dx int, dy int, data binary"
+
+    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                g = bytes_to_tile(r.data)
+                z = (int(r.zoom),) if "zoom" in key else ()
+                for (dx, dy), (src, _) in spans.items():
+                    data = r.data if dx == dy == 0 else g[src].tobytes()
+                    rows.append((*z, int(r.tx) - dx, int(r.ty) - dy, dx, dy, data))
+            yield pd.DataFrame(rows, columns=[*key, "dx", "dy", "data"])
+
+    return tile_df.select(*key, "data").mapInPandas(_emit, schema)
+
+
+def halo_apply(tile_df: DataFrame, halo: int, fn, schema) -> DataFrame:
+    """Run ``fn(key, composite, exists)`` → pandas DataFrame (rows of
+    ``schema``) once per tile of ``tile_df``: ``key`` = the tile's
+    (zoom, tx, ty), or (tx, ty) when the table has no ``zoom``;
+    ``composite`` = the int64 (T+2·halo)² window centred on the tile (array
+    rows grow southward), 0 where ``exists`` is False (beyond the layer).
+
+    Plan: one halo gather (mapInPandas), one hash exchange on the receiving
+    tile key, one grouped-map UDF; the explicit partition count keeps
+    AQE's size-based coalesce from packing the numpy-CPU-bound kernels
+    into too few tasks."""
+    key = _tile_key(tile_df)
+    spans = _spans(halo)
+    S = TILE_SIZE + 2 * int(halo)
+
+    def _apply(k, pdf):
+        if not ((pdf["dx"] == 0) & (pdf["dy"] == 0)).any():
+            return pd.DataFrame()
+        comp = np.zeros((S, S), dtype=np.int64)
+        exists = np.zeros((S, S), dtype=bool)
+        for dx, dy, data in zip(pdf["dx"], pdf["dy"], pdf["data"]):
+            dst = spans[(dx, dy)][1]
+            comp[dst] = np.frombuffer(data, dtype="<i4").reshape(comp[dst].shape)
+            exists[dst] = True
+        return fn(k, comp, exists)
+
+    nparts = tile_df.sparkSession.sparkContext.defaultParallelism
+    return (
+        _gather_halo(tile_df, halo)
+        .repartition(nparts, *key)
+        .groupBy(*key)
+        .applyInPandas(_apply, schema)
+    )
 
 
 def slope_kernel(pad: np.ndarray) -> np.ndarray:
@@ -261,13 +283,11 @@ def color_relief(tile_df: DataFrame, ramp: list) -> DataFrame:
     packs RGB into one int band (r<<16 | g<<8 | b) so the tile schema is
     unchanged — a 3-band sink splits it back out.
     """
-    from typing import Iterator
-
     ramp = sorted((float(e), int(r), int(g), int(b)) for e, r, g, b in ramp)
     ev = np.array([e for e, *_ in ramp])
     chans = [np.array([c[i + 1] for c in ramp], dtype=np.float64) for i in range(3)]
 
-    def _apply(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+    def _apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples():
@@ -290,36 +310,13 @@ def color_relief(tile_df: DataFrame, ramp: list) -> DataFrame:
 
 def focal(tile_df: DataFrame, kernel: str) -> DataFrame:
     """Apply a 3×3 focal kernel to every tile of a tile table with exact
-    cross-tile halo exchange.  Output: same tile-table schema.
-
-    Plan: mapInPandas emits 9 addressed rows per tile (center + 8 slivers,
-    only 1-px strips — the halo traffic is ~1.5% of tile bytes) →
-    groupBy(zoom, tx, ty) grouped-map assembles the padded array and runs
-    the numpy kernel.  One shuffle total, independent of kernel count.
-    """
+    cross-tile halo exchange (:func:`halo_apply`, halo 1); a missing
+    neighbour replicates the tile's edge.  Output: same tile-table schema."""
     fn = KERNELS[kernel]
-    sliver_schema = "zoom int, tx long, ty long, dx int, dy int, data binary"
 
-    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _emit_halo_slivers(pdf)
+    def _apply(key, comp: np.ndarray, exists: np.ndarray) -> pd.DataFrame:
+        pad = np.where(exists, comp, np.pad(comp[1:-1, 1:-1], 1, "edge"))
+        z, tx, ty = key
+        return pd.DataFrame({"zoom": [z], "tx": [tx], "ty": [ty], "data": [tile_to_bytes(fn(pad))]})
 
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        pad = _assemble_padded(pdf)
-        if pad is None:
-            return pd.DataFrame({"zoom": [], "tx": [], "ty": [], "data": []})
-        out = fn(pad)
-        return pd.DataFrame(
-            {
-                "zoom": [int(pdf["zoom"].iat[0])],
-                "tx": [int(pdf["tx"].iat[0])],
-                "ty": [int(pdf["ty"].iat[0])],
-                "data": [tile_to_bytes(out)],
-            }
-        )
-
-    # explicit partition count: the kernel stage is numpy-CPU-bound per
-    # tile; AQE's size-based coalesce would pack it into too few tasks
-    nparts = tile_df.sparkSession.sparkContext.defaultParallelism
-    slivers = tile_df.mapInPandas(_emit, sliver_schema).repartition(nparts, "tx", "ty")
-    return slivers.groupBy("zoom", "tx", "ty").applyInPandas(_apply, TILE_SCHEMA)
+    return halo_apply(tile_df, 1, _apply, TILE_SCHEMA)

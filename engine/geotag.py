@@ -72,7 +72,8 @@ def geocode_reverse(
     (``joins.knn_join_broadcast``) — queries broadcast, one vectorized pass
     over the gazetteer, per-partition top-k, one tiny merge shuffle — then
     a broadcast join restores the full place attribution.  Ties break on
-    place name ascending (documented, parallelism-invariant).
+    place name ascending (documented, parallelism-invariant).  A query or
+    place whose lon or lat is NaN, ±inf or null takes no part.
 
     Output: (query_id, rank, name, place_lon, place_lat, dist,
     <other gazetteer columns>).

@@ -563,6 +563,15 @@ def _pip_refine(
 # ---------------------------------------------------------------------------
 
 
+def _finite_lonlat(df: DataFrame) -> DataFrame:
+    """The rows of ``df`` whose lon and lat are finite: the kNN plans'
+    form of the encoders' rule (:func:`_finite`).  Spark orders NaN above
+    +inf and drops a row whose filter is null, so ``|x| < inf`` keeps
+    exactly the finite values."""
+    inf = float("inf")
+    return df.where((F.abs("lon") < inf) & (F.abs("lat") < inf))
+
+
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
@@ -599,10 +608,12 @@ def knn_join(
     is accepted as-is (MAXDIST-bounded semantics, alg/gdalgrid.cpp:691-730).
     A round's eager jobs (the remainder's ``isEmpty`` and checkpoint) are
     described ``joins.knn_join ring=<r>``, the "auto" probe's collect
-    ``joins.knn_join probe``.
+    ``joins.knn_join probe``.  A query or point whose lon or lat is NaN,
+    ±inf or null takes no part (:func:`_finite_lonlat`).
 
     Output: (qid, neighbor, nbr_lon, nbr_lat, dist, rank).
     """
+    queries, points = _finite_lonlat(queries), _finite_lonlat(points)
     if strategy == "auto":
         # bounded probe: evaluates the query lineage once, and the collected
         # rows are reused directly by the broadcast branch (no second pass)
@@ -917,8 +928,10 @@ def knn_join_broadcast(
     path when both sides are large.  Global top-k is exact because each
     partition keeps its own top-k per query (the global answer is a subset
     of the union of partials).  Output matches knn_join: (qid, neighbor,
-    nbr_lon, nbr_lat, dist, rank), ties broken by point id ascending.
+    nbr_lon, nbr_lat, dist, rank), ties broken by point id ascending; a
+    query or point whose lon or lat is NaN, ±inf or null takes no part.
     """
+    queries, points = _finite_lonlat(queries), _finite_lonlat(points)
     qrows = _rows if _rows is not None else queries.select(query_id, "lon", "lat").collect()
     qid_arr = np.array([r[0] for r in qrows])
     qlon = np.array([float(r[1]) for r in qrows])

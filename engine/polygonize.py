@@ -6,17 +6,19 @@ pixel regions become polygons (exterior ring + holes) with the region value
 as attribute.  Distributed form (round-2: per-tile partial chaining, so the
 final stitch handles pre-chained arcs, never unit edges):
 
-1. **edge emission + local chaining** — per tile (with the focal 1-px value
-   halo): every pixel side whose 4-neighbor has a different value is a
-   directed unit edge (interior on the RIGHT, y-down).  The tile then walks
-   its own edges with the rightmost-turn rule, taking each turn decision
-   from the HALO'D VALUE ARRAY (the turn at a corner depends only on the 4
-   pixel values around it, all visible through the halo), so the local walk
-   is bit-consistent with a global walk.  A walk stops only where its
-   successor edge is owned by a neighbor tile (or at the 4 tile-corner
-   points, where the diagonal halo pixel is unknown).  Output per
-   (tile, label): CLOSED rings (loops entirely local) and OPEN chains
-   (collinear-compressed arcs ending at seam corners);
+1. **edge emission + local chaining** — per tile (with the 1-px value halo
+   of the engine's halo exchange, :func:`engine.focal.halo_apply`; a pixel
+   beyond the layer reads as background): every pixel side whose
+   4-neighbor has a different value is a directed unit edge (interior on
+   the RIGHT, y-down).  The tile then walks its own edges with the
+   rightmost-turn rule, taking each turn decision from the HALO'D VALUE
+   ARRAY (the turn at a corner depends only on the 4 pixel values around
+   it, all visible through the halo), so the local walk is bit-consistent
+   with a global walk.  A walk stops only where its successor edge is
+   owned by a neighbor tile (or at the 4 tile-corner points, where the
+   diagonal halo pixel is unknown).  Output per (tile, label): CLOSED
+   rings (loops entirely local) and OPEN chains (collinear-compressed arcs
+   ending at seam corners);
 2. **component keying** — chains/rings join the distributed seam mapping of
    :func:`engine.components.seam_component_map` (equi-join, no broadcast
    dict, no driver union-find);
@@ -42,8 +44,8 @@ from pyspark.sql import functions as F
 
 from . import geom
 from .components import attach_component_id, label_tile, seam_component_map
-from .focal import _emit_halo_slivers
-from .raster import TILE_SIZE, bytes_to_tile
+from .focal import halo_apply
+from .raster import TILE_SIZE
 
 
 def trace_rings(edges: list, connectedness: int = 4) -> list:
@@ -350,50 +352,20 @@ def polygonize(tile_df: DataFrame, background: int = 0, connectedness: int = 4) 
         raise ValueError("connectedness must be 4 or 8")
     src = tile_df.select("tx", "ty", "data")
     mapping = seam_component_map(src, background, connectedness=connectedness)
-    sliver_schema = "zoom int, tx long, ty long, dx int, dy int, data binary"
 
-    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if "zoom" not in pdf.columns:
-                pdf = pdf.assign(zoom=0)
-            yield _emit_halo_slivers(pdf)
-
-    def _pieces(pdf: pd.DataFrame) -> pd.DataFrame:
-        center = None
-        slivers = {}
-        for r in pdf.itertuples():
-            if r.dx == 0 and r.dy == 0:
-                center = bytes_to_tile(r.data)
-            else:
-                slivers[(r.dx, r.dy)] = np.frombuffer(r.data, dtype="<i4")
-        cols = ["tx", "ty", "label", "value", "kind", "pts"]
-        if center is None:
-            return pd.DataFrame({k: [] for k in cols})
+    def _pieces(key, comp: np.ndarray, exists: np.ndarray) -> pd.DataFrame:
         T = TILE_SIZE
-        tx = int(pdf["tx"].iat[0])
-        ty = int(pdf["ty"].iat[0])
-        pv = np.full((T + 2, T + 2), background, dtype=np.int64)
-        pv[1:-1, 1:-1] = center
-        left = slivers.get((1, 0))
-        if left is not None:
-            pv[1:-1, 0] = left
-        right = slivers.get((-1, 0))
-        if right is not None:
-            pv[1:-1, -1] = right
-        top = slivers.get((0, -1))
-        if top is not None:
-            pv[0, 1:-1] = top
-        bot = slivers.get((0, 1))
-        if bot is not None:
-            pv[-1, 1:-1] = bot
-        lab = label_tile(center, background, connectedness)
+        tx, ty = key
+        pv = np.where(exists, comp, background)
+        pv[[0, 0, -1, -1], [0, -1, 0, -1]] = background  # the walk treats the diagonal halo pixels as unknown
+        lab = label_tile(comp[1:-1, 1:-1], background, connectedness)
         rows = []
         for l, v, kind, pts in _chain_tile(pv, lab, background, connectedness):
             gpts = pts.copy()
             gpts[:, 0] += tx * T
             gpts[:, 1] += -(ty * T)
             rows.append((tx, ty, l, v, kind, gpts.astype("<i8").tobytes()))
-        return pd.DataFrame(rows, columns=cols)
+        return pd.DataFrame(rows, columns=["tx", "ty", "label", "value", "kind", "pts"])
 
     def _assemble_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # a hash partition holds MANY components (all of each one's chains).
@@ -449,17 +421,11 @@ def polygonize(tile_df: DataFrame, background: int = 0, connectedness: int = 4) 
             out["geom_wkb"].append(geom.wkb_polygon(ordered))
         yield pd.DataFrame(out)
 
-    # explicit partition counts throughout: AQE coalesces by byte size, but
-    # these stages are PYTHON-CPU-bound per group (chaining ~10 ms/tile,
-    # assembly ~0.1 ms/component) — size-coalescing them serializes the work
+    # explicit partition count, as in halo_apply: AQE coalesces by byte size,
+    # but assembly is PYTHON-CPU-bound per group (~0.1 ms/component) —
+    # size-coalescing it serializes the work
     nparts = tile_df.sparkSession.sparkContext.defaultParallelism
-    slivers = (
-        src.withColumn("zoom", F.lit(0))
-        .select("zoom", "tx", "ty", "data")
-        .mapInPandas(_emit, sliver_schema)
-        .repartition(nparts, "tx", "ty")
-    )
-    pieces = slivers.groupBy("tx", "ty").applyInPandas(lambda k, p: _pieces(p), _PIECE_SCHEMA)
+    pieces = halo_apply(src, 1, _pieces, _PIECE_SCHEMA)
     keyed = attach_component_id(pieces, mapping).select("component_id", "value", "kind", "pts")
     return keyed.repartition(nparts, F.col("component_id")).mapInPandas(_assemble_part, _POLY_SCHEMA)
 

@@ -16,26 +16,26 @@ Reference operators:
   iterations), then optional 3×3 average smoothing restricted to filled
   pixels.
 
-Distributed pattern (both ops): **ring-k neighbor-strip gather** — each
-tile ships only the ``maxdist``-wide strips its neighbors need (one
-mapInPandas + one groupBy shuffle), the kernel runs on the
-(T+2·halo)² composite, and the center T×T window is emitted.  Ring
-count = ceil(maxdist/T), so radii beyond one tile (up to the 4-ring cap)
-gather 5×5/7×7/9×9 neighborhoods with shuffle bytes still proportional
-to the halo width — the same cost GDAL pays re-reading neighbor blocks,
-made explicit as one shuffle.
+Distributed pattern (both ops): the engine's one halo exchange
+(:func:`engine.focal.halo_apply`) with halo = the kernel's support width —
+each tile ships only the halo-wide strips its neighbours need (one
+mapInPandas + one groupBy shuffle), the kernel runs once on the
+(T+2·halo)² composite, and the centre T×T window is emitted.  Ring count =
+ceil(halo/T), so radii beyond one tile (up to the 4-ring cap) gather
+5×5/7×7/9×9 neighbourhoods with shuffle bytes still proportional to the
+halo width — the same cost GDAL pays re-reading neighbour blocks, made
+explicit as one shuffle.  Pixels beyond the layer (``exists`` False) are
+never targets, sources or fill candidates.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .raster import TILE_SIZE, bytes_to_tile, tile_to_bytes
+from .focal import halo_apply
+from .raster import TILE_SIZE
 
 
 # ---------------------------------------------------------------------------
@@ -143,122 +143,21 @@ def fill_kernel(grid: np.ndarray, nodata: int, maxdist: float, smoothing: int = 
 
 
 # ---------------------------------------------------------------------------
-# 3×3 gather + distributed operators
+# distributed operators
 # ---------------------------------------------------------------------------
 
-_TILE_SCHEMA = "tx long, ty long, data binary"
 
+def _centre_apply(tile_df: DataFrame, fn, halo: int) -> DataFrame:
+    """``fn(composite, exists)`` over every tile's halo composite
+    (:func:`engine.focal.halo_apply`) → (tx, ty, data) with the centre T×T
+    window as float64 pixels."""
+    T, h = TILE_SIZE, int(halo)
 
-def _strip_extents(p: int, h: int):
-    """For a sender at tile offset ``p`` from the receiver (one axis):
-    (slice into the sender tile, needed width) — 0 width ⇒ nothing to send.
-    |p| = 1 neighbors face the receiver directly; ring-2+ neighbors send
-    only the ``h − (|p|−1)·T`` pixels still inside the halo."""
-    T = TILE_SIZE
-    if p == 0:
-        return slice(None), T
-    w = min(max(h - (abs(p) - 1) * T, 0), T)
-    if w == 0:
-        return None, 0
-    # sender east/north of receiver → its west/bottom side faces the halo
-    return (slice(0, w) if p > 0 else slice(T - w, T)), w
-
-
-def _gather_halo(tile_df: DataFrame, halo: int) -> DataFrame:
-    """Each tile contributes its facing strips to every composite within
-    ``ceil(halo/T)`` rings — the ring-1 case degenerates to the classic
-    3×3 neighbor gather; shuffle bytes stay proportional to halo width.
-    (otx, oty) = receiving composite; (dx, dy) = sender's tile offset in
-    it (dy > 0 = sender north of the receiver)."""
-    T = TILE_SIZE
-    h = int(halo)
-    k = max(1, -(-h // T))  # ceil
-    strip_schema = "otx long, oty long, dx int, dy int, data binary"
-
-    def _emit(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                g = bytes_to_tile(r.data)
-                for rx in range(-k, k + 1):
-                    for ry in range(-k, k + 1):
-                        if rx == 0 and ry == 0:
-                            rows.append((int(r.tx), int(r.ty), 0, 0, r.data))
-                            continue
-                        # receiver at (tx+rx, ty+ry); sender offset = (-rx, -ry)
-                        px, py = -rx, -ry
-                        cols, wx = _strip_extents(px, h)
-                        if wx == 0:
-                            continue
-                        # y axis: py > 0 (north sender) → bottom rows face in
-                        if py == 0:
-                            rws, wy = slice(None), T
-                        else:
-                            wy = min(max(h - (abs(py) - 1) * T, 0), T)
-                            if wy == 0:
-                                continue
-                            rws = slice(T - wy, T) if py > 0 else slice(0, wy)
-                        sub = np.ascontiguousarray(g[rws, cols])
-                        rows.append(
-                            (int(r.tx) + rx, int(r.ty) + ry, px, py, sub.astype("<i4").tobytes())
-                        )
-            yield pd.DataFrame(rows, columns=["otx", "oty", "dx", "dy", "data"])
-
-    return tile_df.select("tx", "ty", "data").mapInPandas(_emit, strip_schema)
-
-
-def _composite_apply(tile_df: DataFrame, fn, out_float: bool, pad_value: int = 0,
-                     halo: int = TILE_SIZE) -> DataFrame:
-    """groupBy composite target tile → assemble (T+2h)² composite (missing
-    neighbors = ``pad_value``), run ``fn(composite, exists)``, emit the
-    center T×T window.  ``halo`` = required support width in pixels (any
-    width — ring count scales as ceil(halo/T))."""
-    T = TILE_SIZE
-    h = int(halo)
-
-    def _apply(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        otx, oty = key
-        # the composite is only produced when the CENTER tile exists
-        if not ((pdf["dx"] == 0) & (pdf["dy"] == 0)).any():
-            return pd.DataFrame({"tx": [], "ty": [], "data": []})
-        S = T + 2 * h
-        comp = np.full((S, S), pad_value, dtype=np.int32)
-        exists = np.zeros((S, S), dtype=bool)
-        for r in pdf.itertuples():
-            # dy: +1 = sender north of center; rows grow southward in-array
-            px, py = int(r.dx), int(r.dy)
-            wy = T if py == 0 else min(max(h - (abs(py) - 1) * T, 0), T)
-            wx = T if px == 0 else min(max(h - (abs(px) - 1) * T, 0), T)
-            g = np.frombuffer(r.data, dtype="<i4").reshape(wy, wx)
-            # placement: sender tile spans composite rows [h − py·T, +T)
-            # (rows grow southward, py>0 = north); only the facing strip of
-            # that span was shipped
-            if py == 0:
-                r0 = h
-            elif py > 0:
-                r0 = h - (py - 1) * T - wy
-            else:
-                r0 = h - py * T
-            if px == 0:
-                c0 = h
-            elif px > 0:
-                c0 = h + px * T
-            else:
-                c0 = h + (px + 1) * T - wx
-            comp[r0 : r0 + wy, c0 : c0 + wx] = g
-            exists[r0 : r0 + wy, c0 : c0 + wx] = True
+    def _apply(key, comp: np.ndarray, exists: np.ndarray) -> pd.DataFrame:
         out = fn(comp, exists)[h : h + T, h : h + T]
-        buf = out.astype("<f8").tobytes() if out_float else np.asarray(out, dtype="<i4").tobytes()
-        return pd.DataFrame({"tx": [otx], "ty": [oty], "data": [buf]})
+        return pd.DataFrame({"tx": [key[-2]], "ty": [key[-1]], "data": [out.astype("<f8").tobytes()]})
 
-    # explicit partition count: the EDT kernel is numpy-CPU-bound per tile
-    nparts = tile_df.sparkSession.sparkContext.defaultParallelism
-    return (
-        _gather_halo(tile_df, h)
-        .repartition(nparts, "otx", "oty")
-        .groupBy("otx", "oty")
-        .applyInPandas(_apply, _TILE_SCHEMA)
-    )
+    return halo_apply(tile_df, h, _apply, "tx long, ty long, data binary")
 
 
 def proximity(tile_df: DataFrame, target_values: tuple, maxdist: float, nodata: float = -1.0) -> DataFrame:
@@ -270,16 +169,13 @@ def proximity(tile_df: DataFrame, target_values: tuple, maxdist: float, nodata: 
     if maxdist > 4 * TILE_SIZE:
         raise ValueError("maxdist > 4*TILE_SIZE: composite would exceed 9x9 tiles")
     tv = tuple(target_values)
-    pad = int(max(tv)) + 1  # missing neighbors can never be targets
 
     def _fn(comp: np.ndarray, exists: np.ndarray) -> np.ndarray:
-        targets = np.isin(comp, tv)
-        d = edt(targets, maxdist)
+        d = edt(np.isin(comp, tv) & exists, maxdist)
         d[np.isinf(d)] = nodata
         return d
 
-    return _composite_apply(tile_df, _fn, out_float=True, pad_value=pad,
-                            halo=int(np.ceil(maxdist)))
+    return _centre_apply(tile_df, _fn, int(np.ceil(maxdist)))
 
 
 def fill_nodata(tile_df: DataFrame, nodata: int, maxdist: float, smoothing: int = 0) -> DataFrame:
@@ -290,5 +186,4 @@ def fill_nodata(tile_df: DataFrame, nodata: int, maxdist: float, smoothing: int 
     def _fn(comp: np.ndarray, exists: np.ndarray) -> np.ndarray:
         return fill_kernel(comp, nodata, maxdist, smoothing, exists=exists)
 
-    return _composite_apply(tile_df, _fn, out_float=True, pad_value=nodata,
-                            halo=int(np.ceil(maxdist)) + smoothing)
+    return _centre_apply(tile_df, _fn, int(np.ceil(maxdist)) + smoothing)

@@ -61,23 +61,29 @@ def test_contour_distributed_matches_mosaic(spark):
     # add gradients so contours cross seams
     big = big + np.add.outer(np.arange(2 * T) * 0.1, np.arange(2 * T) * 0.07)
     big = np.floor(big).astype(np.int64)
-    grids = {}
-    for tx in (0, 1):
-        for ty in (0, 1):
+    levels = [10.5, 30.5, 55.5]
+    # the full 2x2 layout, and an L of 3 tiles whose south-east tile (1, 0)
+    # is absent: tile (0, 1) then lacks its south-east neighbour, (1, 1) its
+    # south one and (0, 0) its east one
+    for layout in ([(0, 0), (0, 1), (1, 0), (1, 1)], [(0, 0), (0, 1), (1, 1)]):
+        grids = {}
+        mosaic = np.full((2 * T, 2 * T), np.nan)
+        for tx, ty in layout:
             r0 = (1 - ty) * T
             grids[(tx, ty)] = big[r0 : r0 + T, tx * T : (tx + 1) * T]
-    levels = [10.5, 30.5, 55.5]
-    segs = contour.contour_segments(_tile_table(spark, grids), levels).collect()
-    got = sorted(
-        (r.level, round(r.x1, 9), round(r.y1, 9), round(r.x2, 9), round(r.y2, 9)) for r in segs
-    )
-    # mosaic oracle: same kernel once over the full array; tile (tx,ty=1) top
-    # row is mosaic row 0 → global y offset = -1*T (ty=1 topmost)
-    exp = sorted(
-        (l, round(x1, 9), round(y1, 9), round(x2, 9), round(y2, 9))
-        for (l, x1, y1, x2, y2) in contour.cell_segments(big, levels, x0=0.0, y0=float(-1 * T))
-    )
-    assert got == exp
+            mosaic[r0 : r0 + T, tx * T : (tx + 1) * T] = grids[(tx, ty)]
+        segs = contour.contour_segments(_tile_table(spark, grids), levels).collect()
+        got = sorted(
+            (r.level, round(r.x1, 9), round(r.y1, 9), round(r.x2, 9), round(r.y2, 9)) for r in segs
+        )
+        # mosaic oracle: same kernel once over the full array, NaN where a
+        # tile is absent; tile (tx,ty=1) top row is mosaic row 0 → global y
+        # offset = -1*T (ty=1 topmost)
+        exp = sorted(
+            (l, round(x1, 9), round(y1, 9), round(x2, 9), round(y2, 9))
+            for (l, x1, y1, x2, y2) in contour.cell_segments(mosaic, levels, x0=0.0, y0=float(-1 * T))
+        )
+        assert got == exp, layout
 
 
 def test_contour_polylines_loop_spanning_four_tiles(spark):

@@ -289,6 +289,33 @@ def test_knn_rings_keep_duplicate_point_rows(spark):
     assert [r[2] for r in rings if r[0] == 0] == ["dup", "dup", "twin", "twin"]
 
 
+def test_knn_plans_skip_non_finite_coordinates(spark):
+    """A query or point whose lon or lat is NaN, ±inf or null takes no part
+    in kNN: the ring plan, the broadcast plan and geocode_reverse return
+    the same rows, none for such a query and none naming such a point."""
+    from engine.geotag import geocode_reverse
+
+    nan, inf = float("nan"), float("inf")
+    rng = np.random.default_rng(8)
+    bad = [("nan_lon", nan, 1.0), ("null_lon", None, 1.0), ("inf_lat", 1.0, inf), ("null_lat", 1.0, None)]
+    good = [(f"p{i}", float(lo), float(la)) for i, (lo, la) in enumerate(zip(rng.uniform(-170, 170, 200), rng.uniform(-75, 75, 200)))]
+    pts = spark.createDataFrame(bad + good, "name string, lon double, lat double")
+    qs = spark.createDataFrame(
+        [(0, 1.0, 1.0), (1, None, 1.0), (2, inf, 0.0), (3, nan, 0.0), (4, 0.0, -inf), (5, -20.0, 30.0)],
+        "qid long, lon double, lat double",
+    )
+
+    def rows(df, name="neighbor"):
+        return sorted((r.qid, r.rank, r[name], round(r.dist, 9)) for r in df.collect())
+
+    rings = rows(joins.knn_join(qs, pts, k=2, zoom=4, max_ring=8, strategy="rings"))
+    assert rings == rows(joins.knn_join(qs, pts, k=2, strategy="broadcast"))
+    assert rings == rows(joins.knn_join(qs, pts, k=2))
+    assert rings == rows(geocode_reverse(qs, pts, k=2), "name")
+    assert {r[0] for r in rings} == {0, 5} and len(rings) == 4
+    assert not {r[2] for r in rings} & {b[0] for b in bad}
+
+
 def test_geocode_reverse_matches_oracle(spark, data):
     """geocode_reverse (OGRGeocodeReverse analog): every query resolves to
     the brute-force nearest gazetteer place, ties broken by name; repeated

@@ -563,3 +563,32 @@ def test_sieve_and_ann_name_their_eager_passes(spark):
     ]:
         jobs = _tagged_jobs(spark, tag, train)
         assert jobs and all(named.match(d or "") for d, _, _ in jobs), jobs
+
+
+def test_halo_operators_plan_one_gather_one_exchange_one_grouped_map(spark):
+    """focal, contour_segments, proximity and fill_nodata all run the one
+    halo exchange: one halo gather (MapInPandas), one hash Exchange on the
+    receiving tile key (zoom, tx, ty) and one FlatMapGroupsInPandas."""
+    import re
+
+    import numpy as np
+    import pandas as pd
+
+    from engine import contour, focal, proximity, raster
+
+    g = (np.arange(raster.TILE_SIZE**2, dtype=np.int64) % 9).reshape(raster.TILE_SIZE, raster.TILE_SIZE)
+    tiles = spark.createDataFrame(
+        pd.DataFrame({"zoom": [3, 3], "tx": [0, 1], "ty": [0, 0], "data": [raster.tile_to_bytes(g)] * 2})
+    )
+    for df in (
+        focal.focal(tiles, "slope"),
+        contour.contour_segments(tiles, [3.5]),
+        proximity.proximity(tiles, (7,), maxdist=10.0),
+        proximity.fill_nodata(tiles, nodata=0, maxdist=5.0),
+    ):
+        plan = _plan(df)
+        names = re.findall(r"\(\d+\) (\w+)", plan)
+        assert names.count("MapInPandas") == 1 and names.count("FlatMapGroupsInPandas") == 1, names
+        assert names.count("Exchange") == 1, names
+        (part,) = re.findall(r"Arguments: (hashpartitioning\(.*?\))", plan)
+        assert re.fullmatch(r"hashpartitioning\(zoom#\d+, tx#\d+L, ty#\d+L, \d+\)", part), part

@@ -151,6 +151,26 @@ def test_focal_matches_numpy(spark, tile_table, kernel):
         assert np.array_equal(got[(z, tx, ty)], expect), f"{kernel} tile {(tx, ty)} seam mismatch"
 
 
+def test_halo_gather_ships_centre_and_eight_strips(spark, tile_table):
+    """At halo 1 the halo exchange's gather ships each tile to itself and
+    one strip to each of its 8 neighbours (T×1 and 1×T sides, 1×1
+    corners): the sender's side that faces the receiver."""
+    T = raster.TILE_SIZE
+    grids = _collect_grids(tile_table)
+    rows = focal._gather_halo(tile_table, 1).collect()
+    assert len(rows) == 9 * len(grids)
+    # (dx, dy) = the sender's tile offset from the receiver, dy > 0 north
+    facing_rows = {1: slice(T - 1, T), 0: slice(None), -1: slice(0, 1)}
+    facing_cols = {1: slice(0, 1), 0: slice(None), -1: slice(T - 1, T)}
+    sent = {}
+    for r in rows:
+        sender = (r.zoom, r.tx + r.dx, r.ty + r.dy)
+        sent.setdefault(sender, set()).add((r.dx, r.dy))
+        expect = grids[sender][facing_rows[r.dy], facing_cols[r.dx]]
+        assert np.array_equal(np.frombuffer(r.data, dtype="<i4"), expect.ravel()), (sender, r.dx, r.dy)
+    assert all(len(offsets) == 9 for offsets in sent.values()) and set(sent) == set(grids)
+
+
 def test_pyramid_methods(spark):
     import pandas as pd
 
